@@ -32,6 +32,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,20 +54,20 @@ EDGE_SCHEMA = "src BIGINT, dst BIGINT"
 #: global star rounds (the output stays a valid spanning relabeling).
 LOCAL_CONTRACT_CHUNK = 8_000_000
 
-#: edge-count bound under which the ``single_partition`` fast path is a
-#: safe default for callers holding a static size bound (half a chunk, so
-#: the whole graph is one union-find pass and converges in one round)
+#: cell-count bound under which grid callers pass ``single_partition``:
+#: a grid's runs plus their adjacency edges stay below ~1.5 × cells, so at
+#: half a chunk the whole graph is one union-find pass
 SMALL_GRAPH_EDGE_LIMIT = LOCAL_CONTRACT_CHUNK // 2
 
-#: frontier-row bound for the adaptive one-task funnel in the solve loop.
-#: Deliberately far below LOCAL_CONTRACT_CHUNK: the funnel is a SERIAL
-#: tail (one task), so its time must stay under the distributed round's
-#: fixed scheduling floor (~2-3 s) or it becomes the Amdahl term that
-#: caps N→4N scaling — measured at a 4.0M-row frontier the funnel costs
-#: ~6 s at ANY parallelism level (transit + single union-find), barely
-#: beating the distributed round at local[32] (7.5 s) while flattening
-#: the core-count response entirely. At ≤1M rows (~16 MB) the single
-#: pass runs well under the floor and the funnel is a pure win.
+#: input-row bound for the one-task solve. ``connected_components`` runs a
+#: single coalesced union-find pass and returns its output as the labels
+#: when the init job counts at most ``min(FUNNEL_EDGE_LIMIT, chunk)`` rows;
+#: later rounds funnel their frontier into one task under the same bound.
+#: Far below LOCAL_CONTRACT_CHUNK because one task is a SERIAL tail: at a
+#: 4.0M-row frontier it costs ~6 s at any parallelism (transit + one
+#: union-find), barely beating a distributed round at local[32] (7.5 s)
+#: and flattening the core-count response; at ≤1M rows (~16 MB) it runs
+#: well under a distributed round's ~2-3 s scheduling floor.
 FUNNEL_EDGE_LIMIT = 1_000_000
 
 #: vertex-count bound under which the per-round V-row min-aggregates are
@@ -95,7 +96,17 @@ REUSE_EDGE_LIMIT = 2_000_000
 _CONTRACT_OUT_BATCH = 1_000_000
 
 
-def _local_contract_fn(chunk: int):
+class _PairSum(AccumulatorParam):
+    """Elementwise sum of ``(chunks, rows)`` tallies from the contraction."""
+
+    def zero(self, value):
+        return (0, 0)
+
+    def addInPlace(self, a, b):
+        return (a[0] + b[0], a[1] + b[1])
+
+
+def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
     """Build the per-partition union-find closure; emits (vertex, local_root).
 
     Pure NumPy, array-based, path-halving on vectorized lookups. The output
@@ -126,6 +137,8 @@ def _local_contract_fn(chunk: int):
 
         def _emit():
             verts, roots = _contract_arrays(srcs, dsts)
+            if tally is not None:
+                tally.add((1, len(verts)))
             out = pa.record_batch(
                 [pa.array(verts), pa.array(roots)], names=["src", "dst"]
             )
@@ -207,9 +220,16 @@ def _contract_arrays(
 
 
 def local_contract(
-    edges: DataFrame, chunk: int = LOCAL_CONTRACT_CHUNK, narrow: bool = False
+    edges: DataFrame,
+    chunk: int = LOCAL_CONTRACT_CHUNK,
+    narrow: bool = False,
+    tally: Accumulator | None = None,
 ) -> DataFrame:
-    """Shuffle-free per-partition contraction: edges → (vertex, local_root) pairs.
+    """Shuffle-free per-partition contraction: edges → (vertex, local_root).
+
+    Every vertex of a chunk gets one row, roots included as ``(r, r)``;
+    callers that want pointer edges filter ``src != dst``. ``tally`` — see
+    ``_local_contract_fn``.
 
     ``narrow`` — transit the edge columns to the Python workers as INT32
     instead of INT64, halving the bytes through the round's one
@@ -222,17 +242,18 @@ def local_contract(
     Mirrors the reference's 32-bit label representation
     (/root/reference/src/disjoint_set.hpp:24, uint32_t parents;
     src/SegmentImageImpl.hpp:12 label_t = uint16/uint32): id spaces that
-    fit 32 bits never pay 64-bit traffic. Safe by construction: the
-    session runs ANSI mode, so an out-of-range id makes the cast THROW —
-    a wrong bound can never silently wrap into a wrong label. Full-range
-    ids (e.g. xxhash64-derived corpus vertices) take the int64 path.
+    fit 32 bits never pay 64-bit traffic. A wrong bound is caught only by
+    an ANSI cast, which throws on overflow; without ANSI the cast wraps,
+    so ``connected_components`` ignores a caller's bound unless
+    ``spark.sql.ansi.enabled`` is true. Full-range ids (e.g.
+    xxhash64-derived corpus vertices) take the int64 path.
     """
     if narrow:
         edges = edges.select(
             F.col("src").cast("int").alias("src"),
             F.col("dst").cast("int").alias("dst"),
         )
-    return edges.mapInArrow(_local_contract_fn(chunk), schema=EDGE_SCHEMA)
+    return edges.mapInArrow(_local_contract_fn(chunk, tally), schema=EDGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -313,9 +334,9 @@ def _oriented_edges(edges: DataFrame, n_part: int) -> DataFrame:
     """Orient each edge once as ``(c=min endpoint, n=max endpoint)``,
     hash(c)-partitioned — the E-row working set the big-graph round builds
     on. NOT persisted: the whole round executes as ONE certificate-driven
-    job, so the three consumers of this exchange (the two neighborhood-min
-    aggregates and the large-star join) all read the same shuffle output
-    via ReusedExchange — a block-manager cache of the same E rows would
+    job, so the two consumers of this exchange (the n-side min aggregate
+    and the large-star join) read the same shuffle output via
+    ReusedExchange — a block-manager cache of the same E rows would
     only add a deserialized copy and its GC bill (measured: 27-56 % of
     executor time in GC during the cache-build stages at 64M edges)."""
     return (
@@ -400,7 +421,7 @@ def _star_contract_round_reuse(
 
     NOTHING here is persisted. The whole round executes as the single job
     driven by the convergence-certificate action, and every multiply-
-    consumed subtree (the oriented exchange: 3 consumers; the large-star
+    consumed subtree (the oriented exchange: 2 consumers; the large-star
     exchange: 1) sits behind an exchange, which Spark serves to all
     consumers in one job via ReusedExchange. The r2 design persisted the
     E-row sets on top of that; the redundant deserialized copies showed up
@@ -618,6 +639,12 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     )
 
 
+def _ansi_enabled(spark) -> bool:
+    # no default argument: conf.get(key, default) returns the default for
+    # an unset key instead of the conf's own (true in Spark 4)
+    return str(spark.conf.get("spark.sql.ansi.enabled")).lower() == "true"
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -661,23 +688,23 @@ def connected_components(
     for durable per-superstep state + resume; defaults to in-memory
     ``localCheckpoint`` lineage truncation.
 
-    ``single_partition`` — small-graph fast path (the broadcast-join
-    analog of an execution-strategy hint): coalesce the edges into ONE
-    task and let the chunked NumPy union-find solve the whole graph in a
-    single pass, certified by the same star-forest check. Cuts the
-    fixed per-round scheduling cost that dominates sub-10^7-edge inputs
-    (the regime where the reference's single-address-space pass wins on
-    overhead, BASELINE.md). Callers opt in only with a size bound in
-    hand (e.g. grid pipelines: edges <= n_cells, known without a job).
-    Still EXACT if the input is larger than one union-find chunk — the
-    certificate loop keeps iterating until the forest is terminal — but
-    then the single task is the bottleneck; never use it unbounded.
-    Without the hint, the loop reaches the same one-task pass ADAPTIVELY
-    (the frontier funnel) as soon as the measured row count drops to
-    FUNNEL_EDGE_LIMIT — round 1 included, since the init job counts the
-    input; the hint's remaining value is skipping that init job and
-    funneling graphs above the adaptive gate when the caller knows
-    better.
+    ``single_partition`` — caller-held size bound (e.g. grid pipelines:
+    edges ≤ cells, known without a job): skip the init job and solve in
+    one task. Without the hint the init job counts the input and takes the
+    same one-task solve when the count is ≤ ``min(FUNNEL_EDGE_LIMIT,
+    chunk)``. The solve is one ``coalesce(1)`` union-find pass over the
+    whole input, self-loops included; when the pass is one chunk its
+    output — every vertex once, with its component minimum — is returned
+    as the labels, materialized by one eager checkpoint job with no
+    shuffle, no certificate and no vertex-universe join (the reference's
+    union-find pass plus ``find`` sweep, src/SegmentImageImpl.cpp:78-116
+    in the reference). The pass tallies
+    its chunks into an accumulator read after that job, so a hinted input
+    larger than one chunk is detected without another job and continues
+    through the certificate loop: exact, but with one task as the
+    bottleneck — never pass the hint unbounded. The hint's value over the
+    measured gate is the skipped init job, and graphs above
+    FUNNEL_EDGE_LIMIT that the caller knows fit one chunk.
 
     ``narrow_ids`` — caller asserts every vertex id fits INT32, routing
     the Arrow contractions through the half-width transit immediately
@@ -685,8 +712,10 @@ def connected_components(
     (``single_partition``) or run a pre-contraction before it
     (grid pipelines: run ids ≤ cell count, known statically). Without the
     hint the loop measures the id range on the init job it already pays
-    and narrows automatically. ANSI casts make a violated assertion an
-    error, never a wrong label.
+    and narrows automatically. The hint is honored only when
+    ``spark.sql.ansi.enabled`` is true, where a violated assertion makes
+    the int32 cast throw; otherwise the cast would wrap into a wrong
+    label, so the hint is ignored and only the measured gate narrows.
 
     Kill switch: session conf ``spark.imtag.cc.narrowTransit`` — ``auto``
     (default, the behavior above) or ``off`` (never use the int32 transit,
@@ -713,6 +742,10 @@ def connected_components(
     once and the option silently falls back to shuffle-hash above
     CC_BROADCAST_VERTEX_LIMIT (a multi-GB per-round broadcast is never
     acceptable, whatever the caller hoped).
+
+    ``metrics_out`` — filled with ``supersteps``, ``superstep_times`` and,
+    when the one-task solve ran, ``one_task_chunks`` (1 = its output was
+    returned as the labels).
     """
     spark = edges.sparkSession
     transit = str(spark.conf.get("spark.imtag.cc.narrowTransit", "auto")).lower()
@@ -721,25 +754,21 @@ def connected_components(
             "spark.imtag.cc.narrowTransit must be 'auto' or 'off', got "
             f"{transit!r}"
         )
-    if transit == "off":
+    if transit == "off" or not _ansi_enabled(spark):
         narrow_ids = False
-    universe = (
-        edges.select(F.col("src").alias("vertex"))
-        .union(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    ).persist()
 
-    # No input distinct(): duplicates are harmless to every downstream op
-    # (min-aggregates, the union-find), and deduping would shuffle the input
-    # to hash(src,dst) — destroying any locality the producer's partitioning
-    # carries (e.g. grid edges arrive row-partitioned, so the narrow
-    # pre-contraction collapses whole spatial regions before any shuffle).
-    work = edges.where(F.col("src") != F.col("dst"))
+    # Self-loops stay in: the one-task solve labels a vertex seen only in
+    # a self-loop from its (v, v) row, and every star round drops them
+    # itself. No input distinct(): duplicates are harmless to every
+    # downstream op (min-aggregates, the union-find), and deduping would
+    # shuffle the input to hash(src,dst) — destroying any locality the
+    # producer's partitioning carries (e.g. grid edges arrive
+    # row-partitioned, so the narrow pre-contraction collapses whole
+    # spatial regions before any shuffle).
+    work = edges
     if single_partition:
-        # one task sees every edge; the loop's local_contract round IS the
-        # whole solve, so the input-pass pre-contraction and the range
-        # shuffle would be pure overhead
-        work = work.coalesce(1)
+        # the one-task solve IS the whole solve, so the input-pass
+        # pre-contraction and the range shuffle would be pure overhead
         pre_contract = False
         range_partition = False
     if pre_contract is None:
@@ -749,25 +778,15 @@ def connected_components(
         work = work.repartitionByRange(n_part, "src")
     if pre_contract:
         # runs before the init measurement — only a caller-held bound
-        # (narrow_ids) can narrow this pass
-        work = local_contract(work, narrow=narrow_ids).where(
-            F.col("src") != F.col("dst")
-        )
-
-    if broadcast_mins and not single_partition:
-        # enforce the documented bound: one count against the persisted
-        # universe; above it a per-round V-row broadcast would be multi-GB
-        broadcast_mins = universe.count() <= CC_BROADCAST_VERTEX_LIMIT
+        # (narrow_ids) can narrow this pass. Its root rows (r, r) stay, so
+        # every input vertex is still listed for the one-task solve.
+        work = local_contract(work, narrow=narrow_ids)
 
     start_iter = 0
     resumed = checkpointer.resume() if checkpointer is not None else None
     if resumed is not None:
         work, start_iter = resumed
 
-    # Iterate with persist() (materialized by the fingerprint action — one
-    # Spark job per round) and truncate lineage only every
-    # ``checkpoint_every`` rounds: plan analysis cost stays bounded without
-    # paying a per-round checkpoint job.
     import time as _time
 
     # Lineage MUST be truncated every round: each star round's plan embeds
@@ -777,15 +796,13 @@ def connected_components(
     # flat plan per round; the durable checkpointer (parquet) replaces it
     # every `checkpoint_every` rounds when resumability is requested.
     _t = _time.time()
-    n_work: int | None = None
+    n_work = 0
     narrow = narrow_ids
     owns_frontier = False  # True once `work` is a checkpoint THIS solve made
-    if not single_partition:
-        # single-partition mode converges in ~1 round off a trivial plan
-        # (coalesce of the source) — the init truncation job is pure cost.
-        # Lazy checkpoint + count = the SAME single materialization job as
-        # the old eager checkpoint, but it also yields the edge count that
-        # gates the exchange-shared round structure below.
+    if resumed is not None or not single_partition:
+        # Lazy checkpoint + count = ONE materialization job that also
+        # yields the row count gating the one-task solve and the round
+        # structure below.
         #
         # Skip the copy when the input is ALREADY a materialized scan
         # (a caller-side checkpoint/local relation under at most a
@@ -809,51 +826,113 @@ def connected_components(
         n_work = int(stats["n"])
         if transit != "off" and not narrow and stats["lo"] is not None:
             narrow = -(2**31) <= int(stats["lo"]) and int(stats["hi"]) < 2**31
-    if verbose:
-        print(f"[cc] init n={n_work} {_time.time() - _t:.1f}s", flush=True)
+        if verbose:
+            print(f"[cc] init n={n_work} {_time.time() - _t:.1f}s", flush=True)
+
+    def _log_round(it: int, n_edges: int, chained: int, patched: int) -> None:
+        if verbose:
+            patch_note = f" (patched {patched})" if patched else ""
+            print(
+                f"[cc] round {it + 1} edges={n_edges} chained={chained}"
+                f"{patch_note} {_time.time() - _t:.1f}s",
+                flush=True,
+            )
+        if checkpointer is not None:
+            if patched:
+                # A durable checkpoint written THIS round still stores the
+                # pre-patch witnesses — record the truth (their count plus
+                # patched=True) rather than chained=0, so nothing reading
+                # the manifest mistakes the stored frontier for a terminal
+                # star forest (r4 ADVICE). Resume stays correct either
+                # way: a resumed run re-executes the round.
+                checkpointer.log_metrics(
+                    it + 1, edges=n_edges, chained=patched, patched=True
+                )
+            else:
+                checkpointer.log_metrics(it + 1, edges=n_edges, chained=chained)
+        if metrics_out is not None:
+            metrics_out.setdefault("superstep_times", []).append(_time.time() - _t)
+            metrics_out["supersteps"] = it + 1
+
+    solved: DataFrame | None = None
+    pending: DataFrame | None = None  # a round the one-task solve already ran
+    if resumed is None and (
+        single_partition or n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk)
+    ):
+        _t = _time.time()
+        tally = spark.sparkContext.accumulator((0, 0), _PairSum())
+        out = local_contract(
+            work.coalesce(1), chunk=_contract_chunk, narrow=narrow, tally=tally
+        )
+        if checkpointer is not None and checkpoint_every == 1:
+            out = checkpointer.save(out, 1)
+        solved = out.select(
+            F.col("src").alias("vertex"), F.col("dst").alias("component")
+        ).localCheckpoint(eager=True)
+        if owns_frontier:
+            free_local_checkpoint(work)
+        n_chunks, n_rows = tally.value
+        if metrics_out is not None:
+            metrics_out["one_task_chunks"] = n_chunks
+        if n_chunks <= 1:
+            _log_round(0, n_rows, 0, 0)
+            return solved
+        # Several chunks (a hinted input larger than one): roots are only
+        # chunk minima and a vertex seen by k chunks has k rows, so the
+        # pass is round 1 of the certificate loop below instead. The tally
+        # can only over-count (a re-run task), which costs that loop, never
+        # exactness.
+        work = pending = solved.select(
+            F.col("vertex").alias("src"), F.col("component").alias("dst")
+        ).where(F.col("src") != F.col("dst"))
+        owns_frontier = False
+
+    universe = (
+        edges.select(F.col("src").alias("vertex"))
+        .union(edges.select(F.col("dst").alias("vertex")))
+        .distinct()
+    ).persist()
+    if broadcast_mins:
+        # enforce the documented bound: one count against the persisted
+        # universe; above it a per-round V-row broadcast would be multi-GB
+        broadcast_mins = universe.count() <= CC_BROADCAST_VERTEX_LIMIT
+
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     chain_patch: DataFrame | None = None
     for it in range(start_iter, max_iter):
-        _t = _time.time()
         round_caches: list[DataFrame] = []
         funneled = False
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
-        if single_partition:
-            # complete solve in one narrow pass (star rounds would only
-            # add shuffles); terminal star forest after round 1 whenever
-            # the edges fit one union-find chunk
-            stepped = local_contract(
-                work, chunk=_contract_chunk, narrow=narrow
-            ).where(F.col("src") != F.col("dst"))
-        elif n_work is not None and n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk):
-            # Frontier funnel: the measured frontier is small enough that a
-            # distributed round would be pure scheduling floor, and it fits
-            # ONE union-find chunk — so a single coalesced task solves the
-            # remainder in one pass (the adaptive form of
-            # ``single_partition``, gated on the exact row count the
-            # previous certificate already paid for), terminal immediately
-            # (root = component min over the whole frontier). The gate is
-            # intentionally far below the chunk cap: see FUNNEL_EDGE_LIMIT
-            # for the Amdahl analysis (a one-task round is a serial tail
-            # that must never become the N→4N scaling cap).
-            stepped = local_contract(
-                work.coalesce(1), chunk=_contract_chunk, narrow=narrow
-            ).where(F.col("src") != F.col("dst"))
-            funneled = True
-        elif broadcast_mins or (n_work is not None and n_work < REUSE_EDGE_LIMIT):
-            stepped = _star_contract_round(
-                work, mins_broadcast=broadcast_mins, narrow=narrow
-            )
+        if pending is not None:
+            stepped, pending = pending, None  # materialized; _t runs from the pass
         else:
-            stepped, round_caches = _star_contract_round_reuse(
-                work, n_part, narrow=narrow
-            )
-        if checkpointer is not None and (it + 1) % checkpoint_every == 0:
-            stepped = checkpointer.save(stepped, it + 1)
-        else:
-            # lazy: the convergence-certificate collect below materializes
-            # the checkpoint, so each round costs exactly one Spark job
-            stepped = frontier_checkpoint(stepped, eager=False)
+            _t = _time.time()
+            if n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk):
+                # Frontier funnel: the frontier the previous certificate
+                # counted is small enough that a distributed round would be
+                # pure scheduling floor, and it fits ONE union-find chunk —
+                # so a single coalesced task solves the remainder in one
+                # pass, terminal immediately (root = component min over the
+                # whole frontier). See FUNNEL_EDGE_LIMIT for why the gate
+                # sits far below the chunk cap.
+                stepped = local_contract(
+                    work.coalesce(1), chunk=_contract_chunk, narrow=narrow
+                ).where(F.col("src") != F.col("dst"))
+                funneled = True
+            elif broadcast_mins or n_work < REUSE_EDGE_LIMIT:
+                stepped = _star_contract_round(
+                    work, mins_broadcast=broadcast_mins, narrow=narrow
+                )
+            else:
+                stepped, round_caches = _star_contract_round_reuse(
+                    work, n_part, narrow=narrow
+                )
+            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+                stepped = checkpointer.save(stepped, it + 1)
+            else:
+                # lazy: the convergence-certificate collect below materializes
+                # the checkpoint, so each round costs exactly one Spark job
+                stepped = frontier_checkpoint(stepped, eager=False)
         if funneled:
             # the gate (n_work <= chunk) guarantees the ENTIRE frontier went
             # through one union-find pass, whose output is a terminal star
@@ -884,30 +963,8 @@ def connected_components(
         if owns_frontier:
             free_local_checkpoint(work)
         owns_frontier = True  # every loop frontier from here on is ours
-        n_work = n_edges  # next round's reuse gate, free off the certificate
-        if verbose:
-            patch_note = f" (patched {patched_chained})" if patched_chained else ""
-            print(
-                f"[cc] round {it + 1} edges={n_edges} chained={chained}"
-                f"{patch_note} {_time.time() - _t:.1f}s",
-                flush=True,
-            )
-        if checkpointer is not None:
-            if patched_chained:
-                # A durable checkpoint written THIS round still stores the
-                # pre-patch witnesses — record the truth (their count plus
-                # patched=True) rather than chained=0, so nothing reading
-                # the manifest mistakes the stored frontier for a terminal
-                # star forest (r4 ADVICE). Resume stays correct either
-                # way: a resumed run re-executes the round.
-                checkpointer.log_metrics(
-                    it + 1, edges=n_edges, chained=patched_chained, patched=True
-                )
-            else:
-                checkpointer.log_metrics(it + 1, edges=n_edges, chained=chained)
-        if metrics_out is not None:
-            metrics_out.setdefault("superstep_times", []).append(_time.time() - _t)
-            metrics_out["supersteps"] = it + 1
+        n_work = n_edges  # next round's gates, free off the certificate
+        _log_round(it, n_edges, chained, patched_chained)
         work = stepped
         if chained == 0:
             break
@@ -942,6 +999,8 @@ def connected_components(
         .localCheckpoint(eager=True)
     )  # labels are wide-ish and read once by the caller: default storage
     universe.unpersist()
-    # the labels are materialized — the terminal star forest is dead too
+    # the labels are materialized — the terminal star forest is dead too,
+    # and so is a multi-chunk one-task pass it grew from
     free_local_checkpoint(bare_forest)
+    free_local_checkpoint(solved)
     return out

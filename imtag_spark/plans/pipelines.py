@@ -20,19 +20,22 @@ def label_runs(
     cells_hint: int | None = None,
 ) -> DataFrame:
     """``bwlabel`` analog (reference entry point 1, src/imtag.cpp:13-22):
-    run table → edges → CC → labels for ALL runs (isolated runs are their
-    own components) → dense relabel per the §2.4 contract.
+    run table → edges → CC → dense relabel per the §2.4 contract. Every
+    run also enters CC as a self-loop, so isolated runs come back as their
+    own components without a runs ⋈ labels join.
 
     ``cells_hint`` — static upper bound on the grid's cell count
-    (n_rows * n_cols), when the caller knows it. Adjacencies are bounded
-    by cells, so a small hint routes CC through its single-partition
-    fast path (one union-find pass instead of per-round scheduling —
-    the regime where the reference's single-address-space pass wins on
-    overhead). Large/unknown grids take the distributed path unchanged.
+    (n_rows * n_cols), when the caller knows it. Runs plus adjacencies
+    stay below ~1.5 × cells, so a small hint routes CC through its
+    one-task solve without the init count (one union-find pass instead of
+    per-round scheduling — the regime where the reference's
+    single-address-space pass wins on overhead). Large/unknown grids take
+    the distributed path unchanged.
 
     Returns (vertex, component, dense_label) with dense labels ``base..``.
     """
-    edges = adjacent_row_edges(runs, connectivity)
+    runs_as_loops = runs.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    edges = adjacent_row_edges(runs, connectivity).unionByName(runs_as_loops)
     small = cells_hint is not None and cells_hint <= SMALL_GRAPH_EDGE_LIMIT
     # scan-order run ids carry spatial locality — range partitioning lets
     # the partition-local union-find collapse whole image regions round 1
@@ -46,11 +49,7 @@ def label_runs(
         narrow_ids=cells_hint is not None and cells_hint < 2**31,
         metrics_out=metrics_out,
     )
-    all_vert = runs.select(F.col("id").alias("vertex"))
-    full = all_vert.join(labels, "vertex", "left").select(
-        "vertex", F.coalesce("component", "vertex").alias("component")
-    )
-    return densely_relabel(full, base=base)
+    return densely_relabel(labels, base=base)
 
 
 def label_cells(

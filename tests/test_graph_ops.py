@@ -103,18 +103,103 @@ def test_cc_single_partition_selfloops_isolated(spark):
 
 
 def test_cc_single_partition_multichunk_exact(spark):
-    # tiny chunk bound forces multi-chunk processing inside the single
-    # task: cross-chunk merges must still resolve via the certificate loop
+    # the kernel cuts chunks only between Arrow batches, so batches of 64
+    # rows plus a 64-edge chunk bound really split the one task's pass;
+    # the cross-chunk merges must still resolve via the certificate loop
     n = 500
     path = [(i, i + 1) for i in range(n)]  # one long path spans many chunks
-    labels = connected_components(
-        edges_df(spark, path),
-        single_partition=True,
-        max_iter=20,
-        _contract_chunk=64,
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        m: dict = {}
+        rows = connected_components(
+            edges_df(spark, path),
+            single_partition=True,
+            max_iter=20,
+            metrics_out=m,
+            _contract_chunk=64,
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert m["one_task_chunks"] > 1
+    assert sorted(r.vertex for r in rows) == list(range(n + 1))
+    assert {r.component for r in rows} == {0}
+
+
+def _hostile_graph(seed: int) -> list[tuple[int, int]]:
+    """Random graph with duplicate and reversed edges, self-loop-only
+    vertices, negative ids and ids above 2**31."""
+    rng = np.random.default_rng(seed)
+    ids = np.unique(
+        np.concatenate(
+            [
+                rng.integers(-(2**40), 2**40, size=60),
+                rng.integers(-(2**31), 2**31, size=60),
+                rng.integers(-50, 50, size=30),
+            ]
+        )
     )
-    comps = labels.select("component").distinct().collect()
-    assert len(comps) == 1 and comps[0].component == 0
+    pairs = [tuple(p) for p in rng.choice(ids, size=(120, 2)).tolist()]
+    pairs += pairs[:20]  # duplicates
+    pairs += [(b, a) for a, b in pairs[20:40]]  # reversed duplicates
+    pairs += [(v, v) for v in rng.choice(ids, size=10).tolist()]
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_cc_one_task_route_matches_oracle(spark, seed):
+    # both one-task routes (caller hint, measured init count) against the
+    # union-find oracle; rows are counted too, since a dict comparison
+    # would hide a vertex listed twice
+    from oracles import cc_min_label
+
+    pairs = _hostile_graph(seed)
+    verts = sorted({v for p in pairs for v in p})
+    index = {v: i for i, v in enumerate(verts)}
+    roots = cc_min_label(len(verts), [(index[a], index[b]) for a, b in pairs])
+    expected = {v: verts[r] for v, r in zip(verts, roots)}
+    e = edges_df(spark, pairs)
+    for hint in (True, False):
+        m: dict = {}
+        rows = connected_components(e, single_partition=hint, metrics_out=m).collect()
+        assert m["one_task_chunks"] == 1 and m["supersteps"] == 1
+        assert len(rows) == len(verts)
+        assert {r.vertex: r.component for r in rows} == expected
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    return out, jobs
+
+
+def test_cc_one_task_labels_are_one_shuffle_free_job(spark):
+    # the hinted one-task solve materializes its labels in ONE Spark job
+    # with a single stage (an Exchange would add a stage); the measured
+    # route adds only the init count (one aggregate: two jobs under AQE)
+    e = edges_df(spark, TWO_TRIANGLES_BRIDGE + [(9, 9)])
+    out, jobs = _jobs_in_group(
+        spark, "cc-one-task-hint",
+        lambda: connected_components(e, single_partition=True),
+    )
+    assert len(jobs) == 1
+    assert len(jobs[0].stageIds) == 1
+    _, init_jobs = _jobs_in_group(
+        spark, "cc-one-task-measured", lambda: connected_components(e)
+    )
+    assert len(init_jobs) <= 3
+    # reading the labels back needs no recomputation: a checkpoint scan
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted((r.vertex, r.component) for r in out.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (6, 1), (9, 9)
+    ]
 
 
 def test_triangles_two_triangles_bridge(spark):
@@ -506,3 +591,21 @@ def test_cc_narrow_hint_violated_raises(spark):
     e = edges_df(spark, [(2**40, 1)])
     with pytest.raises(Exception, match="(?i)overflow|cast|ansi"):
         connected_components(e, single_partition=True, narrow_ids=True)
+
+
+def test_cc_narrow_hint_ignored_without_ansi(spark):
+    # with ANSI off an int32 cast wraps silently, so a caller's narrow_ids
+    # bound must be ignored (int64 transit) and the labels stay exact
+    big = 2**40
+    e = edges_df(spark, [(big + 3, big + 1), (big + 1, 7), (big + 5, big + 5)])
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        rows = {
+            r.vertex: r.component
+            for r in connected_components(
+                e, single_partition=True, narrow_ids=True
+            ).collect()
+        }
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    assert rows == {big + 3: 7, big + 1: 7, 7: 7, big + 5: big + 5}
