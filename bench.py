@@ -215,7 +215,8 @@ def main() -> None:
     scaling_path = os.path.join(here, "BENCH_SCALING.json")
     if os.path.exists(scaling_path):
         with open(scaling_path) as f:
-            runs = json.load(f)
+            all_runs = json.load(f)
+        runs = all_runs
         # Only samples that measured THE CURRENT ENGINE: BENCH_SCALING.json
         # is append-only across rounds, and mixing eras (e.g. r2-engine
         # 8->32 CC 0.30-0.49 with the restructured engine's 0.55-0.60)
@@ -250,7 +251,7 @@ def main() -> None:
             "engine_hash": current,
             "accepted_hashes": sorted(accepted),
             "samples_current_engine": len(matching),
-            "samples_total": len(json.load(open(scaling_path))),
+            "samples_total": len(all_runs),
             # stamp the commits the summarized group covers (ADVICE r3)
             "commits": sorted({r.get("engine_commit") or "?"
                                for r in runs.values()}),
@@ -309,7 +310,6 @@ def main() -> None:
         # never pooled — the settled block carries its own hash stamp.
         prev_eras = (era or {}).get("previous_eras") or []
         if prev_eras:
-            all_runs = json.load(open(scaling_path))
             settled_hashes = set()
             for p in prev_eras:
                 settled_hashes.update(p.get("hashes", []))

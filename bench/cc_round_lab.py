@@ -1,6 +1,6 @@
 """A/B lab for the CC big-graph superstep structure (round-4 experiments).
 
-Hypothesis under test: in ``_star_contract_round_reuse`` the small-star
+Hypothesis under test: in the oriented star round the small-star
 aggregate + join is REDUNDANT — its input ``oriented`` is hash(src)-
 partitioned, so every vertex's large-star rows are already co-located and
 the partition-local union-find performs the identical unions (per
@@ -37,6 +37,8 @@ from imtag_spark.operators.cc import (  # noqa: E402
     _oriented_edges,
     local_contract,
 )
+from imtag_spark.plans.checkpoint import free_local_checkpoint  # noqa: E402
+from imtag_spark.session import get_spark  # noqa: E402
 
 
 def _neighborhood_mins(o):
@@ -49,8 +51,6 @@ def _neighborhood_mins(o):
     return mins_c.join(mins_n, "c", "full").select(
         "c", F.least(F.col("c"), F.col("mc"), F.col("mn")).alias("m")
     )
-from imtag_spark.plans.checkpoint import free_local_checkpoint  # noqa: E402
-from imtag_spark.session import get_spark  # noqa: E402
 
 
 def _large_star_oriented(work, n_part):

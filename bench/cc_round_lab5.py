@@ -1,6 +1,6 @@
 """A/B lab for the round-5 CC superstep changes (BENCH.md round-5).
 
-Two candidate changes to ``_star_contract_round_reuse``, measured
+Two candidate changes to the oriented star round, measured
 separately and stacked, against the frozen r4 structure:
 
   D  r4 round: two-aggregate neighborhood min (c-side + n-side) merged by

@@ -1,14 +1,15 @@
-"""Distributed connected components: alternating large-star / small-star.
+"""Distributed connected components: union-find solves and oriented star rounds.
 
 Generalizes the reference's pass-2 union-find label merge
-(/root/reference/src/SegmentImageImpl.cpp:78-116 driving
-src/disjoint_set.hpp:125-137): the sequential ``unite`` sweep becomes the
-O(log n)-round alternating star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14), and the in-process
-``disjoint_set`` becomes (a) a *partition-local* NumPy union-find
-pre-contraction inside an Arrow UDF — the direct analog of the reference's
-shared-memory merge, run shuffle-free per partition — plus (b) the global
-iterated ``(vertex → label)`` DataFrame.
+(src/SegmentImageImpl.cpp:78-116 driving src/disjoint_set.hpp:125-137 in
+the reference). A graph that fits one union-find chunk is solved by one
+coalesced NumPy union-find pass, the direct analog of the reference's
+single-address-space merge. Larger graphs run star rounds (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14): each round is a
+large star over the oriented edge set followed by two partition-local
+union-find contractions inside Arrow UDFs, and a convergence certificate
+decides whether another round is needed. A near-terminal tail of chains
+is resolved driver-side instead of by one more round.
 
 Labeling contract (verified against the compiled reference, SURVEY.md §2.4):
 final ``component = min(vertex_id)`` over the component. The reference's
@@ -16,11 +17,10 @@ pseudo-random link policy (disjoint_set.hpp:13-21) only affects its internal
 tree shape, never the exported labels, so min-based hooking reproduces its
 output exactly once ids follow scan order.
 
-Scale design notes (100 TB / 1000 executors):
-- every superstep is one map-side-combinable ``groupBy().min()`` plus one
-  equi-join — no windows partitioned by vertex (a hot vertex would funnel
-  its whole adjacency into one task; groupBy gets partial aggregation and
-  the join gets AQE skew splitting instead);
+Scale design:
+- every wide operation is a map-side-combinable ``groupBy().min()`` or an
+  equi-join, never a window partitioned by vertex (a hot vertex would
+  funnel its whole adjacency into one task);
 - the edge set shrinks monotonically toward #vertices (star edges), so AQE
   re-coalesces partitions as rounds progress;
 - lineage is truncated every round via localCheckpoint (or durable parquet
@@ -70,27 +70,6 @@ SMALL_GRAPH_EDGE_LIMIT = LOCAL_CONTRACT_CHUNK // 2
 #: well under a distributed round's ~2-3 s scheduling floor.
 FUNNEL_EDGE_LIMIT = 1_000_000
 
-#: vertex-count bound under which the per-round V-row min-aggregates are
-#: broadcast instead of shuffle-hash-joined, so the E-row side never
-#: exchanges inside a superstep. Broadcast costs O(V × executors) network
-#: per round — fine while V × 16B fits comfortably in executor memory
-#: (320 MB at the limit), never the default at arbitrary V.
-CC_BROADCAST_VERTEX_LIMIT = 20_000_000
-
-#: edge-count bound above which a round uses the oriented exchange-shared
-#: star structure (``_star_contract_round_reuse``). It costs two extra
-#: scheduled stages per round (the explicit repartitions), a fixed
-#: ~0.3 s/round at local scheduling rates — pure loss on gate-sized
-#: graphs, decisively won back once the E-row exchanges carry millions of
-#: rows (64M edges round 1: 39.3 s flat → 30.7 s oriented, and 2 E-row
-#: exchanges instead of the flat round's 4). The count is free: round 1
-#: reads it off the init lineage-truncation job, later rounds off the
-#: convergence certificate. Rounds at or below FUNNEL_EDGE_LIMIT are
-#: caught by the one-task funnel first; this bound routes the band in
-#: between to the flat star round.
-REUSE_EDGE_LIMIT = 2_000_000
-
-
 #: rows per emitted Arrow batch from the contraction (bounds JVM-side
 #: buffering of one IPC message; 1M × 16B ≈ 16 MB)
 _CONTRACT_OUT_BATCH = 1_000_000
@@ -119,14 +98,9 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
     task's memory or stall it on a single giant sort. A closure (not a
     module global) so the chunk bound serializes by value to executors.
 
-    Runs under ``mapInArrow`` (not ``mapInPandas``): the kernel is NumPy
-    end-to-end, so the pandas Series wrapping/unwrapping on both sides of
-    the transit is pure overhead — Arrow int64 arrays view as NumPy for
-    free (no nulls), and results go back as sliced RecordBatches. On this
-    steal-noisy host the measured 64M-edge round times are statistically
-    unchanged (the transit is not the round's bottleneck after the 500k
-    Arrow batch fix); the win is structural — one less columnar
-    conversion per direction on every contraction at any scale.
+    Runs under ``mapInArrow``: the kernel is NumPy end-to-end, Arrow
+    integer arrays view as NumPy without a copy (no nulls), and results go
+    back as sliced RecordBatches, with no pandas conversion either way.
     """
     import pyarrow as pa
 
@@ -257,88 +231,16 @@ def local_contract(
 
 
 # ---------------------------------------------------------------------------
-# Alternating star rounds (global merge)
+# Star rounds (global merge)
 # ---------------------------------------------------------------------------
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-
-
-def _mins_side(mins: DataFrame, broadcast: bool) -> DataFrame:
-    """How the V-row min-aggregate meets the E-row side in the star joins.
-
-    - ``shuffle_hash`` hint (default): the E-row side must not be SORTED
-      just to join the V-row aggregate (SMJ would sort both sides); a
-      shuffled hash join builds on the per-partition slice of mins
-      (V/parts rows — bounded at any scale) and streams E through it.
-      This is the any-scale path: aggregate network cost is O(E + V).
-    - ``broadcast``: when V fits a broadcast (≤ CC_BROADCAST_VERTEX_LIMIT),
-      the E-row side never exchanges at all — the join becomes a narrow
-      map over the cached/incoming partitions. Costs O(V × executors)
-      network per round, so it is gated on V, never the default at
-      arbitrary scale (same philosophy as pagerank's mode thresholds).
-    """
-    return F.broadcast(mins) if broadcast else mins.hint("shuffle_hash")
-
-
-def _large_star(edges: DataFrame, mins_broadcast: bool = False) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(Γ(u) ∪ {u}).
-
-    No explicit distinct: duplicate rows don't change the min/join
-    semantics, and the fused narrow contraction after each round dedups —
-    dropping the distinct saves one shuffle per round.
-    """
-    sym = _symmetrize(edges)
-    mins = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    mins = mins.select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
-    return (
-        sym.join(_mins_side(mins, mins_broadcast), "src")
-        .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-
-
-def _small_star(edges: DataFrame, mins_broadcast: bool = False) -> DataFrame:
-    """Connect every smaller-or-equal neighbor of u (and u) to the min neighbor."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).where(F.col("src") != F.col("dst"))
-    mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    joined = oriented.join(_mins_side(mins, mins_broadcast), "src")
-    lower = joined.where(F.col("dst") != F.col("m")).select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    )
-    self_edge = mins.select(F.col("src"), F.col("m").alias("dst"))
-    return lower.union(self_edge)
-
-
-def _star_contract_round(
-    edges: DataFrame, mins_broadcast: bool = False, narrow: bool = False
-) -> DataFrame:
-    """One CC superstep: large-star → small-star → narrow local contraction.
-
-    The fused ``local_contract`` is shuffle-free (runs on the partitions the
-    small-star groupBy produced) and collapses whatever chains happen to be
-    co-located — measured on the 1024² p=0.6 grid it cuts rounds from 11 to
-    6 and wall time ~2× vs plain alternating stars, while keeping the stars'
-    skew safety (all wide ops remain map-side-combinable aggregates and
-    equi-joins; the contraction only ever sees one shuffle partition's rows).
-    """
-    return local_contract(
-        _small_star(_large_star(edges, mins_broadcast), mins_broadcast),
-        narrow=narrow,
-    ).where(F.col("src") != F.col("dst"))
-
 
 def _oriented_edges(edges: DataFrame, n_part: int) -> DataFrame:
     """Orient each edge once as ``(c=min endpoint, n=max endpoint)``,
-    hash(c)-partitioned — the E-row working set the big-graph round builds
-    on. NOT persisted: the whole round executes as ONE certificate-driven
-    job, so the two consumers of this exchange (the n-side min aggregate
-    and the large-star join) read the same shuffle output via
-    ReusedExchange — a block-manager cache of the same E rows would
-    only add a deserialized copy and its GC bill (measured: 27-56 % of
-    executor time in GC during the cache-build stages at 64M edges)."""
+    self-loops dropped, hash(c)-partitioned. Not persisted: the round runs
+    as one certificate-driven job, so its two consumers (the n-side min
+    aggregate and the large-star join) read the same shuffle output via
+    ReusedExchange. Caching the rows as well cost 27-56 % of executor time
+    in GC at 64M edges (BENCH.md, round 3)."""
     return (
         edges.select(
             F.least("src", "dst").alias("c"), F.greatest("src", "dst").alias("n")
@@ -349,117 +251,72 @@ def _oriented_edges(edges: DataFrame, n_part: int) -> DataFrame:
 
 
 def _nside_mins(o: DataFrame) -> DataFrame:
-    """Per-vertex min over the c-side of a vertex's n-edges: ``(c, mn)``
-    where ``mn(u) = min{c' : (c', u) ∈ o}``, keyed as ``c`` for the join.
+    """``(c, mn)`` with ``mn(u) = min{c' : (c', u) ∈ o}``, keyed as ``c``.
 
-    This is the WHOLE neighborhood min: in the oriented set every c-side
-    neighbor of u is strictly SMALLER than u and every n-side neighbor
-    strictly LARGER, so ``min(Γ(u) ∪ {u}) = least(u, mn(u))`` exactly —
-    the c-side aggregate (min over u's n-neighbors, all > u) can never win
-    the least and is pure cost. r4 computed it anyway and paid a full
-    E-row hash aggregate plus a V-row full-outer merge join per round;
-    dropping both (r5) makes the large-star join a LEFT join with
-    ``least(c, mn)`` — ``F.least`` skips the null mn of a vertex never
-    seen as n, which is precisely the ``min = itself`` case. One E-row
-    pass over the reused orientation exchange, partial-aggregated
-    map-side, exchanging only ~V partial rows."""
+    In the oriented set every c-side neighbor of u is smaller than u and
+    every n-side neighbor larger, so ``min(Γ(u) ∪ {u}) = least(u, mn(u))``.
+    One E-row aggregate over the reused orientation exchange, partially
+    aggregated map-side, so only ~V partial rows exchange."""
     return o.groupBy("n").agg(F.min("c").alias("mn")).withColumnRenamed("n", "c")
 
 
-def _star_contract_round_reuse(
-    edges: DataFrame,
-    n_part: int,
-    narrow: bool = False,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The default big-graph superstep: large star → partition-local
-    union-find over its hash(src)-partitioned output → hash(src)
-    re-contraction. Same label output as ``_star_contract_round``
-    (fingerprint-verified at 2M and 64M edges, bench/cc_round_lab.py).
+def _star_round(edges: DataFrame, n_part: int, narrow: bool = False) -> DataFrame:
+    """One CC superstep: large star, then two partition-local union-find
+    contractions. Returns pointer rows ``(src, dst)`` with src > dst.
 
-    The naive round symmetrizes the edges (2E rows) to compute each
-    vertex's full-neighborhood min with one groupBy. Here each edge is
-    instead oriented ONCE as ``(c=min endpoint, n=max endpoint)`` — E rows,
-    hash(c)-partitioned — and the full-neighborhood min needs ONE E-row
-    aggregate: in the oriented set u's c-side neighbors are all < u and
-    its n-side neighbors all > u, so ``min(Γ(u) ∪ {u}) = least(u, mn(u))``
-    with ``mn = min c over edges where u=n`` (``_nside_mins``; partial
-    map-side, ~V partial rows exchanged). r4's second E-row aggregate
-    (min over the n side, values all > u) and its V-row full-outer merge
-    join were provably dead weight and are gone in r5.
+    - Large star: u's strictly-larger neighbors are exactly the n's of its
+      c-edges, so the LEFT join ``o ⋈ mn on c → (n, least(c, mn))`` is the
+      whole large-star output, already oriented src > dst. A vertex never
+      seen as n joins a null mn and ``least`` yields c itself.
+    - First contraction: the large-star rows are exchanged to hash(src), so
+      each u's rows ``(u → m)`` share a partition and the union-find does
+      the small star's unions without its aggregate and join.
+    - Second contraction: a vertex seen by k partitions leaves the first
+      pass with k pointer rows. One exchange of those contracted rows to
+      hash(src) and a second union-find fuse them to ~V rows (64M edges:
+      23.2M → 4.34M rows, round 2 20.8 → 6.3 s).
 
-    The large star then falls out without a filter: u's strictly-larger
-    neighbors are EXACTLY the n's of its c-edges, so the LEFT join
-    ``o ⋈ mn on c → (n, least(c, mn))`` is the whole large-star output,
-    already oriented src>dst (a vertex never seen as n joins null and
-    ``least`` yields c itself). One more E-row exchange lands it
-    hash(src)-partitioned for the union-find contraction.
-
-    NO SMALL-STAR STAGE (removed in r4): with the large-star output
-    hash(src)-partitioned, every vertex u's rows ``(u → m(c_i))`` are
-    co-located, so the partition-local union-find performs EXACTLY the
-    unions the small star's aggregate+join would encode — {u} ∪ {its m's}
-    into one component per u, chained across u's sharing a vertex — making
-    the small star a pure pre-processing cost: one hash-aggregate pass +
-    one shuffle-hash join probe over E rows per round. Worse, the
-    ``lower ∪ smins`` union CONCATENATED the two partition lists, so the
-    contraction actually saw the smins rows SEPARATED from their lower
-    rows (more partition-spread duplication, not less). Interleaved A/B
-    at 64M edges / 4M vertices, local[32], per-round min over 3 reps
-    (bench/cc_round_lab.py, identical final label fingerprints): round 1
-    26.9 → 16.8 s, round-1 output rows 4,316,748 → 4,000,121. The
-    single-contraction variant (fold both contractions into one
-    hash(src)-partitioned pass) was also measured and REJECTED: without
-    the first narrow contraction the exchange carries the raw large-star
-    rows and the output keeps 15.4M duplicated pointer rows (round 1
-    16.7–89 s, round 2 ~21 s).
-
-    Per round: 2 E-row exchanges (orientation; large-star output), one
-    narrow contraction, one contracted-row exchange (≈V rows) feeding the
-    dedup contraction. Skew-safe: hash(src) over post-contraction pointer
-    rows is ≤ partition-spread per vertex, not degree — a hub's million
-    neighbors each carry their OWN src key.
-
-    NOTHING here is persisted. The whole round executes as the single job
-    driven by the convergence-certificate action, and every multiply-
-    consumed subtree (the oriented exchange: 2 consumers; the large-star
-    exchange: 1) sits behind an exchange, which Spark serves to all
-    consumers in one job via ReusedExchange. The r2 design persisted the
-    E-row sets on top of that; the redundant deserialized copies showed up
-    as 27-56 % GC time in the cache-build stages, and dropping them won
-    every interleaved 64M-edge A/B pair (41.4→33.1 s, 68.7→40.9 s round 1,
-    identical outputs). The empty second return keeps the (stepped,
-    caches-to-unpersist) caller contract.
+    Per round: 2 E-row exchanges and one ~V-row exchange, nothing
+    persisted. It is the only distributed round because a flat large-star
+    / small-star round over the symmetrized edges (4 E-row exchanges)
+    lost even in its best band: 1.5M edges on local[4], 4.77 s in 2
+    rounds vs 2.59 s in 1 (BENCH.md). Skew-safe: hash(src) over
+    contracted pointer rows spreads a hub's neighbors, each of which
+    carries its own src key.
     """
     o = _oriented_edges(edges, n_part)
-    mn = _nside_mins(o)
-    ls = o.join(mn.hint("shuffle_hash"), "c", "left").select(
+    ls = o.join(_nside_mins(o).hint("shuffle_hash"), "c", "left").select(
         F.col("n").alias("src"), F.least("c", "mn").alias("dst")
     )
-    # least(c, mn) <= c < n, so ls is already strictly oriented src > dst
-    oriented = ls.repartition(n_part, "src")
-    out = local_contract(oriented, narrow=narrow).where(F.col("src") != F.col("dst"))
-    # Second, hash(src)-partitioned contraction: the first pass contracts
-    # within the large-star partitions, so a vertex seen by k partitions
-    # emits k pointer rows, and EVERY downstream cost (certificate
-    # aggregate, next round's exchanges and transits) is row-proportional.
-    # One exchange of the already-contracted rows co-locates each vertex's
-    # pointers and the second union-find fuses them (→ ~V rows; measured
-    # r3: 23.2M → 4.34M, round 2 20.8 → 6.3 s).
-    out = local_contract(out.repartition(n_part, "src"), narrow=narrow).where(
-        F.col("src") != F.col("dst")
-    )
-    return out, []
+    out = local_contract(ls.repartition(n_part, "src"), narrow=narrow)
+    out = out.where(F.col("src") != F.col("dst")).repartition(n_part, "src")
+    return local_contract(out, narrow=narrow).where(F.col("src") != F.col("dst"))
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    # decimal(38,0) sum: overflow-proof under ANSI mode at any edge count
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _endpoint_tally(edges: DataFrame) -> DataFrame:
+    """Per-vertex ``(k, ns, nd)``: k's occurrences as src and as dst.
+
+    The endpoints are unpivoted with ``explode``, NOT ``union``: the first
+    action over this tally materializes the round's lazily-checkpointed
+    output, and a union references that subtree TWICE — the narrow chain
+    behind it (both Arrow contractions included) executes once per branch
+    before the checkpoint blocks exist. explode doubles rows inline in a
+    single scan, guaranteeing one execution per round. Interleaved
+    64M-edge A/B: round 1 39.1 → 25.5 s, identical counts.
+    """
+    both = edges.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("src").alias("k"), F.lit(1).alias("s"), F.lit(0).alias("d")
+                ),
+                F.struct(
+                    F.col("dst").alias("k"), F.lit(0).alias("s"), F.lit(1).alias("d")
+                ),
+            )
+        ).alias("e")
+    ).select("e.k", "e.s", "e.d")
+    return both.groupBy("k").agg(F.sum("s").alias("ns"), F.sum("d").alias("nd"))
 
 
 def _chained_count(edges: DataFrame) -> tuple[int, int]:
@@ -484,29 +341,8 @@ def _chained_count(edges: DataFrame) -> tuple[int, int]:
     countDistinct plan — no join, one exchange of partial aggregates,
     measured 3–8× faster on a 23M-row round output (64M-edge graph,
     local[32]) with identical counts.
-
-    The endpoints are unpivoted with ``explode``, NOT ``union``: this
-    aggregate is the action that materializes the round's lazily-
-    checkpointed output, and a union references that subtree TWICE — the
-    narrow chain behind it (both Arrow contractions included) executes
-    once per branch before the checkpoint blocks exist. explode doubles
-    rows inline in a single scan, guaranteeing one execution per round.
-    Interleaved 64M-edge A/B: round 1 39.1 → 25.5 s, identical counts.
     """
-    both = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("src").alias("k"), F.lit(1).alias("s"), F.lit(0).alias("d")
-                ),
-                F.struct(
-                    F.col("dst").alias("k"), F.lit(0).alias("s"), F.lit(1).alias("d")
-                ),
-            )
-        ).alias("e")
-    ).select("e.k", "e.s", "e.d")
-    per = both.groupBy("k").agg(F.sum("s").alias("ns"), F.sum("d").alias("nd"))
-    row = per.agg(
+    row = _endpoint_tally(edges).agg(
         F.coalesce(F.sum("ns"), F.lit(0)).alias("n"),
         F.coalesce(
             F.sum(F.when(F.col("ns") > 0, F.col("nd")).otherwise(0)), F.lit(0)
@@ -589,23 +425,10 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     distributed forest: the chains that survive partition-local contraction
     are collapsed in one driver pass over only the violating rows.
     """
-    both = stepped.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("src").alias("k"), F.lit(1).alias("s"), F.lit(0).alias("d")
-                ),
-                F.struct(
-                    F.col("dst").alias("k"), F.lit(0).alias("s"), F.lit(1).alias("d")
-                ),
-            )
-        ).alias("e")
-    ).select("e.k", "e.s", "e.d")
     import pandas as pd
 
     viol = (
-        both.groupBy("k")
-        .agg(F.sum("s").alias("ns"), F.sum("d").alias("nd"))
+        _endpoint_tally(stepped)
         .where(((F.col("ns") > 0) & (F.col("nd") > 0)) | (F.col("ns") > 1))
         .select("k")
         .toPandas()  # ≤ O(witnesses) rows by the PATCH_WITNESS_LIMIT gate
@@ -651,7 +474,6 @@ def connected_components(
     pre_contract: bool | None = None,
     range_partition: bool = False,
     single_partition: bool = False,
-    broadcast_mins: bool = False,
     narrow_ids: bool = False,
     max_iter: int = 50,
     checkpoint_every: int = 3,
@@ -719,29 +541,10 @@ def connected_components(
 
     Kill switch: session conf ``spark.imtag.cc.narrowTransit`` — ``auto``
     (default, the behavior above) or ``off`` (never use the int32 transit,
-    overriding both the auto gate and a caller's ``narrow_ids``). The
-    pre-registered round-5 transfer samples (BENCH.md) could not certify
-    that the narrow transit preserves the settled ≥0.8 2→8 scaling ratio
-    on this host (n=2, both in PR-control-deflated windows), so per that
-    pre-registration the switch exists for deployments that certify
-    scaling ratios per engine change: labels are bit-identical either way
-    (same union-find, wider dtype), only the Arrow transit width changes.
-
-    ``broadcast_mins`` — broadcast the per-round V-row min-aggregates (and
-    the certificate's src set) into the star joins so the E-row side never
-    exchanges inside a superstep. OFF by default, deliberately: measured
-    A/B at 64M edges / 4M vertices (local[32]) and at 150-300K edges, the
-    saved E-exchange is offset by the per-round driver collect + broadcast
-    build (2-3 × V rows per round), landing within host noise — because
-    the fused local contraction already converges in 2-3 rounds, the
-    multiplier that would make broadcast win (many rounds × E-exchange)
-    never materializes. The option exists for the case that multiplier
-    returns: high-diameter graphs with small V on clusters where shuffle
-    (not broadcast fan-out, O(V × executors)/round) is the scarce
-    resource. Enforced: when requested, the vertex universe is counted
-    once and the option silently falls back to shuffle-hash above
-    CC_BROADCAST_VERTEX_LIMIT (a multi-GB per-round broadcast is never
-    acceptable, whatever the caller hoped).
+    overriding both the auto gate and a caller's ``narrow_ids``). Labels
+    are bit-identical either way; only the Arrow transit width changes.
+    It exists because the narrow transit's 2→8 scaling ratio could not be
+    certified (BENCH.md, round-5 transfer samples).
 
     ``metrics_out`` — filled with ``supersteps``, ``superstep_times`` and,
     when the one-task solve ran, ``one_task_chunks`` (1 = its output was
@@ -790,8 +593,8 @@ def connected_components(
     import time as _time
 
     # Lineage MUST be truncated every round: each star round's plan embeds
-    # the previous round's plan several times (sym appears in both the
-    # groupBy and the join side), so without truncation Catalyst analysis
+    # the previous round's plan several times (the oriented edges feed both
+    # the aggregate and the join), so without truncation Catalyst analysis
     # cost grows exponentially with rounds. Eager localCheckpoint gives a
     # flat plan per round; the durable checkpointer (parquet) replaces it
     # every `checkpoint_every` rounds when resumability is requested.
@@ -892,15 +695,10 @@ def connected_components(
         .union(edges.select(F.col("dst").alias("vertex")))
         .distinct()
     ).persist()
-    if broadcast_mins:
-        # enforce the documented bound: one count against the persisted
-        # universe; above it a per-round V-row broadcast would be multi-GB
-        broadcast_mins = universe.count() <= CC_BROADCAST_VERTEX_LIMIT
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     chain_patch: DataFrame | None = None
     for it in range(start_iter, max_iter):
-        round_caches: list[DataFrame] = []
         funneled = False
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
         if pending is not None:
@@ -919,14 +717,8 @@ def connected_components(
                     work.coalesce(1), chunk=_contract_chunk, narrow=narrow
                 ).where(F.col("src") != F.col("dst"))
                 funneled = True
-            elif broadcast_mins or n_work < REUSE_EDGE_LIMIT:
-                stepped = _star_contract_round(
-                    work, mins_broadcast=broadcast_mins, narrow=narrow
-                )
             else:
-                stepped, round_caches = _star_contract_round_reuse(
-                    work, n_part, narrow=narrow
-                )
+                stepped = _star_round(work, n_part, narrow=narrow)
             if checkpointer is not None and (it + 1) % checkpoint_every == 0:
                 stepped = checkpointer.save(stepped, it + 1)
             else:
@@ -952,8 +744,6 @@ def connected_components(
                 # round (it is this round's convergence cost).
                 chain_patch = _chain_patch(stepped)
                 patched_chained, chained = chained, 0
-        for c in round_caches:
-            c.unpersist()
         # the certificate materialized this round's checkpoint — the
         # previous round's frontier blocks are dead from here on; release
         # them now instead of waiting for driver GC (r3 stage metrics

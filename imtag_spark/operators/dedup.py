@@ -12,7 +12,7 @@ Scale notes: candidate generation never compares all pairs — only within
 LSH buckets; bucket joins are equi-joins on (band, hash) so Catalyst
 shuffles once per side; the verify step is a join on the candidate pair
 list (linear in candidates). Duplicate *clusters* come from the same
-alternating-star CC used for the graph workloads — dedup at 100 TB is a
+star-round CC used for the graph workloads — dedup at 100 TB is a
 graph problem, which is exactly why this engine treats it as one.
 """
 

@@ -24,10 +24,7 @@ Scale design:
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,10 +34,8 @@ from imtag_spark.plans.checkpoint import (
     frontier_storage,
 )
 
-#: auto mode takes the broadcast_join path at or below this vertex count
-#: (per-superstep rank broadcast ≈ 16B × V per executor — 320 MB at the
-#: threshold); the CSR ``broadcast`` mode shares the gate when requested
-#: explicitly (ranks array ≈ 8B × V per executor)
+#: broadcast_join runs at or below this vertex count (per-superstep rank
+#: broadcast ≈ 16B × V per executor — 320 MB at the threshold)
 BROADCAST_VERTEX_LIMIT = 20_000_000
 
 #: auto mode's cluster-size cap on the broadcast_join choice: the
@@ -114,53 +109,29 @@ def pagerank(
     oracle).
 
     ``mode``:
-    - ``"join"`` — fully distributed: every superstep is one gather join +
-      one aggregate; scales to any V; per superstep the V-row ranks side
-      exchanges to meet the cached src-partitioned transitions, and the
-      map-side-combined contributions exchange to the dst aggregate.
-    - ``"broadcast_join"`` — the JVM-pipeline sibling of ``broadcast``:
-      transitions are cached hash-partitioned by ``dst``; each superstep
-      broadcast-hash-joins the V-row ranks into them (no exchange on
-      either join side) and the ``groupBy(dst)`` aggregate reuses the
-      cached dst partitioning, so the E-row side NEVER exchanges and no
-      per-superstep Arrow transit exists — the whole superstep stays in
-      whole-stage codegen. Costs one O(V × executors) broadcast per
-      round; gated on V ≤ BROADCAST_VERTEX_LIMIT (falls back to join
-      above it). Unlike the CSR ``broadcast`` mode, rank state remains a
-      DataFrame, so checkpointer/resume works. On a real cluster this
-      trades the join mode's two per-superstep shuffles for broadcast
-      fan-out; in this sandbox (tmpfs shuffle) see BENCH.md's A/B table.
-    - ``"broadcast"`` — CSR-tile gather-scatter: ranks live in a broadcast
-      NumPy array, each dst-partitioned edge tile computes its partial
-      contribution sums vectorized, and only O(V) aggregated rows shuffle
-      per superstep. Wins on small-to-mid graphs (E below ~10^7) while V
-      fits a broadcast; above that the per-superstep Arrow transit of the
-      E-row tiles loses to the join path (measured: 2x slower at 64M
-      edges). No checkpointer support (driver holds the V-sized state).
-    - ``"auto"`` (the default since r4) — ``broadcast_join`` when
-      V ≤ BROADCAST_VERTEX_LIMIT AND the cluster's executor count is
-      within AUTO_BROADCAST_EXECUTOR_LIMIT, else ``join``. The V gate is
-      from the r3 interleaved A/B (BENCH.md): the broadcast-join
-      superstep beat the join superstep at every measured size (8/16/64M
-      transition rows; 64M steady-state 21.4M vs 17.7M edges/s), it is
-      checkpointer-safe, and the gate needs no extra edge-count job. The
-      executor gate (since r5) prices what this sandbox cannot measure:
-      the broadcast fan-out is O(V × executors) per superstep while the
-      join mode shuffles only O(V) rows, so on many-executor deployments
-      auto routes to ``join`` — callers who have measured their cluster
-      can still pick ``broadcast_join`` explicitly. The CSR ``broadcast``
-      mode is explicit-only now — its Arrow tile transit loses to
-      broadcast_join's all-JVM superstep at every size measured.
+    - ``"join"`` — fully distributed, any V. Transitions are cached
+      hash(src)-partitioned; each superstep exchanges the V-row ranks to
+      meet them and the map-side-combined contributions to the dst
+      aggregate.
+    - ``"broadcast_join"`` — transitions are cached hash(dst)-partitioned;
+      each superstep broadcasts the ranks, packed 16 per row, into them.
+      Neither join side nor the ``groupBy(dst)`` aggregate exchanges, so
+      the E-row side never moves and the superstep stays in whole-stage
+      codegen. Costs one O(V × executors) broadcast per superstep. Falls
+      back to ``join`` above BROADCAST_VERTEX_LIMIT vertices.
+    - ``"auto"`` (default) — ``broadcast_join`` when V ≤
+      BROADCAST_VERTEX_LIMIT and the executor count is ≤
+      AUTO_BROADCAST_EXECUTOR_LIMIT, else ``join``. The V gate rests on
+      the 64M-edge A/B: broadcast_join 21.4M vs join 17.7M edges/s per
+      steady superstep (BENCH.md, round 3). The executor gate prices a
+      broadcast fan-out that grows with the cluster while ``join``
+      exchanges O(V) rows once.
+
+    Both modes keep rank state in DataFrames, so a checkpointer works with
+    either.
     """
-    if mode not in ("join", "broadcast", "broadcast_join", "auto"):
+    if mode not in ("join", "broadcast_join", "auto"):
         raise ValueError(f"unknown mode: {mode}")
-    if mode == "broadcast" and checkpointer is not None:
-        raise ValueError(
-            "mode='broadcast' holds rank state driver-side and does not "
-            "support a checkpointer; use mode='join' or 'auto' (both are "
-            "checkpointer-safe — auto's broadcast_join path keeps rank "
-            "state in DataFrames)"
-        )
     # Clean the edge set ONCE; both paths (and the vertex universe) reuse it.
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst")
     if not directed:
@@ -173,31 +144,10 @@ def pagerank(
         .localCheckpoint(eager=True, storageLevel=frontier_storage())
     )
     n = vertices.count()
-    use_broadcast = mode == "broadcast"
-    if use_broadcast:
-        return _pagerank_broadcast(
-            e,
-            alpha=alpha,
-            tol=tol,
-            max_iter=max_iter,
-            verbose=verbose,
-            metrics_out=metrics_out,
-        )
     if n == 0:
         return edges.sparkSession.createDataFrame([], "vertex BIGINT, rank DOUBLE")
 
-    # broadcast_join keeps rank state in DataFrames (checkpointer-safe)
-    # but pays an O(V) broadcast per round — enforce the same V bound as
-    # the CSR mode, falling back to the any-scale join path above it.
-    # auto: measured at 8/16/64M edges (BENCH.md r3 A/B, per-superstep
-    # min over 3 interleaved reps), broadcast_join beats the join mode at
-    # every size on this host (64M steady: 21.4M vs 17.7M edges/s), so
-    # within the V gate it is the auto choice — no edge-count job needed.
-    # auto additionally prices the cluster: the broadcast fan-out is
-    # O(V × executors)/superstep vs the join path's O(V)-row exchange, so
-    # many-executor deployments route to join (r4 VERDICT "what's wrong"
-    # #4 — the naive caller the default exists for runs on that cluster).
-    # An explicit mode="broadcast_join" remains the caller's measured call.
+    # the V bound holds for an explicit broadcast_join too (see ``mode``)
     use_bjoin = n <= BROADCAST_VERTEX_LIMIT and (
         mode == "broadcast_join"
         or (
@@ -370,146 +320,3 @@ def pagerank(
     # ranks are checkpointed per round — safe to drop the setup cache
     transitions.unpersist()
     return ranks.select("vertex", "rank")
-
-
-def _pagerank_broadcast(
-    e: DataFrame,
-    *,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    verbose: bool,
-    metrics_out: dict | None,
-) -> DataFrame:
-    """CSR-tile gather-scatter (SURVEY.md §7 step 6): broadcast ranks array,
-    per-partition vectorized contribution sums, O(V)-row shuffle/superstep.
-
-    ``e`` arrives cleaned (no self-loops, deduped, symmetrized if
-    undirected). Setup builds the tiles ONCE: edges are mapped into the
-    dense [0, V) index space (int32), hash-partitioned by dst index and
-    sorted within partitions — a compressed-sparse tile per partition, so
-    the per-superstep kernel is a pure gather (``r[src_idx] * w``) plus a
-    segmented ``add.reduceat``, and the per-superstep shuffle carries at
-    most V aggregated rows instead of the join mode's E.
-
-    Measured tradeoff (this sandbox, 64M edges / 4M vertices): the join
-    mode wins here, because local shuffles go through tmpfs (memory
-    bandwidth) while this mode pays an Arrow transfer of the tile columns
-    into Python each superstep. The shuffle-volume savings matter when
-    shuffle crosses a real network — i.e. on the multi-executor clusters
-    the north rule targets — and when V ≪ E (dense graphs). Per-superstep
-    driver work is O(V) NumPy (one broadcast out, one aggregated collect
-    in), which is what bounds this mode's scale.
-    """
-    spark = e.sparkSession
-    sc = spark.sparkContext
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    transitions = e.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-    )
-
-    # V-sized driver state: sorted vertex ids, has-out-edges mask
-    vids_rows = (
-        e.select(F.col("src").alias("v"))
-        .union(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .toPandas()
-    )
-    vids = np.sort(vids_rows["v"].to_numpy(dtype=np.int64))
-    n = len(vids)
-    if n == 0:
-        return spark.createDataFrame([], "vertex BIGINT, rank DOUBLE")
-    src_ids = np.sort(out_deg.select("src").toPandas()["src"].to_numpy(dtype=np.int64))
-    has_out = np.zeros(n, dtype=bool)
-    has_out[np.searchsorted(vids, src_ids)] = True
-    b_vids = sc.broadcast(vids)
-
-    # CSR tile build (once): translate to int32 index space, cluster by dst
-    def to_index_space(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = b_vids.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "src_idx": np.searchsorted(
-                        v, pdf["src"].to_numpy(dtype=np.int64)
-                    ).astype(np.int32),
-                    "dst_idx": np.searchsorted(
-                        v, pdf["dst"].to_numpy(dtype=np.int64)
-                    ).astype(np.int32),
-                    "w": pdf["w"].to_numpy(dtype=np.float64),
-                }
-            )
-
-    tiles = (
-        transitions.mapInPandas(
-            to_index_space, schema="src_idx INT, dst_idx INT, w DOUBLE"
-        )
-        .repartition(n_part, "dst_idx")
-        .sortWithinPartitions("dst_idx")
-        .persist()
-    )
-    tiles.count()
-
-    rank = np.full(n, 1.0 / n)
-    base = (1.0 - alpha) / n
-
-    for it in range(max_iter):
-        t0 = time.time()
-        b_rank = sc.broadcast(rank)
-
-        def tile_contribs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            r = b_rank.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                src_idx = pdf["src_idx"].to_numpy(dtype=np.int32)
-                dst_idx = pdf["dst_idx"].to_numpy(dtype=np.int32)
-                w = pdf["w"].to_numpy(dtype=np.float64)
-                contrib = r[src_idx] * w
-                # dst-sorted within the partition: segmented sum, no re-sort
-                starts = np.r_[0, np.flatnonzero(np.diff(dst_idx)) + 1]
-                yield pd.DataFrame(
-                    {
-                        "dst_idx": dst_idx[starts],
-                        "c": np.add.reduceat(contrib, starts),
-                    }
-                )
-
-        agg = (
-            tiles.mapInPandas(tile_contribs, schema="dst_idx INT, c DOUBLE")
-            .groupBy("dst_idx")
-            .agg(F.sum("c").alias("c"))
-            .toPandas()
-        )
-        contrib_full = np.zeros(n)
-        contrib_full[agg["dst_idx"].to_numpy(dtype=np.int64)] = agg["c"].to_numpy(
-            dtype=np.float64
-        )
-        dangling = rank[~has_out].sum()
-        new_rank = base + alpha * (contrib_full + dangling / n)
-        delta = float(np.abs(new_rank - rank).sum())
-        rank = new_rank
-        b_rank.destroy()
-        if verbose:
-            print(
-                f"[pagerank/bcast] iter {it + 1} delta={delta:.3e} "
-                f"{time.time() - t0:.1f}s",
-                flush=True,
-            )
-        if metrics_out is not None:
-            metrics_out.setdefault("superstep_times", []).append(time.time() - t0)
-            metrics_out["supersteps"] = it + 1
-            metrics_out["mode"] = "broadcast"
-        if delta < tol:
-            break
-    tiles.unpersist()
-    b_vids.destroy()
-    out = spark.createDataFrame(
-        pd.DataFrame({"vertex": vids, "rank": rank}),
-        schema="vertex BIGINT, rank DOUBLE",
-    )
-    return out

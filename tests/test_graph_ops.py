@@ -11,7 +11,7 @@ from imtag_spark.operators.lpa import label_propagation
 from imtag_spark.operators.pagerank import pagerank
 from imtag_spark.operators.stats import degrees
 from imtag_spark.operators.triangles import total_triangles, triangle_count
-from oracles import brute_triangles, numpy_pagerank
+from oracles import brute_triangles, cc_min_label, numpy_pagerank
 
 TWO_TRIANGLES_BRIDGE = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)]
 
@@ -20,6 +20,14 @@ def edges_df(spark, pairs):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in pairs] or [], "src BIGINT, dst BIGINT"
     )
+
+
+def _oracle_labels(pairs) -> dict[int, int]:
+    """Exact min-vertex labels from the union-find oracle."""
+    verts = sorted({v for p in pairs for v in p})
+    index = {v: i for i, v in enumerate(verts)}
+    roots = cc_min_label(len(verts), [(index[a], index[b]) for a, b in pairs])
+    return {v: verts[r] for v, r in zip(verts, roots)}
 
 
 def test_cc_two_triangles_bridge(spark):
@@ -61,36 +69,17 @@ def test_cc_single_partition_matches_default(spark):
 
 
 def test_cc_reuse_round_matches_default(spark, monkeypatch):
-    # the exchange-shared round structure (with its second hash(src)
-    # contraction) only engages above REUSE_EDGE_LIMIT in production;
-    # force it here and require exact label parity on a multi-round graph
-    # (random + long path tail)
+    # FUNNEL_EDGE_LIMIT=0 sends the graph through the distributed star
+    # round; random + long path tail so it needs several rounds
     import imtag_spark.operators.cc as cc_mod
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     rng = np.random.default_rng(23)
     pairs = rng.integers(0, 500, size=(1200, 2)).tolist()
     pairs += [(1000 + i, 1000 + i + 1) for i in range(300)]
-    e = edges_df(spark, pairs)
-    base = {r.vertex: r.component for r in connected_components(e).collect()}
-    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
-    m: dict = {}
-    reuse = {
-        r.vertex: r.component
-        for r in connected_components(e, metrics_out=m, max_iter=20).collect()
-    }
-    assert reuse == base
-
-
-def test_cc_broadcast_mins_matches_default(spark):
-    rng = np.random.default_rng(11)
-    pairs = rng.integers(0, 300, size=(900, 2)).tolist()
-    e = edges_df(spark, pairs)
-    base = {r.vertex: r.component for r in connected_components(e).collect()}
-    bc = {
-        r.vertex: r.component
-        for r in connected_components(e, broadcast_mins=True).collect()
-    }
-    assert bc == base
+    rows = connected_components(edges_df(spark, pairs), max_iter=20).collect()
+    assert len(rows) == len({v for p in pairs for v in p})
+    assert {r.vertex: r.component for r in rows} == _oracle_labels(pairs)
 
 
 def test_cc_single_partition_selfloops_isolated(spark):
@@ -152,20 +141,44 @@ def test_cc_one_task_route_matches_oracle(spark, seed):
     # both one-task routes (caller hint, measured init count) against the
     # union-find oracle; rows are counted too, since a dict comparison
     # would hide a vertex listed twice
-    from oracles import cc_min_label
-
     pairs = _hostile_graph(seed)
-    verts = sorted({v for p in pairs for v in p})
-    index = {v: i for i, v in enumerate(verts)}
-    roots = cc_min_label(len(verts), [(index[a], index[b]) for a, b in pairs])
-    expected = {v: verts[r] for v, r in zip(verts, roots)}
+    expected = _oracle_labels(pairs)
     e = edges_df(spark, pairs)
     for hint in (True, False):
         m: dict = {}
         rows = connected_components(e, single_partition=hint, metrics_out=m).collect()
         assert m["one_task_chunks"] == 1 and m["supersteps"] == 1
-        assert len(rows) == len(verts)
+        assert len(rows) == len(expected)
         assert {r.vertex: r.component for r in rows} == expected
+
+
+@pytest.mark.parametrize("patch", [True, False])
+@pytest.mark.parametrize("seed", [3, 17])
+def test_cc_star_round_matches_oracle(spark, monkeypatch, seed, patch):
+    # the hostile graphs through the distributed star round; without the
+    # driver-side chain patch (PATCH_WITNESS_LIMIT=0) the rounds must
+    # reach a terminal forest themselves
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = {"_star_round": 0, "_chain_patch": 0}
+    for name in calls:
+        real = getattr(cc_mod, name)
+
+        def spy(*args, _real=real, _name=name, **kw):
+            calls[_name] += 1
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(cc_mod, name, spy)
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    if not patch:
+        monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
+    pairs = _hostile_graph(seed)
+    expected = _oracle_labels(pairs)
+    rows = connected_components(edges_df(spark, pairs), max_iter=20).collect()
+    assert len(rows) == len(expected)
+    assert {r.vertex: r.component for r in rows} == expected
+    assert calls["_star_round"] >= 1
+    assert (calls["_chain_patch"] > 0) == patch
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -237,30 +250,6 @@ def test_pagerank_vs_numpy(spark, directed):
     for v in want:
         assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
     assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-@pytest.mark.parametrize("directed", [True, False])
-def test_pagerank_broadcast_mode_vs_numpy(spark, directed):
-    rng = np.random.default_rng(29)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    got = {r.vertex: r.rank for r in pagerank(
-        e, directed=directed, tol=1e-8, max_iter=200, mode="broadcast").collect()}
-    want = numpy_pagerank(pairs, [], directed=directed)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
-
-
-def test_pagerank_modes_agree(spark):
-    rng = np.random.default_rng(31)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 60, size=(300, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    j = {r.vertex: r.rank for r in pagerank(e, tol=0.0, max_iter=15, mode="join").collect()}
-    b = {r.vertex: r.rank for r in pagerank(e, tol=0.0, max_iter=15, mode="broadcast").collect()}
-    assert set(j) == set(b)
-    for v in j:
-        assert abs(j[v] - b[v]) < 1e-12
 
 
 @pytest.mark.parametrize("directed", [True, False])
@@ -348,9 +337,15 @@ def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark):
     assert shuffle_exchanges == [], shuffle_exchanges
 
 
+def test_pagerank_unknown_mode_raises(spark):
+    # the CSR "broadcast" mode was removed; asking for it must fail loudly
+    with pytest.raises(ValueError, match="unknown mode"):
+        pagerank(edges_df(spark, TWO_TRIANGLES_BRIDGE), mode="broadcast")
+
+
 def test_pagerank_broadcast_join_supports_checkpointer(spark, tmp_path):
-    # unlike the CSR broadcast mode (which raises), rank state stays a
-    # DataFrame here, so durable checkpoint/resume must keep working
+    # rank state stays a DataFrame, so durable checkpoint/resume must keep
+    # working
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
     rng = np.random.default_rng(43)
@@ -521,10 +516,9 @@ def test_cheap_rescan_requires_deterministic_projection(spark):
 def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
     # ids above 2^31: the init measurement must keep the Arrow transit at
     # int64 (narrow gate off) and labels must stay exact — through the
-    # reuse round structure, forced on
+    # star round, forced on
     import imtag_spark.operators.cc as cc_mod
 
-    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     big = 2**40
     pairs = [(big + a, big + b) for a, b in TWO_TRIANGLES_BRIDGE] + [(5, big + 1)]
@@ -535,10 +529,9 @@ def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
 
 def test_cc_negative_ids_narrow_exact(spark, monkeypatch):
     # negative ids inside int32 range: the narrow transit fires (auto
-    # measurement) and min-labeling stays exact, reuse round forced on
+    # measurement) and min-labeling stays exact, star round forced on
     import imtag_spark.operators.cc as cc_mod
 
-    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     pairs = [(-3, -2), (-2, 7), (10, 11), (-(2**31), -3)]
     labels = connected_components(edges_df(spark, pairs), max_iter=20)
@@ -562,10 +555,9 @@ def test_cc_narrow_hint_single_partition(spark):
 def test_cc_narrow_transit_kill_switch(spark, monkeypatch):
     # spark.imtag.cc.narrowTransit=off must override BOTH the auto gate
     # and a caller's narrow_ids, yielding identical labels through the
-    # reuse round structure — the pre-registered round-5 safety valve
+    # star round — the pre-registered round-5 safety valve
     import imtag_spark.operators.cc as cc_mod
 
-    monkeypatch.setattr(cc_mod, "REUSE_EDGE_LIMIT", 0)
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     e = edges_df(spark, TWO_TRIANGLES_BRIDGE)
     expected = {

@@ -53,10 +53,10 @@ def test_filter_pushdown_reaches_parquet(spark):
 def test_graph_hot_path_has_no_vertex_window(spark):
     # windows partitioned by vertex funnel hot-vertex adjacency through one
     # task; CC/PageRank supersteps must be join+agg only
-    from imtag_spark.operators.cc import _small_star, _large_star
+    from imtag_spark.operators.cc import _star_round
 
     e = spark.createDataFrame([(1, 2), (2, 3)], "src BIGINT, dst BIGINT")
-    plan = _formatted_plan(_small_star(_large_star(e)))
+    plan = _formatted_plan(_star_round(e, 8))
     assert "Window" not in plan
     assert "HashAggregate" in plan
 
