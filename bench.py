@@ -191,138 +191,28 @@ def main() -> None:
             extra.get("eps_cc_grid"),
         ) if v is not None
     )
+    here = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(here, "bench"))
+    from engine_fingerprint import engine_hash
+
+    # The printed line stays compact so a capture of stdout's tail still
+    # parses it: inlined scaling blocks made it too long twice
+    # (BENCH_r02.json and BENCH_r05.json have parsed: null). Per-workload
+    # detail goes to BENCH_DETAIL.json; `python bench/summarize_scaling.py
+    # --current-engine` (or `--era`) prints the scaling tables from
+    # BENCH_SCALING.json.
     result = {
-        "metric": "total bench wall time; edges_per_sec_per_superstep is the north-rule headline",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf_dir.rstrip("/").split("sf")[-1],
         "cpus": cpus,
         "edges_per_sec_per_superstep": headline,
+        "engine_hash": engine_hash(),
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    # Full per-workload detail goes to a SIDE FILE, not the printed line:
-    # the driver tail-captures stdout, and r2's inlined scaling dict
-    # overflowed that capture (BENCH_r02.json parsed: null). The one
-    # printed line stays compact; BENCH_DETAIL.json + BENCH_SCALING.json
-    # carry the rest.
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump({"queries": timings, "detail": extra, "total_sec": total,
                    "sf": result["sf"], "cpus": cpus}, f, indent=1)
-    # Two-parallelism scaling evidence (north rule >=0.8 N->4N) from
-    # bench/scaling.py: inline only a per-metric best/median summary over
-    # the 8->32 samples; raw per-level eps stays in BENCH_SCALING.json.
-    scaling_path = os.path.join(here, "BENCH_SCALING.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            all_runs = json.load(f)
-        runs = all_runs
-        # Only samples that measured THE CURRENT ENGINE: BENCH_SCALING.json
-        # is append-only across rounds, and mixing eras (e.g. r2-engine
-        # 8->32 CC 0.30-0.49 with the restructured engine's 0.55-0.60)
-        # makes the printed medians describe nobody. Samples are stamped
-        # with a content hash of the engine files (bench/scaling.py); older
-        # unstamped samples are excluded once any stamped ones exist.
-        sys.path.insert(0, os.path.join(here, "bench"))
-        from engine_fingerprint import engine_hash  # noqa: E402
-        current = engine_hash()
-        # Era widening: scaling samples take ~30 min each, so the sample
-        # base is collected against a frozen engine; hygiene-only commits
-        # (log wording, docstrings, guards proven plan-identical for the
-        # measured workloads) must not orphan it. bench/engine_era.json
-        # lists the hashes certified mutually plan-identical plus the
-        # evidence; it applies ONLY while HEAD's own hash is a member —
-        # any uncertified engine change leaves the filter strict. Eras are
-        # never silently mixed: the accepted hash set is stamped below.
-        accepted = {current}
-        era = None
-        era_path = os.path.join(here, "bench", "engine_era.json")
-        if os.path.exists(era_path):
-            with open(era_path) as f:
-                candidate = json.load(f)
-            if current in candidate.get("hashes", []):
-                era = candidate
-                accepted = set(candidate["hashes"])
-        matching = {k: r for k, r in runs.items()
-                    if r.get("engine_hash") in accepted}
-        if matching:
-            runs = matching
-        result["scaling_engine"] = {
-            "engine_hash": current,
-            "accepted_hashes": sorted(accepted),
-            "samples_current_engine": len(matching),
-            "samples_total": len(all_runs),
-            # stamp the commits the summarized group covers (ADVICE r3)
-            "commits": sorted({r.get("engine_commit") or "?"
-                               for r in runs.values()}),
-            "filtered": bool(matching),
-        }
-        if era is not None:
-            result["scaling_engine"]["era_equivalence"] = era.get("equivalence")
-        def summarize(pairs):
-            out = {}
-            for metric in ("cc", "pagerank_min", "pagerank_steady"):
-                vals = sorted(
-                    r["scaling_efficiency"][metric]
-                    for r in pairs if metric in r.get("scaling_efficiency", {})
-                )
-                if vals:
-                    mid = len(vals) // 2
-                    med = (vals[mid] if len(vals) % 2 else
-                           round((vals[mid - 1] + vals[mid]) / 2, 3))
-                    out[metric] = {"best": vals[-1], "median": med,
-                                   "n": len(vals)}
-            return out
-        def pairing_blocks(sample_map):
-            blocks = {}
-            for pairing in sorted({k.split("_")[0] for k in sample_map}):
-                entry = {}
-                for skewed, base in ((False, "uniform"), (True, "skew")):
-                    group = [r for k, r in sample_map.items()
-                             if k.split("_")[0] == pairing
-                             and bool(r.get("skew")) == skewed]
-                    if not group:
-                        continue
-                    # Different edge counts are different experiments (the
-                    # 128M amortization point must not shift the 64M
-                    # median): the modal size keeps the plain key, other
-                    # sizes get an explicit _<edges>m suffix.
-                    sizes = sorted({r["n_edges"] for r in group})
-                    modal = max(
-                        sizes,
-                        key=lambda n: (sum(1 for r in group
-                                           if r["n_edges"] == n), -n),
-                    )
-                    for n in sizes:
-                        sub = [r for r in group if r["n_edges"] == n]
-                        name = base if n == modal else (
-                            f"{base}_{round(n / 1_000_000)}m")
-                        entry[name] = summarize(sub)
-                        entry[name]["n_edges"] = n
-                blocks[pairing] = entry
-            return blocks
-        for pairing, entry in pairing_blocks(runs).items():
-            result[f"scaling_{pairing}"] = entry
-        # The settled-era certification (2->8 @ 32M n=5, medians CC 0.873 /
-        # PR steady 0.899; 128M holdout 0.937/1.081) is round 5's standing
-        # north-rule claim; the current engine's transfer samples are n=2
-        # and uncertified (BENCH.md round-5 settlement). Report both,
-        # never pooled — the settled block carries its own hash stamp.
-        prev_eras = (era or {}).get("previous_eras") or []
-        if prev_eras:
-            settled_hashes = set()
-            for p in prev_eras:
-                settled_hashes.update(p.get("hashes", []))
-            settled = {k: r for k, r in all_runs.items()
-                       if r.get("engine_hash") in settled_hashes}
-            if settled:
-                result["scaling_settled_era"] = {
-                    "hashes": sorted(settled_hashes),
-                    "note": ("certified settled-engine sample base "
-                             "(BENCH.md round-5 settlement); current-era "
-                             "transfer samples above are separate"),
-                    "pairings": pairing_blocks(settled),
-                }
     print(json.dumps(result))
 
 

@@ -1,24 +1,28 @@
-"""A/B lab for the CC big-graph superstep structure (round-4 experiments).
+"""A/B lab for the CC distributed superstep structure.
 
-Hypothesis under test: in the oriented star round the small-star
-aggregate + join is REDUNDANT — its input ``oriented`` is hash(src)-
-partitioned, so every vertex's large-star rows are already co-located and
-the partition-local union-find performs the identical unions (per
-partition, for each n the set {n} ∪ {its m's} forms one UF component
-whether or not the small star rewired the rows first). If true, dropping
-the small star removes one full hash-aggregate pass + one shuffle-hash
-join probe over E rows per round, bit-identically.
+Each variant is one full CC solve over the same deterministic random
+graph, rounds driven by the engine's convergence certificate
+(``cc._chained_count``) until the output is a terminal star forest.
 
-Variants (full CC solve, certificate loop copied from cc.py):
-  A  current round: LS -> SS -> contract -> repartition(src) -> contract
-  D  LS -> contract -> repartition(src) -> contract   (no small star)
-  B  LS -> repartition(src) -> single contract        (fold the exchanges)
+Variants:
+  A  r4 round with the small star: two-aggregate large star ->
+     small-star aggregate + join -> contract -> repartition(src) -> contract
+  D  r4 round: two-aggregate neighborhood min (c-side + n-side) merged by a
+     V-row full-outer join, inner large-star join, then
+     repartition(src) -> contract -> repartition(src) -> contract
+  B  D's large star -> repartition(src) -> a single contract
+  F  the engine's round, ``cc._star_round``: n-side min only (in the
+     oriented edge set every c-side neighbor of u is < u and every n-side
+     neighbor > u, so min(Γ(u) ∪ {u}) = least(u, mn(u))), LEFT large-star
+     join, then D's two contractions
 
-Protocol (BENCH.md): one JVM, untimed warmup solve first, then variants
-interleaved REPS times; per-round MIN across reps per variant; identical
-deterministic input; label-sum fingerprint compared across variants.
+Protocol (BENCH.md): one JVM, untimed warmup solve of the first variant,
+then the chosen variants interleaved REPS times; per-round MIN across reps
+per variant; identical deterministic input; label-sum fingerprint compared
+across variants.
 
-Usage: python bench/cc_round_lab.py [cpus] [n_edges] [n_vertices] [reps]
+Usage: python bench/cc_round_lab.py [cpus] [n_edges] [n_vertices] [reps] [variants]
+  variants: comma-separated names, default D,F (e.g. ``A,D,B,F``)
 """
 
 from __future__ import annotations
@@ -35,71 +39,59 @@ from pyspark.sql import functions as F  # noqa: E402
 from imtag_spark.operators.cc import (  # noqa: E402
     _chained_count,
     _oriented_edges,
+    _star_round,
     local_contract,
 )
 from imtag_spark.plans.checkpoint import free_local_checkpoint  # noqa: E402
 from imtag_spark.session import get_spark  # noqa: E402
 
 
-def _neighborhood_mins(o):
-    """The r4-era two-aggregate neighborhood min this lab's variants were
-    measured with (kept inline as the historical record; the engine's r5
-    round computes the same min from the n-side aggregate alone — see
-    cc._nside_mins for why the c-side aggregate can never win the least)."""
+def _r4_large_star(work, n_part):
+    """The r4 two-aggregate large star (kept inline as the historical
+    record; ``cc._nside_mins`` explains why the c-side aggregate never wins
+    the least)."""
+    o = _oriented_edges(work, n_part)
     mins_c = o.groupBy("c").agg(F.min("n").alias("mc"))
     mins_n = o.groupBy("n").agg(F.min("c").alias("mn")).withColumnRenamed("n", "c")
-    return mins_c.join(mins_n, "c", "full").select(
+    m = mins_c.join(mins_n, "c", "full").select(
         "c", F.least(F.col("c"), F.col("mc"), F.col("mn")).alias("m")
     )
-
-
-def _large_star_oriented(work, n_part):
-    o = _oriented_edges(work, n_part)
-    m = _neighborhood_mins(o)
     ls = o.join(m.hint("shuffle_hash"), "c").select(
         F.col("n").alias("src"), F.col("m").alias("dst")
     )
     return ls.repartition(n_part, "src")
 
 
+def _pointers(df):
+    return df.where(F.col("src") != F.col("dst"))
+
+
 def round_A(work, n_part):
-    oriented = _large_star_oriented(work, n_part)
-    smins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
+    ls = _r4_large_star(work, n_part)
+    smins = ls.groupBy("src").agg(F.min("dst").alias("m"))
     lower = (
-        oriented.join(smins.hint("shuffle_hash"), "src")
+        ls.join(smins.hint("shuffle_hash"), "src")
         .where(F.col("dst") != F.col("m"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
     ss = lower.union(smins.select("src", F.col("m").alias("dst")))
-    out = local_contract(ss).where(F.col("src") != F.col("dst"))
-    return local_contract(out.repartition(n_part, "src")).where(
-        F.col("src") != F.col("dst")
-    )
+    out = _pointers(local_contract(ss))
+    return _pointers(local_contract(out.repartition(n_part, "src")))
 
 
 def round_D(work, n_part):
-    oriented = _large_star_oriented(work, n_part)
-    out = local_contract(oriented).where(F.col("src") != F.col("dst"))
-    return local_contract(out.repartition(n_part, "src")).where(
-        F.col("src") != F.col("dst")
-    )
+    out = _pointers(local_contract(_r4_large_star(work, n_part)))
+    return _pointers(local_contract(out.repartition(n_part, "src")))
 
 
 def round_B(work, n_part):
-    o = _oriented_edges(work, n_part)
-    m = _neighborhood_mins(o)
-    ls = o.join(m.hint("shuffle_hash"), "c").select(
-        F.col("n").alias("src"), F.col("m").alias("dst")
-    )
-    return local_contract(ls.repartition(n_part, "src")).where(
-        F.col("src") != F.col("dst")
-    )
+    return _pointers(local_contract(_r4_large_star(work, n_part)))
 
 
-ROUNDS = {"A": round_A, "D": round_D, "B": round_B}
+ROUNDS = {"A": round_A, "D": round_D, "B": round_B, "F": _star_round}
 
 
-def solve(spark, edges, variant: str, n_part: int):
+def solve(edges, variant: str, n_part: int):
     work = edges.where(F.col("src") != F.col("dst")).localCheckpoint(eager=False)
     work.count()
     times, rows = [], []
@@ -128,6 +120,10 @@ def main() -> None:
     n_edges = int(sys.argv[2]) if len(sys.argv) > 2 else 64_000_000
     n_vertices = int(sys.argv[3]) if len(sys.argv) > 3 else 4_000_000
     reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
+    variants = (sys.argv[5] if len(sys.argv) > 5 else "D,F").split(",")
+    unknown = [v for v in variants if v not in ROUNDS]
+    if unknown:
+        sys.exit(f"unknown variants {unknown}; choose from {sorted(ROUNDS)}")
     spark = get_spark(
         app_name="cc_round_lab",
         master=f"local[{cpus}]",
@@ -147,13 +143,13 @@ def main() -> None:
     print(f"# edges={m}", flush=True)
 
     # untimed warmup solve (JIT/Arrow spin-up; see scaling_worker.py)
-    solve(spark, edges, "A", n_part)
+    solve(edges, variants[0], n_part)
 
-    results: dict[str, list] = {k: [] for k in ROUNDS}
+    results: dict[str, list] = {k: [] for k in variants}
     fps: dict[str, int] = {}
     for rep in range(reps):
-        for variant in ROUNDS:
-            times, rows, fp = solve(spark, edges, variant, n_part)
+        for variant in variants:
+            times, rows, fp = solve(edges, variant, n_part)
             results[variant].append([round(t, 2) for t in times])
             prev = fps.setdefault(variant, fp)
             assert prev == fp, f"{variant}: nondeterministic output"
@@ -180,6 +176,7 @@ def main() -> None:
                     "per_round_min": [round(t, 2) for t in mins],
                     "total_min": round(sum(mins), 2),
                     "eps_cc": round(m / (sum(mins) / len(mins)), 1),
+                    "eps_cc_conv": round(m / sum(mins), 1),
                 }
             ),
             flush=True,

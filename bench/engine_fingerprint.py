@@ -1,8 +1,8 @@
 """Content fingerprint of the engine code a scaling sample measures.
 
 BENCH_SCALING.json is append-only across rounds, so samples from different
-engine generations coexist. Summaries (bench.py's inline scaling block,
-bench/summarize_scaling.py) must not mix eras: an r2-engine CC sample says
+engine generations coexist. Summaries (bench/summarize_scaling.py,
+bench/floor_model.py) must not mix eras: an r2-engine CC sample says
 nothing about HEAD. git commit ids almost work, but evidence commits land
 between engine commits, so several commits share one engine. Hashing the
 files that actually determine superstep behavior groups samples by the

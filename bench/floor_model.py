@@ -23,7 +23,7 @@ the regime the north rule actually names (a 10^9+-edge table holds
 15-30x more per-executor work than 64M edges at local[4]).
 
 Usage: python bench/floor_model.py  (reads BENCH_SCALING.json; era-filtered
-to the certified engine hashes like bench.py / summarize_scaling.py)
+to the certified engine hashes like summarize_scaling.py --era)
 """
 
 from __future__ import annotations

@@ -105,7 +105,7 @@ def main() -> None:
     }
     print(json.dumps(result))
 
-    # persist machine-readable evidence; bench.py attaches it per round
+    # persist machine-readable evidence (bench/summarize_scaling.py renders it)
     store_path = os.path.join(REPO, "BENCH_SCALING.json")
     store = {}
     if os.path.exists(store_path):

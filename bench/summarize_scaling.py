@@ -7,12 +7,13 @@ This reads every sample in BENCH_SCALING.json and prints one row per
 so the claim is reproducible from the stored evidence with one command.
 
 Usage: python bench/summarize_scaling.py [--engine-commit PREFIX ...]
-                                         [--current-engine]
+                                         [--current-engine | --era]
   --engine-commit limits rows to samples stamped with one of the given
   engine commits (e.g. the commits of the round under judgment).
   --current-engine limits rows to samples whose engine_hash matches the
-  working tree's engine files (see engine_fingerprint.py) — the filter
-  bench.py's inline summary applies.
+  working tree's engine files (see engine_fingerprint.py).
+  --era widens that to every hash bench/engine_era.json certifies as
+  plan-identical to the current engine.
 """
 
 from __future__ import annotations
@@ -54,8 +55,10 @@ def main() -> None:
             args = args[1:]
         elif args[0] == "--era":
             # accept every hash bench/engine_era.json certifies as
-            # plan-identical to the current engine (only valid while the
-            # working tree's own hash is a member — see bench.py)
+            # plan-identical to the current engine: hygiene-only commits
+            # must not orphan a sample base collected against a frozen
+            # engine. Only valid while the working tree's own hash is a
+            # member, so an uncertified engine change stays strict.
             from engine_fingerprint import engine_hash
 
             with open(os.path.join(HERE, "engine_era.json")) as f:

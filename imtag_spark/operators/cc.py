@@ -122,8 +122,7 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # dtype-preserving: the narrow transit arrives int32 and stays
-            # int32 through the whole kernel (see _contract_arrays)
+            # integer Arrow arrays with no nulls, in the columns' own type
             srcs.append(rb.column(0).to_numpy(zero_copy_only=False))
             dsts.append(rb.column(1).to_numpy(zero_copy_only=False))
             buffered += rb.num_rows
@@ -139,12 +138,12 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
 def _contract_arrays(
     srcs: list[np.ndarray], dsts: list[np.ndarray]
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dtype-preserving: int32 inputs (the ``narrow`` transit) keep the
-    whole working set — the unique sort, the gather loop, the vertex
-    array — at 4 bytes/element. Measured per 2M-row task (this host,
-    quiet): 1.49 s int64 → 0.46 s int32, 3.2×; the stage is memory-bound
-    (``np.minimum.at`` scatter + sort bandwidth), so bytes ARE time.
-    Output is upcast to int64 at emit (output is ~V rows, negligible)."""
+    """Union-find over edge chunks → ``(vertex, component min)`` as int64,
+    one row per distinct vertex, vertices sorted ascending. Ids keep the
+    integer type they arrive in (BIGINT → int64, so any 64-bit id is
+    exact; an INT edge table stays int32) and leave as int64 to match
+    ``EDGE_SCHEMA``; only the internal index arrays are narrowed, see
+    below."""
     src = np.concatenate(srcs)
     dst = np.concatenate(dsts)
     verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
@@ -187,46 +186,23 @@ def _contract_arrays(
         if np.array_equal(nxt, p):
             break
         p = nxt
-    return (
-        verts.astype(np.int64, copy=False),
-        verts[p].astype(np.int64, copy=False),
-    )
+    return verts.astype(np.int64, copy=False), verts[p].astype(np.int64, copy=False)
 
 
 def local_contract(
     edges: DataFrame,
     chunk: int = LOCAL_CONTRACT_CHUNK,
-    narrow: bool = False,
     tally: Accumulator | None = None,
 ) -> DataFrame:
     """Shuffle-free per-partition contraction: edges → (vertex, local_root).
 
     Every vertex of a chunk gets one row, roots included as ``(r, r)``;
     callers that want pointer edges filter ``src != dst``. ``tally`` — see
-    ``_local_contract_fn``.
-
-    ``narrow`` — transit the edge columns to the Python workers as INT32
-    instead of INT64, halving the bytes through the round's one
-    non-JVM stage (Arrow IPC both ways, the unique sort, the union-find
-    gathers — all memory-bound; measured 3.2× per task). The caller must
-    hold an id-range bound (``|id| < 2³¹``): ``connected_components``
-    measures it once on the init job — min-hooking only ever moves labels
-    DOWN to existing vertex ids, so bounds checked at init hold for every
-    round — and grid callers hold it statically (run ids ≤ cell count).
-    Mirrors the reference's 32-bit label representation
-    (/root/reference/src/disjoint_set.hpp:24, uint32_t parents;
-    src/SegmentImageImpl.hpp:12 label_t = uint16/uint32): id spaces that
-    fit 32 bits never pay 64-bit traffic. A wrong bound is caught only by
-    an ANSI cast, which throws on overflow; without ANSI the cast wraps,
-    so ``connected_components`` ignores a caller's bound unless
-    ``spark.sql.ansi.enabled`` is true. Full-range ids (e.g.
-    xxhash64-derived corpus vertices) take the int64 path.
+    ``_local_contract_fn``. The edge columns cross the Arrow transit in
+    their own type and are never cast, so no id can wrap (the reference
+    picks a label width and guards it, src/imtag.cpp:120-123; BIGINT ids
+    need no guard).
     """
-    if narrow:
-        edges = edges.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
     return edges.mapInArrow(_local_contract_fn(chunk, tally), schema=EDGE_SCHEMA)
 
 
@@ -260,7 +236,7 @@ def _nside_mins(o: DataFrame) -> DataFrame:
     return o.groupBy("n").agg(F.min("c").alias("mn")).withColumnRenamed("n", "c")
 
 
-def _star_round(edges: DataFrame, n_part: int, narrow: bool = False) -> DataFrame:
+def _star_round(edges: DataFrame, n_part: int) -> DataFrame:
     """One CC superstep: large star, then two partition-local union-find
     contractions. Returns pointer rows ``(src, dst)`` with src > dst.
 
@@ -288,9 +264,9 @@ def _star_round(edges: DataFrame, n_part: int, narrow: bool = False) -> DataFram
     ls = o.join(_nside_mins(o).hint("shuffle_hash"), "c", "left").select(
         F.col("n").alias("src"), F.least("c", "mn").alias("dst")
     )
-    out = local_contract(ls.repartition(n_part, "src"), narrow=narrow)
+    out = local_contract(ls.repartition(n_part, "src"))
     out = out.where(F.col("src") != F.col("dst")).repartition(n_part, "src")
-    return local_contract(out, narrow=narrow).where(F.col("src") != F.col("dst"))
+    return local_contract(out).where(F.col("src") != F.col("dst"))
 
 
 def _endpoint_tally(edges: DataFrame) -> DataFrame:
@@ -462,12 +438,6 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     )
 
 
-def _ansi_enabled(spark) -> bool:
-    # no default argument: conf.get(key, default) returns the default for
-    # an unset key instead of the conf's own (true in Spark 4)
-    return str(spark.conf.get("spark.sql.ansi.enabled")).lower() == "true"
-
-
 def connected_components(
     edges: DataFrame,
     *,
@@ -528,37 +498,13 @@ def connected_components(
     measured gate is the skipped init job, and graphs above
     FUNNEL_EDGE_LIMIT that the caller knows fit one chunk.
 
-    ``narrow_ids`` — caller asserts every vertex id fits INT32, routing
-    the Arrow contractions through the half-width transit immediately
-    (see ``local_contract``); useful on paths that skip the init job
-    (``single_partition``) or run a pre-contraction before it
-    (grid pipelines: run ids ≤ cell count, known statically). Without the
-    hint the loop measures the id range on the init job it already pays
-    and narrows automatically. The hint is honored only when
-    ``spark.sql.ansi.enabled`` is true, where a violated assertion makes
-    the int32 cast throw; otherwise the cast would wrap into a wrong
-    label, so the hint is ignored and only the measured gate narrows.
-
-    Kill switch: session conf ``spark.imtag.cc.narrowTransit`` — ``auto``
-    (default, the behavior above) or ``off`` (never use the int32 transit,
-    overriding both the auto gate and a caller's ``narrow_ids``). Labels
-    are bit-identical either way; only the Arrow transit width changes.
-    It exists because the narrow transit's 2→8 scaling ratio could not be
-    certified (BENCH.md, round-5 transfer samples).
+    ``narrow_ids`` — ignored (ids are int64 on every path); kept for old callers.
 
     ``metrics_out`` — filled with ``supersteps``, ``superstep_times`` and,
     when the one-task solve ran, ``one_task_chunks`` (1 = its output was
     returned as the labels).
     """
     spark = edges.sparkSession
-    transit = str(spark.conf.get("spark.imtag.cc.narrowTransit", "auto")).lower()
-    if transit not in ("auto", "off"):
-        raise ValueError(
-            "spark.imtag.cc.narrowTransit must be 'auto' or 'off', got "
-            f"{transit!r}"
-        )
-    if transit == "off" or not _ansi_enabled(spark):
-        narrow_ids = False
 
     # Self-loops stay in: the one-task solve labels a vertex seen only in
     # a self-loop from its (v, v) row, and every star round drops them
@@ -566,7 +512,7 @@ def connected_components(
     # downstream op (min-aggregates, the union-find), and deduping would
     # shuffle the input to hash(src,dst) — destroying any locality the
     # producer's partitioning carries (e.g. grid edges arrive
-    # row-partitioned, so the narrow pre-contraction collapses whole
+    # row-partitioned, so the shuffle-free pre-contraction collapses whole
     # spatial regions before any shuffle).
     work = edges
     if single_partition:
@@ -580,10 +526,9 @@ def connected_components(
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         work = work.repartitionByRange(n_part, "src")
     if pre_contract:
-        # runs before the init measurement — only a caller-held bound
-        # (narrow_ids) can narrow this pass. Its root rows (r, r) stay, so
-        # every input vertex is still listed for the one-task solve.
-        work = local_contract(work, narrow=narrow_ids)
+        # its root rows (r, r) stay, so every input vertex is still listed
+        # for the one-task solve
+        work = local_contract(work)
 
     start_iter = 0
     resumed = checkpointer.resume() if checkpointer is not None else None
@@ -600,7 +545,6 @@ def connected_components(
     # every `checkpoint_every` rounds when resumability is requested.
     _t = _time.time()
     n_work = 0
-    narrow = narrow_ids
     owns_frontier = False  # True once `work` is a checkpoint THIS solve made
     if resumed is not None or not single_partition:
         # Lazy checkpoint + count = ONE materialization job that also
@@ -613,22 +557,10 @@ def connected_components(
         # make it, re-reading it per round is as cheap as reading the
         # copy, and the copy itself is round 1's single largest stage at
         # 64M edges (~160 task-core-seconds of pure block duplication).
-        # The init action doubles as the id-range measurement for the
-        # narrow Arrow transit: same single materialization job, three
-        # ride-along scalar aggregates instead of one. Labels only ever
-        # move DOWN to existing vertex ids, so init bounds hold for every
-        # round's intermediates.
         if not _cheap_rescan(work):
             work = frontier_checkpoint(work, eager=False)
             owns_frontier = True
-        stats = work.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.least("src", "dst")).alias("lo"),
-            F.max(F.greatest("src", "dst")).alias("hi"),
-        ).collect()[0]
-        n_work = int(stats["n"])
-        if transit != "off" and not narrow and stats["lo"] is not None:
-            narrow = -(2**31) <= int(stats["lo"]) and int(stats["hi"]) < 2**31
+        n_work = work.count()
         if verbose:
             print(f"[cc] init n={n_work} {_time.time() - _t:.1f}s", flush=True)
 
@@ -664,9 +596,7 @@ def connected_components(
     ):
         _t = _time.time()
         tally = spark.sparkContext.accumulator((0, 0), _PairSum())
-        out = local_contract(
-            work.coalesce(1), chunk=_contract_chunk, narrow=narrow, tally=tally
-        )
+        out = local_contract(work.coalesce(1), chunk=_contract_chunk, tally=tally)
         if checkpointer is not None and checkpoint_every == 1:
             out = checkpointer.save(out, 1)
         solved = out.select(
@@ -713,12 +643,12 @@ def connected_components(
                 # pass, terminal immediately (root = component min over the
                 # whole frontier). See FUNNEL_EDGE_LIMIT for why the gate
                 # sits far below the chunk cap.
-                stepped = local_contract(
-                    work.coalesce(1), chunk=_contract_chunk, narrow=narrow
-                ).where(F.col("src") != F.col("dst"))
+                stepped = local_contract(work.coalesce(1), chunk=_contract_chunk).where(
+                    F.col("src") != F.col("dst")
+                )
                 funneled = True
             else:
-                stepped = _star_round(work, n_part, narrow=narrow)
+                stepped = _star_round(work, n_part)
             if checkpointer is not None and (it + 1) % checkpoint_every == 0:
                 stepped = checkpointer.save(stepped, it + 1)
             else:

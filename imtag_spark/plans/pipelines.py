@@ -25,12 +25,13 @@ def label_runs(
     own components without a runs ⋈ labels join.
 
     ``cells_hint`` — static upper bound on the grid's cell count
-    (n_rows * n_cols), when the caller knows it. Runs plus adjacencies
-    stay below ~1.5 × cells, so a small hint routes CC through its
-    one-task solve without the init count (one union-find pass instead of
-    per-round scheduling — the regime where the reference's
-    single-address-space pass wins on overhead). Large/unknown grids take
-    the distributed path unchanged.
+    (n_rows * n_cols), when the caller knows it. It only picks CC's route:
+    runs plus adjacencies stay below ~1.5 × cells, so a hint up to
+    ``SMALL_GRAPH_EDGE_LIMIT`` sends CC to its one-task solve without the
+    init count (one union-find pass instead of per-round scheduling — the
+    regime where the reference's single-address-space pass wins on
+    overhead). Larger or unknown grids take the range-partitioned
+    distributed path.
 
     Returns (vertex, component, dense_label) with dense labels ``base..``.
     """
@@ -43,10 +44,6 @@ def label_runs(
         edges,
         range_partition=not small,
         single_partition=small,
-        # run ids are scan-order ≤ cell count: a static int32 bound lets
-        # the Arrow contractions take the half-width transit even on the
-        # paths that run before/without the init measurement
-        narrow_ids=cells_hint is not None and cells_hint < 2**31,
         metrics_out=metrics_out,
     )
     return densely_relabel(labels, base=base)

@@ -514,9 +514,8 @@ def test_cheap_rescan_requires_deterministic_projection(spark):
 
 
 def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
-    # ids above 2^31: the init measurement must keep the Arrow transit at
-    # int64 (narrow gate off) and labels must stay exact — through the
-    # star round, forced on
+    # ids above 2^31 cross the Arrow transit as int64 and labels stay
+    # exact through the star round, forced on
     import imtag_spark.operators.cc as cc_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
@@ -527,9 +526,9 @@ def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
     assert rows == {v: 5 for v in [5] + [big + i for i in range(1, 7)]}
 
 
-def test_cc_negative_ids_narrow_exact(spark, monkeypatch):
-    # negative ids inside int32 range: the narrow transit fires (auto
-    # measurement) and min-labeling stays exact, star round forced on
+def test_cc_negative_ids_exact(spark, monkeypatch):
+    # negative ids down to -2^31: min-labeling stays exact through the
+    # star round, forced on
     import imtag_spark.operators.cc as cc_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
@@ -540,57 +539,16 @@ def test_cc_negative_ids_narrow_exact(spark, monkeypatch):
     assert rows == {lo: lo, -3: lo, -2: lo, 7: lo, 10: 10, 11: 10}
 
 
-def test_cc_narrow_hint_single_partition(spark):
-    # caller-held int32 bound on the path that runs no init job
-    e = edges_df(spark, [(7, 7), (8, 9), (9, 8), (10, 10)])
-    rows = {
-        r.vertex: r.component
-        for r in connected_components(
-            e, single_partition=True, narrow_ids=True
-        ).collect()
-    }
-    assert rows == {7: 7, 8: 8, 9: 8, 10: 10}
-
-
-def test_cc_narrow_transit_kill_switch(spark, monkeypatch):
-    # spark.imtag.cc.narrowTransit=off must override BOTH the auto gate
-    # and a caller's narrow_ids, yielding identical labels through the
-    # star round — the pre-registered round-5 safety valve
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
-    e = edges_df(spark, TWO_TRIANGLES_BRIDGE)
-    expected = {
-        r.vertex: r.component for r in connected_components(e, max_iter=20).collect()
-    }
-    spark.conf.set("spark.imtag.cc.narrowTransit", "off")
-    try:
-        rows = {
-            r.vertex: r.component
-            for r in connected_components(e, narrow_ids=True, max_iter=20).collect()
-        }
-        assert rows == expected
-        spark.conf.set("spark.imtag.cc.narrowTransit", "bogus")
-        with pytest.raises(ValueError, match="narrowTransit"):
-            connected_components(e, max_iter=20)
-    finally:
-        spark.conf.unset("spark.imtag.cc.narrowTransit")
-
-
-def test_cc_narrow_hint_violated_raises(spark):
-    # a lying narrow_ids bound must ERROR (ANSI cast overflow), never
-    # silently wrap into a wrong label
-    e = edges_df(spark, [(2**40, 1)])
-    with pytest.raises(Exception, match="(?i)overflow|cast|ansi"):
-        connected_components(e, single_partition=True, narrow_ids=True)
-
-
-def test_cc_narrow_hint_ignored_without_ansi(spark):
-    # with ANSI off an int32 cast wraps silently, so a caller's narrow_ids
-    # bound must be ignored (int64 transit) and the labels stay exact
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_cc_narrow_ids_is_ignored(spark, ansi):
+    # narrow_ids is accepted and changes nothing: ids above 2^31 come back
+    # exact on the one-task route with or without ANSI mode
     big = 2**40
-    e = edges_df(spark, [(big + 3, big + 1), (big + 1, 7), (big + 5, big + 5)])
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    e = edges_df(
+        spark, [(big + 3, big + 1), (big + 1, 7), (big + 5, big + 5), (8, 9), (9, 8)]
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         rows = {
             r.vertex: r.component
@@ -599,5 +557,5 @@ def test_cc_narrow_hint_ignored_without_ansi(spark):
             ).collect()
         }
     finally:
-        spark.conf.unset("spark.sql.ansi.enabled")
-    assert rows == {big + 3: 7, big + 1: 7, 7: 7, big + 5: big + 5}
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert rows == {big + 3: 7, big + 1: 7, 7: 7, big + 5: big + 5, 8: 8, 9: 8}

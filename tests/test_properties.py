@@ -25,26 +25,95 @@ def _edges_df(spark, pairs):
     )
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_cc_is_partition_with_min_labels(spark, seed):
+#: per-seed id shift: keeps full-range int64 ids (negative, above 2^31,
+#: near 2^63) in the Arrow transit of every route
+ID_OFFSETS = [0, 2**40, -(2**31), 2**62]
+
+
+def _spy_cc(monkeypatch, route):
+    """Force ``route`` and count the calls that prove it ran."""
+    import imtag_spark.operators.cc as cc
+
+    calls = {"_star_round": 0, "_chain_patch": 0}
+    for name in calls:
+        def spy(*args, _real=getattr(cc, name), _name=name, **kw):
+            calls[_name] += 1
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(cc, name, spy)
+    if route != "default":
+        monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)
+    if route == "star_no_patch":
+        monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 0)
+    return calls
+
+
+#: the default route for these ≤120-edge graphs is the one-task solve
+CC_ROUTES = ["default", "star", "star_no_patch", "multi_chunk"]
+
+
+@pytest.mark.parametrize(
+    "seed,route",
+    [
+        pytest.param(
+            seed, route, id=str(seed) if route == "default" else f"{seed}-{route}"
+        )
+        for route in CC_ROUTES
+        for seed in range(4)
+    ],
+)
+def test_cc_is_partition_with_min_labels(spark, monkeypatch, seed, route):
     rng = np.random.default_rng(seed)
     n_v = int(rng.integers(5, 60))
     n_e = int(rng.integers(0, 120))
-    pairs = [(int(a), int(b)) for a, b in rng.integers(0, n_v, size=(n_e, 2))]
-    rows = connected_components(_edges_df(spark, pairs)).collect()
+    offset = ID_OFFSETS[seed]
+    base = [(int(a), int(b)) for a, b in rng.integers(0, n_v, size=(n_e, 2))]
+    pairs = [(a + offset, b + offset) for a, b in base]
+    calls = _spy_cc(monkeypatch, route)
+    m: dict = {}
+    if route == "multi_chunk":
+        # the kernel cuts chunks only between Arrow batches: 8-row batches
+        # and an 8-edge chunk split the one task's pass
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "8")
+        try:
+            rows = connected_components(
+                _edges_df(spark, pairs),
+                single_partition=True,
+                metrics_out=m,
+                _contract_chunk=8,
+            ).collect()
+        finally:
+            spark.conf.set(key, prev)
+    else:
+        rows = connected_components(_edges_df(spark, pairs), metrics_out=m).collect()
     labels = {r["vertex"]: r["component"] for r in rows}
     if not pairs:
         assert labels == {}
         return
+    # the route really ran
+    if route == "default":
+        assert m["one_task_chunks"] == 1 and calls["_star_round"] == 0
+    elif route == "multi_chunk":
+        assert m["one_task_chunks"] > 1
+    else:
+        assert calls["_star_round"] >= 1
+        assert m.get("one_task_chunks") is None
+    if route == "star":
+        # seeds 0-2 leave witnesses after round 1; seed 3's 10 edges don't
+        assert (calls["_chain_patch"] > 0) == (seed != 3)
+    if route == "star_no_patch":
+        assert calls["_chain_patch"] == 0
     # every edge endpoint labeled EXACTLY once (a dict comprehension alone
     # would mask duplicate-vertex rows — the bug class the star-forest
     # certificate once had), label == min of component
     assert len(rows) == len(labels)
-    verts = {v for p in pairs for v in p}
-    assert set(labels) == verts
-    oracle = cc_min_label(max(verts) + 1, [(a, b) for a, b in pairs])
+    verts = {v for p in base for v in p}
+    assert set(labels) == {v + offset for v in verts}
+    oracle = cc_min_label(max(verts) + 1, base)
     for v in verts:
-        assert labels[v] == oracle[v]
+        assert labels[v + offset] == oracle[v] + offset
 
 
 @pytest.mark.parametrize("seed,p", [(5, 0.35), (6, 0.5), (7, 0.65)])
