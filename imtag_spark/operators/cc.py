@@ -36,7 +36,11 @@ from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
+from imtag_spark.plans.checkpoint import (
+    free_local_checkpoint,
+    frontier_checkpoint,
+    is_materialized_scan,
+)
 
 EDGE_SCHEMA = "src BIGINT, dst BIGINT"
 
@@ -330,31 +334,6 @@ def _chained_count(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["chained"]) + int(row["dup"])
 
 
-def _cheap_rescan(df: DataFrame) -> bool:
-    """True when ``df`` is at most a DETERMINISTIC projection/filter over
-    an already-materialized scan (localCheckpoint RDD, local relation, or
-    file relation) — i.e. re-reading it per round costs the same as
-    reading a fresh checkpoint copy, so the init lineage-truncation copy
-    is pure duplication. Conservative: any unrecognized node means False,
-    and any non-deterministic expression (rand(), a nondet UDF, ...) in
-    the stripped operators means False — re-evaluating those per job
-    would desync the init count's n_work from the edges round 1 actually
-    reads, and the frontier funnel trusts n_work (r4 ADVICE). A file
-    mutated mid-run can still desync a LogicalRelation scan; that is the
-    caller's input-stability contract, same as any repeated Spark read."""
-    try:
-        p = df._jdf.queryExecution().analyzed()
-        while p.nodeName() in ("Project", "Filter") and p.children().size() == 1:
-            exprs = p.expressions()
-            for i in range(exprs.size()):
-                if not exprs.apply(i).deterministic():
-                    return False
-            p = p.children().apply(0)
-        return p.nodeName() in ("LogicalRDD", "LocalRelation", "LogicalRelation")
-    except Exception:
-        return False
-
-
 #: witness-count bound for the terminal-tail patch. When a round's
 #: certificate finds this few non-star-forest witnesses, the violating
 #: sub-forest is collected to the driver, solved with the same NumPy
@@ -553,11 +532,12 @@ def connected_components(
         #
         # Skip the copy when the input is ALREADY a materialized scan
         # (a caller-side checkpoint/local relation under at most a
-        # projection/filter): the plan is as flat as a checkpoint would
-        # make it, re-reading it per round is as cheap as reading the
-        # copy, and the copy itself is round 1's single largest stage at
-        # 64M edges (~160 task-core-seconds of pure block duplication).
-        if not _cheap_rescan(work):
+        # deterministic projection/filter): the plan is as flat as a
+        # checkpoint would make it, re-reading it per round is as cheap as
+        # reading the copy and yields the rows n_work counted (the funnel
+        # gates trust it), and the copy itself is round 1's single largest
+        # stage at 64M edges (~160 task-core-seconds of block duplication).
+        if not is_materialized_scan(work):
             work = frontier_checkpoint(work, eager=False)
             owns_frontier = True
         n_work = work.count()

@@ -45,6 +45,35 @@ def frontier_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager, storageLevel=FRONTIER_STORAGE)
 
 
+def is_materialized_scan(df: DataFrame) -> bool:
+    """True when ``df`` is at most a DETERMINISTIC projection/filter over
+    an already-materialized scan (localCheckpoint RDD, local relation, or
+    file relation): reading it again costs one scan and gives the same
+    rows. Decided from the analyzed plan alone, so it never runs a job.
+
+    Conservative: any unrecognized node means False, and so does any
+    non-deterministic expression (rand(), a nondet UDF, ...) in the
+    stripped operators, because re-evaluating those per job would give
+    each read different rows. A file mutated mid-run can still change a
+    LogicalRelation scan; that is the caller's input-stability contract,
+    same as any repeated Spark read.
+
+    Callers: CC skips its init lineage-truncation copy on such input, and
+    ``densely_relabel`` ranks a one-partition such input inside its task.
+    """
+    try:
+        p = df._jdf.queryExecution().analyzed()
+        while p.nodeName() in ("Project", "Filter") and p.children().size() == 1:
+            exprs = p.expressions()
+            for i in range(exprs.size()):
+                if not exprs.apply(i).deterministic():
+                    return False
+            p = p.children().apply(0)
+        return p.nodeName() in ("LogicalRDD", "LocalRelation", "LogicalRelation")
+    except Exception:
+        return False
+
+
 def free_local_checkpoint(df: DataFrame | None) -> None:
     """Release the block-manager blocks behind a materialized
     ``localCheckpoint`` DataFrame.

@@ -62,6 +62,12 @@ def cc_min_label(n_vertices: int, edges: list[tuple[int, int]]) -> np.ndarray:
     return np.array([find(i) for i in range(n_vertices)], dtype=np.int64)
 
 
+def dense_ranks(components: list[int], base: int = 0) -> dict[int, int]:
+    """component → base + its position among the sorted distinct components
+    (the imtag ``compressed_freeze`` contract, SURVEY.md §2.4)."""
+    return {int(c): i + base for i, c in enumerate(sorted(set(components)))}
+
+
 def reference_label_image(grid: np.ndarray, connectivity: str = "cross") -> np.ndarray:
     """Dense uint32 label image per imtag semantics: background 0, components
     1..M numbered by dense first-encounter (min-member) rank in scan order."""

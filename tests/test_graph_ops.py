@@ -494,23 +494,25 @@ def test_pagerank_auto_local_mode_unchanged(spark):
     assert m["mode"] == "broadcast_join"
 
 
-def test_cheap_rescan_requires_deterministic_projection(spark):
+def test_materialized_scan_requires_deterministic_projection(spark):
     # r4 ADVICE: a nondeterministic projection/filter over a checkpoint is
-    # re-evaluated per job — the init-copy skip must not trust it
-    from imtag_spark.operators.cc import _cheap_rescan
+    # re-evaluated per job — neither CC's init-copy skip nor the in-task
+    # relabel may trust it
+    from imtag_spark.plans.checkpoint import is_materialized_scan
 
     base = (
         spark.range(10)
         .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
         .localCheckpoint()
     )
-    assert _cheap_rescan(base)
-    assert _cheap_rescan(base.select("src", "dst"))
-    assert _cheap_rescan(base.where(F.col("src") > 2).select("src", "dst"))
-    assert not _cheap_rescan(
+    assert is_materialized_scan(base)
+    assert is_materialized_scan(base.select("src", "dst"))
+    assert is_materialized_scan(base.where(F.col("src") > 2).select("src", "dst"))
+    assert not is_materialized_scan(
         base.select((F.col("src") + F.floor(F.rand() * 0)).alias("src"), "dst")
     )
-    assert not _cheap_rescan(base.where(F.rand() >= 0.0))
+    assert not is_materialized_scan(base.where(F.rand() >= 0.0))
+    assert not is_materialized_scan(base.repartition(2))
 
 
 def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
