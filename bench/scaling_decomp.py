@@ -17,7 +17,7 @@ API for per-stage metrics and prints a machine-comparable JSON breakdown:
     shows up as inter-job gaps.
 
 Usage: python bench/scaling_decomp.py <cpus> [n_edges] [n_vertices]
-           [uniform|skew] [n_part] [cc|pr|both] [pr_mode]
+           [uniform|skew] [n_part] [cc|pr|both]
 """
 
 from __future__ import annotations
@@ -113,7 +113,6 @@ def main() -> None:
     skew = len(sys.argv) > 4 and sys.argv[4] == "skew"
     n_part = int(sys.argv[5]) if len(sys.argv) > 5 else 32
     which = sys.argv[6] if len(sys.argv) > 6 else "both"
-    pr_mode = sys.argv[7] if len(sys.argv) > 7 else None
 
     spark = get_spark(
         app_name=f"decomp_{cpus}",
@@ -151,13 +150,10 @@ def main() -> None:
         }
 
     if which in ("pr", "both"):
-        kw = {"mode": pr_mode} if pr_mode else {}
-        pagerank(edges, directed=True, tol=0.0, max_iter=3, **kw).count()  # warmup
+        pagerank(edges, directed=True, tol=0.0, max_iter=3).count()  # warmup
         t0 = time.time()
         pr_m: dict = {}
-        pagerank(
-            edges, directed=True, tol=0.0, max_iter=5, metrics_out=pr_m, **kw
-        ).count()
+        pagerank(edges, directed=True, tol=0.0, max_iter=5, metrics_out=pr_m).count()
         t1 = time.time()
         stages, jobs = snapshot(api, app_id)
         out["pr"] = {

@@ -92,11 +92,11 @@ def main() -> None:
     # samples 4/5 show 16-27 s outlier supersteps at local[32] that a
     # cross-rep min removes).
     REPS = int(os.environ.get("SCALING_REPS", "3"))
-    # pagerank() is called with its signature default mode — since r4 that
-    # is "auto" (broadcast_join inside the V gate), i.e. the harness times
-    # the plan a naive caller actually gets. r3 and earlier samples timed
-    # the then-default "join" mode; the recorded pagerank_mode field (and
-    # engine_hash in bench/scaling.py) keeps the eras separable.
+    # pagerank() picks its route from V and the executor count
+    # (broadcast_join inside the V gate here), i.e. the harness times the
+    # plan every caller gets. r3 and earlier samples timed the "join"
+    # route; the recorded pagerank_mode field (the route that ran) and
+    # engine_hash in bench/scaling.py keep the eras separable.
     pr_reps: list[list[float]] = []
     pr_mode = None
     for _ in range(REPS):

@@ -2,14 +2,18 @@
 
 Generalizes the reference's pass-2 union-find label merge
 (src/SegmentImageImpl.cpp:78-116 driving src/disjoint_set.hpp:125-137 in
-the reference). A graph that fits one union-find chunk is solved by one
-coalesced NumPy union-find pass, the direct analog of the reference's
+the reference). A graph whose init count is at most FUNNEL_EDGE_LIMIT
+rows, or that a caller hints small (``single_partition``), is solved by
+one coalesced NumPy union-find pass, the direct analog of the reference's
 single-address-space merge. Larger graphs run star rounds (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14): each round is a
 large star over the oriented edge set followed by two partition-local
 union-find contractions inside Arrow UDFs, and a convergence certificate
 decides whether another round is needed. A near-terminal tail of chains
-is resolved driver-side instead of by one more round.
+is resolved driver-side instead of by one more round, and a frontier back
+under FUNNEL_EDGE_LIMIT rows is finished by the one-task pass.
+``range_partition`` adds a partition-local union-find pass over the
+range-partitioned input before either.
 
 Labeling contract (verified against the compiled reference, SURVEY.md §2.4):
 final ``component = min(vertex_id)`` over the component. The reference's
@@ -32,7 +36,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,27 +52,30 @@ EDGE_SCHEMA = "src BIGINT, dst BIGINT"
 # Partition-local union-find pre-contraction (the imtag disjoint_set analog)
 # ---------------------------------------------------------------------------
 
-#: per-chunk edge cap for the partition-local union-find. A skewed producer
-#: can hand one task a multi-hundred-million-row partition (e.g. a hub star
-#: colocated by the upstream join); chunking bounds the union-find working
-#: set (≈ 5 int64 arrays × cap) and the O(E log E) np.unique sort to a
-#: constant, and streams results out as Arrow batches arrive instead of
-#: buffering the whole partition. Cross-chunk merges are absorbed by the
-#: global star rounds (the output stays a valid spanning relabeling).
+#: per-chunk edge cap for the star round's partition-local union-finds
+#: (and the range-partitioned input pass). Those contractions run over
+#: whatever partitions an exchange produced, and skew can fatten one (a hub
+#: star colocated by hash(src), a hub's range stripe); chunking bounds the
+#: union-find working set (≈ 5 int64 arrays × cap) and the O(E log E)
+#: np.unique sort to a constant, and streams results out as Arrow batches
+#: arrive. Cross-chunk merges are absorbed by the following rounds (the
+#: output stays a valid spanning relabeling). The one-task pass never
+#: chunks: its gates bound its input instead.
 LOCAL_CONTRACT_CHUNK = 8_000_000
 
-#: cell-count bound under which grid callers pass ``single_partition``:
-#: a grid's runs plus their adjacency edges stay below ~1.5 × cells, so at
-#: half a chunk the whole graph is one union-find pass
-SMALL_GRAPH_EDGE_LIMIT = LOCAL_CONTRACT_CHUNK // 2
+#: cell-count bound under which grid callers pass ``single_partition``.
+#: A grid's runs plus their adjacency edges stay below ~1.5 × cells, so the
+#: hinted one-task pass reads at most ~6M rows: one serial task of a few
+#: seconds (a 4.0M-row one-task pass took ~6 s, BENCH.md "Frontier
+#: funnel"; the 1024² grid's 0.49M rows take 0.21 s at local[4]).
+SMALL_GRAPH_EDGE_LIMIT = 4_000_000
 
 #: input-row bound for the one-task solve. ``connected_components`` runs a
 #: single coalesced union-find pass and returns its output as the labels
-#: when the init job counts at most ``min(FUNNEL_EDGE_LIMIT, chunk)`` rows;
-#: later rounds funnel their frontier into one task under the same bound.
-#: Far below LOCAL_CONTRACT_CHUNK because one task is a SERIAL tail: at a
-#: 4.0M-row frontier it costs ~6 s at any parallelism (transit + one
-#: union-find), barely beating a distributed round at local[32] (7.5 s)
+#: when the init job counts at most this many rows; later rounds funnel
+#: their frontier into one task under the same bound. One task is a SERIAL
+#: tail: at a 4.0M-row frontier it costs ~6 s at any parallelism (transit +
+#: one union-find), barely beating a distributed round at local[32] (7.5 s)
 #: and flattening the core-count response; at ≤1M rows (~16 MB) it runs
 #: well under a distributed round's ~2-3 s scheduling floor.
 FUNNEL_EDGE_LIMIT = 1_000_000
@@ -79,17 +85,7 @@ FUNNEL_EDGE_LIMIT = 1_000_000
 _CONTRACT_OUT_BATCH = 1_000_000
 
 
-class _PairSum(AccumulatorParam):
-    """Elementwise sum of ``(chunks, rows)`` tallies from the contraction."""
-
-    def zero(self, value):
-        return (0, 0)
-
-    def addInPlace(self, a, b):
-        return (a[0] + b[0], a[1] + b[1])
-
-
-def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
+def _local_contract_fn(chunk: int | None):
     """Build the per-partition union-find closure; emits (vertex, local_root).
 
     Pure NumPy, array-based, path-halving on vectorized lookups. The output
@@ -97,9 +93,8 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
     them to the global algorithm preserves connectivity while cutting the
     edge count to ≤ #distinct local vertices. This mirrors the reference's
     single-address-space union-find, scoped to what actually shares an
-    address space in Spark: one partition — processed in bounded chunks
-    (``chunk`` edges) so a skew-fattened partition cannot blow up one
-    task's memory or stall it on a single giant sort. A closure (not a
+    address space in Spark: one partition, processed in chunks of ``chunk``
+    edges (``None``: the whole partition is one chunk). A closure (not a
     module global) so the chunk bound serializes by value to executors.
 
     Runs under ``mapInArrow``: the kernel is NumPy end-to-end, Arrow
@@ -115,8 +110,6 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
 
         def _emit():
             verts, roots = _contract_arrays(srcs, dsts)
-            if tally is not None:
-                tally.add((1, len(verts)))
             out = pa.record_batch(
                 [pa.array(verts), pa.array(roots)], names=["src", "dst"]
             )
@@ -130,7 +123,7 @@ def _local_contract_fn(chunk: int, tally: Accumulator | None = None):
             srcs.append(rb.column(0).to_numpy(zero_copy_only=False))
             dsts.append(rb.column(1).to_numpy(zero_copy_only=False))
             buffered += rb.num_rows
-            if buffered >= chunk:
+            if chunk is not None and buffered >= chunk:
                 yield from _emit()
                 srcs, dsts, buffered = [], [], 0
         if srcs:
@@ -158,7 +151,7 @@ def _contract_arrays(
     # under 32-way task contention (this host's actual execution regime at
     # local[32]): 23 s → 2.7 s per 2M-edge/4M-vertex task, 8.6×; single-task
     # time unchanged (0.83 s → 0.81 s). int64 kept as the (untested-scale)
-    # fallback for a >2^31-vertex chunk, which the chunk cap precludes.
+    # fallback for a >2^31-vertex chunk.
     ptr_dtype = np.int32 if len(verts) < 2**31 else np.int64
     idx = idx.astype(ptr_dtype, copy=False)
     a = idx[: len(src)]
@@ -193,21 +186,26 @@ def _contract_arrays(
     return verts.astype(np.int64, copy=False), verts[p].astype(np.int64, copy=False)
 
 
-def local_contract(
-    edges: DataFrame,
-    chunk: int = LOCAL_CONTRACT_CHUNK,
-    tally: Accumulator | None = None,
-) -> DataFrame:
+def local_contract(edges: DataFrame) -> DataFrame:
     """Shuffle-free per-partition contraction: edges → (vertex, local_root).
 
+    Partitions are processed in chunks of LOCAL_CONTRACT_CHUNK edges.
     Every vertex of a chunk gets one row, roots included as ``(r, r)``;
-    callers that want pointer edges filter ``src != dst``. ``tally`` — see
-    ``_local_contract_fn``. The edge columns cross the Arrow transit in
-    their own type and are never cast, so no id can wrap (the reference
-    picks a label width and guards it, src/imtag.cpp:120-123; BIGINT ids
-    need no guard).
+    callers that want pointer edges filter ``src != dst``. The edge columns
+    cross the Arrow transit in their own type and are never cast, so no id
+    can wrap (the reference picks a label width and guards it,
+    src/imtag.cpp:120-123; BIGINT ids need no guard).
     """
-    return edges.mapInArrow(_local_contract_fn(chunk, tally), schema=EDGE_SCHEMA)
+    return edges.mapInArrow(
+        _local_contract_fn(LOCAL_CONTRACT_CHUNK), schema=EDGE_SCHEMA
+    )
+
+
+def _one_task_solve(edges: DataFrame) -> DataFrame:
+    """One coalesced union-find pass over the whole input, never chunked:
+    ``(vertex, component min)`` for every vertex once, roots as ``(r, r)``.
+    Exact by construction, so its output is a terminal star forest."""
+    return edges.coalesce(1).mapInArrow(_local_contract_fn(None), schema=EDGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -420,7 +418,6 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
 def connected_components(
     edges: DataFrame,
     *,
-    pre_contract: bool | None = None,
     range_partition: bool = False,
     single_partition: bool = False,
     narrow_ids: bool = False,
@@ -429,7 +426,6 @@ def connected_components(
     checkpointer=None,
     verbose: bool = False,
     metrics_out: dict | None = None,
-    _contract_chunk: int = LOCAL_CONTRACT_CHUNK,
 ) -> DataFrame:
     """Edge table ``(src BIGINT, dst BIGINT)`` → labels ``(vertex, component)``.
 
@@ -438,50 +434,39 @@ def connected_components(
     only in self-loops) label themselves. Every vertex occurring in
     ``edges`` appears exactly once in the result.
 
-    ``range_partition`` — range-partition the input by ``src`` before the
-    local pre-contraction. When vertex ids carry locality (scan-order run
-    ids, any id space where neighbors have nearby ids), contiguous id
-    stripes land in one partition and the partition-local union-find
-    collapses whole regions in round 1 — measured on the 2160×3840 grid:
-    13 → 8 global rounds, 80 s → 35 s. Leave off for hash-id graphs
-    (no locality to exploit; the extra shuffle is pure cost).
+    Route: an init job counts the input. An input of at most
+    FUNNEL_EDGE_LIMIT rows is solved by one ``coalesce(1)`` union-find pass
+    over the whole input, self-loops included, whose output (every vertex
+    once, with its component minimum) is returned as the labels,
+    materialized by one eager checkpoint job with no shuffle, no
+    certificate and no vertex-universe join (the reference's union-find
+    pass plus ``find`` sweep, src/SegmentImageImpl.cpp:78-116 in the
+    reference). Larger inputs run star rounds until a certificate finds a
+    terminal star forest; a round whose counted frontier is under the same
+    bound is solved by the same one-task pass.
 
-    ``pre_contract`` — run the partition-local union-find over the INPUT
-    partitioning before the star rounds. Defaults to ``range_partition``:
-    on locality-partitioned inputs it collapses whole regions for ~free,
-    but on hash-id graphs the input pass costs a full Arrow transit of the
-    edge set (measured: 25–65 s at 32 M edges) while shrinking round 1's
-    edge count only ~35 % — and on a skew-colocated producer it hands one
-    task the whole hub star (the round-1 stall in BENCH.md's skew section).
-    Pass ``True``/``False`` to override the heuristic either way.
+    ``range_partition`` — range-partition the input by ``src`` and run the
+    partition-local union-find over those partitions before the solve.
+    When vertex ids carry locality (scan-order run ids, any id space where
+    neighbors have nearby ids), contiguous id stripes land in one partition
+    and the pass collapses whole regions for ~free — measured on the
+    2160×3840 grid: 13 → 8 global rounds, 80 s → 35 s. Leave off for
+    hash-id graphs: there the input pass costs a full Arrow transit of the
+    edge set (25–65 s at 32 M edges) while shrinking round 1 only ~35 %.
+
+    ``single_partition`` — caller-held size bound (e.g. grid pipelines:
+    edges ≤ cells, known without a job): skip the init job and go straight
+    to the one-task pass, whatever the input's size. The pass never chunks,
+    so the labels are exact at any size, but one task is then the whole
+    solve — never pass the hint unbounded. Overrides ``range_partition``.
 
     ``checkpointer`` — optional ``plans.checkpoint.SuperstepCheckpointer``
     for durable per-superstep state + resume; defaults to in-memory
     ``localCheckpoint`` lineage truncation.
 
-    ``single_partition`` — caller-held size bound (e.g. grid pipelines:
-    edges ≤ cells, known without a job): skip the init job and solve in
-    one task. Without the hint the init job counts the input and takes the
-    same one-task solve when the count is ≤ ``min(FUNNEL_EDGE_LIMIT,
-    chunk)``. The solve is one ``coalesce(1)`` union-find pass over the
-    whole input, self-loops included; when the pass is one chunk its
-    output — every vertex once, with its component minimum — is returned
-    as the labels, materialized by one eager checkpoint job with no
-    shuffle, no certificate and no vertex-universe join (the reference's
-    union-find pass plus ``find`` sweep, src/SegmentImageImpl.cpp:78-116
-    in the reference). The pass tallies
-    its chunks into an accumulator read after that job, so a hinted input
-    larger than one chunk is detected without another job and continues
-    through the certificate loop: exact, but with one task as the
-    bottleneck — never pass the hint unbounded. The hint's value over the
-    measured gate is the skipped init job, and graphs above
-    FUNNEL_EDGE_LIMIT that the caller knows fit one chunk.
-
     ``narrow_ids`` — ignored (ids are int64 on every path); kept for old callers.
 
-    ``metrics_out`` — filled with ``supersteps``, ``superstep_times`` and,
-    when the one-task solve ran, ``one_task_chunks`` (1 = its output was
-    returned as the labels).
+    ``metrics_out`` — filled with ``supersteps`` and ``superstep_times``.
     """
     spark = edges.sparkSession
 
@@ -490,24 +475,13 @@ def connected_components(
     # itself. No input distinct(): duplicates are harmless to every
     # downstream op (min-aggregates, the union-find), and deduping would
     # shuffle the input to hash(src,dst) — destroying any locality the
-    # producer's partitioning carries (e.g. grid edges arrive
-    # row-partitioned, so the shuffle-free pre-contraction collapses whole
-    # spatial regions before any shuffle).
+    # producer's partitioning carries.
     work = edges
-    if single_partition:
-        # the one-task solve IS the whole solve, so the input-pass
-        # pre-contraction and the range shuffle would be pure overhead
-        pre_contract = False
-        range_partition = False
-    if pre_contract is None:
-        pre_contract = range_partition
-    if range_partition:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        work = work.repartitionByRange(n_part, "src")
-    if pre_contract:
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if range_partition and not single_partition:
         # its root rows (r, r) stay, so every input vertex is still listed
         # for the one-task solve
-        work = local_contract(work)
+        work = local_contract(work.repartitionByRange(n_part, "src"))
 
     start_iter = 0
     resumed = checkpointer.resume() if checkpointer is not None else None
@@ -569,36 +543,20 @@ def connected_components(
             metrics_out.setdefault("superstep_times", []).append(_time.time() - _t)
             metrics_out["supersteps"] = it + 1
 
-    solved: DataFrame | None = None
-    pending: DataFrame | None = None  # a round the one-task solve already ran
-    if resumed is None and (
-        single_partition or n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk)
-    ):
+    if resumed is None and (single_partition or n_work <= FUNNEL_EDGE_LIMIT):
         _t = _time.time()
-        tally = spark.sparkContext.accumulator((0, 0), _PairSum())
-        out = local_contract(work.coalesce(1), chunk=_contract_chunk, tally=tally)
+        out = _one_task_solve(work)
         if checkpointer is not None and checkpoint_every == 1:
             out = checkpointer.save(out, 1)
-        solved = out.select(
+        labels = out.select(
             F.col("src").alias("vertex"), F.col("dst").alias("component")
         ).localCheckpoint(eager=True)
         if owns_frontier:
             free_local_checkpoint(work)
-        n_chunks, n_rows = tally.value
-        if metrics_out is not None:
-            metrics_out["one_task_chunks"] = n_chunks
-        if n_chunks <= 1:
-            _log_round(0, n_rows, 0, 0)
-            return solved
-        # Several chunks (a hinted input larger than one): roots are only
-        # chunk minima and a vertex seen by k chunks has k rows, so the
-        # pass is round 1 of the certificate loop below instead. The tally
-        # can only over-count (a re-run task), which costs that loop, never
-        # exactness.
-        work = pending = solved.select(
-            F.col("vertex").alias("src"), F.col("component").alias("dst")
-        ).where(F.col("src") != F.col("dst"))
-        owns_frontier = False
+        # rows in, as counted by the init job (0 when hinted): counting the
+        # labels would cost a job
+        _log_round(0, n_work, 0, 0)
+        return labels
 
     universe = (
         edges.select(F.col("src").alias("vertex"))
@@ -606,42 +564,30 @@ def connected_components(
         .distinct()
     ).persist()
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     chain_patch: DataFrame | None = None
     for it in range(start_iter, max_iter):
-        funneled = False
+        _t = _time.time()
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
-        if pending is not None:
-            stepped, pending = pending, None  # materialized; _t runs from the pass
-        else:
-            _t = _time.time()
-            if n_work <= min(FUNNEL_EDGE_LIMIT, _contract_chunk):
-                # Frontier funnel: the frontier the previous certificate
-                # counted is small enough that a distributed round would be
-                # pure scheduling floor, and it fits ONE union-find chunk —
-                # so a single coalesced task solves the remainder in one
-                # pass, terminal immediately (root = component min over the
-                # whole frontier). See FUNNEL_EDGE_LIMIT for why the gate
-                # sits far below the chunk cap.
-                stepped = local_contract(work.coalesce(1), chunk=_contract_chunk).where(
-                    F.col("src") != F.col("dst")
-                )
-                funneled = True
-            else:
-                stepped = _star_round(work, n_part)
-            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
-                stepped = checkpointer.save(stepped, it + 1)
-            else:
-                # lazy: the convergence-certificate collect below materializes
-                # the checkpoint, so each round costs exactly one Spark job
-                stepped = frontier_checkpoint(stepped, eager=False)
+        # Frontier funnel: a frontier the previous certificate counted
+        # under FUNNEL_EDGE_LIMIT would make a distributed round pure
+        # scheduling floor, so the one-task pass solves the remainder,
+        # terminal immediately.
+        funneled = n_work <= FUNNEL_EDGE_LIMIT
         if funneled:
-            # the gate (n_work <= chunk) guarantees the ENTIRE frontier went
-            # through one union-find pass, whose output is a terminal star
-            # forest by construction (unique sorted vertices, root = global
-            # component min, full path compression) — the certificate would
-            # only re-verify that, over a single partition. A plain count
-            # materializes the checkpoint for a fraction of the cost.
+            stepped = _one_task_solve(work).where(F.col("src") != F.col("dst"))
+        else:
+            stepped = _star_round(work, n_part)
+        if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+            stepped = checkpointer.save(stepped, it + 1)
+        else:
+            # lazy: the convergence-certificate collect below materializes
+            # the checkpoint, so each round costs exactly one Spark job
+            stepped = frontier_checkpoint(stepped, eager=False)
+        if funneled:
+            # the one-task pass is a terminal star forest by construction —
+            # the certificate would only re-verify that, over a single
+            # partition. A plain count materializes the checkpoint for a
+            # fraction of the cost.
             n_edges, chained = stepped.count(), 0
         else:
             n_edges, chained = _chained_count(stepped)
@@ -699,8 +645,6 @@ def connected_components(
         .localCheckpoint(eager=True)
     )  # labels are wide-ish and read once by the caller: default storage
     universe.unpersist()
-    # the labels are materialized — the terminal star forest is dead too,
-    # and so is a multi-chunk one-task pass it grew from
+    # the labels are materialized — the terminal star forest is dead too
     free_local_checkpoint(bare_forest)
-    free_local_checkpoint(solved)
     return out

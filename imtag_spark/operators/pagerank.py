@@ -9,6 +9,9 @@ standard power iteration with damping ``alpha``, uniform teleport, and
 uniform redistribution of dangling-node mass; vertices = src ∪ dst.
 
 Scale design:
+- the superstep's physical route (``broadcast_join`` or ``join``, see
+  ``pagerank``) follows from the counted vertex count and the executor
+  count; callers have no route option;
 - the transition table (edges pre-joined with 1/out-degree) is built ONCE
   and persisted/checkpointed; every superstep after that is a single
   equi-join + one map-side-combinable sum — the minimum shuffle count per
@@ -38,25 +41,23 @@ from imtag_spark.plans.checkpoint import (
 #: broadcast ≈ 16B × V per executor — 320 MB at the threshold)
 BROADCAST_VERTEX_LIMIT = 20_000_000
 
-#: auto mode's cluster-size cap on the broadcast_join choice: the
-#: per-superstep broadcast ships O(V) bytes to EVERY executor, so its total
-#: network cost is V × executors while the join mode's ranks exchange moves
-#: O(V) rows once. Locally (fan-out 1) broadcast_join wins by ~1.2x
-#: (BENCH.md r3 A/B); that margin cannot survive a fan-out hundreds of
-#: times larger, so past this executor count auto routes to join. The
-#: sandbox cannot price a real network — the constant is deliberately
-#: conservative (a 16-executor fan-out of a gate-sized V is ~5 GB/round);
-#: callers who have measured their cluster can still pass
-#: mode='broadcast_join' explicitly.
+#: cluster-size cap on the broadcast_join route: the per-superstep
+#: broadcast ships O(V) bytes to EVERY executor, so its total network cost
+#: is V × executors while the join route's ranks exchange moves O(V) rows
+#: once. Locally (fan-out 1) broadcast_join wins by ~1.2x (BENCH.md r3
+#: A/B); that margin cannot survive a fan-out hundreds of times larger, so
+#: past this executor count the join route runs. The sandbox cannot price
+#: a real network — the constant is deliberately conservative (a
+#: 16-executor fan-out of a gate-sized V is ~5 GB/round).
 AUTO_BROADCAST_EXECUTOR_LIMIT = 16
 
 
 def _cluster_executor_count(spark) -> int:
-    """Executor-JVM count = the broadcast fan-out multiplier auto must
-    price. ``spark.executor.instances`` when set (static allocation);
-    otherwise the scheduler's live executor list (dynamic allocation —
-    a point-in-time floor, which is the conservative direction here);
-    local mode has no separate executors and reports 1."""
+    """Executor-JVM count = the broadcast fan-out multiplier the route
+    gate must price. ``spark.executor.instances`` when set (static
+    allocation); otherwise the scheduler's live executor list (dynamic
+    allocation — a point-in-time floor, which is the conservative
+    direction here); local mode has no separate executors and reports 1."""
     try:
         inst = spark.sparkContext.getConf().get("spark.executor.instances", None)
         if inst:
@@ -72,7 +73,7 @@ def _cluster_executor_count(spark) -> int:
 
 
 def _auto_prefers_broadcast_join(n_vertices: int, executors: int) -> bool:
-    """The auto-mode gate, pure so tests can exercise cluster shapes this
+    """The route gate, pure so tests can exercise cluster shapes this
     sandbox cannot launch: broadcast_join only while BOTH the per-executor
     broadcast (V) and the cluster fan-out (executors) stay inside the
     measured-win regime."""
@@ -100,7 +101,6 @@ def pagerank(
     checkpoint_every: int = 5,
     verbose: bool = False,
     metrics_out: dict | None = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """Edge table (src, dst) → ranks (vertex, rank). Ranks sum to 1.
 
@@ -108,30 +108,26 @@ def pagerank(
     dropped; duplicate edges are counted once (set semantics, matching the
     oracle).
 
-    ``mode``:
-    - ``"join"`` — fully distributed, any V. Transitions are cached
-      hash(src)-partitioned; each superstep exchanges the V-row ranks to
-      meet them and the map-side-combined contributions to the dst
-      aggregate.
-    - ``"broadcast_join"`` — transitions are cached hash(dst)-partitioned;
-      each superstep broadcasts the ranks, packed 16 per row, into them.
-      Neither join side nor the ``groupBy(dst)`` aggregate exchanges, so
-      the E-row side never moves and the superstep stays in whole-stage
-      codegen. Costs one O(V × executors) broadcast per superstep. Falls
-      back to ``join`` above BROADCAST_VERTEX_LIMIT vertices.
-    - ``"auto"`` (default) — ``broadcast_join`` when V ≤
-      BROADCAST_VERTEX_LIMIT and the executor count is ≤
-      AUTO_BROADCAST_EXECUTOR_LIMIT, else ``join``. The V gate rests on
-      the 64M-edge A/B: broadcast_join 21.4M vs join 17.7M edges/s per
-      steady superstep (BENCH.md, round 3). The executor gate prices a
-      broadcast fan-out that grows with the cluster while ``join``
-      exchanges O(V) rows once.
+    The physical route comes from V and the executor count:
+    - ``broadcast_join`` when V ≤ BROADCAST_VERTEX_LIMIT and the executor
+      count is ≤ AUTO_BROADCAST_EXECUTOR_LIMIT. Transitions are cached
+      hash(dst)-partitioned; each superstep broadcasts the ranks, packed
+      16 per row, into them. Neither join side nor the ``groupBy(dst)``
+      aggregate exchanges, so the E-row side never moves and the superstep
+      stays in whole-stage codegen. The V gate rests on the 64M-edge A/B:
+      broadcast_join 21.4M vs join 17.7M edges/s per steady superstep
+      (BENCH.md, round 3). The executor gate prices a broadcast fan-out
+      that grows with the cluster.
+    - ``join`` otherwise, the only route above the V gate. Transitions are
+      cached hash(src)-partitioned; each superstep exchanges the V-row
+      ranks to meet them and the map-side-combined contributions to the
+      dst aggregate.
 
-    Both modes keep rank state in DataFrames, so a checkpointer works with
-    either.
+    Both routes keep rank state in DataFrames, so a checkpointer works with
+    either. ``metrics_out`` gets ``supersteps``, ``superstep_times``,
+    ``contribs_plan`` (the first superstep's physical plan) and ``mode``,
+    the route that ran.
     """
-    if mode not in ("join", "broadcast_join", "auto"):
-        raise ValueError(f"unknown mode: {mode}")
     # Clean the edge set ONCE; both paths (and the vertex universe) reuse it.
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst")
     if not directed:
@@ -147,15 +143,8 @@ def pagerank(
     if n == 0:
         return edges.sparkSession.createDataFrame([], "vertex BIGINT, rank DOUBLE")
 
-    # the V bound holds for an explicit broadcast_join too (see ``mode``)
-    use_bjoin = n <= BROADCAST_VERTEX_LIMIT and (
-        mode == "broadcast_join"
-        or (
-            mode == "auto"
-            and _auto_prefers_broadcast_join(
-                n, _cluster_executor_count(edges.sparkSession)
-            )
-        )
+    use_bjoin = _auto_prefers_broadcast_join(
+        n, _cluster_executor_count(edges.sparkSession)
     )
 
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))

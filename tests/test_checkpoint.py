@@ -23,19 +23,17 @@ def _chain_edges(spark, n=5000):
     ).repartition(8)
 
 
-#: the r4 frontier funnel solves any sub-1M-row graph in one round, which
-#: would defeat these multi-superstep checkpoint scenarios; shrinking the
-#: union-find chunk (which also gates the funnel) keeps them multi-round
-MULTI_ROUND = {"_contract_chunk": 512}
-
-
 @pytest.fixture(autouse=True)
-def _no_terminal_patch(monkeypatch):
-    # the r4 terminal-tail patch resolves any ≤65536-witness tail without a
-    # further superstep — correct, but these scenarios deliberately engineer
-    # multi-superstep runs to exercise checkpoint/resume, so disable it here
+def _multi_round(monkeypatch):
+    # the one-task solve and the frontier funnel finish any sub-1M-row
+    # graph in one round, and the terminal-tail patch resolves any
+    # ≤65536-witness tail without a further superstep — correct, but these
+    # scenarios deliberately engineer multi-superstep runs to exercise
+    # checkpoint/resume, so lower the funnel gate to 512 rows and disable
+    # the patch here
     import imtag_spark.operators.cc as cc
 
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 512)
     monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 0)
 
 
@@ -46,10 +44,7 @@ def _labels_dict(df):
 def test_checkpointer_writes_manifest_and_metrics(spark, tmp_path):
     ckpt = SuperstepCheckpointer(spark, str(tmp_path / "cc"), keep_last=3)
     edges = _chain_edges(spark)
-    labels = connected_components(
-        edges, checkpointer=ckpt, checkpoint_every=1, pre_contract=False,
-        **MULTI_ROUND,
-    )
+    labels = connected_components(edges, checkpointer=ckpt, checkpoint_every=1)
     got = _labels_dict(labels)
     assert set(got.values()) == {0}
     manifest = json.loads(ckpt.manifest_path.read_text())
@@ -67,8 +62,7 @@ def test_resume_after_kill_is_identical(spark, tmp_path):
     # full run -> ground truth + durable per-step checkpoints
     full = SuperstepCheckpointer(spark, root, keep_last=100)
     expected = _labels_dict(
-        connected_components(edges, checkpointer=full, checkpoint_every=1,
-                             pre_contract=False, **MULTI_ROUND)
+        connected_components(edges, checkpointer=full, checkpoint_every=1)
     )
     manifest = json.loads(full.manifest_path.read_text())
     last = manifest["last_step"]
@@ -85,9 +79,7 @@ def test_resume_after_kill_is_identical(spark, tmp_path):
     frontier, step = resumed_ckpt.resume()
     assert step == kill_at
     resumed = _labels_dict(
-        connected_components(edges, checkpointer=resumed_ckpt,
-                             checkpoint_every=1, pre_contract=False,
-                             **MULTI_ROUND)
+        connected_components(edges, checkpointer=resumed_ckpt, checkpoint_every=1)
     )
     assert resumed == expected
 
@@ -109,11 +101,8 @@ def test_manifest_records_true_witnesses_when_patch_fires(
 
     monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 65_536)  # undo autouse 0
     ckpt = SuperstepCheckpointer(spark, str(tmp_path / "cc"), keep_last=3)
-    edges = _chain_edges(spark, n=600)  # > the 512 chunk → no funnel
-    labels = connected_components(
-        edges, checkpointer=ckpt, checkpoint_every=1, pre_contract=False,
-        **MULTI_ROUND,
-    )
+    edges = _chain_edges(spark, n=600)  # > the 512-row gate → no funnel
+    labels = connected_components(edges, checkpointer=ckpt, checkpoint_every=1)
     assert set(_labels_dict(labels).values()) == {0}  # patch kept exactness
     manifest = json.loads(ckpt.manifest_path.read_text())
     patched_steps = [

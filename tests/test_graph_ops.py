@@ -30,6 +30,20 @@ def _oracle_labels(pairs) -> dict[int, int]:
     return {v: verts[r] for v, r in zip(verts, roots)}
 
 
+def _count_calls(monkeypatch, *names):
+    """Spy on the named ``cc`` functions; returns their call counts."""
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = dict.fromkeys(names, 0)
+    for name in names:
+        def spy(*args, _real=getattr(cc_mod, name), _name=name, **kw):
+            calls[_name] += 1
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(cc_mod, name, spy)
+    return calls
+
+
 def test_cc_two_triangles_bridge(spark):
     labels = connected_components(edges_df(spark, TWO_TRIANGLES_BRIDGE))
     rows = {r.vertex: r.component for r in labels.collect()}
@@ -91,27 +105,24 @@ def test_cc_single_partition_selfloops_isolated(spark):
     assert rows == {7: 7, 8: 8, 9: 8, 10: 10}
 
 
-def test_cc_single_partition_multichunk_exact(spark):
-    # the kernel cuts chunks only between Arrow batches, so batches of 64
-    # rows plus a 64-edge chunk bound really split the one task's pass;
-    # the cross-chunk merges must still resolve via the certificate loop
+def test_cc_one_task_pass_never_splits(spark, monkeypatch):
+    # 8-row Arrow batches hand the one task's union-find a long path in
+    # many pieces; the pass buffers them all, so its output is exact labels
+    # in one superstep with no star round behind it
+    calls = _count_calls(monkeypatch, "_star_round")
     n = 500
-    path = [(i, i + 1) for i in range(n)]  # one long path spans many chunks
+    path = [(i, i + 1) for i in range(n)]  # one long path spans many batches
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "64")
+    spark.conf.set(key, "8")
     try:
         m: dict = {}
         rows = connected_components(
-            edges_df(spark, path),
-            single_partition=True,
-            max_iter=20,
-            metrics_out=m,
-            _contract_chunk=64,
+            edges_df(spark, path), single_partition=True, metrics_out=m
         ).collect()
     finally:
         spark.conf.set(key, prev)
-    assert m["one_task_chunks"] > 1
+    assert m["supersteps"] == 1 and calls["_star_round"] == 0
     assert sorted(r.vertex for r in rows) == list(range(n + 1))
     assert {r.component for r in rows} == {0}
 
@@ -137,17 +148,18 @@ def _hostile_graph(seed: int) -> list[tuple[int, int]]:
 
 
 @pytest.mark.parametrize("seed", [3, 17])
-def test_cc_one_task_route_matches_oracle(spark, seed):
+def test_cc_one_task_route_matches_oracle(spark, monkeypatch, seed):
     # both one-task routes (caller hint, measured init count) against the
     # union-find oracle; rows are counted too, since a dict comparison
     # would hide a vertex listed twice
+    calls = _count_calls(monkeypatch, "_star_round")
     pairs = _hostile_graph(seed)
     expected = _oracle_labels(pairs)
     e = edges_df(spark, pairs)
     for hint in (True, False):
         m: dict = {}
         rows = connected_components(e, single_partition=hint, metrics_out=m).collect()
-        assert m["one_task_chunks"] == 1 and m["supersteps"] == 1
+        assert m["supersteps"] == 1 and calls["_star_round"] == 0
         assert len(rows) == len(expected)
         assert {r.vertex: r.component for r in rows} == expected
 
@@ -160,15 +172,7 @@ def test_cc_star_round_matches_oracle(spark, monkeypatch, seed, patch):
     # reach a terminal forest themselves
     import imtag_spark.operators.cc as cc_mod
 
-    calls = {"_star_round": 0, "_chain_patch": 0}
-    for name in calls:
-        real = getattr(cc_mod, name)
-
-        def spy(*args, _real=real, _name=name, **kw):
-            calls[_name] += 1
-            return _real(*args, **kw)
-
-        monkeypatch.setattr(cc_mod, name, spy)
+    calls = _count_calls(monkeypatch, "_star_round", "_chain_patch")
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     if not patch:
         monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
@@ -259,7 +263,7 @@ def test_pagerank_broadcast_join_mode_vs_numpy(spark, directed):
     e = edges_df(spark, pairs)
     metrics = {}
     got = {r.vertex: r.rank for r in pagerank(
-        e, directed=directed, tol=1e-8, max_iter=200, mode="broadcast_join",
+        e, directed=directed, tol=1e-8, max_iter=200,
         metrics_out=metrics).collect()}
     assert metrics["mode"] == "broadcast_join"
     want = numpy_pagerank(pairs, [], directed=directed)
@@ -269,42 +273,53 @@ def test_pagerank_broadcast_join_mode_vs_numpy(spark, directed):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_broadcast_join_matches_join_mode(spark):
-    # identical DataFrame arithmetic, different physical strategy. NOT
-    # bit-equal by design: the partial aggregates sum each dst's
-    # contributions in a different grouping (src-partitioned vs
-    # dst-partitioned input), so float rounding can differ in the last
-    # ulp — demand agreement far below the 1e-6 oracle tolerance instead
+@pytest.mark.parametrize("directed", [True, False])
+def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
+    # BROADCAST_VERTEX_LIMIT=0 forces the join route; vertices 40-47 only
+    # receive edges, so the directed graph has dangling vertices
+    import imtag_spark.operators.pagerank as pr_mod
+
+    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
+    rng = np.random.default_rng(53)
+    pairs = {(int(a), int(b)) for a, b in rng.integers(0, 40, size=(120, 2)) if a != b}
+    pairs |= {(int(a), 40 + i) for i, a in enumerate(rng.integers(0, 40, size=8))}
+    pairs = list(pairs)
+    metrics: dict = {}
+    got = {r.vertex: r.rank for r in pagerank(
+        edges_df(spark, pairs), directed=directed, tol=1e-8, max_iter=200,
+        metrics_out=metrics).collect()}
+    assert metrics["mode"] == "join"
+    want = numpy_pagerank(pairs, [], directed=directed)
+    assert set(got) == set(want)
+    for v in want:
+        assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+def test_pagerank_broadcast_join_matches_join_mode(spark, monkeypatch):
+    # broadcast_join within the V gate, join above it (r3 A/B): identical
+    # DataFrame arithmetic, different physical strategy. NOT bit-equal by
+    # design: the partial aggregates sum each dst's contributions in a
+    # different grouping (src-partitioned vs dst-partitioned input), so
+    # float rounding can differ in the last ulp — demand agreement far
+    # below the 1e-6 oracle tolerance instead
+    import imtag_spark.operators.pagerank as pr_mod
+
     rng = np.random.default_rng(41)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 60, size=(300, 2)) if a != b})
     e = edges_df(spark, pairs)
-    j = {r.vertex: r.rank for r in pagerank(e, tol=0.0, max_iter=12, mode="join").collect()}
+    m: dict = {}
     bj = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=12, mode="broadcast_join").collect()}
+        e, tol=0.0, max_iter=12, metrics_out=m).collect()}
+    assert m["mode"] == "broadcast_join"
+    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
+    m2: dict = {}
+    j = {r.vertex: r.rank for r in pagerank(
+        e, tol=0.0, max_iter=12, metrics_out=m2).collect()}
+    assert m2["mode"] == "join"
     assert set(j) == set(bj)
     for v in j:
         assert abs(j[v] - bj[v]) <= 1e-12 * max(1.0, abs(j[v]))
-
-
-def test_pagerank_auto_mode_routes_and_matches(spark, monkeypatch):
-    # auto = broadcast_join within the V gate, join above it (r3 A/B)
-    import imtag_spark.operators.pagerank as pr_mod
-
-    rng = np.random.default_rng(43)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 50, size=(240, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    j = {r.vertex: r.rank for r in pagerank(e, tol=0.0, max_iter=8, mode="join").collect()}
-    m: dict = {}
-    a = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=8, mode="auto", metrics_out=m).collect()}
-    assert m["mode"] == "broadcast_join"
-    assert set(a) == set(j)
-    for v in j:
-        assert abs(j[v] - a[v]) <= 1e-12 * max(1.0, abs(j[v]))
-    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
-    m2: dict = {}
-    pagerank(e, tol=0.0, max_iter=2, mode="auto", metrics_out=m2).count()
-    assert m2["mode"] == "join"
 
 
 def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark):
@@ -314,7 +329,8 @@ def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark):
     # superstep plan must contain NO shuffle Exchange at all
     e = edges_df(spark, [(a, b) for a in range(30) for b in range(a + 1, 30, 3)])
     metrics = {}
-    pagerank(e, tol=0.0, max_iter=2, mode="broadcast_join", metrics_out=metrics)
+    pagerank(e, tol=0.0, max_iter=2, metrics_out=metrics)
+    assert metrics["mode"] == "broadcast_join"
     plan = metrics["contribs_plan"]
     assert "BroadcastHashJoin" in plan
     # the cached InMemoryRelation prints its one-time BUILD plan (which
@@ -337,24 +353,27 @@ def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark):
     assert shuffle_exchanges == [], shuffle_exchanges
 
 
-def test_pagerank_unknown_mode_raises(spark):
-    # the CSR "broadcast" mode was removed; asking for it must fail loudly
-    with pytest.raises(ValueError, match="unknown mode"):
-        pagerank(edges_df(spark, TWO_TRIANGLES_BRIDGE), mode="broadcast")
-
-
-def test_pagerank_broadcast_join_supports_checkpointer(spark, tmp_path):
-    # rank state stays a DataFrame, so durable checkpoint/resume must keep
-    # working
+@pytest.mark.parametrize("route", ["broadcast_join", "join"])
+def test_pagerank_broadcast_join_supports_checkpointer(
+    spark, tmp_path, monkeypatch, route
+):
+    # rank state stays a DataFrame on both routes, so durable
+    # checkpoint/resume must keep working
+    import imtag_spark.operators.pagerank as pr_mod
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
+    if route == "join":
+        monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(43)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 20, size=(60, 2)) if a != b})
     e = edges_df(spark, pairs)
-    ckpt = SuperstepCheckpointer(spark, str(tmp_path / "pr_bjoin"))
+    ckpt = SuperstepCheckpointer(spark, str(tmp_path / "pr_ckpt"))
+    m: dict = {}
     got = {r.vertex: r.rank for r in pagerank(
-        e, tol=1e-8, max_iter=100, mode="broadcast_join",
-        checkpointer=ckpt, checkpoint_every=2).collect()}
+        e, tol=1e-8, max_iter=100, checkpointer=ckpt, checkpoint_every=2,
+        metrics_out=m).collect()}
+    assert m["mode"] == route
+    assert ckpt.manifest_path.exists()
     want = numpy_pagerank(pairs, [], directed=True)
     for v in want:
         assert abs(got[v] - want[v]) < 1e-6

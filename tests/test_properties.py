@@ -31,25 +31,47 @@ ID_OFFSETS = [0, 2**40, -(2**31), 2**62]
 
 
 def _spy_cc(monkeypatch, route):
-    """Force ``route`` and count the calls that prove it ran."""
+    """Force ``route`` and count the calls that prove it ran.
+
+    ``calls["order"]`` lists the spied calls in order; a ``local_contract``
+    entry records whether its input was range-partitioned."""
     import imtag_spark.operators.cc as cc
 
-    calls = {"_star_round": 0, "_chain_patch": 0}
-    for name in calls:
+    calls = {"_star_round": 0, "_chain_patch": 0, "order": []}
+    for name in ("_star_round", "_chain_patch"):
         def spy(*args, _real=getattr(cc, name), _name=name, **kw):
             calls[_name] += 1
+            calls["order"].append(_name)
             return _real(*args, **kw)
 
         monkeypatch.setattr(cc, name, spy)
-    if route != "default":
+
+    def contract_spy(edges, _real=cc.local_contract):
+        # repartitionByRange's node lists sort orders, a hash repartition's
+        # bare columns
+        top = edges._jdf.queryExecution().analyzed().toString().splitlines()[0]
+        by_range = top.startswith("RepartitionByExpression") and " ASC " in top
+        calls["order"].append(("local_contract", by_range))
+        return _real(edges)
+
+    monkeypatch.setattr(cc, "local_contract", contract_spy)
+    if route in ("star", "star_no_patch", "range_star"):
         monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)
     if route == "star_no_patch":
         monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 0)
     return calls
 
 
-#: the default route for these ≤120-edge graphs is the one-task solve
-CC_ROUTES = ["default", "star", "star_no_patch", "multi_chunk"]
+def _assert_range_pass_first(calls, route):
+    """The range route contracted its range-partitioned input before any
+    star round, and reached the star round exactly when forced to."""
+    assert calls["order"][:1] == [("local_contract", True)]
+    assert (calls["_star_round"] >= 1) == (route == "range_star")
+
+
+#: the default route for these ≤120-edge graphs is the one-task solve;
+#: ``range`` adds the range-partitioned input pass before it
+CC_ROUTES = ["default", "star", "star_no_patch", "range", "range_star"]
 
 
 @pytest.mark.parametrize(
@@ -71,35 +93,22 @@ def test_cc_is_partition_with_min_labels(spark, monkeypatch, seed, route):
     pairs = [(a + offset, b + offset) for a, b in base]
     calls = _spy_cc(monkeypatch, route)
     m: dict = {}
-    if route == "multi_chunk":
-        # the kernel cuts chunks only between Arrow batches: 8-row batches
-        # and an 8-edge chunk split the one task's pass
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            rows = connected_components(
-                _edges_df(spark, pairs),
-                single_partition=True,
-                metrics_out=m,
-                _contract_chunk=8,
-            ).collect()
-        finally:
-            spark.conf.set(key, prev)
-    else:
-        rows = connected_components(_edges_df(spark, pairs), metrics_out=m).collect()
+    rows = connected_components(
+        _edges_df(spark, pairs),
+        range_partition=route.startswith("range"),
+        metrics_out=m,
+    ).collect()
     labels = {r["vertex"]: r["component"] for r in rows}
     if not pairs:
         assert labels == {}
         return
     # the route really ran
     if route == "default":
-        assert m["one_task_chunks"] == 1 and calls["_star_round"] == 0
-    elif route == "multi_chunk":
-        assert m["one_task_chunks"] > 1
+        assert m["supersteps"] == 1 and calls["_star_round"] == 0
+    elif route.startswith("range"):
+        _assert_range_pass_first(calls, route)
     else:
         assert calls["_star_round"] >= 1
-        assert m.get("one_task_chunks") is None
     if route == "star":
         # seeds 0-2 leave witnesses after round 1; seed 3's 10 edges don't
         assert (calls["_chain_patch"] > 0) == (seed != 3)
@@ -141,6 +150,24 @@ def test_grid_cc_idempotent_and_coarsening(spark, seed, p):
     for v, lbl in enumerate(cross):
         cross_groups[lbl].add(eight[v])
     assert all(len(s) == 1 for s in cross_groups.values())
+
+
+@pytest.mark.parametrize("route", ["range", "range_star"])
+@pytest.mark.parametrize("conn", [CROSS, EIGHT_WAY])
+def test_grid_cc_range_partition_matches_oracle(spark, monkeypatch, conn, route):
+    # scan-order run ids are the locality range_partition exists for: the
+    # input pass runs first, then the one-task solve or the star round
+    grid = make_grid(24, 24, 0.55, 11)
+    runs = grid_to_runs(grid_to_cells(spark, grid)).localCheckpoint(eager=True)
+    oracle_runs = grid_runs(grid)
+    oracle = cc_min_label(len(oracle_runs), grid_edges(oracle_runs, conn))
+    # every run as a self-loop too, as label_runs feeds CC
+    loops = runs.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    edges = adjacent_row_edges(runs, conn).unionByName(loops)
+    calls = _spy_cc(monkeypatch, route)
+    rows = connected_components(edges, range_partition=True).collect()
+    _assert_range_pass_first(calls, route)
+    assert sorted((r["vertex"], r["component"]) for r in rows) == list(enumerate(oracle))
 
 
 def test_cc_idempotent_on_own_output(spark):

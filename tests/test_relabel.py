@@ -83,20 +83,14 @@ def test_relabel_cc_labels_both_routes(spark, monkeypatch, seed, base):
     assert in_task[2] == want
     assert _relabel(monkeypatch, labels.repartition(4), base, "distributed") == in_task
 
-    # the multi-chunk one-task pass ends in the certificate loop, whose
-    # labels are several partitions: the distributed rank must take them
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
-        m: dict = {}
-        multi = connected_components(
-            edges, single_partition=True, metrics_out=m, _contract_chunk=8
-        )
-        assert m["one_task_chunks"] > 1
-        assert _relabel(monkeypatch, multi, base, "distributed") == in_task
-    finally:
-        spark.conf.set(key, prev)
+    # labels from the distributed star rounds are several partitions: the
+    # distributed rank must take them
+    import imtag_spark.operators.cc as cc_mod
+
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    star = connected_components(edges)
+    assert star.rdd.getNumPartitions() > 1
+    assert _relabel(monkeypatch, star, base, "distributed") == in_task
 
 
 @pytest.mark.parametrize("base", [0, 1])
