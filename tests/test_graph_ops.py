@@ -296,9 +296,30 @@ def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+def test_pagerank_auto_mode_routes_and_matches(spark, monkeypatch):
+    # the route is chosen from the measured vertex count: broadcast_join
+    # within the V gate, join above it, and both give the same ranks
+    import imtag_spark.operators.pagerank as pr_mod
+
+    rng = np.random.default_rng(43)
+    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 50, size=(240, 2)) if a != b})
+    e = edges_df(spark, pairs)
+    m: dict = {}
+    a = {r.vertex: r.rank for r in pagerank(
+        e, tol=0.0, max_iter=8, metrics_out=m).collect()}
+    assert m["mode"] == "broadcast_join"
+    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
+    m2: dict = {}
+    j = {r.vertex: r.rank for r in pagerank(
+        e, tol=0.0, max_iter=8, metrics_out=m2).collect()}
+    assert m2["mode"] == "join"
+    assert set(a) == set(j)
+    for v in j:
+        assert abs(j[v] - a[v]) <= 1e-12 * max(1.0, abs(j[v]))
+
+
 def test_pagerank_broadcast_join_matches_join_mode(spark, monkeypatch):
-    # broadcast_join within the V gate, join above it (r3 A/B): identical
-    # DataFrame arithmetic, different physical strategy. NOT bit-equal by
+    # identical DataFrame arithmetic, different physical strategy. NOT bit-equal by
     # design: the partial aggregates sum each dst's contributions in a
     # different grouping (src-partitioned vs dst-partitioned input), so
     # float rounding can differ in the last ulp — demand agreement far
