@@ -52,17 +52,14 @@ def label_propagation(
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.repartition(n_part, "src").persist()
 
-    # the vertex universe is joined on ``vertex`` every round: persist it
-    # pre-partitioned on that key for the same no-re-exchange reason as sym
-    universe = (
+    # every endpoint once, labelled with itself; each round's labels keep
+    # that vertex set, so they are also the universe the next round joins
+    labels = frontier_checkpoint(
         edges.select(F.col("src").alias("vertex"))
         .union(edges.select(F.col("dst").alias("vertex")))
         .distinct()
-        .repartition(n_part, "vertex")
-        .persist()
+        .select("vertex", F.col("vertex").alias("label"))
     )
-    labels = universe.select("vertex", F.col("vertex").alias("label"))
-    labels = frontier_checkpoint(labels)
     prev_ckpt = labels  # the materialized frontier the current round reads
 
     for it in range(max_iter):
@@ -81,8 +78,8 @@ def label_propagation(
             .select("vertex", (-F.col("b.neg")).alias("label"))
         )
         new_labels = (
-            universe.join(best, "vertex", "left")
-            .join(labels.withColumnRenamed("label", "old_label"), "vertex")
+            labels.withColumnRenamed("label", "old_label")
+            .join(best, "vertex", "left")
             .select("vertex", F.coalesce("label", "old_label").alias("label"),
                     "old_label")
         ).localCheckpoint(eager=False, storageLevel=frontier_storage())
@@ -110,7 +107,6 @@ def label_propagation(
         if changed == 0:
             break
     # the returned frame reads only the final materialized frontier — the
-    # cached edge table and the vertex universe are dead weight past here
+    # cached edge table is dead weight past here
     sym.unpersist(blocking=True)
-    universe.unpersist(blocking=True)
     return labels

@@ -20,7 +20,9 @@ running a job:
   or lazy). A naive ``dense_rank() OVER (ORDER BY component)`` funnels
   every component through one partition; instead range-partition the
   distinct components, rank within partitions, then add per-partition
-  offsets (a tiny table, broadcast back) and join the ranks back.
+  offsets (a tiny table, broadcast back) and join the ranks back. The
+  offsets-and-rank step is ``two_phase_index``, which also gives the
+  runs their scan-order ids (``rle.with_scan_order_ids``).
 """
 
 from __future__ import annotations
@@ -35,12 +37,48 @@ from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 from imtag_spark.plans.checkpoint import is_materialized_scan
 
 
+def two_phase_index(
+    df: DataFrame, group_col: str, order_col: str, index_col: str, base: int = 0
+) -> DataFrame:
+    """Append ``index_col`` = ``base``.. in (``group_col``, ``order_col``)
+    order — the two-phase zipWithIndex, with no global sort.
+
+    Per-group counts → cumulative offsets → broadcast join →
+    ``row_number`` within each group. The offsets table has one row per
+    group (an image row, a shuffle partition), so it is broadcastable
+    while ``df`` stays distributed. Its window has a constant key:
+    ``pmod(group, 1)`` is always 0 but column-dependent, so the optimizer
+    cannot fold it out of the partitionSpec (a bare ``lit(0)`` is
+    removed), and WindowExec's single-partition warning stays out of
+    every log. The join is a LEFT join: an inner join infers
+    ``isnotnull(group)`` on one branch only, and the counts branch then
+    shuffles ``df`` again instead of reusing its exchange.
+    """
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
+    w_off = (
+        Window.partitionBy(F.pmod(F.col(group_col), F.lit(1)))
+        .orderBy(group_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = counts.select(
+        group_col, F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
+    )
+    w_local = Window.partitionBy(group_col).orderBy(order_col)
+    return (
+        df.join(F.broadcast(offsets), group_col, "left")
+        .withColumn(
+            index_col,
+            (F.row_number().over(w_local) - 1 + F.col("_off") + F.lit(base)).cast("long"),
+        )
+        .drop("_off")
+    )
+
+
 def dense_component_ranks(
     labels: DataFrame,
     component_col: str = "component",
     rank_col: str = "dense_label",
     base: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(component) → (component, dense rank by ascending component id).
 
@@ -48,42 +86,22 @@ def dense_component_ranks(
     background 0 when ``inc_labels_for_background_0`` is set,
     src/morphology.cpp:31-35).
     """
-    n = num_partitions or labels.sparkSession.sparkContext.defaultParallelism
     # a null component has no rank (the relabel join drops its rows); left
     # in, it would sort first and shift every rank by one
     comps = (
         labels.select(component_col)
         .where(F.col(component_col).isNotNull())
         .distinct()
-        .repartitionByRange(n, component_col)
+        .repartitionByRange(
+            labels.sparkSession.sparkContext.defaultParallelism, component_col
+        )
     )
     # Materialize before branching: repartitionByRange samples its
     # boundaries, so two separate evaluations (the offsets branch and the
     # ranking branch) could partition differently and corrupt the ranks.
     comps = comps.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
-    # per-partition counts → cumulative offsets; #partitions rows,
-    # broadcastable. Constant partition key = same one-partition execution
-    # without WindowExec's warning in every log (the table is tiny by
-    # construction — one row per shuffle partition); pmod(_pid, 1) is
-    # always 0 but column-dependent, so the optimizer cannot fold it out
-    # of the partitionSpec (a bare lit(0) is removed).
-    counts = comps.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    w_off = (
-        Window.partitionBy(F.pmod(F.col("_pid"), F.lit(1)))
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_local = Window.partitionBy("_pid").orderBy(component_col)
-    return (
-        comps.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            rank_col,
-            (F.row_number().over(w_local) - 1 + F.col("_off") + F.lit(base)).cast("long"),
-        )
-        .select(component_col, rank_col)
+    return two_phase_index(comps, "_pid", component_col, rank_col, base).select(
+        component_col, rank_col
     )
 
 

@@ -6,120 +6,49 @@ RLE each image row into maximal foreground runs, then assign globally unique
 provisional labels 0..N-1 in row-major scan order (sequential linearization at
 SegmentImageImpl_Scanline.cpp:88-95).
 
-Spark-first design:
-- RLE is a *narrow* vectorized kernel: cells are hash-partitioned by ``row``
-  (each image row lives wholly in one partition), sorted within partitions,
-  and contracted to runs by a NumPy ``diff``-based ``mapInPandas`` — no
-  per-row Python, no shuffle beyond the single co-location repartition.
-- The global scan-order ID is the classic two-phase zipWithIndex: a tiny
-  per-image-row count table gives each row a starting offset (broadcast
-  join), and a window partitioned *by row* (never a global single-partition
-  window) gives the within-row rank. At 1000-executor scale the offsets
-  table has one row per image row — small enough to broadcast for any
-  realistic ``rows`` while the cell/run tables stay fully distributed.
+Both steps are relational operators, so no Python worker runs:
+
+- RLE is gaps-and-islands. Within an image row, ``col − row_number()``
+  (ordered by ``col``) is constant exactly along a run of consecutive
+  columns, so ``groupBy(row, gap)`` with ``min(col)`` and ``max(col) + 1``
+  gives the maximal runs. The window and the aggregate share one
+  ``hash(row)`` exchange of the cells.
+- The scan-order id is the two-phase zipWithIndex
+  (``relabel.two_phase_index`` grouped by ``row``): per-row run counts →
+  cumulative offsets (a tiny table, broadcast) → ``row_number`` within
+  each row. The counts reuse the same cells exchange, so ``grid_to_runs``
+  shuffles the cells once: 4 Spark jobs to checkpoint the runs of
+  checkpointed 1024² cells, none of them in Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-RUN_SCHEMA = "row INT, col_begin INT, col_end INT"
+from imtag_spark.operators.relabel import two_phase_index
 
 
-def _rle_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Contract sorted (row, col) cells into maximal runs, vectorized.
-
-    Input batches arrive sorted by (row, col) within the partition, but an
-    image row may straddle two Arrow batches — carry the trailing image
-    row's cells into the next batch so every run is seen whole. Memory is
-    bounded by one image row, not the partition.
-    """
-    carry = None
-    for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if len(pdf) == 0:
-            carry = None
-            continue
-        rows = pdf["row"].to_numpy()
-        last_row = rows[-1]
-        tail_mask = rows == last_row
-        carry = pdf.loc[tail_mask]
-        head = pdf.loc[~tail_mask]
-        if len(head):
-            yield _rle_frame(head)
-    if carry is not None and len(carry):
-        yield _rle_frame(carry)
-
-
-def _rle_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = pdf["row"].to_numpy(dtype=np.int64)
-    cols = pdf["col"].to_numpy(dtype=np.int64)
-    # A new run starts where the image row changes or the column jumps.
-    starts = np.empty(len(pdf), dtype=bool)
-    starts[0] = True
-    np.not_equal(rows[1:], rows[:-1], out=starts[1:])
-    starts[1:] |= cols[1:] != cols[:-1] + 1
-    start_idx = np.flatnonzero(starts)
-    end_idx = np.append(start_idx[1:], len(pdf))
-    return pd.DataFrame(
-        {
-            "row": rows[start_idx].astype(np.int32),
-            "col_begin": cols[start_idx].astype(np.int32),
-            # exclusive end, matching the reference's Segment.column_end
-            # (/root/reference/include/imtag.hpp:24)
-            "col_end": (cols[end_idx - 1] + 1).astype(np.int32),
-        }
-    )
-
-
-def cells_to_runs(cells: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def cells_to_runs(cells: DataFrame) -> DataFrame:
     """Foreground cells ``(row INT, col INT)`` → runs ``(row, col_begin, col_end)``.
 
-    One shuffle (co-locate image rows), then a narrow vectorized contraction.
+    ``col_end`` is exclusive, matching the reference's ``Segment.column_end``
+    (``include/imtag.hpp:24``).
     """
-    n = num_partitions or cells.sparkSession.sparkContext.defaultParallelism
-    co_located = cells.repartition(n, "row").sortWithinPartitions("row", "col")
-    return co_located.mapInPandas(_rle_batches, schema=RUN_SCHEMA)
+    gap = F.col("col") - F.row_number().over(Window.partitionBy("row").orderBy("col"))
+    return (
+        cells.withColumn("_gap", gap)
+        .groupBy("row", "_gap")
+        .agg(F.min("col").alias("col_begin"), (F.max("col") + 1).alias("col_end"))
+        .drop("_gap")
+    )
 
 
 def with_scan_order_ids(runs: DataFrame, id_col: str = "id") -> DataFrame:
-    """Assign ids 0..N-1 by (row, col_begin) scan order — two-phase, no global sort.
-
-    Mirrors the reference's sequential provisional-label linearization
-    (SegmentImageImpl_Scanline.cpp:88-95) without its single-thread
-    bottleneck: per-image-row offsets (tiny table, broadcast) + a
-    row-partitioned rank window.
-    """
-    counts = runs.groupBy("row").agg(F.count(F.lit(1)).alias("n_runs"))
-    # Cumulative offsets over the per-row count table. This window is over
-    # #image-rows entries (≤ a few million even for absurd images) — cheap;
-    # the run/cell tables never funnel through one partition. The constant
-    # partition key keeps semantics identical (one partition either way)
-    # while keeping WindowExec's single-partition warning out of every log;
-    # pmod(row, 1) is always 0 but column-dependent, so the optimizer
-    # cannot fold it out of the partitionSpec (a bare lit(0) is removed).
-    w_off = (
-        Window.partitionBy(F.pmod(F.col("row"), F.lit(1)))
-        .orderBy("row")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "row", F.coalesce(F.sum("n_runs").over(w_off), F.lit(0)).alias("row_offset")
-    )
-    w_rank = Window.partitionBy("row").orderBy("col_begin")
-    return (
-        runs.join(F.broadcast(offsets), "row")
-        .withColumn(id_col, (F.row_number().over(w_rank) - 1 + F.col("row_offset")).cast("long"))
-        .drop("row_offset")
-    )
+    """Assign ids 0..N-1 by (row, col_begin) scan order, with no global sort."""
+    return two_phase_index(runs, "row", "col_begin", id_col)
 
 
-def grid_to_runs(cells: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def grid_to_runs(cells: DataFrame) -> DataFrame:
     """Full pass-1 analog: cells → runs with scan-order vertex ids."""
-    return with_scan_order_ids(cells_to_runs(cells, num_partitions))
+    return with_scan_order_ids(cells_to_runs(cells))

@@ -9,7 +9,7 @@ from imtag_spark.operators.cc import SMALL_GRAPH_EDGE_LIMIT, connected_component
 from imtag_spark.operators.interval_join import interval_join, adjacent_row_edges
 from imtag_spark.operators.morphology import complement_runs
 from imtag_spark.operators.relabel import densely_relabel
-from imtag_spark.operators.rle import grid_to_runs, with_scan_order_ids
+from imtag_spark.operators.rle import with_scan_order_ids
 
 
 def label_runs(
@@ -53,19 +53,6 @@ def label_runs(
         metrics_out=metrics_out,
     )
     return densely_relabel(labels, base=base)
-
-
-def label_cells(
-    cells: DataFrame,
-    connectivity: str = "cross",
-    metrics_out: dict | None = None,
-    cells_hint: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """cells → (runs, dense labels) — full two-pass CCL."""
-    runs = grid_to_runs(cells).localCheckpoint(eager=True)
-    return runs, label_runs(
-        runs, connectivity, metrics_out=metrics_out, cells_hint=cells_hint
-    )
 
 
 def invert(

@@ -32,7 +32,7 @@ def named_grid(name: str) -> np.ndarray:
     return make_grid(r, c, p, seed)
 
 
-def grid_to_cells(spark: SparkSession, grid: np.ndarray, num_partitions: int | None = None) -> DataFrame:
+def grid_to_cells(spark: SparkSession, grid: np.ndarray) -> DataFrame:
     """Dense binary grid → foreground-cell DataFrame (row INT, col INT).
 
     The driver ships only a bit-packed row payload (C/8 bytes per image
@@ -53,12 +53,7 @@ def grid_to_cells(spark: SparkSession, grid: np.ndarray, num_partitions: int | N
         ),
         schema="row INT, bits BINARY",
     )
-    if num_partitions:
-        rows_df = rows_df.repartition(num_partitions)
-    else:
-        rows_df = rows_df.repartition(
-            spark.sparkContext.defaultParallelism, "row"
-        )
+    rows_df = rows_df.repartition(spark.sparkContext.defaultParallelism, "row")
 
     def unpack(batches):
         for pdf in batches:

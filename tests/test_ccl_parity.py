@@ -7,6 +7,7 @@ label image → sha256 vs goldens harvested from the real imtag binary.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from imtag_spark.operators.interval_join import CROSS, EIGHT_WAY, adjacent_row_edges
@@ -17,7 +18,8 @@ from imtag_spark.operators.label_image import (
 )
 from imtag_spark.operators.rle import grid_to_runs
 from imtag_spark.plans.pipelines import label_runs
-from imtag_spark.sources.grids import GRID_SPECS, named_grid, grid_to_cells
+from imtag_spark.sources.grids import GRID_SPECS, make_grid, named_grid, grid_to_cells
+from oracles import grid_runs
 
 # name → (runs, cross_edges, cross_components, cross_sha, eight_components, eight_sha)
 GOLDENS = {
@@ -86,3 +88,30 @@ def test_grid_sha_matches_fixture():
     )
     assert int((grid != 0).sum()) == 114
     assert GRID_SPECS["tiny"] == (16, 16, 0.45, 42)
+
+
+#: pass-1 hostile grids: no foreground, all foreground, one row, one
+#: column, no two neighbours in a row, and random densities
+PASS1_GRIDS = {
+    "all_zero": np.zeros((9, 13), dtype=np.uint8),
+    "all_255": np.full((9, 13), 255, dtype=np.uint8),
+    "one_row": make_grid(1, 500, 0.5, 3),
+    "one_col": make_grid(300, 1, 0.5, 4),
+    "checkerboard": (np.indices((33, 31)).sum(axis=0) % 2 * 255).astype(np.uint8),
+    "p0.1": make_grid(40, 50, 0.1, 5),
+    "p0.5": make_grid(40, 50, 0.5, 6),
+    "p0.9": make_grid(40, 50, 0.9, 7),
+}
+
+
+@pytest.mark.parametrize("name", list(PASS1_GRIDS))
+def test_grid_to_runs_matches_oracle(spark, name):
+    # every run exactly, with id == its scan-order index; repartition(7)
+    # splits each image row across input partitions
+    grid = PASS1_GRIDS[name]
+    cells = grid_to_cells(spark, grid).repartition(7)
+    got = [
+        (r.row, r.col_begin, r.col_end, r.id)
+        for r in grid_to_runs(cells).orderBy("id").collect()
+    ]
+    assert got == [(*run, i) for i, run in enumerate(grid_runs(grid))]

@@ -127,7 +127,7 @@ def test_cc_frees_superseded_frontier_blocks(spark, monkeypatch):
 def test_lpa_frees_superseded_label_blocks(spark):
     # LPA parity with CC/PageRank loop hygiene (VERDICT r4 "what's wrong"
     # #2): superseded label frontiers freed each round; the cached
-    # symmetrized edges and vertex universe unpersisted before return.
+    # symmetrized edges unpersisted before return.
     from imtag_spark.operators.lpa import label_propagation
 
     before = {rid for rid, _ in _live_cached_rdds(spark)}
@@ -196,3 +196,41 @@ def test_pagerank_frees_superseded_rank_blocks(spark):
     new = [t for t in _live_cached_rdds(spark) if t[0] not in before]
     # the returned final ranks checkpoint is the only admissible survivor
     assert len(new) <= 1, f"superseded rank blocks still cached: {new}"
+
+
+def test_grid_to_runs_is_relational_and_exchanges_cells_once(spark):
+    # pass 1 runs no Python worker, and its counts branch reads the same
+    # hash(row) exchange of the cells as the runs (a LEFT offsets join;
+    # an inner join would infer isnotnull(row) on one branch only and
+    # shuffle the cells twice)
+    from imtag_spark.operators.rle import grid_to_runs
+    from imtag_spark.sources.grids import grid_to_cells, named_grid
+
+    cells = grid_to_cells(spark, named_grid("small")).localCheckpoint(eager=True)
+    runs = grid_to_runs(cells)
+    assert len(runs.collect()) == 1039
+    plan = runs._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    cell_exchanges = [
+        ln for ln in final.splitlines()
+        if "Exchange hashpartitioning(row" in ln and "ReusedExchange" not in ln
+    ]
+    assert len(cell_exchanges) == 1, final
+    assert final.count("ReusedExchange") == 1, final
+
+
+def test_grid_to_runs_job_count(spark):
+    # checkpointed runs of the medium grid from checkpointed cells: the
+    # pandas RLE kernel ran 6 Spark jobs here, the relational pass runs 4
+    from imtag_spark.operators.rle import grid_to_runs
+    from imtag_spark.sources.grids import grid_to_cells, named_grid
+    from test_graph_ops import _jobs_in_group
+
+    cells = grid_to_cells(spark, named_grid("medium")).localCheckpoint(eager=True)
+    runs, jobs = _jobs_in_group(
+        spark, "rle-medium", lambda: grid_to_runs(cells).localCheckpoint(eager=True)
+    )
+    assert runs.count() == 16423
+    assert len(jobs) <= 6
