@@ -129,11 +129,9 @@ def main() -> None:
     api = spark.sparkContext.uiWebUrl + "/api/v1"
     app_id = spark.sparkContext.applicationId
 
-    from imtag_spark.plans.checkpoint import frontier_storage
+    from imtag_spark.plans.checkpoint import frontier_checkpoint
 
-    edges = synthetic_edges(spark, n_edges, n_vertices, skew).localCheckpoint(
-        eager=True, storageLevel=frontier_storage()
-    )
+    edges = frontier_checkpoint(synthetic_edges(spark, n_edges, n_vertices, skew))
     m = edges.count()
     out: dict = {"cpus": cpus, "n_edges": m, "n_part": n_part}
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from imtag_spark.operators.cc import connected_components  # noqa: E402
 from imtag_spark.operators.pagerank import pagerank  # noqa: E402
-from imtag_spark.plans.checkpoint import frontier_storage  # noqa: E402
+from imtag_spark.plans.checkpoint import frontier_checkpoint  # noqa: E402
 from imtag_spark.session import get_spark  # noqa: E402
 
 
@@ -76,9 +76,7 @@ def main() -> None:
             "spark.driver.extraJavaOptions": f"-XX:ActiveProcessorCount={cpus}"
         },
     )
-    edges = synthetic_edges(spark, n_edges, n_vertices, skew).localCheckpoint(
-        eager=True, storageLevel=frontier_storage()
-    )
+    edges = frontier_checkpoint(synthetic_edges(spark, n_edges, n_vertices, skew))
     m = edges.count()
 
     # Both workloads use the SAME repetition protocol: run the identical

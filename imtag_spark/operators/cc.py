@@ -11,7 +11,10 @@ large star over the oriented edge set followed by two partition-local
 union-find contractions inside Arrow UDFs, and a convergence certificate
 decides whether another round is needed. A near-terminal tail of chains
 is resolved driver-side instead of by one more round, and a frontier back
-under FUNNEL_EDGE_LIMIT rows is finished by the one-task pass.
+under FUNNEL_EDGE_LIMIT rows is finished by the one-task pass. The labels
+are one min-aggregate over the final forest's endpoints and the input's
+self-loops, which lists every vertex once (the reference's one
+canonicalize-and-group sweep, src/SegmentImageImpl.cpp:9-24).
 ``range_partition`` adds a partition-local union-find pass over the
 range-partitioned input before either.
 
@@ -438,12 +441,13 @@ def connected_components(
     FUNNEL_EDGE_LIMIT rows is solved by one ``coalesce(1)`` union-find pass
     over the whole input, self-loops included, whose output (every vertex
     once, with its component minimum) is returned as the labels,
-    materialized by one eager checkpoint job with no shuffle, no
-    certificate and no vertex-universe join (the reference's union-find
-    pass plus ``find`` sweep, src/SegmentImageImpl.cpp:78-116 in the
-    reference). Larger inputs run star rounds until a certificate finds a
-    terminal star forest; a round whose counted frontier is under the same
-    bound is solved by the same one-task pass.
+    materialized by one eager checkpoint job with no shuffle and no
+    certificate (the reference's union-find pass plus ``find`` sweep,
+    src/SegmentImageImpl.cpp:78-116 in the reference). Larger inputs run
+    star rounds until a certificate finds a terminal star forest; a round
+    whose counted frontier is under the same bound is solved by the same
+    one-task pass. The star route's labels are one ``groupBy(vertex).min``
+    over the forest's endpoints and the input's self-loops.
 
     ``range_partition`` — range-partition the input by ``src`` and run the
     partition-local union-find over those partitions before the solve.
@@ -558,12 +562,6 @@ def connected_components(
         _log_round(0, n_work, 0, 0)
         return labels
 
-    universe = (
-        edges.select(F.col("src").alias("vertex"))
-        .union(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    ).persist()
-
     chain_patch: DataFrame | None = None
     for it in range(start_iter, max_iter):
         _t = _time.time()
@@ -617,34 +615,34 @@ def connected_components(
     else:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
-    # work is now a star forest oriented (member -> root) — possibly up to
-    # the driver-resolved chain patch, applied here as a broadcast mapping
-    # on dst (a narrow projection inside the one labels job).
-    bare_forest = work  # the checkpoint handle to free (work may be rewrapped)
+    # work is now a star forest oriented (member -> root), up to the
+    # driver-resolved chain patch, applied here as a broadcast mapping on
+    # dst. Every vertex of a non-self-loop input edge occurs in the forest,
+    # so one min-aggregate over its endpoints, plus the input's self-loops,
+    # lists each vertex once. Both endpoints of a row take the row's root:
+    # a pre-patch root r whose component merged downward occurs only as a
+    # dst, and its rows give it find(r). Every row's label lies in its
+    # vertex's component, and at least one row per vertex carries the
+    # minimum (see _chain_patch), so the min is exact.
+    forest = work.select("src", "dst", F.col("dst").alias("root"))
     if chain_patch is not None:
-        # The mapping's own (_old → _new) pairs ride along as member rows:
-        # a pre-patch root r whose component merged downward appears in the
-        # forest ONLY as a dst, so remapping those occurrences would erase
-        # r entirely (and the universe fallback would mislabel it as its
-        # own component) — the union row (r → find(r)) keeps it labeled.
-        work = work.join(
-            F.broadcast(chain_patch), work["dst"] == F.col("_old"), "left"
-        ).select(
-            "src", F.coalesce("_new", "dst").alias("dst")
-        ).unionByName(
-            chain_patch.select(
-                F.col("_old").alias("src"), F.col("_new").alias("dst")
+        forest = forest.join(
+            F.broadcast(chain_patch), F.col("dst") == F.col("_old"), "left"
+        ).select("src", "dst", F.coalesce("_new", "dst").alias("root"))
+    out = (
+        forest.select(
+            F.explode(F.array("src", "dst")).alias("vertex"),
+            F.col("root").alias("component"),
+        )
+        .unionByName(
+            edges.where(F.col("src") == F.col("dst")).select(
+                F.col("src").alias("vertex"), F.col("src").alias("component")
             )
         )
-    members = work.select(F.col("src").alias("vertex"), F.col("dst").alias("component"))
-    roots = work.select(F.col("dst").alias("vertex"), F.col("dst").alias("component"))
-    labels = members.union(roots).distinct()
-    out = (
-        universe.join(labels, "vertex", "left")
-        .select("vertex", F.coalesce("component", "vertex").alias("component"))
+        .groupBy("vertex")
+        .agg(F.min("component").alias("component"))
         .localCheckpoint(eager=True)
     )  # labels are wide-ish and read once by the caller: default storage
-    universe.unpersist()
     # the labels are materialized — the terminal star forest is dead too
-    free_local_checkpoint(bare_forest)
+    free_local_checkpoint(work)
     return out

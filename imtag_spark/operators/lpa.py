@@ -19,11 +19,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.plans.checkpoint import (
-    free_local_checkpoint,
-    frontier_checkpoint,
-    frontier_storage,
-)
+from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
 
 def label_propagation(
@@ -77,12 +73,13 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("b"))
             .select("vertex", (-F.col("b.neg")).alias("label"))
         )
-        new_labels = (
+        new_labels = frontier_checkpoint(
             labels.withColumnRenamed("label", "old_label")
             .join(best, "vertex", "left")
             .select("vertex", F.coalesce("label", "old_label").alias("label"),
-                    "old_label")
-        ).localCheckpoint(eager=False, storageLevel=frontier_storage())
+                    "old_label"),
+            eager=False,
+        )
         # One fused action per round (CC's certificate/collect pattern,
         # cc.py::_chained_count): the aggregate both materializes the lazy
         # checkpoint and returns the changed-label count — no separate

@@ -9,19 +9,20 @@ standard power iteration with damping ``alpha``, uniform teleport, and
 uniform redistribution of dangling-node mass; vertices = src ∪ dst.
 
 Scale design:
+- setup builds ONE per-vertex table, ``deg(vertex, out_deg)`` with sinks
+  at 0, from one aggregate over the edge endpoints; a second aggregate
+  over it gives ``n`` and the dangling mass, the transitions join it where
+  ``out_deg > 0``, and the initial ranks are a projection of it;
 - the superstep's physical route (``broadcast_join`` or ``join``, see
-  ``pagerank``) follows from the counted vertex count and the executor
-  count; callers have no route option;
+  ``pagerank``) follows from ``n`` and the executor count; callers have
+  no route option;
 - the transition table (edges pre-joined with 1/out-degree) is built ONCE
-  and persisted/checkpointed; every superstep after that is a single
-  equi-join + one map-side-combinable sum — the minimum shuffle count per
-  superstep for a row-store edge layout;
-- ranks are repartitioned to the join key so the superstep join reuses the
-  same hash partitioning every round (no extra exchange of the big side
-  once AQE caches the layout);
-- dangling mass is one scalar agg per round (tiny job), not a broadcast
-  join;
-- lineage truncated every round (see cc.py for why that is mandatory).
+  and persisted; every superstep after that is a single equi-join + one
+  map-side-combinable sum — the minimum shuffle count per superstep for a
+  row-store edge layout;
+- the next round's dangling mass comes out of the same aggregate as the
+  convergence delta (one job per superstep), and lineage is truncated
+  every round (see cc.py for why that is mandatory).
 """
 
 from __future__ import annotations
@@ -31,11 +32,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.plans.checkpoint import (
-    free_local_checkpoint,
-    frontier_checkpoint,
-    frontier_storage,
-)
+from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
 #: broadcast_join runs at or below this vertex count (per-superstep rank
 #: broadcast ≈ 16B × V per executor — 320 MB at the threshold)
@@ -82,6 +79,11 @@ def _auto_prefers_broadcast_join(n_vertices: int, executors: int) -> bool:
         and executors <= AUTO_BROADCAST_EXECUTOR_LIMIT
     )
 
+def _dangling_mass():
+    """Total rank held by vertices with no out-edge (0 when there are none)."""
+    return F.coalesce(F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0))
+
+
 #: log2 of the rank-packing block size for the broadcast_join superstep:
 #: 2^4 = 16 ranks per packed map row (see the packing comment in
 #: ``pagerank``). Chosen so the O(block) map probe per edge stays a few
@@ -123,31 +125,52 @@ def pagerank(
       ranks to meet them and the map-side-combined contributions to the
       dst aggregate.
 
-    Both routes keep rank state in DataFrames, so a checkpointer works with
-    either. ``metrics_out`` gets ``supersteps``, ``superstep_times``,
-    ``contribs_plan`` (the first superstep's physical plan) and ``mode``,
-    the route that ran.
+    Both routes keep rank state ``(vertex, has_out, rank)`` in DataFrames,
+    so a ``checkpointer`` works with either: every ``checkpoint_every``
+    supersteps the state is saved, and a call whose checkpointer holds a
+    saved step resumes from it, numbering supersteps on from that step (up
+    to ``max_iter`` in all). ``metrics_out`` gets ``supersteps``,
+    ``superstep_times`` (one per superstep run by this call),
+    ``contribs_plan`` (the first such superstep's physical plan) and
+    ``mode``, the route that ran.
     """
-    # Clean the edge set ONCE; both paths (and the vertex universe) reuse it.
+    # Clean the edge set ONCE; the degree table and transitions reuse it.
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst")
     if not directed:
         e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = e.distinct()
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=frontier_storage())
+    # The one per-vertex table: every vertex once with its out-degree,
+    # sinks at 0 (posexplode's pos is 1 for the src endpoint, 0 for dst).
+    deg = frontier_checkpoint(
+        e.select(F.posexplode(F.array("dst", "src")).alias("o", "vertex"))
+        .groupBy("vertex")
+        .agg(F.sum("o").alias("out_deg")),
+        eager=False,
     )
-    n = vertices.count()
+    # Rank state is (vertex, has_out, rank): the dangling flag travels
+    # inside it, so the loop never joins it again. A fresh run starts from
+    # deg with rank 1 per vertex (scaled to 1/n below), a resumed one from
+    # its newest durable frontier. One aggregate, which also materializes
+    # deg, gives n and the dangling mass.
+    resumed = checkpointer.resume() if checkpointer is not None else None
+    ranks, start = resumed or (
+        deg.select(
+            "vertex", (F.col("out_deg") > 0).alias("has_out"), F.lit(1.0).alias("rank")
+        ),
+        0,
+    )
+    n, dangling = ranks.agg(F.count(F.lit(1)), _dangling_mass()).first()
     if n == 0:
+        free_local_checkpoint(deg)
         return edges.sparkSession.createDataFrame([], "vertex BIGINT, rank DOUBLE")
+    if resumed is None:
+        ranks = ranks.withColumn("rank", F.lit(1.0 / n))
+        dangling /= n
 
     use_bjoin = _auto_prefers_broadcast_join(
         n, _cluster_executor_count(edges.sparkSession)
     )
 
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     # Transition table: one row per edge with its 1/out_deg weight — built
     # once, reused every superstep. CRITICAL for scale: persist it
     # hash-partitioned AND sorted on the superstep join key. A cached
@@ -164,9 +187,9 @@ def pagerank(
     # E-row side never moves AND never re-aggregates across the wire. No
     # sortWithinPartitions: hash join + hash agg don't consume ordering.
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    transitions = e.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-    )
+    transitions = e.join(
+        deg.where(F.col("out_deg") > 0).withColumnRenamed("vertex", "src"), "src"
+    ).select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
     if use_bjoin:
         # Hash-block packing for the per-superstep rank broadcast. A naive
         # broadcast of the V-row ranks serializes the superstep on the
@@ -192,34 +215,13 @@ def pagerank(
             .persist()
         )
     transitions.count()  # materialize the cache before timing supersteps
-    has_out = out_deg.select(F.col("src").alias("vertex"), F.lit(True).alias("_has_out"))
-    # vertex table annotated with dangling flag (computed once); the flag
-    # travels inside the rank table so the loop never joins it again
-    ranks = (
-        vertices.join(has_out, "vertex", "left")
-        .select(
-            "vertex",
-            F.coalesce("_has_out", F.lit(False)).alias("has_out"),
-            F.lit(1.0 / n).alias("rank"),
-        )
-        .localCheckpoint(eager=True, storageLevel=frontier_storage())
-    )
-    # dangling mass of the CURRENT ranks; recomputed inside each round's
-    # single convergence-check job so every superstep costs exactly one
-    # Spark job (join + agg + checkpoint materialization fused).
-    dangling = (
-        ranks.where(~F.col("has_out")).agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-    ).collect()[0][0]
-    # ranks (which embeds the dangling flags) is materialized — the setup
-    # vertex-universe checkpoint has no further reader
-    free_local_checkpoint(vertices)
 
     base = (1.0 - alpha) / n
     # handle to the live frontier's bare localCheckpoint — freed as soon as
     # the next round materializes (keeps block-manager storage flat across
     # long runs instead of hoarding one superseded rank copy per round)
-    prev_ck = ranks
-    for it in range(max_iter):
+    prev_ck = deg
+    for it in range(start, max_iter):
         t0 = time.time()
         if use_bjoin:
             # parallel packing agg (V rows → V/16 map rows), broadcast of
@@ -252,7 +254,7 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
             )
-        if metrics_out is not None and it == 0:
+        if metrics_out is not None and it == start:
             # first-superstep physical plan, for the plan-quality tests
             # (asserts the cached E-row side never re-exchanges)
             metrics_out["contribs_plan"] = (
@@ -277,13 +279,9 @@ def pagerank(
         # lazy: materialized (and lineage truncated) by the collect below
         new_ranks = frontier_checkpoint(new_ranks, eager=False)
         # One job: L1 delta + next round's dangling mass together.
-        row = new_ranks.agg(
-            F.sum(F.abs(F.col("rank") - F.col("r0"))).alias("delta"),
-            F.coalesce(
-                F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
-            ).alias("dangling"),
-        ).collect()[0]
-        delta, dangling = float(row["delta"]), float(row["dangling"])
+        delta, dangling = new_ranks.agg(
+            F.sum(F.abs(F.col("rank") - F.col("r0"))), _dangling_mass()
+        ).first()
         # the fused agg materialized this round's checkpoint — the previous
         # round's rank blocks are dead; release them now
         free_local_checkpoint(prev_ck)

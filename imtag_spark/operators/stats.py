@@ -101,15 +101,12 @@ def remove_components(
     )
 
 
-def degrees(edges: DataFrame, directed: bool = False) -> DataFrame:
-    """Degree table (vertex, degree); undirected counts each incident edge once."""
+def degrees(edges: DataFrame) -> DataFrame:
+    """Undirected degree table (vertex, degree): each distinct incident
+    edge counts once; self-loops and duplicate or reversed rows do not."""
     e = edges.where(F.col("src") != F.col("dst")).select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
-    if directed:
-        return edges.groupBy(F.col("src").alias("vertex")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
     return (
         e.select(F.col("a").alias("vertex"))
         .union(e.select(F.col("b").alias("vertex")))

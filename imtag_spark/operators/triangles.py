@@ -4,7 +4,9 @@ Recasts the reference's "join runs against adjacent runs" pattern (J1,
 /root/reference/src/SegmentImageImpl.cpp:96-115) as joining edges with
 edges: orient every undirected edge from its lower-(degree, id) endpoint to
 the higher one, enumerate wedges with one self-join, and close them with a
-semi-join back on the oriented edge set.
+join back on the oriented edge set. The degree table that orients the edges
+is also the per-vertex output's vertex set, and each triangle closes exactly
+one wedge, so the total is the closed-wedge count.
 
 The degree ordering is the classic skew-killer: every vertex's oriented
 out-degree is O(sqrt(m)), so the wedge join cannot explode on hubs — the
@@ -28,20 +30,21 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """Edge table → per-vertex triangle counts (vertex, triangles).
+def _closed_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Edge table → ``(deg, closed)``: the per-vertex table ``(v, deg)``,
+    every vertex of a non-self-loop edge once, and the closed wedges
+    ``(u, x, y)``, one row per triangle.
 
-    Self-loops ignored, duplicate/bidirectional edges deduped. Vertices in
-    no triangle report 0.
+    Each undirected edge is oriented from its lower (deg, id) endpoint to
+    the higher one. That order is total, so a triangle ``a < b < c`` has
+    exactly one wedge, ``a → b, a → c``, and it is closed by ``b → c``.
     """
     und = _canonical_undirected(edges).localCheckpoint(eager=True)
     deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
+        und.select(F.explode(F.array("a", "b")).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    # orient low (deg, id) → high (deg, id)
     withdeg = (
         und.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a")
         .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
@@ -54,34 +57,38 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
     ).localCheckpoint(eager=True)
 
-    # wedges u→v, u→w (v < w by id to count each once), closed by v→w or w→v.
-    # The closing join streams DIRECTLY into the per-vertex tally (explode of
-    # the 3 corners + map-side-combinable count): the O(m^1.5) triangle list
-    # is never materialized — at scale it dwarfs the edge set, and the count
-    # only needs per-vertex tallies.
+    # wedges u→x, u→y (x < y by id to list each once), closed by x→y or y→x
     e1 = oriented.select(F.col("u"), F.col("v").alias("x"))
     e2 = oriented.select(F.col("u"), F.col("v").alias("y"))
     wedges = e1.join(e2, "u").where(F.col("x") < F.col("y"))
     closing = oriented.select(
         F.least("u", "v").alias("x"), F.greatest("u", "v").alias("y")
     )
+    return deg, wedges.join(closing, ["x", "y"], "inner")
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Edge table → per-vertex triangle counts (vertex, triangles).
+
+    Self-loops ignored, duplicate/bidirectional edges deduped. Vertices in
+    no triangle report 0; the vertex set is the degree table's.
+    """
+    deg, closed = _closed_wedges(edges)
+    # The closed wedges stream DIRECTLY into the per-vertex tally (explode
+    # of the 3 corners + map-side-combinable count): the O(m^1.5) triangle
+    # list is never materialized — at scale it dwarfs the edge set.
     per_vertex = (
-        wedges.join(closing, ["x", "y"], "inner")
-        .select(F.explode(F.array("u", "x", "y")).alias("vertex"))
+        closed.select(F.explode(F.array("u", "x", "y")).alias("vertex"))
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    all_v = und.select(F.col("a").alias("vertex")).union(
-        und.select(F.col("b").alias("vertex"))
-    ).distinct()
-    return all_v.join(per_vertex, "vertex", "left").select(
-        "vertex", F.coalesce("triangles", F.lit(0)).alias("triangles")
+    return (
+        deg.select(F.col("v").alias("vertex"))
+        .join(per_vertex, "vertex", "left")
+        .select("vertex", F.coalesce("triangles", F.lit(0)).alias("triangles"))
     )
 
 
 def total_triangles(edges: DataFrame) -> int:
-    """Total distinct triangles in the graph."""
-    row = triangle_count(edges).agg(
-        (F.coalesce(F.sum("triangles"), F.lit(0)) / 3).alias("t")
-    ).collect()[0]
-    return int(row["t"])
+    """Total distinct triangles in the graph: the closed-wedge count."""
+    return _closed_wedges(edges)[1].count()

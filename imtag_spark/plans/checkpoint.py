@@ -31,11 +31,6 @@ from pyspark.storagelevel import StorageLevel
 FRONTIER_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
-def frontier_storage() -> StorageLevel:
-    """The serialized frontier storage level (see FRONTIER_STORAGE)."""
-    return FRONTIER_STORAGE
-
-
 def frontier_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` with serialized block storage (FRONTIER_STORAGE).
 

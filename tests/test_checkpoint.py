@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -116,3 +117,51 @@ def test_manifest_records_true_witnesses_when_patch_fires(
         for v in manifest["steps"].values()
         if v not in patched_steps
     )
+
+
+@pytest.mark.parametrize("route", ["broadcast_join", "join"])
+def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route):
+    # kill a 6-superstep PageRank after superstep 3 and resume it from the
+    # durable frontier: the resumed run continues the step numbering, runs
+    # only the missing supersteps and lands on the uninterrupted ranks
+    import imtag_spark.operators.pagerank as pr_mod
+
+    if route == "join":
+        monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
+    rng = np.random.default_rng(5)
+    pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(70, 2))}
+    pairs |= {(3, 100), (4, 101)}  # sinks: the dangling mass must resume too
+    edges = spark.createDataFrame(sorted(pairs), "src BIGINT, dst BIGINT")
+    kw = dict(tol=0.0, max_iter=6, checkpoint_every=1)
+
+    root = str(tmp_path / "pr")
+    full = SuperstepCheckpointer(spark, root, keep_last=100)
+    m: dict = {}
+    expected = {
+        r.vertex: r.rank
+        for r in pr_mod.pagerank(edges, checkpointer=full, metrics_out=m, **kw).collect()
+    }
+    assert m["mode"] == route and m["supersteps"] == 6
+
+    kill_at = 3
+    manifest = json.loads(full.manifest_path.read_text())
+    manifest["last_step"] = kill_at
+    manifest["steps"] = {k: v for k, v in manifest["steps"].items() if int(k) <= kill_at}
+    full.manifest_path.write_text(json.dumps(manifest))
+
+    resumed_ckpt = SuperstepCheckpointer(spark, root, keep_last=100)
+    m = {}
+    got = {
+        r.vertex: r.rank
+        for r in pr_mod.pagerank(
+            edges, checkpointer=resumed_ckpt, metrics_out=m, **kw
+        ).collect()
+    }
+    assert m["mode"] == route
+    assert m["supersteps"] == 6 and len(m["superstep_times"]) == 6 - kill_at
+    manifest = json.loads(resumed_ckpt.manifest_path.read_text())
+    assert manifest["last_step"] == 6
+    assert sorted(int(k) for k in manifest["steps"]) == list(range(1, 7))
+    assert set(got) == set(expected)
+    for v in expected:
+        assert abs(got[v] - expected[v]) <= 1e-12, (v, got[v], expected[v])

@@ -219,6 +219,31 @@ def test_cc_one_task_labels_are_one_shuffle_free_job(spark):
     ]
 
 
+@pytest.mark.parametrize(
+    "call, before",
+    [("pagerank_setup", 20), ("total_triangles", 16), ("cc_star_exit", 19)],
+)
+def test_one_vertex_table_job_counts(spark, monkeypatch, call, before):
+    # each operator builds its vertex set once, from an aggregate it needs
+    # anyway; ``before`` is the count with a second vertex pass (a
+    # PageRank vertex checkpoint, a triangle vertex distinct, a persisted
+    # CC vertex universe), measured in this same harness
+    import imtag_spark.operators.cc as cc_mod
+
+    rng = np.random.default_rng(11)
+    pairs = [(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b]
+    e = edges_df(spark, pairs).localCheckpoint(eager=True)
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # CC takes the star route
+    h = edges_df(spark, _hostile_graph(3))
+    fn = {
+        "pagerank_setup": lambda: pagerank(e, max_iter=0).count(),
+        "total_triangles": lambda: total_triangles(e),
+        "cc_star_exit": lambda: connected_components(h, max_iter=20),
+    }[call]
+    _, jobs = _jobs_in_group(spark, f"one-vertex-table-{call}", fn)
+    assert len(jobs) < before
+
+
 def test_triangles_two_triangles_bridge(spark):
     e = edges_df(spark, TWO_TRIANGLES_BRIDGE)
     assert total_triangles(e) == 2

@@ -83,14 +83,18 @@ def test_relabel_cc_labels_both_routes(spark, monkeypatch, seed, base):
     assert in_task[2] == want
     assert _relabel(monkeypatch, labels.repartition(4), base, "distributed") == in_task
 
-    # labels from the distributed star rounds are several partitions: the
-    # distributed rank must take them
+    # labels from the distributed star rounds: AQE may coalesce their
+    # min-aggregate into one partition, so the spied distributed rank is
+    # fed them repartitioned, and relabeling them as they come must give
+    # the same rows whichever route it takes
     import imtag_spark.operators.cc as cc_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     star = connected_components(edges)
-    assert star.rdd.getNumPartitions() > 1
-    assert _relabel(monkeypatch, star, base, "distributed") == in_task
+    assert _relabel(monkeypatch, star.repartition(4), base, "distributed") == in_task
+    out = densely_relabel(star, base=base)
+    assert (out.columns, out.dtypes) == in_task[:2]
+    assert sorted(tuple(r) for r in out.collect()) == in_task[2]
 
 
 @pytest.mark.parametrize("base", [0, 1])
