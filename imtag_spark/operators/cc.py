@@ -83,6 +83,18 @@ SMALL_GRAPH_EDGE_LIMIT = 4_000_000
 #: well under a distributed round's ~2-3 s scheduling floor.
 FUNNEL_EDGE_LIMIT = 1_000_000
 
+
+def small_edge_arrays(edges: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
+    """``(src, dst)`` on the driver as NumPy arrays when ``edges`` has at
+    most FUNNEL_EDGE_LIMIT rows, else ``None``: one count job, then one
+    Arrow collect of at most ~16 MB. The gate PageRank, LPA and triangles
+    share with the one-task solve above, read at call time."""
+    if edges.count() > FUNNEL_EDGE_LIMIT:
+        return None
+    t = edges.select("src", "dst").toArrow()
+    return t.column("src").to_numpy(), t.column("dst").to_numpy()
+
+
 #: rows per emitted Arrow batch from the contraction (bounds JVM-side
 #: buffering of one IPC message; 1M × 16B ≈ 16 MB)
 _CONTRACT_OUT_BATCH = 1_000_000

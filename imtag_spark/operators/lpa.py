@@ -6,8 +6,12 @@ synchronous LPA: every superstep each vertex adopts the most frequent label
 among its neighbors, ties broken by the minimum label — fully deterministic,
 mirroring the reference's ``lt_cmp`` policy (disjoint_set.hpp:22-27).
 
-Scale notes: the frequency count is a map-side-combinable
-``groupBy(vertex,label).count()``; the argmax is taken with a single
+Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
+rows runs every round in NumPy on the driver: the 10^5-edge corpus job's
+2 rounds take 3 Spark jobs and 0.4 s there, 19 jobs and 3.6 s as a
+DataFrame loop (BENCH.md, "Driver route"). Larger tables run the
+DataFrame loop: the frequency count is a map-side-combinable
+``groupBy(vertex,label).count()``, and the argmax is a single
 ``max(struct(cnt, -label))`` aggregate rather than a per-vertex window
 (windows funnel a hot vertex's whole neighborhood through one task).
 """
@@ -16,10 +20,50 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imtag_spark.operators import cc
 from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
+
+
+def _driver_lpa(src, dst, max_iter: int, verbose: bool) -> tuple[np.ndarray, np.ndarray]:
+    """The driver route: ``(vertex, label)`` arrays, vertices sorted.
+
+    Labels are held as vertex indices (index order is id order, so the
+    min-label tie break is the min-index one). Each round counts the
+    ``(receiver, label)`` pairs with one ``np.unique`` over an int64 key
+    and takes each receiver's most frequent label, the smallest on ties.
+    """
+    verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(verts)
+    a, b = idx[: len(src)], idx[len(src):]
+    keep = a != b
+    key = np.unique(a[keep] * n + b[keep])  # distinct directed pairs
+    a, b = key // n, key % n
+    # both directions of every pair: a pair given both ways counts twice
+    recv, send = np.concatenate([b, a]), np.concatenate([a, b])
+    label = np.arange(n)
+    for it in range(max_iter):
+        t0 = time.time()
+        pairs, cnt = np.unique(recv * n + label[send], return_counts=True)
+        r, lab = pairs // n, pairs % n
+        # per receiver: highest count first, then smallest label
+        order = np.lexsort((lab, -cnt, r))
+        r, lab = r[order], lab[order]
+        first = np.ones(len(r), dtype=bool)
+        first[1:] = r[1:] != r[:-1]
+        new = label.copy()
+        new[r[first]] = lab[first]
+        changed = int((new != label).sum())
+        label = new
+        if verbose:
+            print(f"[lpa] iter {it + 1} changed={changed} {time.time() - t0:.3f}s", flush=True)
+        if changed == 0:
+            break
+    return verts, verts[label]
 
 
 def label_propagation(
@@ -33,16 +77,26 @@ def label_propagation(
     Undirected semantics (edges symmetrized). Isolated/self-loop-only
     vertices keep their own id as label. Stops early when no label changes.
 
-    Loop hygiene (same contract as cc.py / pagerank.py): the symmetrized
-    E-row side is persisted hash-partitioned on the per-round join key
-    ``src`` — a cached InMemoryRelation advertises its outputPartitioning
-    to Catalyst (a localCheckpoint would NOT: LogicalRDD drops it, which
-    re-exchanged all E rows every round pre-r5), so each round exchanges
-    only the V-row labels side. Superseded label frontiers are freed the
-    moment the next round is materialized, keeping block-manager storage
-    flat across high-iteration runs instead of hoarding one V-row copy per
-    round.
+    A table of at most ``cc.FUNNEL_EDGE_LIMIT`` rows is collected to the
+    driver (one count, one Arrow collect) and solved by ``_driver_lpa``;
+    the labels come back as a DataFrame of the same schema.
+
+    Loop hygiene on the DataFrame route (same contract as cc.py /
+    pagerank.py): the symmetrized E-row side is persisted hash-partitioned
+    on the per-round join key ``src`` — a cached InMemoryRelation
+    advertises its outputPartitioning to Catalyst (a localCheckpoint would
+    NOT: LogicalRDD drops it, which re-exchanged all E rows every round
+    pre-r5), so each round exchanges only the V-row labels side.
+    Superseded label frontiers are freed the moment the next round is
+    materialized, keeping block-manager storage flat across high-iteration
+    runs instead of hoarding one V-row copy per round.
     """
+    small = cc.small_edge_arrays(edges)
+    if small is not None:
+        vertex, label = _driver_lpa(*small, max_iter, verbose)
+        return edges.sparkSession.createDataFrame(
+            pa.table({"vertex": vertex, "label": label})
+        )
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -1,4 +1,4 @@
-"""PageRank via DataFrame power iteration (north-rule operator).
+"""PageRank by power iteration (north-rule operator).
 
 Generalizes the gather-scatter structure of the reference's pass-2
 neighbor-aggregation sweep (/root/reference/src/SegmentImageImpl.cpp:96-115)
@@ -6,32 +6,37 @@ to repeated sparse matvec over the edge table.
 
 Semantics (matched by the NumPy oracle in tests, allclose 1e-6):
 standard power iteration with damping ``alpha``, uniform teleport, and
-uniform redistribution of dangling-node mass; vertices = src ∪ dst.
+uniform redistribution of dangling-node mass; vertices = src ∪ dst of the
+edges left after dropping self-loops.
 
-Scale design:
-- setup builds ONE per-vertex table, ``deg(vertex, out_deg)`` with sinks
-  at 0, from one aggregate over the edge endpoints; a second aggregate
-  over it gives ``n`` and the dangling mass, the transitions join it where
-  ``out_deg > 0``, and the initial ranks are a projection of it;
-- the superstep's physical route (``broadcast_join`` or ``join``, see
-  ``pagerank``) follows from ``n`` and the executor count; callers have
-  no route option;
-- the transition table (edges pre-joined with 1/out-degree) is built ONCE
-  and persisted; every superstep after that is a single equi-join + one
-  map-side-combinable sum — the minimum shuffle count per superstep for a
-  row-store edge layout;
-- the next round's dangling mass comes out of the same aggregate as the
-  convergence delta (one job per superstep), and lineage is truncated
-  every round (see cc.py for why that is mandatory).
+Routes, chosen by size (see ``pagerank``):
+- an edge table of at most ``cc.FUNNEL_EDGE_LIMIT`` rows is collected to
+  the driver and iterated in NumPy (``np.bincount`` per superstep). Below
+  that bound a Spark superstep is all scheduling: the 10^5-edge corpus
+  job's 3 supersteps plus setup take 3 Spark jobs and 0.6 s there, 25
+  jobs and 7.3 s as a DataFrame loop (BENCH.md, "Driver route");
+- larger tables run the DataFrame loop. Setup builds ONE per-vertex table,
+  ``deg(vertex, out_deg)`` with sinks at 0, from one aggregate over the
+  edge endpoints; a second aggregate over it gives ``n`` and the dangling
+  mass. The transition table (edges pre-joined with 1/out-degree) is
+  built once and persisted, so every superstep is a single equi-join and
+  one map-side-combinable sum, its physical form (``broadcast_join`` or
+  ``join``) following from ``n`` and the executor count. The next round's
+  dangling mass comes out of the same aggregate as the convergence delta
+  (one job per superstep), and lineage is truncated every round (see
+  cc.py for why that is mandatory).
 """
 
 from __future__ import annotations
 
 import time
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imtag_spark.operators import cc
 from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
 #: broadcast_join runs at or below this vertex count (per-superstep rank
@@ -92,6 +97,65 @@ def _dangling_mass():
 _PACK_BITS = 4
 
 
+def _driver_pagerank(
+    spark, src, dst, *, alpha, tol, max_iter, directed, checkpointer,
+    checkpoint_every, verbose, metrics_out,
+) -> DataFrame:
+    """The driver route over collected ``(src, dst)`` arrays: the Spark
+    loop's arithmetic and checkpoint contract, one ``np.bincount`` per
+    superstep over vertex indices."""
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    if not directed:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(verts)
+    if n == 0:
+        return spark.createDataFrame([], "vertex BIGINT, rank DOUBLE")
+    # distinct pairs as one int64 key over vertex indices (n ≤ 2 × rows)
+    key = np.unique(idx[: len(src)] * n + idx[len(src):])
+    a, b = key // n, key % n
+    out_deg = np.bincount(a, minlength=n)
+    w = 1.0 / out_deg[a]
+    has_out = out_deg > 0
+    resumed = checkpointer.resume() if checkpointer is not None else None
+    if resumed is None:
+        rank, start = np.full(n, 1.0 / n), 0
+    else:
+        frontier, start = resumed
+        state = frontier.select("vertex", "has_out", "rank").toArrow().sort_by("vertex")
+        if not np.array_equal(state.column("vertex").to_numpy(), verts):
+            raise ValueError("checkpointed PageRank state lists other vertices than the edges")
+        has_out = state.column("has_out").to_numpy()
+        rank = state.column("rank").to_numpy()
+
+    base = (1.0 - alpha) / n
+    dangling = rank[~has_out].sum()
+    for it in range(start, max_iter):
+        t0 = time.time()
+        contrib = np.bincount(b, weights=rank[a] * w, minlength=n)
+        new = base + alpha * (contrib + dangling / n)
+        delta = float(np.abs(new - rank).sum())
+        rank = new
+        dangling = rank[~has_out].sum()
+        if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+            state = pa.table({"vertex": verts, "has_out": has_out, "rank": rank})
+            checkpointer.save(spark.createDataFrame(state), it + 1)
+        if verbose:
+            print(f"[pagerank] iter {it + 1} delta={delta:.3e} {time.time() - t0:.3f}s", flush=True)
+        if checkpointer is not None:
+            checkpointer.log_metrics(it + 1, l1_delta=delta)
+        if metrics_out is not None:
+            metrics_out.setdefault("superstep_times", []).append(time.time() - t0)
+            metrics_out["supersteps"] = it + 1
+        if delta < tol:
+            break
+    # rank NOT NULL, as the Spark loop's arithmetic column is
+    schema = pa.schema([("vertex", pa.from_numpy_dtype(verts.dtype)),
+                        pa.field("rank", pa.float64(), nullable=False)])
+    return spark.createDataFrame(pa.table({"vertex": verts, "rank": rank}, schema=schema))
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -110,7 +174,14 @@ def pagerank(
     dropped; duplicate edges are counted once (set semantics, matching the
     oracle).
 
-    The physical route comes from V and the executor count:
+    The route comes from the edge count, then from V and the executor
+    count:
+    - ``driver`` when the table has at most ``cc.FUNNEL_EDGE_LIMIT`` rows
+      (``cc.small_edge_arrays``: one count job and one Arrow collect of at
+      most ~16 MB). The whole power iteration runs in NumPy, one
+      ``np.bincount`` per superstep, and the ranks come back as a
+      DataFrame. On the 10^5-edge corpus job it runs 3 Spark jobs where
+      the loops below run 25 (BENCH.md, "Driver route").
     - ``broadcast_join`` when V ≤ BROADCAST_VERTEX_LIMIT and the executor
       count is ≤ AUTO_BROADCAST_EXECUTOR_LIMIT. Transitions are cached
       hash(dst)-partitioned; each superstep broadcasts the ranks, packed
@@ -125,15 +196,26 @@ def pagerank(
       ranks to meet them and the map-side-combined contributions to the
       dst aggregate.
 
-    Both routes keep rank state ``(vertex, has_out, rank)`` in DataFrames,
-    so a ``checkpointer`` works with either: every ``checkpoint_every``
+    Every route keeps rank state ``(vertex, has_out, rank)`` in the same
+    schema, so a ``checkpointer`` works with any of them, and a state
+    saved by one route resumes on another: every ``checkpoint_every``
     supersteps the state is saved, and a call whose checkpointer holds a
     saved step resumes from it, numbering supersteps on from that step (up
     to ``max_iter`` in all). ``metrics_out`` gets ``supersteps``,
-    ``superstep_times`` (one per superstep run by this call),
-    ``contribs_plan`` (the first such superstep's physical plan) and
-    ``mode``, the route that ran.
+    ``superstep_times`` (one per superstep run by this call), ``mode``,
+    the route that ran, and on the Spark routes ``contribs_plan`` (the
+    first such superstep's physical plan).
     """
+    small = cc.small_edge_arrays(edges)
+    if small is not None:
+        if metrics_out is not None:
+            metrics_out["mode"] = "driver"
+        return _driver_pagerank(
+            edges.sparkSession, *small, alpha=alpha, tol=tol, max_iter=max_iter,
+            directed=directed, checkpointer=checkpointer,
+            checkpoint_every=checkpoint_every, verbose=verbose,
+            metrics_out=metrics_out,
+        )
     # Clean the edge set ONCE; the degree table and transitions reuse it.
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst")
     if not directed:

@@ -3,21 +3,87 @@
 Recasts the reference's "join runs against adjacent runs" pattern (J1,
 /root/reference/src/SegmentImageImpl.cpp:96-115) as joining edges with
 edges: orient every undirected edge from its lower-(degree, id) endpoint to
-the higher one, enumerate wedges with one self-join, and close them with a
-join back on the oriented edge set. The degree table that orients the edges
-is also the per-vertex output's vertex set, and each triangle closes exactly
-one wedge, so the total is the closed-wedge count.
+the higher one, enumerate the wedges of each vertex's oriented out-list,
+and close them against the edge set. The degree table that orients the
+edges is also the per-vertex output's vertex set, and each triangle closes
+exactly one wedge, so the total is the closed-wedge count.
 
 The degree ordering is the classic skew-killer: every vertex's oriented
-out-degree is O(sqrt(m)), so the wedge join cannot explode on hubs — the
+out-degree is O(sqrt(m)), so wedge enumeration cannot explode on hubs — the
 same concern the north rule's "degree-bucketed" guidance targets, solved
 structurally instead of by bucketing.
+
+Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
+rows is counted in NumPy on the driver, wedges enumerated in chunks of at
+most ``cc.LOCAL_CONTRACT_CHUNK``: the 10^5-edge corpus job's count takes
+3 Spark jobs and 0.2 s there, 10 jobs and 1.5 s as joins (BENCH.md,
+"Driver route"). Larger tables enumerate
+wedges with one self-join of the oriented edges and close them with a join
+back on the edge set.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from imtag_spark.operators import cc
+
+
+def _wedge_chunks(
+    u: np.ndarray, v: np.ndarray, chunk: int
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Wedges ``(u, x, y)`` with ``u → x``, ``u → y`` and ``x < y``, at
+    most ``chunk`` per yield, from oriented edges sorted by ``(u, v)``.
+
+    The edge at position p pairs with the later entries of its out-list,
+    ``c[p] = end(u[p]) − 1 − p`` of them, so wedge w belongs to the edge
+    where the cumulative counts pass w: each chunk is a range of wedge
+    numbers, decoded with one ``searchsorted``. A clique under the edge
+    gate has ~m^1.5 wedges (~4.6×10^8 at 1M edges), far too many to
+    materialize at once.
+    """
+    ends = np.cumsum(np.bincount(u))
+    c = ends[u] - 1 - np.arange(len(u))
+    cum = np.cumsum(c)
+    start = cum - c
+    total = int(cum[-1]) if len(cum) else 0
+    for lo in range(0, total, chunk):
+        w = np.arange(lo, min(lo + chunk, total))
+        p = np.searchsorted(cum, w, side="right")
+        yield u[p], v[p], v[p + 1 + w - start[p]]
+
+
+def _driver_triangles(src, dst) -> tuple[np.ndarray, np.ndarray, int]:
+    """The driver route: ``(vertex, triangles)`` arrays over every vertex
+    of a non-self-loop edge, vertices sorted, and the total, which is the
+    closed-wedge count."""
+    keep = src != dst
+    lo = np.minimum(src[keep], dst[keep])
+    hi = np.maximum(src[keep], dst[keep])
+    verts, idx = np.unique(np.concatenate([lo, hi]), return_inverse=True)
+    n = len(verts)
+    # canonical pairs (a < b by index, which is id order) as sorted keys
+    keys = np.unique(idx[: len(lo)] * n + idx[len(lo):])
+    a, b = keys // n, keys % n
+    deg = np.bincount(np.concatenate([a, b]), minlength=n)
+    fwd = deg[a] <= deg[b]  # (deg, id) order; a < b already
+    u, v = np.where(fwd, a, b), np.where(fwd, b, a)
+    order = np.lexsort((v, u))
+    per = np.zeros(n, dtype=np.int64)
+    total = 0
+    for wu, x, y in _wedge_chunks(u[order], v[order], cc.LOCAL_CONTRACT_CHUNK):
+        k = x * n + y
+        pos = np.minimum(np.searchsorted(keys, k), len(keys) - 1)
+        closed = keys[pos] == k
+        total += int(closed.sum())
+        for corner in (wu, x, y):
+            per += np.bincount(corner[closed], minlength=n)
+    return verts, per, total
 
 
 def _canonical_undirected(edges: DataFrame) -> DataFrame:
@@ -71,8 +137,19 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     """Edge table → per-vertex triangle counts (vertex, triangles).
 
     Self-loops ignored, duplicate/bidirectional edges deduped. Vertices in
-    no triangle report 0; the vertex set is the degree table's.
+    no triangle report 0; the vertex set is the degree table's. A table of
+    at most ``cc.FUNNEL_EDGE_LIMIT`` rows is counted on the driver
+    (``_driver_triangles``).
     """
+    small = cc.small_edge_arrays(edges)
+    if small is not None:
+        vertex, tri, _ = _driver_triangles(*small)
+        # triangles NOT NULL, as the Spark route's coalesced count is
+        schema = pa.schema([("vertex", pa.from_numpy_dtype(vertex.dtype)),
+                            pa.field("triangles", pa.int64(), nullable=False)])
+        return edges.sparkSession.createDataFrame(
+            pa.table({"vertex": vertex, "triangles": tri}, schema=schema)
+        )
     deg, closed = _closed_wedges(edges)
     # The closed wedges stream DIRECTLY into the per-vertex tally (explode
     # of the 3 corners + map-side-combinable count): the O(m^1.5) triangle
@@ -91,4 +168,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
 def total_triangles(edges: DataFrame) -> int:
     """Total distinct triangles in the graph: the closed-wedge count."""
+    small = cc.small_edge_arrays(edges)
+    if small is not None:
+        return _driver_triangles(*small)[2]
     return _closed_wedges(edges)[1].count()

@@ -148,3 +148,35 @@ def brute_triangles(edges: list[tuple[int, int]]) -> tuple[int, dict[int, int]]:
                     per[v] += 1
                     per[w] += 1
     return total, per
+
+
+def label_propagation(edges: list[tuple[int, int]], max_iter: int) -> dict[int, int]:
+    """Synchronous label propagation: vertex → label after ≤ max_iter rounds.
+
+    Every vertex starts with its own id. Each round, every vertex with a
+    neighbour takes its neighbours' most frequent label, the smallest on
+    ties; vertices whose only edges are self-loops keep their id. Stops
+    once no label changes. Neighbours come from the distinct directed
+    non-loop pairs taken both ways, so a pair given in both directions
+    counts twice.
+    """
+    from collections import Counter
+
+    nbrs: dict[int, list[int]] = {v: [] for e in edges for v in e}
+    for u, v in {(u, v) for u, v in edges if u != v}:
+        nbrs[u].append(v)
+        nbrs[v].append(u)
+    label = {v: v for v in nbrs}
+    for _ in range(max_iter):
+        new = {}
+        for v, ns in nbrs.items():
+            if not ns:
+                new[v] = label[v]
+                continue
+            cnt = Counter(label[u] for u in ns)
+            new[v] = min(cnt, key=lambda lab: (-cnt[lab], lab))
+        changed = new != label
+        label = new
+        if not changed:
+            break
+    return label

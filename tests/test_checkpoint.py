@@ -124,8 +124,10 @@ def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route)
     # kill a 6-superstep PageRank after superstep 3 and resume it from the
     # durable frontier: the resumed run continues the step numbering, runs
     # only the missing supersteps and lands on the uninterrupted ranks
+    import imtag_spark.operators.cc as cc
     import imtag_spark.operators.pagerank as pr_mod
 
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     if route == "join":
         monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(5)
@@ -162,6 +164,64 @@ def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route)
     manifest = json.loads(resumed_ckpt.manifest_path.read_text())
     assert manifest["last_step"] == 6
     assert sorted(int(k) for k in manifest["steps"]) == list(range(1, 7))
+    assert set(got) == set(expected)
+    for v in expected:
+        assert abs(got[v] - expected[v]) <= 1e-12, (v, got[v], expected[v])
+
+
+def _kill_after(ckpt: SuperstepCheckpointer, step: int) -> None:
+    """Rewind ``ckpt``'s manifest to ``step``, as if the run died there."""
+    manifest = json.loads(ckpt.manifest_path.read_text())
+    manifest["last_step"] = step
+    manifest["steps"] = {k: v for k, v in manifest["steps"].items() if int(k) <= step}
+    ckpt.manifest_path.write_text(json.dumps(manifest))
+
+
+@pytest.mark.parametrize(
+    "first, then",
+    [("driver", "broadcast_join"), ("broadcast_join", "driver"), ("driver", "driver")],
+)
+def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, then):
+    # every route saves the same (vertex, has_out, rank) state, so a run
+    # killed on one route resumes on the other: the step numbering goes
+    # on and the ranks land on the uninterrupted run's
+    import imtag_spark.operators.cc as cc
+    import imtag_spark.operators.pagerank as pr_mod
+
+    gate = {"driver": 1_000_000, "broadcast_join": 0}
+    rng = np.random.default_rng(5)
+    pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(70, 2))}
+    pairs |= {(3, 100), (4, 101)}  # sinks: the dangling mass must resume too
+    edges = spark.createDataFrame(sorted(pairs), "src BIGINT, dst BIGINT")
+    kw = dict(tol=0.0, max_iter=6, checkpoint_every=1, directed=False)
+
+    root = str(tmp_path / "pr")
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", gate[first])
+    full = SuperstepCheckpointer(spark, root, keep_last=100)
+    m: dict = {}
+    expected = {
+        r.vertex: r.rank
+        for r in pr_mod.pagerank(edges, checkpointer=full, metrics_out=m, **kw).collect()
+    }
+    assert m["mode"] == first and m["supersteps"] == 6
+
+    kill_at = 3
+    _kill_after(full, kill_at)
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", gate[then])
+    resumed_ckpt = SuperstepCheckpointer(spark, root, keep_last=100)
+    m = {}
+    got = {
+        r.vertex: r.rank
+        for r in pr_mod.pagerank(
+            edges, checkpointer=resumed_ckpt, metrics_out=m, **kw
+        ).collect()
+    }
+    assert m["mode"] == then
+    assert m["supersteps"] == 6 and len(m["superstep_times"]) == 6 - kill_at
+    manifest = json.loads(resumed_ckpt.manifest_path.read_text())
+    assert manifest["last_step"] == 6
+    assert sorted(int(k) for k in manifest["steps"]) == list(range(1, 7))
+    assert all("l1_delta" in v for v in manifest["steps"].values())
     assert set(got) == set(expected)
     for v in expected:
         assert abs(got[v] - expected[v]) <= 1e-12, (v, got[v], expected[v])

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from imtag_spark.operators.pagerank import pagerank
 from imtag_spark.operators.stats import degrees
 from imtag_spark.operators.triangles import total_triangles, triangle_count
 from oracles import brute_triangles, cc_min_label, numpy_pagerank
+from oracles import label_propagation as oracle_lpa
 
 TWO_TRIANGLES_BRIDGE = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)]
 
@@ -30,17 +33,46 @@ def _oracle_labels(pairs) -> dict[int, int]:
     return {v: verts[r] for v, r in zip(verts, roots)}
 
 
-def _count_calls(monkeypatch, *names):
-    """Spy on the named ``cc`` functions; returns their call counts."""
+#: the two routes of PageRank, LPA and triangles: NumPy on the driver at
+#: most ``cc.FUNNEL_EDGE_LIMIT`` rows, the Spark loop above it
+ROUTES = ("driver", "distributed")
+
+
+@contextlib.contextmanager
+def _on_route(route):
+    """Force PageRank, LPA and triangles onto ``route`` inside the block
+    (a gate of -1 rows sends even an empty table to the Spark loop);
+    yields the routes the size gate chose, one per call."""
     import imtag_spark.operators.cc as cc_mod
 
+    taken: list[str] = []
+    real = cc_mod.small_edge_arrays
+
+    def spy(edges):
+        out = real(edges)
+        taken.append("distributed" if out is None else "driver")
+        return out
+
+    with pytest.MonkeyPatch.context() as mp:
+        if route == "distributed":
+            mp.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", -1)
+        mp.setattr(cc_mod, "small_edge_arrays", spy)
+        yield taken
+
+
+def _count_calls(monkeypatch, *names, module=None):
+    """Spy on the named functions of ``module`` (default ``cc``); returns
+    their call counts."""
+    import imtag_spark.operators.cc as cc_mod
+
+    module = module or cc_mod
     calls = dict.fromkeys(names, 0)
     for name in names:
-        def spy(*args, _real=getattr(cc_mod, name), _name=name, **kw):
+        def spy(*args, _real=getattr(module, name), _name=name, **kw):
             calls[_name] += 1
             return _real(*args, **kw)
 
-        monkeypatch.setattr(cc_mod, name, spy)
+        monkeypatch.setattr(module, name, spy)
     return calls
 
 
@@ -233,7 +265,8 @@ def test_one_vertex_table_job_counts(spark, monkeypatch, call, before):
     rng = np.random.default_rng(11)
     pairs = [(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b]
     e = edges_df(spark, pairs).localCheckpoint(eager=True)
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # CC takes the star route
+    # CC takes the star route, PageRank and triangles their Spark loops
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     h = edges_df(spark, _hostile_graph(3))
     fn = {
         "pagerank_setup": lambda: pagerank(e, max_iter=0).count(),
@@ -252,14 +285,18 @@ def test_triangles_two_triangles_bridge(spark):
 
 
 def test_triangles_random_vs_bruteforce(spark):
+    # on both routes: NumPy on the driver and the Spark loop
     rng = np.random.default_rng(7)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(120, 2))}
     e = edges_df(spark, pairs)
     expected_total, expected_per = brute_triangles(list(pairs))
-    assert total_triangles(e) == expected_total
-    got = {r.vertex: r.triangles for r in triangle_count(e).collect()}
-    for v, c in expected_per.items():
-        assert got.get(v, 0) == c
+    for route in ROUTES:
+        with _on_route(route) as taken:
+            assert total_triangles(e) == expected_total, route
+            got = {r.vertex: r.triangles for r in triangle_count(e).collect()}
+        assert taken == [route, route]
+        for v, c in expected_per.items():
+            assert got.get(v, 0) == c, (route, v)
 
 
 def test_triangles_star_has_none(spark):
@@ -269,20 +306,27 @@ def test_triangles_star_has_none(spark):
 
 @pytest.mark.parametrize("directed", [True, False])
 def test_pagerank_vs_numpy(spark, directed):
+    # on both routes: NumPy on the driver and the Spark loop
     rng = np.random.default_rng(11)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b})
     e = edges_df(spark, pairs)
-    got = {r.vertex: r.rank for r in pagerank(
-        e, directed=directed, tol=1e-8, max_iter=200).collect()}
     want = numpy_pagerank(pairs, [], directed=directed)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
-    assert abs(sum(got.values()) - 1.0) < 1e-9
+    for route in ROUTES:
+        with _on_route(route) as taken:
+            got = {r.vertex: r.rank for r in pagerank(
+                e, directed=directed, tol=1e-8, max_iter=200).collect()}
+        assert taken == [route]
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] - want[v]) < 1e-6, (route, v, got[v], want[v])
+        assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
 @pytest.mark.parametrize("directed", [True, False])
-def test_pagerank_broadcast_join_mode_vs_numpy(spark, directed):
+def test_pagerank_broadcast_join_mode_vs_numpy(spark, monkeypatch, directed):
+    import imtag_spark.operators.cc as cc_mod
+
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     rng = np.random.default_rng(37)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b})
     e = edges_df(spark, pairs)
@@ -302,8 +346,10 @@ def test_pagerank_broadcast_join_mode_vs_numpy(spark, directed):
 def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
     # BROADCAST_VERTEX_LIMIT=0 forces the join route; vertices 40-47 only
     # receive edges, so the directed graph has dangling vertices
+    import imtag_spark.operators.cc as cc_mod
     import imtag_spark.operators.pagerank as pr_mod
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(53)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 40, size=(120, 2)) if a != b}
@@ -324,8 +370,10 @@ def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
 def test_pagerank_auto_mode_routes_and_matches(spark, monkeypatch):
     # the route is chosen from the measured vertex count: broadcast_join
     # within the V gate, join above it, and both give the same ranks
+    import imtag_spark.operators.cc as cc_mod
     import imtag_spark.operators.pagerank as pr_mod
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     rng = np.random.default_rng(43)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 50, size=(240, 2)) if a != b})
     e = edges_df(spark, pairs)
@@ -349,8 +397,10 @@ def test_pagerank_broadcast_join_matches_join_mode(spark, monkeypatch):
     # different grouping (src-partitioned vs dst-partitioned input), so
     # float rounding can differ in the last ulp — demand agreement far
     # below the 1e-6 oracle tolerance instead
+    import imtag_spark.operators.cc as cc_mod
     import imtag_spark.operators.pagerank as pr_mod
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     rng = np.random.default_rng(41)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 60, size=(300, 2)) if a != b})
     e = edges_df(spark, pairs)
@@ -368,11 +418,14 @@ def test_pagerank_broadcast_join_matches_join_mode(spark, monkeypatch):
         assert abs(j[v] - bj[v]) <= 1e-12 * max(1.0, abs(j[v]))
 
 
-def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark):
+def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark, monkeypatch):
     # the whole point of the mode: the E-row transitions side is cached
     # hash(dst)-partitioned, the ranks side arrives via BroadcastExchange,
     # and the groupBy(dst) reuses the cached partitioning — so the
     # superstep plan must contain NO shuffle Exchange at all
+    import imtag_spark.operators.cc as cc_mod
+
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     e = edges_df(spark, [(a, b) for a in range(30) for b in range(a + 1, 30, 3)])
     metrics = {}
     pagerank(e, tol=0.0, max_iter=2, metrics_out=metrics)
@@ -405,9 +458,11 @@ def test_pagerank_broadcast_join_supports_checkpointer(
 ):
     # rank state stays a DataFrame on both routes, so durable
     # checkpoint/resume must keep working
+    import imtag_spark.operators.cc as cc_mod
     import imtag_spark.operators.pagerank as pr_mod
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     if route == "join":
         monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(43)
@@ -426,17 +481,21 @@ def test_pagerank_broadcast_join_supports_checkpointer(
 
 
 def test_pagerank_star_closed_form(spark):
-    # hub 0 with k spokes, undirected: symmetric closed form
+    # hub 0 with k spokes, undirected: symmetric closed form, on both
+    # routes
     k = 50
     e = edges_df(spark, [(0, i) for i in range(1, k + 1)])
-    got = {r.vertex: r.rank for r in pagerank(
-        e, directed=False, tol=1e-8, max_iter=200).collect()}
     want = numpy_pagerank([(0, i) for i in range(1, k + 1)], [], directed=False)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-6
-    # spokes all equal
-    spoke_vals = [got[i] for i in range(1, k + 1)]
-    assert max(spoke_vals) - min(spoke_vals) < 1e-12
+    for route in ROUTES:
+        with _on_route(route) as taken:
+            got = {r.vertex: r.rank for r in pagerank(
+                e, directed=False, tol=1e-8, max_iter=200).collect()}
+        assert taken == [route]
+        for v in want:
+            assert abs(got[v] - want[v]) < 1e-6, (route, v)
+        # spokes all equal
+        spoke_vals = [got[i] for i in range(1, k + 1)]
+        assert max(spoke_vals) - min(spoke_vals) < 1e-12, route
 
 
 def test_lpa_two_cliques(spark):
@@ -448,6 +507,167 @@ def test_lpa_two_cliques(spark):
     comm1 = {labels[v] for v in range(4)}
     comm2 = {labels[v] for v in range(10, 14)}
     assert len(comm1) == 1 and len(comm2) == 1 and comm1 != comm2
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_lpa_vs_oracle(spark, route):
+    # duplicates, reversed pairs (counted twice) and self-loop-only
+    # vertices, which keep their own id
+    rng = np.random.default_rng(19)
+    pairs = [tuple(p) for p in rng.integers(0, 40, size=(120, 2)).tolist()]
+    pairs += pairs[:15] + [(b, a) for a, b in pairs[15:30]]
+    pairs += [(90, 90), (91, 91), (5, 5)]
+    e = edges_df(spark, pairs)
+    for max_iter in (1, 3, 10):
+        with _on_route(route) as taken:
+            rows = label_propagation(e, max_iter=max_iter).collect()
+        assert taken == [route]
+        want = oracle_lpa(pairs, max_iter)
+        assert len(rows) == len(want)
+        assert {r.vertex: r.label for r in rows} == want, max_iter
+
+
+def _shift(v: int) -> int:
+    """Odd ids to just above 2**62, even ids to just above -2**62."""
+    return v + 2**62 if v % 2 else v - 2**62
+
+
+def _hostile_inputs() -> dict[str, list[tuple[int, int]]]:
+    rng = np.random.default_rng(29)
+    base = [tuple(p) for p in rng.integers(0, 30, size=(90, 2)).tolist()]
+    sinks = [tuple(p) for p in rng.integers(0, 20, size=(50, 2)).tolist()]
+    sinks += [(i, 100 + i) for i in range(10)] + [(200, 201)]
+    return {
+        "empty": [],
+        "self_loops_only": [(5, 5), (7, 7), (7, 7)],
+        "dup_reversed": base + base[:20] + [(b, a) for a, b in base[20:45]],
+        "shifted_ids": [(_shift(a), _shift(b)) for a, b in base],
+        "hub": [(0, i) for i in range(1, 10_001)] + [(1, 2), (2, 3), (1, 3)],
+        "sinks": sinks,
+    }
+
+
+HOSTILE = _hostile_inputs()
+
+
+@pytest.mark.parametrize("case", sorted(HOSTILE))
+@pytest.mark.parametrize("route", ROUTES)
+def test_hostile_inputs_match_oracles(spark, route, case):
+    pairs = HOSTILE[case]
+    e = edges_df(spark, pairs)
+    with _on_route(route) as taken:
+        ranks = pagerank(e, tol=0.0, max_iter=4).collect()
+        labels = label_propagation(e, max_iter=4).collect()
+        per = triangle_count(e).collect()
+        total = total_triangles(e)
+    assert taken == [route] * 4
+    # PageRank drops self-loops, and with them the vertices only they name
+    want = numpy_pagerank([p for p in pairs if p[0] != p[1]], [], tol=0.0, max_iter=4)
+    assert len(ranks) == len(want)
+    for r in ranks:
+        assert abs(r.rank - want[r.vertex]) < 1e-6, (r.vertex, r.rank, want[r.vertex])
+    want_labels = oracle_lpa(pairs, 4)
+    assert len(labels) == len(want_labels)
+    assert {r.vertex: r.label for r in labels} == want_labels
+    want_total, want_per = brute_triangles(pairs)
+    assert total == want_total
+    assert len(per) == len(want_per)
+    assert {r.vertex: r.triangles for r in per} == want_per
+
+
+def test_size_gate_boundary(spark, monkeypatch):
+    # a table of exactly FUNNEL_EDGE_LIMIT rows is solved on the driver,
+    # one row more by the Spark loops. The extra row repeats an edge, so
+    # both routes see the same graph and must agree.
+    import imtag_spark.operators.cc as cc_mod
+    import imtag_spark.operators.lpa as lpa_mod
+    import imtag_spark.operators.triangles as tri_mod
+
+    pairs = [(a, b) for a in range(8) for b in range(a + 1, 8)] + [(8, 9)]
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", len(pairs))
+    lpa_calls = _count_calls(monkeypatch, "_driver_lpa", module=lpa_mod)
+    tri_calls = _count_calls(monkeypatch, "_driver_triangles", module=tri_mod)
+    out = {}
+    for rows, route in ((pairs, "driver"), (pairs + [(0, 1)], "distributed")):
+        e = edges_df(spark, rows)
+        m: dict = {}
+        frames = (
+            pagerank(e, tol=0.0, max_iter=3, metrics_out=m),
+            label_propagation(e, max_iter=3),
+            triangle_count(e),
+        )
+        total = total_triangles(e)
+        assert (m["mode"] == "driver") == (route == "driver"), m["mode"]
+        # the NumPy kernels ran in the driver pass only (LPA once,
+        # triangles once per call) and never again
+        assert (lpa_calls["_driver_lpa"], tri_calls["_driver_triangles"]) == (1, 2)
+        ranks, labels, per = (f.collect() for f in frames)
+        out[route] = (
+            {r.vertex: r.rank for r in ranks},
+            {r.vertex: r.label for r in labels},
+            {r.vertex: r.triangles for r in per},
+            total,
+            # the same schemas, nullability included, on both routes
+            [f.schema for f in frames],
+        )
+    driver, distributed = out["driver"], out["distributed"]
+    assert driver[1:] == distributed[1:]
+    assert driver[3] == 56  # C(8, 3)
+    assert set(driver[0]) == set(distributed[0])
+    for v, r in driver[0].items():
+        assert abs(r - distributed[0][v]) <= 1e-12
+
+
+def test_triangles_chunked_wedges_on_clique(spark, monkeypatch):
+    # the driver route enumerates wedges in chunks of LOCAL_CONTRACT_CHUNK;
+    # a clique's chunks split vertices' out-lists mid-way
+    import imtag_spark.operators.cc as cc_mod
+    import imtag_spark.operators.triangles as tri_mod
+
+    monkeypatch.setattr(cc_mod, "LOCAL_CONTRACT_CHUNK", 300)
+    sizes: list[int] = []
+    real = tri_mod._wedge_chunks
+
+    def spy(u, v, chunk):
+        for wedges in real(u, v, chunk):
+            sizes.append(len(wedges[0]))
+            yield wedges
+
+    monkeypatch.setattr(tri_mod, "_wedge_chunks", spy)
+    k = 40
+    pairs = [(a, b) for a in range(k) for b in range(a + 1, k)]
+    e = edges_df(spark, pairs + [(b, a) for a, b in pairs[:50]])
+    want_total, want_per = brute_triangles(pairs)
+    assert total_triangles(e) == want_total == k * (k - 1) * (k - 2) // 6
+    assert {r.vertex: r.triangles for r in triangle_count(e).collect()} == want_per
+    # every wedge of a clique closes: two calls, C(k, 3) wedges each
+    assert max(sizes) <= 300 and sum(sizes) == 2 * want_total
+
+
+def test_driver_route_job_counts(spark, tmp_path):
+    # a corpus-sized graph (10^5 edges): on the traced corpus job the
+    # Spark loops ran 27 jobs for PageRank with one checkpoint save, 19
+    # for LPA and 10 for triangles
+    from imtag_spark.plans.checkpoint import SuperstepCheckpointer
+
+    e = spark.range(100_000).select(
+        F.pmod(F.xxhash64("id"), F.lit(50_000)).alias("src"),
+        F.pmod(F.xxhash64(F.col("id") + 10**6), F.lit(50_000)).alias("dst"),
+    ).localCheckpoint(eager=True)
+    ck = SuperstepCheckpointer(spark, str(tmp_path / "pr"))
+    m: dict = {}
+    calls = {
+        "pagerank": lambda: pagerank(
+            e, max_iter=3, tol=0.0, checkpointer=ck, checkpoint_every=2, metrics_out=m
+        ),
+        "lpa": lambda: label_propagation(e, max_iter=2),
+        "total_triangles": lambda: total_triangles(e),
+    }
+    for name, fn in calls.items():
+        _, jobs = _jobs_in_group(spark, f"driver-route-{name}", fn)
+        assert len(jobs) < 6, (name, len(jobs))
+    assert m["mode"] == "driver" and m["supersteps"] == 3
+    assert ck.resume()[1] == 2
 
 
 def test_degrees(spark):
@@ -544,11 +764,14 @@ def test_pagerank_auto_gate_prices_cluster():
     assert not _auto_prefers_broadcast_join(BROADCAST_VERTEX_LIMIT + 1, 1)
 
 
-def test_pagerank_auto_local_mode_unchanged(spark):
+def test_pagerank_auto_local_mode_unchanged(spark, monkeypatch):
     # local mode has no separate executors → fan-out 1 → auto keeps the
     # measured-best broadcast_join path (era continuity for the scaling
     # samples: recorded pagerank_mode must stay broadcast_join)
+    import imtag_spark.operators.cc as cc_mod
     from imtag_spark.operators.pagerank import _cluster_executor_count
+
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
 
     assert _cluster_executor_count(spark) == 1
     edges = spark.range(200).select(

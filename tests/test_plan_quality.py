@@ -75,10 +75,13 @@ def test_single_partition_cc_plan_is_shuffle_free(spark):
     assert "Coalesce" in plan
 
 
-def test_triangle_count_plan_has_no_triangle_materialization(spark):
+def test_triangle_count_plan_has_no_triangle_materialization(spark, monkeypatch):
     # the per-vertex tally must aggregate directly off the closing join:
     # no checkpoint/cache of the O(m^1.5) triangle list (VERDICT r1 #5)
+    import imtag_spark.operators.cc as cc
     from imtag_spark.operators.triangles import triangle_count
+
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark route
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "src BIGINT, dst BIGINT"
@@ -124,11 +127,14 @@ def test_cc_frees_superseded_frontier_blocks(spark, monkeypatch):
     assert len(new) <= 1, f"superseded frontier blocks still cached: {new}"
 
 
-def test_lpa_frees_superseded_label_blocks(spark):
+def test_lpa_frees_superseded_label_blocks(spark, monkeypatch):
     # LPA parity with CC/PageRank loop hygiene (VERDICT r4 "what's wrong"
     # #2): superseded label frontiers freed each round; the cached
     # symmetrized edges unpersisted before return.
+    import imtag_spark.operators.cc as cc
     from imtag_spark.operators.lpa import label_propagation
+
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
 
     before = {rid for rid, _ in _live_cached_rdds(spark)}
     # two ring communities bridged by nothing — takes several rounds to
@@ -183,8 +189,11 @@ def test_lpa_edge_side_never_reexchanges(spark):
     assert len(induced) <= 1, plan
 
 
-def test_pagerank_frees_superseded_rank_blocks(spark):
+def test_pagerank_frees_superseded_rank_blocks(spark, monkeypatch):
+    import imtag_spark.operators.cc as cc
     from imtag_spark.operators.pagerank import pagerank
+
+    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
 
     before = {rid for rid, _ in _live_cached_rdds(spark)}
     edges = spark.createDataFrame(
