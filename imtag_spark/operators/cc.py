@@ -3,20 +3,23 @@
 Generalizes the reference's pass-2 union-find label merge
 (src/SegmentImageImpl.cpp:78-116 driving src/disjoint_set.hpp:125-137 in
 the reference). A graph whose init count is at most FUNNEL_EDGE_LIMIT
-rows, or that a caller hints small (``single_partition``), is solved by
-one coalesced NumPy union-find pass, the direct analog of the reference's
-single-address-space merge. Larger graphs run star rounds (Kiveris et al.,
+rows is collected to the driver (``small_edge_arrays``, shared with
+PageRank, LPA and triangles) and solved by one NumPy union-find pass, the
+direct analog of the reference's single-address-space merge; a graph a
+caller hints small (``single_partition``) gets the same pass inside one
+coalesced task. Larger graphs run star rounds (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14): each round is a
 large star over the oriented edge set followed by two partition-local
 union-find contractions inside Arrow UDFs, and a convergence certificate
 decides whether another round is needed. A near-terminal tail of chains
 is resolved driver-side instead of by one more round, and a frontier back
-under FUNNEL_EDGE_LIMIT rows is finished by the one-task pass. The labels
-are one min-aggregate over the final forest's endpoints and the input's
-self-loops, which lists every vertex once (the reference's one
+under FUNNEL_EDGE_LIMIT rows is collected and finished on the driver. The
+labels are one min-aggregate over the final forest's endpoints and the
+input's self-loops, which lists every vertex once (the reference's one
 canonicalize-and-group sweep, src/SegmentImageImpl.cpp:9-24).
 ``range_partition`` adds a partition-local union-find pass over the
-range-partitioned input before either.
+range-partitioned input before either. Every route drops an edge with a
+null endpoint.
 
 Labeling contract (verified against the compiled reference, SURVEY.md §2.4):
 final ``component = min(vertex_id)`` over the component. The reference's
@@ -36,9 +39,11 @@ Scale design:
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,26 +78,88 @@ LOCAL_CONTRACT_CHUNK = 8_000_000
 #: funnel"; the 1024² grid's 0.49M rows take 0.21 s at local[4]).
 SMALL_GRAPH_EDGE_LIMIT = 4_000_000
 
-#: input-row bound for the one-task solve. ``connected_components`` runs a
-#: single coalesced union-find pass and returns its output as the labels
+#: input-row bound for the driver solve. ``connected_components`` collects
+#: the input and returns one NumPy union-find pass over it as the labels
 #: when the init job counts at most this many rows; later rounds funnel
-#: their frontier into one task under the same bound. One task is a SERIAL
-#: tail: at a 4.0M-row frontier it costs ~6 s at any parallelism (transit +
-#: one union-find), barely beating a distributed round at local[32] (7.5 s)
-#: and flattening the core-count response; at ≤1M rows (~16 MB) it runs
-#: well under a distributed round's ~2-3 s scheduling floor.
+#: their frontier onto the driver under the same bound. The solve is a
+#: SERIAL tail: at a 4.0M-row frontier one pass cost ~6 s at any
+#: parallelism (transit + one union-find), barely beating a distributed
+#: round at local[32] (7.5 s) and flattening the core-count response; at
+#: ≤1M rows (~16 MB) it runs well under a distributed round's ~2-3 s
+#: scheduling floor.
 FUNNEL_EDGE_LIMIT = 1_000_000
+
+
+#: the last small table collected from a DataFrame whose rows cannot change
+#: when re-read: ``(weak reference to it, rows counted, src, dst)``
+_last_small: tuple[weakref.ref, int, np.ndarray, np.ndarray] | None = None
+
+
+def _holds_fixed_rows(df: DataFrame) -> bool:
+    """True when ``df`` is a bare materialized checkpoint or local relation
+    (no projection or filter above it): re-reading it gives the same rows.
+    A file scan or a plain RDD may give other rows on the next read."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LocalRelation":
+            return True
+        return plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+    except Exception:
+        return False
+
+
+def _collect_edges(edges: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """``(src, dst)`` as NumPy arrays in the columns' own integer type, by
+    one Arrow collect. An edge with a null endpoint names no vertex pair
+    and is dropped, as every Spark route drops it."""
+    t = edges.select("src", "dst").toArrow()
+    if t.column("src").null_count or t.column("dst").null_count:
+        t = t.drop_null()
+    return t.column("src").to_numpy(), t.column("dst").to_numpy()
+
+
+def _count_small(edges: DataFrame, remember: bool) -> tuple[int, tuple | None]:
+    """``(rows, (src, dst) or None)``: the arrays when ``edges`` has at most
+    FUNNEL_EDGE_LIMIT rows. The table remembered from an earlier call on
+    the same object costs no job; otherwise one count job, and under the
+    gate one Arrow collect, which ``remember`` keeps when the table holds
+    fixed rows, replacing any earlier one."""
+    global _last_small
+    hit = _last_small
+    if hit is not None and hit[0]() is edges:
+        n = hit[1]
+        return n, (hit[2], hit[3]) if n <= FUNNEL_EDGE_LIMIT else None
+    n = edges.count()
+    if n > FUNNEL_EDGE_LIMIT:
+        return n, None
+    src, dst = _collect_edges(edges)
+    if remember and _holds_fixed_rows(edges):
+        # callers share the arrays: none may write to them
+        src.flags.writeable = dst.flags.writeable = False
+
+        def _forget(ref):
+            global _last_small
+            if _last_small is not None and _last_small[0] is ref:
+                _last_small = None
+
+        _last_small = (weakref.ref(edges, _forget), n, src, dst)
+    return n, (src, dst)
 
 
 def small_edge_arrays(edges: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
     """``(src, dst)`` on the driver as NumPy arrays when ``edges`` has at
-    most FUNNEL_EDGE_LIMIT rows, else ``None``: one count job, then one
-    Arrow collect of at most ~16 MB. The gate PageRank, LPA and triangles
-    share with the one-task solve above, read at call time."""
-    if edges.count() > FUNNEL_EDGE_LIMIT:
-        return None
-    t = edges.select("src", "dst").toArrow()
-    return t.column("src").to_numpy(), t.column("dst").to_numpy()
+    most FUNNEL_EDGE_LIMIT rows (read at call time), else ``None``; edges
+    with a null endpoint are dropped. The gate CC, PageRank, LPA and
+    triangles share.
+
+    The first call on a table costs one count job and, under the gate, one
+    Arrow collect of at most ~16 MB. When the table is a bare materialized
+    checkpoint or local relation, its arrays (read-only) are kept until the
+    next such collect or until the DataFrame object is garbage-collected,
+    whichever comes first, and later calls on the same object run no job:
+    the four operators on one checkpointed 10^5-edge table run 5 Spark
+    jobs instead of 14 (BENCH.md, "One collect")."""
+    return _count_small(edges, remember=True)[1]
 
 
 #: rows per emitted Arrow batch from the contraction (bounds JVM-side
@@ -113,10 +180,13 @@ def _local_contract_fn(chunk: int | None):
     module global) so the chunk bound serializes by value to executors.
 
     Runs under ``mapInArrow``: the kernel is NumPy end-to-end, Arrow
-    integer arrays view as NumPy without a copy (no nulls), and results go
-    back as sliced RecordBatches, with no pandas conversion either way.
+    integer arrays view as NumPy without a copy, and results go back as
+    sliced RecordBatches, with no pandas conversion either way. A batch
+    with a null endpoint first drops those edges (NumPy would turn the
+    column into float64 and round ids above 2**53); the null-count check
+    costs nothing on a batch without nulls.
     """
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
     def _batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         srcs: list[np.ndarray] = []
@@ -134,6 +204,8 @@ def _local_contract_fn(chunk: int | None):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
+            if rb.column(0).null_count or rb.column(1).null_count:
+                rb = rb.filter(pc.and_(pc.is_valid(rb.column(0)), pc.is_valid(rb.column(1))))
             # integer Arrow arrays with no nulls, in the columns' own type
             srcs.append(rb.column(0).to_numpy(zero_copy_only=False))
             dsts.append(rb.column(1).to_numpy(zero_copy_only=False))
@@ -209,9 +281,10 @@ def local_contract(edges: DataFrame) -> DataFrame:
     callers that want pointer edges filter ``src != dst``. The edge columns
     cross the Arrow transit in their own type and are never cast, so no id
     can wrap (the reference picks a label width and guards it,
-    src/imtag.cpp:120-123; BIGINT ids need no guard).
+    src/imtag.cpp:120-123; BIGINT ids need no guard). Other columns of
+    ``edges`` are dropped first: the kernel reads its first two.
     """
-    return edges.mapInArrow(
+    return edges.select("src", "dst").mapInArrow(
         _local_contract_fn(LOCAL_CONTRACT_CHUNK), schema=EDGE_SCHEMA
     )
 
@@ -219,8 +292,13 @@ def local_contract(edges: DataFrame) -> DataFrame:
 def _one_task_solve(edges: DataFrame) -> DataFrame:
     """One coalesced union-find pass over the whole input, never chunked:
     ``(vertex, component min)`` for every vertex once, roots as ``(r, r)``.
-    Exact by construction, so its output is a terminal star forest."""
-    return edges.coalesce(1).mapInArrow(_local_contract_fn(None), schema=EDGE_SCHEMA)
+    Exact by construction, so its output is a terminal star forest. The
+    ``single_partition`` route's solve."""
+    return (
+        edges.select("src", "dst")
+        .coalesce(1)
+        .mapInArrow(_local_contract_fn(None), schema=EDGE_SCHEMA)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -450,16 +528,22 @@ def connected_components(
     ``edges`` appears exactly once in the result.
 
     Route: an init job counts the input. An input of at most
-    FUNNEL_EDGE_LIMIT rows is solved by one ``coalesce(1)`` union-find pass
-    over the whole input, self-loops included, whose output (every vertex
-    once, with its component minimum) is returned as the labels,
-    materialized by one eager checkpoint job with no shuffle and no
+    FUNNEL_EDGE_LIMIT rows is collected by the same call
+    (``small_edge_arrays``: no job at all when PageRank, LPA or triangles
+    already collected the same checkpointed table) and solved by one NumPy
+    union-find pass on the driver, self-loops included. Its output (every
+    vertex once, with its component minimum) comes back through
+    ``createDataFrame`` as the labels: no Python worker, no shuffle and no
     certificate (the reference's union-find pass plus ``find`` sweep,
-    src/SegmentImageImpl.cpp:78-116 in the reference). Larger inputs run
-    star rounds until a certificate finds a terminal star forest; a round
-    whose counted frontier is under the same bound is solved by the same
-    one-task pass. The star route's labels are one ``groupBy(vertex).min``
-    over the forest's endpoints and the input's self-loops.
+    src/SegmentImageImpl.cpp:78-116 in the reference). On the corpus job
+    the four graph operators then share one count and one collect, and a
+    cold job's CPU fell 10.7 → 7.7 s (BENCH.md, "One collect"). Larger
+    inputs run star rounds until a certificate finds a terminal star
+    forest; a round whose counted frontier is under the same bound is
+    collected and solved on the driver the same way. The star route's
+    labels are one ``groupBy(vertex).min`` over the forest's endpoints and
+    the input's self-loops. Labels are ``(vertex BIGINT, component
+    BIGINT)``, both nullable, on every route.
 
     ``range_partition`` — range-partition the input by ``src`` and run the
     partition-local union-find over those partitions before the solve.
@@ -471,10 +555,12 @@ def connected_components(
     edge set (25–65 s at 32 M edges) while shrinking round 1 only ~35 %.
 
     ``single_partition`` — caller-held size bound (e.g. grid pipelines:
-    edges ≤ cells, known without a job): skip the init job and go straight
-    to the one-task pass, whatever the input's size. The pass never chunks,
-    so the labels are exact at any size, but one task is then the whole
-    solve — never pass the hint unbounded. Overrides ``range_partition``.
+    edges ≤ cells, known without a job): skip the init job and solve in one
+    ``coalesce(1)`` ``mapInArrow`` task, whatever the input's size, whose
+    output is checkpointed in one partition (``densely_relabel`` then ranks
+    it in-task). The pass never chunks, so the labels are exact at any
+    size, but one task is then the whole solve — never pass the hint
+    unbounded. Overrides ``range_partition``.
 
     ``checkpointer`` — optional ``plans.checkpoint.SuperstepCheckpointer``
     for durable per-superstep state + resume; defaults to in-memory
@@ -486,7 +572,7 @@ def connected_components(
     """
     spark = edges.sparkSession
 
-    # Self-loops stay in: the one-task solve labels a vertex seen only in
+    # Self-loops stay in: the small-input solves label a vertex seen only in
     # a self-loop from its (v, v) row, and every star round drops them
     # itself. No input distinct(): duplicates are harmless to every
     # downstream op (min-aggregates, the union-find), and deduping would
@@ -496,7 +582,7 @@ def connected_components(
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if range_partition and not single_partition:
         # its root rows (r, r) stay, so every input vertex is still listed
-        # for the one-task solve
+        # for the small-input solves
         work = local_contract(work.repartitionByRange(n_part, "src"))
 
     start_iter = 0
@@ -514,10 +600,11 @@ def connected_components(
     # every `checkpoint_every` rounds when resumability is requested.
     _t = _time.time()
     n_work = 0
+    small = None  # the (src, dst) arrays when the counted input is small
     owns_frontier = False  # True once `work` is a checkpoint THIS solve made
     if resumed is not None or not single_partition:
         # Lazy checkpoint + count = ONE materialization job that also
-        # yields the row count gating the one-task solve and the round
+        # yields the row count gating the driver solve and the round
         # structure below.
         #
         # Skip the copy when the input is ALREADY a materialized scan
@@ -530,7 +617,12 @@ def connected_components(
         if not is_materialized_scan(work):
             work = frontier_checkpoint(work, eager=False)
             owns_frontier = True
-        n_work = work.count()
+        if resumed is None:
+            # under the gate the same call collects the edges, or finds
+            # them kept from an earlier call on the caller's table
+            n_work, small = _count_small(work, remember=not owns_frontier)
+        else:
+            n_work = work.count()
         if verbose:
             print(f"[cc] init n={n_work} {_time.time() - _t:.1f}s", flush=True)
 
@@ -559,7 +651,19 @@ def connected_components(
             metrics_out.setdefault("superstep_times", []).append(_time.time() - _t)
             metrics_out["supersteps"] = it + 1
 
-    if resumed is None and (single_partition or n_work <= FUNNEL_EDGE_LIMIT):
+    if small is not None:
+        verts, roots = _contract_arrays([small[0]], [small[1]])
+        labels = spark.createDataFrame(pa.table({"vertex": verts, "component": roots}))
+        if checkpointer is not None and checkpoint_every == 1:
+            checkpointer.save(
+                labels.select(F.col("vertex").alias("src"), F.col("component").alias("dst")), 1
+            )
+        if owns_frontier:
+            free_local_checkpoint(work)
+        _log_round(0, n_work, 0, 0)
+        return labels
+
+    if resumed is None and single_partition:
         _t = _time.time()
         out = _one_task_solve(work)
         if checkpointer is not None and checkpoint_every == 1:
@@ -567,10 +671,7 @@ def connected_components(
         labels = out.select(
             F.col("src").alias("vertex"), F.col("dst").alias("component")
         ).localCheckpoint(eager=True)
-        if owns_frontier:
-            free_local_checkpoint(work)
-        # rows in, as counted by the init job (0 when hinted): counting the
-        # labels would cost a job
+        # a hinted solve runs no count: counting the labels would cost a job
         _log_round(0, n_work, 0, 0)
         return labels
 
@@ -580,26 +681,25 @@ def connected_components(
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
         # Frontier funnel: a frontier the previous certificate counted
         # under FUNNEL_EDGE_LIMIT would make a distributed round pure
-        # scheduling floor, so the one-task pass solves the remainder,
-        # terminal immediately.
+        # scheduling floor, so it is collected and solved on the driver:
+        # a terminal star forest by construction, which needs neither a
+        # certificate nor a checkpoint (a local relation is already flat).
         funneled = n_work <= FUNNEL_EDGE_LIMIT
         if funneled:
-            stepped = _one_task_solve(work).where(F.col("src") != F.col("dst"))
+            src, dst = _collect_edges(work)
+            verts, roots = _contract_arrays([src], [dst])
+            moved = verts != roots
+            stepped = spark.createDataFrame(pa.table({"src": verts[moved], "dst": roots[moved]}))
+            n_edges, chained = int(moved.sum()), 0
         else:
             stepped = _star_round(work, n_part)
         if checkpointer is not None and (it + 1) % checkpoint_every == 0:
             stepped = checkpointer.save(stepped, it + 1)
-        else:
+        elif not funneled:
             # lazy: the convergence-certificate collect below materializes
             # the checkpoint, so each round costs exactly one Spark job
             stepped = frontier_checkpoint(stepped, eager=False)
-        if funneled:
-            # the one-task pass is a terminal star forest by construction —
-            # the certificate would only re-verify that, over a single
-            # partition. A plain count materializes the checkpoint for a
-            # fraction of the cost.
-            n_edges, chained = stepped.count(), 0
-        else:
+        if not funneled:
             n_edges, chained = _chained_count(stepped)
             if 0 < chained <= PATCH_WITNESS_LIMIT:
                 # Terminal-tail patch: the few remaining witnesses are

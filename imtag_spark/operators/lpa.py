@@ -8,9 +8,10 @@ mirroring the reference's ``lt_cmp`` policy (disjoint_set.hpp:22-27).
 
 Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
 rows runs every round in NumPy on the driver: the 10^5-edge corpus job's
-2 rounds take 3 Spark jobs and 0.4 s there, 19 jobs and 3.6 s as a
-DataFrame loop (BENCH.md, "Driver route"). Larger tables run the
-DataFrame loop: the frequency count is a map-side-combinable
+2 rounds take 3 Spark jobs and 0.4 s there (none when CC already
+collected the same checkpointed table, ``cc.small_edge_arrays``), 19 jobs
+and 3.6 s as a DataFrame loop (BENCH.md, "Driver route"). Larger tables
+run the DataFrame loop: the frequency count is a map-side-combinable
 ``groupBy(vertex,label).count()``, and the argmax is a single
 ``max(struct(cnt, -label))`` aggregate rather than a per-vertex window
 (windows funnel a hot vertex's whole neighborhood through one task).
@@ -78,8 +79,10 @@ def label_propagation(
     vertices keep their own id as label. Stops early when no label changes.
 
     A table of at most ``cc.FUNNEL_EDGE_LIMIT`` rows is collected to the
-    driver (one count, one Arrow collect) and solved by ``_driver_lpa``;
-    the labels come back as a DataFrame of the same schema.
+    driver (``cc.small_edge_arrays``: one count and one Arrow collect, or
+    no job when the same checkpointed table was collected already) and
+    solved by ``_driver_lpa``; the labels come back as a DataFrame of the
+    same schema. Edges with a null endpoint are dropped on both routes.
 
     Loop hygiene on the DataFrame route (same contract as cc.py /
     pagerank.py): the symmetrized E-row side is persisted hash-partitioned
@@ -103,10 +106,12 @@ def label_propagation(
     sym = sym.repartition(n_part, "src").persist()
 
     # every endpoint once, labelled with itself; each round's labels keep
-    # that vertex set, so they are also the universe the next round joins
+    # that vertex set, so they are also the universe the next round joins.
+    # An edge with a null endpoint names no vertex, as on the driver route.
+    named = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     labels = frontier_checkpoint(
-        edges.select(F.col("src").alias("vertex"))
-        .union(edges.select(F.col("dst").alias("vertex")))
+        named.select(F.col("src").alias("vertex"))
+        .union(named.select(F.col("dst").alias("vertex")))
         .distinct()
         .select("vertex", F.col("vertex").alias("label"))
     )

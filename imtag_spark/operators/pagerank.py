@@ -14,7 +14,9 @@ Routes, chosen by size (see ``pagerank``):
   the driver and iterated in NumPy (``np.bincount`` per superstep). Below
   that bound a Spark superstep is all scheduling: the 10^5-edge corpus
   job's 3 supersteps plus setup take 3 Spark jobs and 0.6 s there, 25
-  jobs and 7.3 s as a DataFrame loop (BENCH.md, "Driver route");
+  jobs and 7.3 s as a DataFrame loop (BENCH.md, "Driver route"); on a
+  checkpointed table CC already collected, only the checkpoint's write
+  and read-back run as jobs (``cc.small_edge_arrays``);
 - larger tables run the DataFrame loop. Setup builds ONE per-vertex table,
   ``deg(vertex, out_deg)`` with sinks at 0, from one aggregate over the
   edge endpoints; a second aggregate over it gives ``n`` and the dangling
@@ -178,10 +180,11 @@ def pagerank(
     count:
     - ``driver`` when the table has at most ``cc.FUNNEL_EDGE_LIMIT`` rows
       (``cc.small_edge_arrays``: one count job and one Arrow collect of at
-      most ~16 MB). The whole power iteration runs in NumPy, one
+      most ~16 MB, or no job when the same checkpointed table was
+      collected already). The whole power iteration runs in NumPy, one
       ``np.bincount`` per superstep, and the ranks come back as a
-      DataFrame. On the 10^5-edge corpus job it runs 3 Spark jobs where
-      the loops below run 25 (BENCH.md, "Driver route").
+      DataFrame. On a fresh 10^5-edge corpus table it runs 3 Spark jobs
+      where the loops below run 25 (BENCH.md, "Driver route").
     - ``broadcast_join`` when V ≤ BROADCAST_VERTEX_LIMIT and the executor
       count is ≤ AUTO_BROADCAST_EXECUTOR_LIMIT. Transitions are cached
       hash(dst)-partitioned; each superstep broadcasts the ranks, packed

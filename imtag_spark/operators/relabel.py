@@ -9,8 +9,8 @@ contract, SURVEY.md §2.4).
 running a job:
 
 - **In-task rank.** When the labels are one partition of a materialized
-  scan (``plans.checkpoint.is_materialized_scan``, e.g. CC's one-task
-  solve) with an integral component column, one ``mapInArrow`` NumPy pass
+  scan (``plans.checkpoint.is_materialized_scan``, e.g. CC's hinted
+  one-task solve) with an integral component column, one ``mapInArrow`` NumPy pass
   sets ``np.unique(component, return_inverse=True)`` + ``base`` in the
   task that reads them — the analog of the reference's single-address-space
   sweep. No shuffle and no job of its own: untraced ``label_runs`` plus

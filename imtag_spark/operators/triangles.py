@@ -16,8 +16,9 @@ structurally instead of by bucketing.
 Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
 rows is counted in NumPy on the driver, wedges enumerated in chunks of at
 most ``cc.LOCAL_CONTRACT_CHUNK``: the 10^5-edge corpus job's count takes
-3 Spark jobs and 0.2 s there, 10 jobs and 1.5 s as joins (BENCH.md,
-"Driver route"). Larger tables enumerate
+3 Spark jobs and 0.2 s there (none when CC already collected the same
+checkpointed table, ``cc.small_edge_arrays``), 10 jobs and 1.5 s as joins
+(BENCH.md, "Driver route"). Larger tables enumerate
 wedges with one self-join of the oriented edges and close them with a join
 back on the edge set.
 """
@@ -139,7 +140,9 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     Self-loops ignored, duplicate/bidirectional edges deduped. Vertices in
     no triangle report 0; the vertex set is the degree table's. A table of
     at most ``cc.FUNNEL_EDGE_LIMIT`` rows is counted on the driver
-    (``_driver_triangles``).
+    (``_driver_triangles``) from ``cc.small_edge_arrays``: one count and
+    one Arrow collect, or no job when the same checkpointed table was
+    collected already.
     """
     small = cc.small_edge_arrays(edges)
     if small is not None:

@@ -24,19 +24,20 @@ def label_runs(
     run also enters CC as a self-loop, so isolated runs come back as their
     own components without a runs ⋈ labels join.
 
-    When CC takes its one-task solve (hinted, or measured small), its
-    labels are one checkpointed partition, so ``densely_relabel`` ranks
-    them inside the task that reads them: the dense labels come from the
-    same one-task pass, with no shuffle and no job of their own (3 Spark
-    jobs in all on a 1024² grid, with the caller's checkpoint). Labels
-    from CC's distributed rounds take the distributed rank.
+    When CC takes its hinted one-task solve, its labels are one
+    checkpointed partition, so ``densely_relabel`` ranks them inside the
+    task that reads them: the dense labels come from the same one-task
+    pass, with no shuffle and no job of their own (3 Spark jobs in all on
+    a 1024² grid, with the caller's checkpoint). Labels from CC's driver
+    solve (several partitions of a local relation) or its distributed
+    rounds take the distributed rank.
 
     ``cells_hint`` — static upper bound on the grid's cell count
     (n_rows * n_cols), when the caller knows it. It only picks CC's route:
     runs plus adjacencies stay below ~1.5 × cells, so a hint up to
     ``SMALL_GRAPH_EDGE_LIMIT`` sends CC to its one-task solve without the
-    init count. Without it, CC counts the input first and takes the same
-    one-task solve when the count is small. Larger grids take the
+    init count. Without it, CC counts the input first and solves it on
+    the driver when the count is small. Larger grids take the
     range-partitioned distributed path.
 
     Returns (component, vertex, dense_label) with dense labels ``base..``.

@@ -21,12 +21,20 @@ TWO_TRIANGLES_BRIDGE = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)]
 
 def edges_df(spark, pairs):
     return spark.createDataFrame(
-        [(int(a), int(b)) for a, b in pairs] or [], "src BIGINT, dst BIGINT"
+        [tuple(None if v is None else int(v) for v in p) for p in pairs] or [],
+        "src BIGINT, dst BIGINT",
     )
 
 
+def _named(pairs):
+    """The edges every route keeps: those with no null endpoint."""
+    return [p for p in pairs if None not in p]
+
+
 def _oracle_labels(pairs) -> dict[int, int]:
-    """Exact min-vertex labels from the union-find oracle."""
+    """Exact min-vertex labels from the union-find oracle; edges with a
+    null endpoint are dropped, as every route drops them."""
+    pairs = _named(pairs)
     verts = sorted({v for p in pairs for v in p})
     index = {v: i for i, v in enumerate(verts)}
     roots = cc_min_label(len(verts), [(index[a], index[b]) for a, b in pairs])
@@ -181,9 +189,9 @@ def _hostile_graph(seed: int) -> list[tuple[int, int]]:
 
 @pytest.mark.parametrize("seed", [3, 17])
 def test_cc_one_task_route_matches_oracle(spark, monkeypatch, seed):
-    # both one-task routes (caller hint, measured init count) against the
-    # union-find oracle; rows are counted too, since a dict comparison
-    # would hide a vertex listed twice
+    # both small-input routes (the caller hint's one task, the measured
+    # init count's driver solve) against the union-find oracle; rows are
+    # counted too, since a dict comparison would hide a vertex listed twice
     calls = _count_calls(monkeypatch, "_star_round")
     pairs = _hostile_graph(seed)
     expected = _oracle_labels(pairs)
@@ -215,6 +223,144 @@ def test_cc_star_round_matches_oracle(spark, monkeypatch, seed, patch):
     assert {r.vertex: r.component for r in rows} == expected
     assert calls["_star_round"] >= 1
     assert (calls["_chain_patch"] > 0) == patch
+
+
+@pytest.mark.parametrize("case", ["null_endpoint", "shifted_ids"])
+def test_cc_routes_agree_on_labels_and_schema(spark, monkeypatch, case):
+    # the counted driver solve, the hinted one task and the star rounds:
+    # exact labels, one row per vertex, and one label schema
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = _count_calls(monkeypatch, "_one_task_solve", "_star_round")
+    pairs = HOSTILE[case]
+    expected = _oracle_labels(pairs)
+    e = edges_df(spark, pairs)
+    schemas = {}
+    for route, hint, gate, ran in (
+        ("driver", False, cc_mod.FUNNEL_EDGE_LIMIT, (0, 0)),
+        ("hinted", True, cc_mod.FUNNEL_EDGE_LIMIT, (1, 0)),
+        ("star", False, 0, (0, 1)),
+    ):
+        before = dict(calls)
+        monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", gate)
+        m: dict = {}
+        labels = connected_components(e, single_partition=hint, max_iter=20, metrics_out=m)
+        rows = labels.collect()
+        got = (calls["_one_task_solve"] - before["_one_task_solve"],
+               min(calls["_star_round"] - before["_star_round"], 1))
+        assert got == ran, route
+        assert route == "star" or m["supersteps"] == 1
+        assert len(rows) == len(expected), route
+        assert {r.vertex: r.component for r in rows} == expected, route
+        schemas[route] = labels.schema
+    assert schemas["driver"] == schemas["hinted"] == schemas["star"], schemas
+
+
+def test_cc_routes_read_edge_columns_by_name(spark):
+    # an edge table with another column first: the hinted one task and
+    # the range-partitioned pass read src and dst by name, as the counted
+    # driver solve does
+    pairs = HOSTILE["shifted_ids"]
+    expected = _oracle_labels(pairs)
+    e = edges_df(spark, pairs).select(F.lit(7).cast("bigint").alias("w"), "src", "dst")
+    for kw in ({}, {"single_partition": True}, {"range_partition": True}):
+        rows = connected_components(e, **kw).collect()
+        assert len(rows) == len(expected), kw
+        assert {r.vertex: r.component for r in rows} == expected, kw
+
+
+def test_cc_driver_route_saves_step_one(spark, tmp_path):
+    # checkpoint_every=1 stores the driver solve as superstep 1, in the
+    # frontier schema, and a resumed call finishes from it
+    from imtag_spark.plans.checkpoint import SuperstepCheckpointer
+
+    pairs = _hostile_graph(3)
+    expected = _oracle_labels(pairs)
+    e = edges_df(spark, pairs)
+    ck = SuperstepCheckpointer(spark, str(tmp_path / "cc"))
+    m: dict = {}
+    labels = connected_components(e, checkpointer=ck, checkpoint_every=1, metrics_out=m)
+    assert m["supersteps"] == 1
+    assert {r.vertex: r.component for r in labels.collect()} == expected
+    frontier, step = ck.resume()
+    assert step == 1 and frontier.columns == ["src", "dst"]
+    assert {r.src: r.dst for r in frontier.collect()} == expected
+    resumed = connected_components(e, checkpointer=ck, checkpoint_every=1)
+    rows = resumed.collect()
+    assert len(rows) == len(expected)
+    assert {r.vertex: r.component for r in rows} == expected
+
+
+def _shuffled_path(spark, n, copies=1):
+    """The path p(0)-p(1)-...-p(n-1) over a pseudo-random permutation p of
+    [0, n) (the rank of xxhash64), so neighbours land in unrelated
+    partitions; each edge is given ``copies`` times, alternately reversed."""
+    from pyspark.sql import Window
+
+    perm = spark.range(n).select(
+        "id", (F.row_number().over(Window.orderBy(F.xxhash64("id"))) - 1).alias("p")
+    )
+    a = perm.select(F.col("id").alias("i"), F.col("p").alias("src"))
+    b = perm.select((F.col("id") - 1).alias("i"), F.col("p").alias("dst"))
+    path = a.join(b, "i").select("src", "dst")
+    out = path
+    for k in range(1, copies):
+        out = out.union(path.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                        if k % 2 else path)
+    return out
+
+
+def test_cc_frontier_funnel_after_star_round(spark, monkeypatch):
+    # 4 × 999 input rows exceed a 2,000-row gate, so round 1 is a star
+    # round; its frontier is collected and solved on the driver in round 2
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = _count_calls(monkeypatch, "_one_task_solve", "_star_round")
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 2_000)
+    monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)  # no driver patch
+    edges = _shuffled_path(spark, 1_000, copies=4)
+    pairs = [tuple(r) for r in edges.collect()]
+    m: dict = {}
+    rows = connected_components(edges, metrics_out=m).collect()
+    assert (calls["_star_round"], calls["_one_task_solve"], m["supersteps"]) == (1, 0, 2)
+    expected = _oracle_labels(pairs)
+    assert len(rows) == len(expected)
+    assert {r.vertex: r.component for r in rows} == expected
+
+
+@pytest.mark.parametrize("patch", [True, False])
+def test_cc_star_round_hub(spark, monkeypatch, patch):
+    # a 10^4-spoke hub plus a triangle through the distributed star round,
+    # with and without the driver-side chain patch
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = _count_calls(monkeypatch, "_star_round")
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    if not patch:
+        monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
+    pairs = HOSTILE["hub"]
+    rows = connected_components(edges_df(spark, pairs), max_iter=20).collect()
+    expected = _oracle_labels(pairs)
+    assert calls["_star_round"] >= 1
+    assert len(rows) == len(expected) == 10_001
+    assert {r.vertex: r.component for r in rows} == expected
+
+
+def test_cc_star_rounds_path_graph_without_patch(spark, monkeypatch):
+    # the 5,000-vertex shuffled path with the chain patch off: the star
+    # rounds alone must reach a terminal forest
+    import imtag_spark.operators.cc as cc_mod
+
+    calls = _count_calls(monkeypatch, "_star_round", "_chain_patch")
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
+    edges = _shuffled_path(spark, 5_000)
+    pairs = [tuple(r) for r in edges.collect()]
+    rows = connected_components(edges).collect()
+    expected = _oracle_labels(pairs)
+    assert calls["_star_round"] >= 2 and calls["_chain_patch"] == 0
+    assert len(rows) == len(expected) == 5_000
+    assert {r.vertex: r.component for r in rows} == expected
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -544,6 +690,8 @@ def _hostile_inputs() -> dict[str, list[tuple[int, int]]]:
         "shifted_ids": [(_shift(a), _shift(b)) for a, b in base],
         "hub": [(0, i) for i in range(1, 10_001)] + [(1, 2), (2, 3), (1, 3)],
         "sinks": sinks,
+        # a null endpoint beside an id that float64 cannot hold exactly
+        "null_endpoint": [(1, 2), (2, None), (3, 4), (2**62 + 1, 1)],
     }
 
 
@@ -553,14 +701,20 @@ HOSTILE = _hostile_inputs()
 @pytest.mark.parametrize("case", sorted(HOSTILE))
 @pytest.mark.parametrize("route", ROUTES)
 def test_hostile_inputs_match_oracles(spark, route, case):
-    pairs = HOSTILE[case]
-    e = edges_df(spark, pairs)
+    e = edges_df(spark, HOSTILE[case])
     with _on_route(route) as taken:
-        ranks = pagerank(e, tol=0.0, max_iter=4).collect()
-        labels = label_propagation(e, max_iter=4).collect()
-        per = triangle_count(e).collect()
+        frames = (
+            pagerank(e, tol=0.0, max_iter=4),
+            label_propagation(e, max_iter=4),
+            triangle_count(e),
+        )
+        ranks, labels, per = (f.collect() for f in frames)
         total = total_triangles(e)
     assert taken == [route] * 4
+    # ids stay exact BIGINT, also beside a null endpoint
+    assert [dict(f.dtypes)["vertex"] for f in frames] == ["bigint"] * 3
+    # every route drops an edge with a null endpoint
+    pairs = _named(HOSTILE[case])
     # PageRank drops self-loops, and with them the vertices only they name
     want = numpy_pagerank([p for p in pairs if p[0] != p[1]], [], tol=0.0, max_iter=4)
     assert len(ranks) == len(want)
@@ -644,30 +798,86 @@ def test_triangles_chunked_wedges_on_clique(spark, monkeypatch):
     assert max(sizes) <= 300 and sum(sizes) == 2 * want_total
 
 
-def test_driver_route_job_counts(spark, tmp_path):
-    # a corpus-sized graph (10^5 edges): on the traced corpus job the
-    # Spark loops ran 27 jobs for PageRank with one checkpoint save, 19
-    # for LPA and 10 for triangles
-    from imtag_spark.plans.checkpoint import SuperstepCheckpointer
-
-    e = spark.range(100_000).select(
+def _corpus_sized_table(spark):
+    """A checkpointed corpus-sized graph: 10^5 edges over 5 × 10^4 ids."""
+    return spark.range(100_000).select(
         F.pmod(F.xxhash64("id"), F.lit(50_000)).alias("src"),
         F.pmod(F.xxhash64(F.col("id") + 10**6), F.lit(50_000)).alias("dst"),
     ).localCheckpoint(eager=True)
+
+
+def test_driver_route_job_counts(spark, tmp_path):
+    # a corpus-sized graph (10^5 edges): on the traced corpus job the
+    # Spark loops ran 27 jobs for PageRank with one checkpoint save, 19
+    # for LPA and 10 for triangles. The four operators share one count
+    # and one collect: 14 jobs when each counted and collected again
+    from imtag_spark.plans.checkpoint import SuperstepCheckpointer
+
+    e = _corpus_sized_table(spark)
     ck = SuperstepCheckpointer(spark, str(tmp_path / "pr"))
     m: dict = {}
     calls = {
+        "cc": lambda: connected_components(e),
         "pagerank": lambda: pagerank(
             e, max_iter=3, tol=0.0, checkpointer=ck, checkpoint_every=2, metrics_out=m
         ),
         "lpa": lambda: label_propagation(e, max_iter=2),
         "total_triangles": lambda: total_triangles(e),
     }
+    jobs = {}
     for name, fn in calls.items():
-        _, jobs = _jobs_in_group(spark, f"driver-route-{name}", fn)
-        assert len(jobs) < 6, (name, len(jobs))
+        _, jobs[name] = _jobs_in_group(spark, f"driver-route-{name}", fn)
+    assert sum(len(j) for j in jobs.values()) <= 5, {k: len(j) for k, j in jobs.items()}
+    # only the checkpoint write and its read-back run after CC's collect
+    assert len(jobs["lpa"]) == len(jobs["total_triangles"]) == 0
     assert m["mode"] == "driver" and m["supersteps"] == 3
     assert ck.resume()[1] == 2
+
+
+def test_small_edge_arrays_keeps_one_fixed_table(spark, monkeypatch):
+    import gc
+
+    import imtag_spark.operators.cc as cc_mod
+
+    def held():
+        return None if cc_mod._last_small is None else cc_mod._last_small[0]()
+
+    # a lazy plan, or a projection over a checkpoint, may give other rows
+    # when read again: collected, never kept
+    lazy = spark.range(50).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    assert len(cc_mod.small_edge_arrays(lazy)[0]) == 50
+    projected = lazy.localCheckpoint(eager=True).select("src", "dst")
+    assert len(cc_mod.small_edge_arrays(projected)[0]) == 50
+    assert held() is not lazy and held() is not projected
+
+    first = _corpus_sized_table(spark)
+    src, dst = cc_mod.small_edge_arrays(first)
+    assert held() is first and not src.flags.writeable
+    again, jobs = _jobs_in_group(spark, "small-cache-hit", lambda: cc_mod.small_edge_arrays(first))
+    assert jobs == [] and again[0] is src and again[1] is dst
+
+    # a gate lowered below the kept length sends the same object to the
+    # Spark loops, with no new count
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", len(src) - 1)
+    miss, jobs = _jobs_in_group(spark, "small-cache-gate", lambda: cc_mod.small_edge_arrays(first))
+    assert miss is None and jobs == []
+    m: dict = {}
+    pagerank(first, max_iter=1, metrics_out=m)
+    assert m["mode"] != "driver"
+    monkeypatch.undo()
+
+    # a second table replaces the first: one entry at most
+    second = first.where(F.col("src") < 100).localCheckpoint(eager=True)
+    cc_mod.small_edge_arrays(second)
+    assert held() is second
+    _, jobs = _jobs_in_group(spark, "small-cache-replaced", lambda: cc_mod.small_edge_arrays(first))
+    assert jobs  # counted and collected again
+    assert held() is first
+
+    # the entry goes with its DataFrame
+    del first, src, dst, again
+    gc.collect()
+    assert cc_mod._last_small is None
 
 
 def test_degrees(spark):
@@ -727,19 +937,7 @@ def test_cc_patch_round_path_graph(spark, monkeypatch):
 
     monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)
     n = 5000
-    ids = spark.range(n).select(
-        F.col("id"), F.xxhash64(F.col("id")).alias("h")
-    )
-    # deterministic pseudo-random permutation of [0, n): rank of the hash
-    from pyspark.sql import Window
-
-    perm = ids.select(
-        "id",
-        (F.row_number().over(Window.orderBy("h")) - 1).alias("p"),
-    )
-    a = perm.select(F.col("id").alias("i"), F.col("p").alias("src"))
-    b = perm.select((F.col("id") - 1).alias("i"), F.col("p").alias("dst"))
-    edges = a.join(b, "i").select("src", "dst")  # path p(0)-p(1)-...-p(n-1)
+    edges = _shuffled_path(spark, n)
     labels = cc.connected_components(edges).collect()
     assert len(labels) == n
     comps = {r["component"] for r in labels}
