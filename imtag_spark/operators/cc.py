@@ -71,11 +71,11 @@ EDGE_SCHEMA = "src BIGINT, dst BIGINT"
 #: chunks: its gates bound its input instead.
 LOCAL_CONTRACT_CHUNK = 8_000_000
 
-#: cell-count bound under which grid callers pass ``single_partition``.
-#: A grid's runs plus their adjacency edges stay below ~1.5 × cells, so the
-#: hinted one-task pass reads at most ~6M rows: one serial task of a few
-#: seconds (a 4.0M-row one-task pass took ~6 s, BENCH.md "Frontier
-#: funnel"; the 1024² grid's 0.49M rows take 0.21 s at local[4]).
+#: cell-count bound under which ``label_runs`` labels a grid on the driver
+#: without counting its runs (a grid has fewer runs than cells). A grid's
+#: runs plus their adjacency edges stay below ~1.5 × cells, so one NumPy
+#: union-find reads at most ~6M rows: a few serial seconds (a 4.0M-row
+#: one-task pass took ~6 s, BENCH.md "Frontier funnel").
 SMALL_GRAPH_EDGE_LIMIT = 4_000_000
 
 #: input-row bound for the driver solve. ``connected_components`` collects
@@ -91,8 +91,11 @@ FUNNEL_EDGE_LIMIT = 1_000_000
 
 
 #: the last small table collected from a DataFrame whose rows cannot change
-#: when re-read: ``(weak reference to it, rows counted, src, dst)``
-_last_small: tuple[weakref.ref, int, np.ndarray, np.ndarray] | None = None
+#: when re-read: ``(weak reference to it, columns, rows counted, arrays)``
+_last_small: tuple[weakref.ref, tuple[str, ...], int, tuple[np.ndarray, ...]] | None = None
+
+#: the edge table's columns, in the order the NumPy kernels read them
+EDGE_COLUMNS = ("src", "dst")
 
 
 def _holds_fixed_rows(df: DataFrame) -> bool:
@@ -108,42 +111,49 @@ def _holds_fixed_rows(df: DataFrame) -> bool:
         return False
 
 
-def _collect_edges(edges: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """``(src, dst)`` as NumPy arrays in the columns' own integer type, by
-    one Arrow collect. An edge with a null endpoint names no vertex pair
-    and is dropped, as every Spark route drops it."""
-    t = edges.select("src", "dst").toArrow()
-    if t.column("src").null_count or t.column("dst").null_count:
+def collect_columns(
+    df: DataFrame, cols: tuple[str, ...] = EDGE_COLUMNS
+) -> tuple[np.ndarray, ...]:
+    """The named columns as NumPy arrays in their own integer type, by one
+    Arrow collect. A row with a null in any of them is dropped: an edge
+    with a null endpoint names no vertex pair, and every Spark route drops
+    it too."""
+    t = df.select(*cols).toArrow()
+    if any(t.column(c).null_count for c in cols):
         t = t.drop_null()
-    return t.column("src").to_numpy(), t.column("dst").to_numpy()
+    return tuple(t.column(c).to_numpy() for c in cols)
 
 
-def _count_small(edges: DataFrame, remember: bool) -> tuple[int, tuple | None]:
-    """``(rows, (src, dst) or None)``: the arrays when ``edges`` has at most
-    FUNNEL_EDGE_LIMIT rows. The table remembered from an earlier call on
-    the same object costs no job; otherwise one count job, and under the
-    gate one Arrow collect, which ``remember`` keeps when the table holds
-    fixed rows, replacing any earlier one."""
+def count_small(
+    df: DataFrame, cols: tuple[str, ...] = EDGE_COLUMNS, remember: bool = False
+) -> tuple[int, tuple[np.ndarray, ...] | None]:
+    """``(rows, arrays or None)``: the named columns (``collect_columns``)
+    when ``df`` has at most FUNNEL_EDGE_LIMIT rows, read at call time. The
+    table remembered from an earlier call on the same object and columns
+    costs no job; otherwise one count job, and under the gate one Arrow
+    collect, which ``remember`` keeps when the table holds fixed rows,
+    replacing any earlier one."""
     global _last_small
     hit = _last_small
-    if hit is not None and hit[0]() is edges:
-        n = hit[1]
-        return n, (hit[2], hit[3]) if n <= FUNNEL_EDGE_LIMIT else None
-    n = edges.count()
+    if hit is not None and hit[0]() is df and hit[1] == cols:
+        n = hit[2]
+        return n, hit[3] if n <= FUNNEL_EDGE_LIMIT else None
+    n = df.count()
     if n > FUNNEL_EDGE_LIMIT:
         return n, None
-    src, dst = _collect_edges(edges)
-    if remember and _holds_fixed_rows(edges):
+    arrays = collect_columns(df, cols)
+    if remember and _holds_fixed_rows(df):
         # callers share the arrays: none may write to them
-        src.flags.writeable = dst.flags.writeable = False
+        for a in arrays:
+            a.flags.writeable = False
 
         def _forget(ref):
             global _last_small
             if _last_small is not None and _last_small[0] is ref:
                 _last_small = None
 
-        _last_small = (weakref.ref(edges, _forget), n, src, dst)
-    return n, (src, dst)
+        _last_small = (weakref.ref(df, _forget), cols, n, arrays)
+    return n, arrays
 
 
 def small_edge_arrays(edges: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
@@ -157,9 +167,9 @@ def small_edge_arrays(edges: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
     checkpoint or local relation, its arrays (read-only) are kept until the
     next such collect or until the DataFrame object is garbage-collected,
     whichever comes first, and later calls on the same object run no job:
-    the four operators on one checkpointed 10^5-edge table run 5 Spark
-    jobs instead of 14 (BENCH.md, "One collect")."""
-    return _count_small(edges, remember=True)[1]
+    the four operators on one checkpointed 10^5-edge table run 4 Spark
+    jobs instead of 14 (BENCH.md, "One collect" and "Grid on the driver")."""
+    return count_small(edges, remember=True)[1]
 
 
 #: rows per emitted Arrow batch from the contraction (bounds JVM-side
@@ -554,13 +564,12 @@ def connected_components(
     hash-id graphs: there the input pass costs a full Arrow transit of the
     edge set (25–65 s at 32 M edges) while shrinking round 1 only ~35 %.
 
-    ``single_partition`` — caller-held size bound (e.g. grid pipelines:
-    edges ≤ cells, known without a job): skip the init job and solve in one
-    ``coalesce(1)`` ``mapInArrow`` task, whatever the input's size, whose
-    output is checkpointed in one partition (``densely_relabel`` then ranks
-    it in-task). The pass never chunks, so the labels are exact at any
-    size, but one task is then the whole solve — never pass the hint
-    unbounded. Overrides ``range_partition``.
+    ``single_partition`` — caller-held size bound (edges known small without
+    a job): skip the init job and solve in one ``coalesce(1)``
+    ``mapInArrow`` task, whatever the input's size, whose output is
+    checkpointed in one partition. The pass never chunks, so the labels are
+    exact at any size, but one task is then the whole solve — never pass
+    the hint unbounded. Overrides ``range_partition``.
 
     ``checkpointer`` — optional ``plans.checkpoint.SuperstepCheckpointer``
     for durable per-superstep state + resume; defaults to in-memory
@@ -620,7 +629,7 @@ def connected_components(
         if resumed is None:
             # under the gate the same call collects the edges, or finds
             # them kept from an earlier call on the caller's table
-            n_work, small = _count_small(work, remember=not owns_frontier)
+            n_work, small = count_small(work, remember=not owns_frontier)
         else:
             n_work = work.count()
         if verbose:
@@ -686,7 +695,7 @@ def connected_components(
         # certificate nor a checkpoint (a local relation is already flat).
         funneled = n_work <= FUNNEL_EDGE_LIMIT
         if funneled:
-            src, dst = _collect_edges(work)
+            src, dst = collect_columns(work)
             verts, roots = _contract_arrays([src], [dst])
             moved = verts != roots
             stepped = spark.createDataFrame(pa.table({"src": verts[moved], "dst": roots[moved]}))

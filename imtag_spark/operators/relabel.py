@@ -5,36 +5,21 @@ provisional-label order (/root/reference/src/disjoint_set.hpp:73-96), which
 equals the dense rank of each component's minimum member id (verified
 contract, SURVEY.md §2.4).
 
-``densely_relabel`` has two routes, picked from the input's plan without
-running a job:
-
-- **In-task rank.** When the labels are one partition of a materialized
-  scan (``plans.checkpoint.is_materialized_scan``, e.g. CC's hinted
-  one-task solve) with an integral component column, one ``mapInArrow`` NumPy pass
-  sets ``np.unique(component, return_inverse=True)`` + ``base`` in the
-  task that reads them — the analog of the reference's single-address-space
-  sweep. No shuffle and no job of its own: untraced ``label_runs`` plus
-  one eager checkpoint on the seed-42 1024² grid runs 3 Spark jobs
-  instead of 13.
-- **Two-phase distributed rank** for every other input (multi-partition
-  or lazy). A naive ``dense_rank() OVER (ORDER BY component)`` funnels
-  every component through one partition; instead range-partition the
-  distinct components, rank within partitions, then add per-partition
-  offsets (a tiny table, broadcast back) and join the ranks back. The
-  offsets-and-rank step is ``two_phase_index``, which also gives the
-  runs their scan-order ids (``rle.with_scan_order_ids``).
+``densely_relabel`` is a two-phase distributed rank. A naive
+``dense_rank() OVER (ORDER BY component)`` funnels every component through
+one partition; instead range-partition the distinct components, rank
+within partitions, then add per-partition offsets (a tiny table, broadcast
+back) and join the ranks back. The offsets-and-rank step is
+``two_phase_index``, which also gives the runs their scan-order ids on
+``rle``'s relational route (``rle.with_scan_order_ids``). A grid small
+enough for one address space is ranked on the driver instead, inside
+``label_runs``' one NumPy pass.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, LongType, StructField, StructType
-
-from imtag_spark.plans.checkpoint import is_materialized_scan
 
 
 def two_phase_index(
@@ -105,62 +90,14 @@ def dense_component_ranks(
     )
 
 
-def _rank_in_task_fn(component_col: str, rank_col: str, base: int):
-    """Per-partition closure: buffer the partition, append the dense rank
-    of each row's component (``np.unique`` inverse + ``base``)."""
-    import pyarrow as pa
-
-    def _batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        batches = [rb for rb in batches if rb.num_rows]
-        if not batches:
-            return
-        table = pa.Table.from_batches(batches)
-        comp = table.column(component_col).to_numpy()
-        ranks = np.unique(comp, return_inverse=True)[1].astype(np.int64) + base
-        # output batches keep the input's boundaries (≤ maxRecordsPerBatch)
-        yield from table.append_column(rank_col, pa.array(ranks)).to_batches()
-
-    return _batches
-
-
-def _one_materialized_partition(labels: DataFrame, component_col: str) -> bool:
-    """True when ``labels`` is one partition of a materialized scan with an
-    integral component column. Plan and schema only: no job runs.
-
-    The type bound keeps NumPy's sort order equal to Spark's (floats,
-    decimals and strings take the join route)."""
-    return (
-        isinstance(labels.schema[component_col].dataType, IntegralType)
-        and is_materialized_scan(labels)
-        and labels.rdd.getNumPartitions() == 1
-    )
-
-
 def densely_relabel(
     labels: DataFrame,
     component_col: str = "component",
     rank_col: str = "dense_label",
     base: int = 0,
 ) -> DataFrame:
-    """labels(component, ...) → (component, ..., dense_label).
-
-    Both routes (module docstring) return the same rows in the same
-    columns: the component first, then the other input columns in order,
-    then the rank. Rows with a null component are dropped, as the join
-    route's inner join drops them. One materialized partition is ranked
-    inside its task (13 → 3 Spark jobs for ``label_runs`` on a 1024² grid);
-    any other input takes the scale-safe two-phase distributed rank.
-    """
-    if _one_materialized_partition(labels, component_col):
-        # the partition was produced by one task, so buffering it in one
-        # Python worker costs the same order of memory as producing it
-        others = [c for c in labels.columns if c != component_col]
-        keyed = labels.where(F.col(component_col).isNotNull()).select(
-            component_col, *others
-        )
-        schema = StructType(
-            keyed.schema.fields + [StructField(rank_col, LongType(), False)]
-        )
-        return keyed.mapInArrow(_rank_in_task_fn(component_col, rank_col, base), schema)
+    """labels(component, ...) → (component, ..., dense_label): the
+    component first, then the other input columns in order, then the rank.
+    Rows with a null component are dropped by the inner join."""
     ranks = dense_component_ranks(labels, component_col, rank_col, base)
     return labels.join(ranks, component_col)

@@ -6,26 +6,41 @@ RLE each image row into maximal foreground runs, then assign globally unique
 provisional labels 0..N-1 in row-major scan order (sequential linearization at
 SegmentImageImpl_Scanline.cpp:88-95).
 
-Both steps are relational operators, so no Python worker runs:
+``grid_to_runs`` has two routes, chosen by one count of the cells:
 
-- RLE is gaps-and-islands. Within an image row, ``col − row_number()``
-  (ordered by ``col``) is constant exactly along a run of consecutive
-  columns, so ``groupBy(row, gap)`` with ``min(col)`` and ``max(col) + 1``
-  gives the maximal runs. The window and the aggregate share one
-  ``hash(row)`` exchange of the cells.
-- The scan-order id is the two-phase zipWithIndex
-  (``relabel.two_phase_index`` grouped by ``row``): per-row run counts →
-  cumulative offsets (a tiny table, broadcast) → ``row_number`` within
-  each row. The counts reuse the same cells exchange, so ``grid_to_runs``
-  shuffles the cells once: 4 Spark jobs to checkpoint the runs of
-  checkpointed 1024² cells, none of them in Python.
+- **Driver.** At most ``cc.FUNNEL_EDGE_LIMIT`` cells (the gate CC's small
+  inputs use) are collected by the same call (``cc.count_small``) and
+  run-length encoded in one NumPy pass, as the reference does in one
+  address space: sort the cells row-major, start a run wherever the row
+  changes or the column skips, number the runs in that order. The runs
+  come back through ``createDataFrame`` in the relational route's schema.
+  From checkpointed cells to checkpointed runs that is 4 Spark jobs (the
+  count, two under AQE; the collect; the caller's checkpoint), and the
+  cells are never shuffled: on the 1024² ``grid_ccl`` grid (629K cells,
+  251K runs) a cold pass cost 3.4 CPU-s instead of 8.2 (BENCH.md, "Grid
+  on the driver").
+- **Relational**, for larger grids; no Python worker runs:
+
+  - RLE is gaps-and-islands. Within an image row, ``col − row_number()``
+    (ordered by ``col``) is constant exactly along a run of consecutive
+    columns, so ``groupBy(row, gap)`` with ``min(col)`` and
+    ``max(col) + 1`` gives the maximal runs. The window and the aggregate
+    share one ``hash(row)`` exchange of the cells.
+  - The scan-order id is the two-phase zipWithIndex
+    (``relabel.two_phase_index`` grouped by ``row``): per-row run counts →
+    cumulative offsets (a tiny table, broadcast) → ``row_number`` within
+    each row. The counts reuse the same cells exchange, so the cells are
+    shuffled once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from imtag_spark.operators.cc import count_small
 from imtag_spark.operators.relabel import two_phase_index
 
 
@@ -49,6 +64,35 @@ def with_scan_order_ids(runs: DataFrame, id_col: str = "id") -> DataFrame:
     return two_phase_index(runs, "row", "col_begin", id_col)
 
 
+def _driver_runs(spark: SparkSession, row: np.ndarray, col: np.ndarray) -> DataFrame:
+    """Cells as arrays → the runs table, by one row-major sweep. Columns
+    keep the cells' integer types; ``id`` is BIGINT; all nullable, as on
+    the relational route."""
+    order = np.lexsort((col, row))
+    row, col = row[order], col[order]
+    breaks = (row[1:] != row[:-1]) | (col[1:] != col[:-1] + 1)
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = breaks
+    last = np.ones(len(row), dtype=bool)
+    last[:-1] = breaks
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "row": row[first],
+                "col_begin": col[first],
+                "col_end": col[last] + 1,
+                "id": np.arange(int(first.sum()), dtype=np.int64),
+            }
+        )
+    )
+
+
 def grid_to_runs(cells: DataFrame) -> DataFrame:
-    """Full pass-1 analog: cells → runs with scan-order vertex ids."""
+    """Full pass-1 analog: cells → runs ``(row, col_begin, col_end, id)``
+    with scan-order vertex ids. Under the gate the cells are run-length
+    encoded on the driver (module docstring); a cell with a null
+    coordinate names no cell, and that route drops it."""
+    small = count_small(cells, ("row", "col"))[1]
+    if small is not None:
+        return _driver_runs(cells.sparkSession, *small)
     return with_scan_order_ids(cells_to_runs(cells))

@@ -53,8 +53,7 @@ def is_materialized_scan(df: DataFrame) -> bool:
     LogicalRelation scan; that is the caller's input-stability contract,
     same as any repeated Spark read.
 
-    Callers: CC skips its init lineage-truncation copy on such input, and
-    ``densely_relabel`` ranks a one-partition such input inside its task.
+    Caller: CC skips its init lineage-truncation copy on such input.
     """
     try:
         p = df._jdf.queryExecution().analyzed()
@@ -166,7 +165,12 @@ class SuperstepCheckpointer:
         return self.root / f"step={step:05d}"
 
     def save(self, df: DataFrame, step: int) -> DataFrame:
+        """Write ``df`` as superstep ``step`` and return it read back.
+
+        The read-back takes the schema just written, so it runs no schema
+        inference job: the write is the save's only Spark job."""
         path = str(self._step_dir(step))
+        schema = df.schema
         df.write.mode("overwrite").parquet(path)
         manifest = self._read_manifest()
         manifest["last_step"] = step
@@ -176,7 +180,7 @@ class SuperstepCheckpointer:
         }
         self._write_manifest(manifest)
         self._gc(step)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def log_metrics(self, step: int, **metrics) -> None:
         manifest = self._read_manifest()

@@ -2,14 +2,45 @@
 
 from __future__ import annotations
 
+import time
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.operators.cc import SMALL_GRAPH_EDGE_LIMIT, connected_components
-from imtag_spark.operators.interval_join import interval_join, adjacent_row_edges
+from imtag_spark.operators import cc
+from imtag_spark.operators.interval_join import (
+    adjacent_row_edges,
+    adjacent_row_pairs,
+    interval_join,
+)
 from imtag_spark.operators.morphology import complement_runs
 from imtag_spark.operators.relabel import densely_relabel
 from imtag_spark.operators.rle import with_scan_order_ids
+
+RUN_COLUMNS = ("row", "col_begin", "col_end", "id")
+
+
+def _label_on_driver(
+    runs: DataFrame, arrays: tuple[np.ndarray, ...], connectivity: str, base: int
+) -> DataFrame | None:
+    """The run table's arrays → dense labels in one NumPy pass: the
+    adjacent-row sweep (``adjacent_row_pairs``), one union-find over those
+    edges and every run's self-loop (``cc._contract_arrays``), and the
+    dense rank of each component minimum. ``None`` when the sweep cannot
+    bound a row's matches (overlapping runs in a row)."""
+    row, begin, end, ids = arrays
+    order = np.lexsort((end, begin, row))
+    pairs = adjacent_row_pairs(row[order], begin[order], end[order], connectivity)
+    if pairs is None:
+        return None
+    ids = ids[order]
+    verts, roots = cc._contract_arrays([ids[pairs[0]], ids], [ids[pairs[1]], ids])
+    dense = np.unique(roots, return_inverse=True)[1].astype(np.int64) + base
+    return runs.sparkSession.createDataFrame(
+        pa.table({"component": roots, "vertex": verts, "dense_label": dense})
+    )
 
 
 def label_runs(
@@ -20,39 +51,52 @@ def label_runs(
     cells_hint: int | None = None,
 ) -> DataFrame:
     """``bwlabel`` analog (reference entry point 1, src/imtag.cpp:13-22):
-    run table → edges → CC → dense relabel per the §2.4 contract. Every
-    run also enters CC as a self-loop, so isolated runs come back as their
-    own components without a runs ⋈ labels join.
+    run table ``(row, col_begin, col_end, id)`` → edges → CC → dense
+    relabel per the §2.4 contract.
 
-    When CC takes its hinted one-task solve, its labels are one
-    checkpointed partition, so ``densely_relabel`` ranks them inside the
-    task that reads them: the dense labels come from the same one-task
-    pass, with no shuffle and no job of their own (3 Spark jobs in all on
-    a 1024² grid, with the caller's checkpoint). Labels from CC's driver
-    solve (several partitions of a local relation) or its distributed
-    rounds take the distributed rank.
+    **Driver route**, as the reference labels an image in one address
+    space (pass 2, src/SegmentImageImpl.cpp:78-116): ``(row, col_begin,
+    col_end, id)`` is collected once, and one NumPy pass finds each run's
+    overlapping runs in the row above (two binary searches), unions them
+    with every run's self-loop, and ranks the component minima. It runs
+    when ``cells_hint`` is at most ``SMALL_GRAPH_EDGE_LIMIT`` (the runs
+    are fewer than the cells, so no count is needed), or, without a hint,
+    when the run table counts at most ``cc.FUNNEL_EDGE_LIMIT`` rows. The
+    1024² ``grid_ccl`` grid (251K runs) takes 2 Spark jobs this way, the
+    collect and the caller's checkpoint. A run with a null field is
+    dropped on this route.
+
+    **Spark route** for larger grids: the adjacency edges plus every run as
+    a self-loop (so isolated runs come back as their own components
+    without a runs ⋈ labels join) go through ``connected_components`` with
+    ``range_partition`` (scan-order ids carry spatial locality, so the
+    partition-local union-find collapses whole image regions in round 1),
+    then ``densely_relabel``.
 
     ``cells_hint`` — static upper bound on the grid's cell count
-    (n_rows * n_cols), when the caller knows it. It only picks CC's route:
-    runs plus adjacencies stay below ~1.5 × cells, so a hint up to
-    ``SMALL_GRAPH_EDGE_LIMIT`` sends CC to its one-task solve without the
-    init count. Without it, CC counts the input first and solves it on
-    the driver when the count is small. Larger grids take the
-    range-partitioned distributed path.
+    (n_rows * n_cols), when the caller knows it. It only picks the route.
 
-    Returns (component, vertex, dense_label) with dense labels ``base..``.
+    ``metrics_out`` — CC's metrics; the driver route counts as one superstep.
+
+    Returns (component, vertex, dense_label), all BIGINT and nullable on
+    both routes, with dense labels ``base..``.
     """
+    t0 = time.time()
+    if cells_hint is None:
+        arrays = cc.count_small(runs, RUN_COLUMNS)[1]
+    elif cells_hint <= cc.SMALL_GRAPH_EDGE_LIMIT:
+        arrays = cc.collect_columns(runs, RUN_COLUMNS)
+    else:
+        arrays = None
+    dense = None if arrays is None else _label_on_driver(runs, arrays, connectivity, base)
+    if dense is not None:
+        if metrics_out is not None:
+            metrics_out["supersteps"] = 1
+            metrics_out["superstep_times"] = [time.time() - t0]
+        return dense
     runs_as_loops = runs.select(F.col("id").alias("src"), F.col("id").alias("dst"))
     edges = adjacent_row_edges(runs, connectivity).unionByName(runs_as_loops)
-    small = cells_hint is not None and cells_hint <= SMALL_GRAPH_EDGE_LIMIT
-    # scan-order run ids carry spatial locality — range partitioning lets
-    # the partition-local union-find collapse whole image regions round 1
-    labels = connected_components(
-        edges,
-        range_partition=not small,
-        single_partition=small,
-        metrics_out=metrics_out,
-    )
+    labels = cc.connected_components(edges, range_partition=True, metrics_out=metrics_out)
     return densely_relabel(labels, base=base)
 
 

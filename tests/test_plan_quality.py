@@ -207,14 +207,16 @@ def test_pagerank_frees_superseded_rank_blocks(spark, monkeypatch):
     assert len(new) <= 1, f"superseded rank blocks still cached: {new}"
 
 
-def test_grid_to_runs_is_relational_and_exchanges_cells_once(spark):
-    # pass 1 runs no Python worker, and its counts branch reads the same
-    # hash(row) exchange of the cells as the runs (a LEFT offsets join;
-    # an inner join would infer isnotnull(row) on one branch only and
-    # shuffle the cells twice)
+def test_grid_to_runs_is_relational_and_exchanges_cells_once(spark, monkeypatch):
+    # above the gate, pass 1 runs no Python worker, and its counts branch
+    # reads the same hash(row) exchange of the cells as the runs (a LEFT
+    # offsets join; an inner join would infer isnotnull(row) on one branch
+    # only and shuffle the cells twice)
+    import imtag_spark.operators.cc as cc_mod
     from imtag_spark.operators.rle import grid_to_runs
     from imtag_spark.sources.grids import grid_to_cells, named_grid
 
+    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     cells = grid_to_cells(spark, named_grid("small")).localCheckpoint(eager=True)
     runs = grid_to_runs(cells)
     assert len(runs.collect()) == 1039
@@ -232,7 +234,9 @@ def test_grid_to_runs_is_relational_and_exchanges_cells_once(spark):
 
 def test_grid_to_runs_job_count(spark):
     # checkpointed runs of the medium grid from checkpointed cells: the
-    # pandas RLE kernel ran 6 Spark jobs here, the relational pass runs 4
+    # pandas RLE kernel ran 6 Spark jobs here, the relational pass 4, and
+    # the driver route runs 4 (a count, two jobs under AQE, the collect and
+    # the checkpoint)
     from imtag_spark.operators.rle import grid_to_runs
     from imtag_spark.sources.grids import grid_to_cells, named_grid
     from test_graph_ops import _jobs_in_group

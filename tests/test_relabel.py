@@ -1,8 +1,9 @@
-"""Dense relabel: both ``densely_relabel`` routes against a dense-rank oracle.
+"""Dense relabel: ``densely_relabel`` against a dense-rank oracle.
 
-One materialized partition (CC's one-task solve) is ranked inside its task;
-every other input takes the two-phase distributed rank. Spies assert which
-route ran; both routes must return identical rows in identical columns.
+CC's labels from its one-task solve (one checkpointed partition) and from
+its star rounds, and a hostile table, must give the oracle's rows whether
+relabel reads them in one partition or in several. ``label_runs`` ranks a
+small grid on the driver: its job count and golden are checked here too.
 """
 
 from __future__ import annotations
@@ -11,7 +12,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import imtag_spark.operators.relabel as relabel
 from imtag_spark.operators.cc import connected_components
 from imtag_spark.operators.label_image import (
     label_image_sha256,
@@ -29,26 +29,11 @@ from test_graph_ops import _jobs_in_group
 ID_OFFSETS = [0, 2**40, -(2**31), 2**62]
 
 
-def _relabel(monkeypatch, df, base, route):
-    """``densely_relabel(df, base=base)`` collected, asserting ``route`` ran.
-
-    Returns (columns, dtypes, sorted rows)."""
-    calls = {"_rank_in_task_fn": 0, "dense_component_ranks": 0}
-    for name in calls:
-        def spy(*args, _real=getattr(relabel, name), _name=name, **kw):
-            calls[_name] += 1
-            return _real(*args, **kw)
-
-        monkeypatch.setattr(relabel, name, spy)
+def _relabel(df, base):
+    """``densely_relabel(df, base=base)`` collected: (columns, dtypes,
+    sorted rows)."""
     out = densely_relabel(df, base=base)
-    rows = sorted(tuple(r) for r in out.collect())
-    monkeypatch.undo()
-    in_task = route == "in_task"
-    assert calls == {
-        "_rank_in_task_fn": int(in_task),
-        "dense_component_ranks": int(not in_task),
-    }
-    return out.columns, out.dtypes, rows
+    return out.columns, out.dtypes, sorted(tuple(r) for r in out.collect())
 
 
 def _oracle(rows, i, base):
@@ -72,37 +57,35 @@ def _random_pairs(seed: int) -> list[tuple[int, int]]:
 @pytest.mark.parametrize("base", [0, 1])
 @pytest.mark.parametrize("seed", range(4))
 def test_relabel_cc_labels_both_routes(spark, monkeypatch, seed, base):
+    # CC's labels from its hinted one-task solve (one checkpointed
+    # partition) and from its star rounds give the oracle's rows, in one
+    # partition or in four
     pairs = _random_pairs(seed)
     edges = spark.createDataFrame(pairs, "src BIGINT, dst BIGINT")
     labels = connected_components(edges, single_partition=True)
+    assert labels.rdd.getNumPartitions() == 1
     rows = [tuple(r) for r in labels.select("vertex", "component").collect()]
     want = _oracle(rows, 1, base)
 
-    in_task = _relabel(monkeypatch, labels, base, "in_task")
-    assert in_task[0] == ["component", "vertex", "dense_label"]
-    assert in_task[2] == want
-    assert _relabel(monkeypatch, labels.repartition(4), base, "distributed") == in_task
+    got = _relabel(labels, base)
+    assert got[0] == ["component", "vertex", "dense_label"]
+    assert got[2] == want
+    assert _relabel(labels.repartition(4), base) == got
 
-    # labels from the distributed star rounds: AQE may coalesce their
-    # min-aggregate into one partition, so the spied distributed rank is
-    # fed them repartitioned, and relabeling them as they come must give
-    # the same rows whichever route it takes
     import imtag_spark.operators.cc as cc_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
     star = connected_components(edges)
-    assert _relabel(monkeypatch, star.repartition(4), base, "distributed") == in_task
-    out = densely_relabel(star, base=base)
-    assert (out.columns, out.dtypes) == in_task[:2]
-    assert sorted(tuple(r) for r in out.collect()) == in_task[2]
+    assert _relabel(star, base) == got
+    assert _relabel(star.repartition(4), base) == got
 
 
 @pytest.mark.parametrize("base", [0, 1])
 @pytest.mark.parametrize("offset", ID_OFFSETS)
-def test_relabel_hostile_table_both_routes(spark, monkeypatch, offset, base):
+def test_relabel_hostile_table_both_routes(spark, offset, base):
     # component not first, duplicate rows, a null component and a string
-    # payload; a deterministic projection adds one more column and keeps
-    # the table a materialized scan
+    # payload, read from one checkpointed partition under a projection and
+    # from four partitions
     rows = [(v, offset + v // 3 * 7, f"p{v}") for v in range(12)]
     rows += rows[:3] + [(99, None, "null")]
     table = (
@@ -115,39 +98,59 @@ def test_relabel_hostile_table_both_routes(spark, monkeypatch, offset, base):
     )
     want = _oracle([(v, c, p, v * 2) for v, c, p in rows], 1, base)
 
-    in_task = _relabel(monkeypatch, table, base, "in_task")
-    assert in_task[0] == ["component", "vertex", "payload", "twice", "dense_label"]
-    assert in_task[2] == want
-    assert _relabel(monkeypatch, table.repartition(4), base, "distributed") == in_task
+    got = _relabel(table, base)
+    assert got[0] == ["component", "vertex", "payload", "twice", "dense_label"]
+    assert got[2] == want
+    assert _relabel(table.repartition(4), base) == got
 
-    # empty: a filter over the one-partition scan leaves no rows
+    # empty: a filter leaves no rows
     empty = table.where(F.col("vertex") < 0)
-    got = _relabel(monkeypatch, empty, base, "in_task")
-    assert got == in_task[:2] + ([],)
-    assert _relabel(monkeypatch, empty.repartition(4), base, "distributed") == got
+    assert _relabel(empty, base) == got[:2] + ([],)
+    assert _relabel(empty.repartition(4), base) == got[:2] + ([],)
 
 
-def test_label_runs_ranks_in_task_in_three_jobs(spark):
-    # hinted label_runs hands relabel CC's one-partition checkpoint, so the
-    # dense labels add no job: two jobs inside CC's one-task solve, one for
-    # the caller's checkpoint (the distributed rank made it 13 on 1024²)
+MEDIUM_SHA = "e774e062d860012a285ca0791bf87ab5050632bae4c94b20e84a857b42a63d62"
+
+
+def _check_medium(runs, dense):
+    img = to_label_image(labeled_cells(runs, dense), *named_grid("medium").shape)
+    assert dense.count() == runs.count() == 16423
+    assert dense.agg(F.max("dense_label")).first()[0] == 3100
+    assert label_image_sha256(img) == MEDIUM_SHA
+
+
+def test_label_runs_driver_route_job_count(spark):
+    # checkpointed cells → checkpointed runs → checkpointed dense labels of
+    # the medium grid, both passes on the driver: a count (two jobs under
+    # AQE), the cells' collect and the runs' checkpoint; then the runs'
+    # collect and the labels' checkpoint. Through Spark (relational RLE,
+    # hinted one-task CC, in-task rank) it took 4 + 3 jobs
+    grid = named_grid("medium")
+    cells = grid_to_cells(spark, grid).localCheckpoint(eager=True)
+    runs, rle_jobs = _jobs_in_group(
+        spark, "driver-rle", lambda: grid_to_runs(cells).localCheckpoint(eager=True)
+    )
+    dense, label_jobs = _jobs_in_group(
+        spark, "driver-label-runs",
+        lambda: label_runs(runs, "cross", base=1, cells_hint=grid.size).localCheckpoint(
+            eager=True
+        ),
+    )
+    assert len(rle_jobs) <= 4 and len(label_jobs) <= 2
+    plan = dense._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "MapInArrow" not in plan
+    _check_medium(runs, dense)
+
+
+def test_label_runs_without_hint_counts_then_labels_on_driver(spark):
+    # without cells_hint the run table is counted first, then labeled on
+    # the driver; the Spark route's labels in several partitions took the
+    # distributed rank here, 16 jobs
     grid = named_grid("medium")
     runs = grid_to_runs(grid_to_cells(spark, grid)).localCheckpoint(eager=True)
     dense, jobs = _jobs_in_group(
-        spark, "label-runs-in-task",
-        lambda: label_runs(runs, "cross", base=1, cells_hint=grid.size),
+        spark, "label-runs-no-hint",
+        lambda: label_runs(runs, "cross", base=1).localCheckpoint(eager=True),
     )
-    plan = dense._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "Exchange" not in plan
-    dense, more = _jobs_in_group(
-        spark, "label-runs-in-task-checkpoint",
-        lambda: dense.localCheckpoint(eager=True),
-    )
-    assert len(jobs) + len(more) <= 3
-    img = to_label_image(labeled_cells(runs, dense), *grid.shape)
-    assert dense.count() == runs.count()
-    assert dense.agg(F.max("dense_label")).first()[0] == 3100
-    assert (
-        label_image_sha256(img)
-        == "e774e062d860012a285ca0791bf87ab5050632bae4c94b20e84a857b42a63d62"
-    )
+    assert len(jobs) <= 7
+    _check_medium(runs, dense)
