@@ -44,7 +44,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imtag_spark.plans.checkpoint import (
@@ -98,17 +98,25 @@ _last_small: tuple[weakref.ref, tuple[str, ...], int, tuple[np.ndarray, ...]] | 
 EDGE_COLUMNS = ("src", "dst")
 
 
-def _holds_fixed_rows(df: DataFrame) -> bool:
-    """True when ``df`` is a bare materialized checkpoint or local relation
-    (no projection or filter above it): re-reading it gives the same rows.
-    A file scan or a plain RDD may give other rows on the next read."""
+def _fixed_rows_plan(df: DataFrame):
+    """``df``'s analyzed plan when it is a bare materialized checkpoint or
+    local relation (no projection or filter above it): re-reading it gives
+    the same rows. Otherwise ``None``: a file scan or a plain RDD may give
+    other rows on the next read. A driver route's output
+    (``frame_from_arrays``) is a ``Generate`` over a local relation, or
+    above Spark's Arrow local-relation threshold an uncheckpointed
+    ``LogicalRDD``; neither is counted without ``DataFrame.count()`` or
+    remembered, and every in-repo caller checkpoints it before reading it
+    again."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LocalRelation":
-            return True
-        return plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+        if plan.nodeName() == "LocalRelation" or (
+            plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+        ):
+            return plan
     except Exception:
-        return False
+        pass
+    return None
 
 
 def collect_columns(
@@ -124,25 +132,66 @@ def collect_columns(
     return tuple(t.column(c).to_numpy() for c in cols)
 
 
+def frame_from_arrays(
+    spark: SparkSession, columns: dict[str, np.ndarray], not_null: tuple[str, ...] = ()
+) -> DataFrame:
+    """Equal-length driver arrays → a DataFrame with one column each, rows
+    in array order: ``collect_columns``' inverse, and every driver route's
+    way back to Spark. A column takes its array's type and is nullable
+    unless ``not_null`` names it.
+
+    Below Spark's Arrow local-relation threshold (48 MB by default), where
+    ``createDataFrame`` on the flat table builds one JVM row per record on
+    the driver, the rows cross as at most ``defaultParallelism`` rows of
+    one ``list<struct>`` Arrow column, consecutive slices of the arrays,
+    and ``inline`` expands them inside Catalyst: one slice per task, in
+    whole-stage codegen, with no Python worker. A 251,652-row hand-off
+    plus an eager checkpoint took 0.56–2.94 CPU-s this way and 1.52–12.22
+    the flat way. Above the threshold ``createDataFrame`` already ships
+    the flat table's Arrow batches to the tasks, and that is used: at 4M
+    rows it took 2.53–3.37 CPU-s against 7.14–9.74 inlined (BENCH.md,
+    "Columnar hand-off")."""
+    arrays = {c: pa.array(a) for c, a in columns.items()}
+    fields = [pa.field(c, a.type, nullable=c not in not_null) for c, a in arrays.items()]
+    flat = pa.Table.from_arrays(list(arrays.values()), schema=pa.schema(fields))
+    if flat.nbytes > spark._jsparkSession.sessionState().conf().arrowLocalRelationThreshold():
+        return spark.createDataFrame(flat)
+    rows = pa.StructArray.from_arrays(list(arrays.values()), fields=fields)
+    k = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
+    offsets = pa.array(np.linspace(0, len(rows), k + 1).astype(np.int32))
+    item = pa.field("item", rows.type, nullable=False)
+    slices = pa.ListArray.from_arrays(offsets, rows, type=pa.list_(item))
+    return spark.createDataFrame(pa.table({"_rows": slices})).select(F.inline("_rows"))
+
+
 def count_small(
     df: DataFrame, cols: tuple[str, ...] = EDGE_COLUMNS, remember: bool = False
 ) -> tuple[int, tuple[np.ndarray, ...] | None]:
     """``(rows, arrays or None)``: the named columns (``collect_columns``)
     when ``df`` has at most FUNNEL_EDGE_LIMIT rows, read at call time. The
     table remembered from an earlier call on the same object and columns
-    costs no job; otherwise one count job, and under the gate one Arrow
-    collect, which ``remember`` keeps when the table holds fixed rows,
-    replacing any earlier one."""
+    costs no job. Otherwise the rows are counted: a local relation by the
+    size of its data (no job), a bare materialized checkpoint by counting
+    its RDD (one job, no shuffle), anything else by ``DataFrame.count()``
+    (two jobs under AQE). Under the gate one Arrow collect follows, which
+    ``remember`` keeps when the table holds fixed rows, replacing any
+    earlier one."""
     global _last_small
     hit = _last_small
     if hit is not None and hit[0]() is df and hit[1] == cols:
         n = hit[2]
         return n, hit[3] if n <= FUNNEL_EDGE_LIMIT else None
-    n = df.count()
+    fixed = _fixed_rows_plan(df)
+    if fixed is None:
+        n = df.count()
+    elif fixed.nodeName() == "LocalRelation":
+        n = fixed.data().size()
+    else:
+        n = fixed.rdd().count()
     if n > FUNNEL_EDGE_LIMIT:
         return n, None
     arrays = collect_columns(df, cols)
-    if remember and _holds_fixed_rows(df):
+    if remember and fixed is not None:
         # callers share the arrays: none may write to them
         for a in arrays:
             a.flags.writeable = False
@@ -543,11 +592,11 @@ def connected_components(
     already collected the same checkpointed table) and solved by one NumPy
     union-find pass on the driver, self-loops included. Its output (every
     vertex once, with its component minimum) comes back through
-    ``createDataFrame`` as the labels: no Python worker, no shuffle and no
-    certificate (the reference's union-find pass plus ``find`` sweep,
-    src/SegmentImageImpl.cpp:78-116 in the reference). On the corpus job
-    the four graph operators then share one count and one collect, and a
-    cold job's CPU fell 10.7 → 7.7 s (BENCH.md, "One collect"). Larger
+    ``frame_from_arrays`` as the labels: no Python worker, no shuffle and
+    no certificate (the reference's union-find pass plus ``find`` sweep,
+    src/SegmentImageImpl.cpp:78-116 in the reference). On a checkpointed
+    input the count is one job (``count_small``); on the corpus job the
+    four graph operators then share that count and one collect. Larger
     inputs run star rounds until a certificate finds a terminal star
     forest; a round whose counted frontier is under the same bound is
     collected and solved on the driver the same way. The star route's
@@ -662,7 +711,7 @@ def connected_components(
 
     if small is not None:
         verts, roots = _contract_arrays([small[0]], [small[1]])
-        labels = spark.createDataFrame(pa.table({"vertex": verts, "component": roots}))
+        labels = frame_from_arrays(spark, {"vertex": verts, "component": roots})
         if checkpointer is not None and checkpoint_every == 1:
             checkpointer.save(
                 labels.select(F.col("vertex").alias("src"), F.col("component").alias("dst")), 1
@@ -692,13 +741,13 @@ def connected_components(
         # under FUNNEL_EDGE_LIMIT would make a distributed round pure
         # scheduling floor, so it is collected and solved on the driver:
         # a terminal star forest by construction, which needs neither a
-        # certificate nor a checkpoint (a local relation is already flat).
+        # certificate nor a checkpoint (``frame_from_arrays`` is a flat plan).
         funneled = n_work <= FUNNEL_EDGE_LIMIT
         if funneled:
             src, dst = collect_columns(work)
             verts, roots = _contract_arrays([src], [dst])
             moved = verts != roots
-            stepped = spark.createDataFrame(pa.table({"src": verts[moved], "dst": roots[moved]}))
+            stepped = frame_from_arrays(spark, {"src": verts[moved], "dst": roots[moved]})
             n_edges, chained = int(moved.sum()), 0
         else:
             stepped = _star_round(work, n_part)

@@ -22,7 +22,6 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -97,9 +96,7 @@ def label_propagation(
     small = cc.small_edge_arrays(edges)
     if small is not None:
         vertex, label = _driver_lpa(*small, max_iter, verbose)
-        return edges.sparkSession.createDataFrame(
-            pa.table({"vertex": vertex, "label": label})
-        )
+        return cc.frame_from_arrays(edges.sparkSession, {"vertex": vertex, "label": label})
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -34,7 +34,6 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -112,8 +111,8 @@ def _driver_pagerank(
         src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
     verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(verts)
-    if n == 0:
-        return spark.createDataFrame([], "vertex BIGINT, rank DOUBLE")
+    # an empty graph runs its supersteps over no vertex: 1/n stays finite
+    inv_n = 1.0 / max(n, 1)
     # distinct pairs as one int64 key over vertex indices (n ≤ 2 × rows)
     key = np.unique(idx[: len(src)] * n + idx[len(src):])
     a, b = key // n, key % n
@@ -122,7 +121,7 @@ def _driver_pagerank(
     has_out = out_deg > 0
     resumed = checkpointer.resume() if checkpointer is not None else None
     if resumed is None:
-        rank, start = np.full(n, 1.0 / n), 0
+        rank, start = np.full(n, inv_n), 0
     else:
         frontier, start = resumed
         state = frontier.select("vertex", "has_out", "rank").toArrow().sort_by("vertex")
@@ -131,18 +130,18 @@ def _driver_pagerank(
         has_out = state.column("has_out").to_numpy()
         rank = state.column("rank").to_numpy()
 
-    base = (1.0 - alpha) / n
+    base = (1.0 - alpha) * inv_n
     dangling = rank[~has_out].sum()
     for it in range(start, max_iter):
         t0 = time.time()
         contrib = np.bincount(b, weights=rank[a] * w, minlength=n)
-        new = base + alpha * (contrib + dangling / n)
+        new = base + alpha * (contrib + dangling * inv_n)
         delta = float(np.abs(new - rank).sum())
         rank = new
         dangling = rank[~has_out].sum()
         if checkpointer is not None and (it + 1) % checkpoint_every == 0:
-            state = pa.table({"vertex": verts, "has_out": has_out, "rank": rank})
-            checkpointer.save(spark.createDataFrame(state), it + 1)
+            state = {"vertex": verts, "has_out": has_out, "rank": rank}
+            checkpointer.save(cc.frame_from_arrays(spark, state), it + 1)
         if verbose:
             print(f"[pagerank] iter {it + 1} delta={delta:.3e} {time.time() - t0:.3f}s", flush=True)
         if checkpointer is not None:
@@ -153,9 +152,7 @@ def _driver_pagerank(
         if delta < tol:
             break
     # rank NOT NULL, as the Spark loop's arithmetic column is
-    schema = pa.schema([("vertex", pa.from_numpy_dtype(verts.dtype)),
-                        pa.field("rank", pa.float64(), nullable=False)])
-    return spark.createDataFrame(pa.table({"vertex": verts, "rank": rank}, schema=schema))
+    return cc.frame_from_arrays(spark, {"vertex": verts, "rank": rank}, not_null=("rank",))
 
 
 def pagerank(
@@ -247,7 +244,7 @@ def pagerank(
     n, dangling = ranks.agg(F.count(F.lit(1)), _dangling_mass()).first()
     if n == 0:
         free_local_checkpoint(deg)
-        return edges.sparkSession.createDataFrame([], "vertex BIGINT, rank DOUBLE")
+        return edges.sparkSession.createDataFrame([], "vertex BIGINT, rank DOUBLE NOT NULL")
     if resumed is None:
         ranks = ranks.withColumn("rank", F.lit(1.0 / n))
         dangling /= n

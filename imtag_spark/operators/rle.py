@@ -13,12 +13,11 @@ SegmentImageImpl_Scanline.cpp:88-95).
   run-length encoded in one NumPy pass, as the reference does in one
   address space: sort the cells row-major, start a run wherever the row
   changes or the column skips, number the runs in that order. The runs
-  come back through ``createDataFrame`` in the relational route's schema.
-  From checkpointed cells to checkpointed runs that is 4 Spark jobs (the
-  count, two under AQE; the collect; the caller's checkpoint), and the
-  cells are never shuffled: on the 1024² ``grid_ccl`` grid (629K cells,
-  251K runs) a cold pass cost 3.4 CPU-s instead of 8.2 (BENCH.md, "Grid
-  on the driver").
+  come back through ``cc.frame_from_arrays`` in the relational route's
+  schema. From checkpointed cells to checkpointed runs that is 3 Spark
+  jobs (the count of the checkpoint's RDD, the collect, the caller's
+  checkpoint), and the cells are never shuffled (BENCH.md, "Grid on the
+  driver" and "Columnar hand-off").
 - **Relational**, for larger grids; no Python worker runs:
 
   - RLE is gaps-and-islands. Within an image row, ``col − row_number()``
@@ -36,11 +35,10 @@ SegmentImageImpl_Scanline.cpp:88-95).
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from imtag_spark.operators.cc import count_small
+from imtag_spark.operators.cc import count_small, frame_from_arrays
 from imtag_spark.operators.relabel import two_phase_index
 
 
@@ -75,15 +73,14 @@ def _driver_runs(spark: SparkSession, row: np.ndarray, col: np.ndarray) -> DataF
     first[1:] = breaks
     last = np.ones(len(row), dtype=bool)
     last[:-1] = breaks
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "row": row[first],
-                "col_begin": col[first],
-                "col_end": col[last] + 1,
-                "id": np.arange(int(first.sum()), dtype=np.int64),
-            }
-        )
+    return frame_from_arrays(
+        spark,
+        {
+            "row": row[first],
+            "col_begin": col[first],
+            "col_end": col[last] + 1,
+            "id": np.arange(int(first.sum()), dtype=np.int64),
+        },
     )
 
 

@@ -28,7 +28,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -148,10 +147,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     if small is not None:
         vertex, tri, _ = _driver_triangles(*small)
         # triangles NOT NULL, as the Spark route's coalesced count is
-        schema = pa.schema([("vertex", pa.from_numpy_dtype(vertex.dtype)),
-                            pa.field("triangles", pa.int64(), nullable=False)])
-        return edges.sparkSession.createDataFrame(
-            pa.table({"vertex": vertex, "triangles": tri}, schema=schema)
+        return cc.frame_from_arrays(
+            edges.sparkSession, {"vertex": vertex, "triangles": tri}, not_null=("triangles",)
         )
     deg, closed = _closed_wedges(edges)
     # The closed wedges stream DIRECTLY into the per-vertex tally (explode

@@ -53,7 +53,14 @@ def is_materialized_scan(df: DataFrame) -> bool:
     LogicalRelation scan; that is the caller's input-stability contract,
     same as any repeated Spark read.
 
-    Caller: CC skips its init lineage-truncation copy on such input.
+    Caller: CC skips its init lineage-truncation copy on such input. A
+    driver route's output (``cc.frame_from_arrays``) below Spark's Arrow
+    local-relation threshold is a ``Generate`` over a local relation, not
+    a bare one, so CC would copy it first; above the threshold it is the
+    ``LogicalRDD`` Spark builds from Arrow batches and counts, as the flat
+    ``createDataFrame`` output did. No in-repo flow hands one to CC: the
+    star route's funneled frontier, the one driver output CC reads itself,
+    is a terminal star forest that no round reads again.
     """
     try:
         p = df._jdf.queryExecution().analyzed()

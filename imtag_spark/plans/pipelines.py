@@ -5,7 +5,6 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,8 +37,8 @@ def _label_on_driver(
     ids = ids[order]
     verts, roots = cc._contract_arrays([ids[pairs[0]], ids], [ids[pairs[1]], ids])
     dense = np.unique(roots, return_inverse=True)[1].astype(np.int64) + base
-    return runs.sparkSession.createDataFrame(
-        pa.table({"component": roots, "vertex": verts, "dense_label": dense})
+    return cc.frame_from_arrays(
+        runs.sparkSession, {"component": roots, "vertex": verts, "dense_label": dense}
     )
 
 
@@ -62,9 +61,11 @@ def label_runs(
     when ``cells_hint`` is at most ``SMALL_GRAPH_EDGE_LIMIT`` (the runs
     are fewer than the cells, so no count is needed), or, without a hint,
     when the run table counts at most ``cc.FUNNEL_EDGE_LIMIT`` rows. The
-    1024² ``grid_ccl`` grid (251K runs) takes 2 Spark jobs this way, the
-    collect and the caller's checkpoint. A run with a null field is
-    dropped on this route.
+    labels come back through ``cc.frame_from_arrays``. The 1024²
+    ``grid_ccl`` grid (251K runs) takes 2 Spark jobs this way, the collect
+    and the caller's checkpoint; without the hint a checkpointed run
+    table's count adds one. A run with a null field is dropped on this
+    route.
 
     **Spark route** for larger grids: the adjacency edges plus every run as
     a self-loop (so isolated runs come back as their own components

@@ -711,8 +711,14 @@ def test_hostile_inputs_match_oracles(spark, route, case):
         ranks, labels, per = (f.collect() for f in frames)
         total = total_triangles(e)
     assert taken == [route] * 4
-    # ids stay exact BIGINT, also beside a null endpoint
-    assert [dict(f.dtypes)["vertex"] for f in frames] == ["bigint"] * 3
+    # ids stay exact BIGINT, also beside a null endpoint; the schemas,
+    # nullability included, are the same on every input, the empty one too
+    assert [[(f.name, f.dataType.simpleString(), f.nullable) for f in fr.schema]
+            for fr in frames] == [
+        [("vertex", "bigint", True), ("rank", "double", False)],
+        [("vertex", "bigint", True), ("label", "bigint", True)],
+        [("vertex", "bigint", True), ("triangles", "bigint", False)],
+    ]
     # every route drops an edge with a null endpoint
     pairs = _named(HOSTILE[case])
     # PageRank drops self-loops, and with them the vertices only they name
@@ -811,7 +817,9 @@ def test_driver_route_job_counts(spark, tmp_path):
     # Spark loops ran 27 jobs for PageRank with one checkpoint save, 19
     # for LPA and 10 for triangles. The four operators share one count
     # and one collect: 14 jobs when each counted and collected again, 5
-    # when the checkpoint's read-back still inferred its schema
+    # when the checkpoint's read-back still inferred its schema, 4 when
+    # the count was DataFrame.count() (two jobs under AQE) rather than one
+    # over the checkpoint's RDD
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
     e = _corpus_sized_table(spark)
@@ -828,7 +836,7 @@ def test_driver_route_job_counts(spark, tmp_path):
     jobs = {}
     for name, fn in calls.items():
         _, jobs[name] = _jobs_in_group(spark, f"driver-route-{name}", fn)
-    assert sum(len(j) for j in jobs.values()) <= 4, {k: len(j) for k, j in jobs.items()}
+    assert sum(len(j) for j in jobs.values()) <= 3, {k: len(j) for k, j in jobs.items()}
     # only the checkpoint write runs after CC's collect: the save reads it
     # back with the schema it wrote, with no inference job
     assert len(jobs["pagerank"]) == 1

@@ -235,8 +235,8 @@ def test_grid_to_runs_is_relational_and_exchanges_cells_once(spark, monkeypatch)
 def test_grid_to_runs_job_count(spark):
     # checkpointed runs of the medium grid from checkpointed cells: the
     # pandas RLE kernel ran 6 Spark jobs here, the relational pass 4, and
-    # the driver route runs 4 (a count, two jobs under AQE, the collect and
-    # the checkpoint)
+    # the driver route runs 3 (the count of the cells' checkpointed RDD,
+    # the collect and the checkpoint; DataFrame.count() took two jobs)
     from imtag_spark.operators.rle import grid_to_runs
     from imtag_spark.sources.grids import grid_to_cells, named_grid
     from test_graph_ops import _jobs_in_group
@@ -246,4 +246,4 @@ def test_grid_to_runs_job_count(spark):
         spark, "rle-medium", lambda: grid_to_runs(cells).localCheckpoint(eager=True)
     )
     assert runs.count() == 16423
-    assert len(jobs) <= 6
+    assert len(jobs) <= 3

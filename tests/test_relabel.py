@@ -121,10 +121,11 @@ def _check_medium(runs, dense):
 
 def test_label_runs_driver_route_job_count(spark):
     # checkpointed cells → checkpointed runs → checkpointed dense labels of
-    # the medium grid, both passes on the driver: a count (two jobs under
-    # AQE), the cells' collect and the runs' checkpoint; then the runs'
-    # collect and the labels' checkpoint. Through Spark (relational RLE,
-    # hinted one-task CC, in-task rank) it took 4 + 3 jobs
+    # the medium grid, both passes on the driver: the count of the cells'
+    # checkpointed RDD (DataFrame.count() took two jobs), the cells'
+    # collect and the runs' checkpoint; then the runs' collect and the
+    # labels' checkpoint. Through Spark (relational RLE, hinted one-task
+    # CC, in-task rank) it took 4 + 3 jobs
     grid = named_grid("medium")
     cells = grid_to_cells(spark, grid).localCheckpoint(eager=True)
     runs, rle_jobs = _jobs_in_group(
@@ -136,21 +137,22 @@ def test_label_runs_driver_route_job_count(spark):
             eager=True
         ),
     )
-    assert len(rle_jobs) <= 4 and len(label_jobs) <= 2
+    assert len(rle_jobs) <= 3 and len(label_jobs) <= 2
     plan = dense._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "MapInArrow" not in plan
     _check_medium(runs, dense)
 
 
 def test_label_runs_without_hint_counts_then_labels_on_driver(spark):
-    # without cells_hint the run table is counted first, then labeled on
-    # the driver; the Spark route's labels in several partitions took the
-    # distributed rank here, 16 jobs
+    # without cells_hint the run table is counted first (one job over the
+    # checkpoint's RDD), then collected and labeled on the driver; the
+    # Spark route's labels in several partitions took the distributed rank
+    # here, 16 jobs
     grid = named_grid("medium")
     runs = grid_to_runs(grid_to_cells(spark, grid)).localCheckpoint(eager=True)
     dense, jobs = _jobs_in_group(
         spark, "label-runs-no-hint",
         lambda: label_runs(runs, "cross", base=1).localCheckpoint(eager=True),
     )
-    assert len(jobs) <= 7
+    assert len(jobs) <= 3
     _check_medium(runs, dense)
