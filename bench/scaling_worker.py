@@ -90,11 +90,11 @@ def main() -> None:
     # samples 4/5 show 16-27 s outlier supersteps at local[32] that a
     # cross-rep min removes).
     REPS = int(os.environ.get("SCALING_REPS", "3"))
-    # pagerank() picks its route from V and the executor count
-    # (broadcast_join inside the V gate here), i.e. the harness times the
-    # plan every caller gets. r3 and earlier samples timed the "join"
-    # route; the recorded pagerank_mode field (the route that ran) and
-    # engine_hash in bench/scaling.py keep the eras separable.
+    # pagerank() has one Spark route, "join", so the harness times the
+    # plan every caller gets. r4 and r5 samples timed a packed rank
+    # broadcast that has since been deleted (BENCH.md, "PageRank: one
+    # Spark route"); the recorded pagerank_mode field (the route that ran)
+    # and engine_hash in bench/scaling.py keep the eras separable.
     pr_reps: list[list[float]] = []
     pr_mode = None
     for _ in range(REPS):

@@ -530,41 +530,31 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     distributed forest: the chains that survive partition-local contraction
     are collapsed in one driver pass over only the violating rows.
     """
-    import pandas as pd
-
-    viol = (
+    (viol,) = collect_columns(
         _endpoint_tally(stepped)
-        .where(((F.col("ns") > 0) & (F.col("nd") > 0)) | (F.col("ns") > 1))
-        .select("k")
-        .toPandas()  # ≤ O(witnesses) rows by the PATCH_WITNESS_LIMIT gate
-    )
-    if viol.empty:
+        .where(((F.col("ns") > 0) & (F.col("nd") > 0)) | (F.col("ns") > 1)),
+        ("k",),
+    )  # ≤ O(witnesses) rows by the PATCH_WITNESS_LIMIT gate
+    if not len(viol):
         return None
     spark = stepped.sparkSession
-    vdf = spark.createDataFrame(viol, schema="k BIGINT")
-    cand = (
+    vdf = frame_from_arrays(spark, {"k": viol})
+    src, dst = collect_columns(
         stepped.join(
             F.broadcast(vdf.withColumnRenamed("k", "src")), "src", "leftsemi"
-        )
-        .unionByName(
+        ).unionByName(
             stepped.join(
                 F.broadcast(vdf.withColumnRenamed("k", "dst")), "dst", "leftsemi"
             ).select("src", "dst")
         )
-        .toPandas()
     )
-    if not len(cand):
+    if not len(src):
         return None
-    verts, roots = _contract_arrays(
-        [cand["src"].to_numpy(dtype=np.int64)], [cand["dst"].to_numpy(dtype=np.int64)]
-    )
+    verts, roots = _contract_arrays([src], [dst])
     changed = roots != verts
     if not changed.any():
         return None
-    return spark.createDataFrame(
-        pd.DataFrame({"_old": verts[changed], "_new": roots[changed]}),
-        schema="_old BIGINT, _new BIGINT",
-    )
+    return frame_from_arrays(spark, {"_old": verts[changed], "_new": roots[changed]})
 
 
 def connected_components(

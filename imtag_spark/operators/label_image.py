@@ -57,9 +57,9 @@ def to_label_image(
     cells: DataFrame, rows: int, cols: int, dtype=np.uint32
 ) -> np.ndarray:
     """Collect a labeled-cell table into a dense array (fixtures/tests only)."""
-    pdf = cells.toPandas()
+    t = cells.select("row", "col", "label").toArrow()
     img = np.zeros((rows, cols), dtype=dtype)
-    img[pdf["row"].to_numpy(), pdf["col"].to_numpy()] = pdf["label"].to_numpy()
+    img[t.column("row").to_numpy(), t.column("col").to_numpy()] = t.column("label").to_numpy()
     return img
 
 

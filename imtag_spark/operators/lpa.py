@@ -13,8 +13,10 @@ collected the same checkpointed table, ``cc.small_edge_arrays``), 19 jobs
 and 3.6 s as a DataFrame loop (BENCH.md, "Driver route"). Larger tables
 run the DataFrame loop: the frequency count is a map-side-combinable
 ``groupBy(vertex,label).count()``, and the argmax is a single
-``max(struct(cnt, -label))`` aggregate rather than a per-vertex window
+``min(struct(-cnt, label))`` aggregate rather than a per-vertex window
 (windows funnel a hot vertex's whole neighborhood through one task).
+The count is what gets negated, so every int64 label, −2^63 included,
+keeps its order with or without ANSI mode.
 """
 
 from __future__ import annotations
@@ -119,15 +121,16 @@ def label_propagation(
         neighbor_labels = sym.join(
             labels.select(F.col("vertex").alias("src"), "label"), "src"
         ).select(F.col("dst").alias("vertex"), "label")
-        # most frequent neighbor label, min label on ties:
-        # max(struct(cnt, -label)) == argmax by (count asc→desc, label desc→asc)
+        # most frequent neighbor label, min label on ties: min(struct(-cnt,
+        # label)) orders by count descending, then label ascending. Negating
+        # the label instead would overflow at -2^63
         freq = neighbor_labels.groupBy("vertex", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
         best = (
             freq.groupBy("vertex")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("b"))
-            .select("vertex", (-F.col("b.neg")).alias("label"))
+            .agg(F.min(F.struct((-F.col("cnt")).alias("neg_cnt"), "label")).alias("b"))
+            .select("vertex", F.col("b.label").alias("label"))
         )
         new_labels = frontier_checkpoint(
             labels.withColumnRenamed("label", "old_label")

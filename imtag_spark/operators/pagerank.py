@@ -21,12 +21,14 @@ Routes, chosen by size (see ``pagerank``):
   ``deg(vertex, out_deg)`` with sinks at 0, from one aggregate over the
   edge endpoints; a second aggregate over it gives ``n`` and the dangling
   mass. The transition table (edges pre-joined with 1/out-degree) is
-  built once and persisted, so every superstep is a single equi-join and
-  one map-side-combinable sum, its physical form (``broadcast_join`` or
-  ``join``) following from ``n`` and the executor count. The next round's
-  dangling mass comes out of the same aggregate as the convergence delta
-  (one job per superstep), and lineage is truncated every round (see
-  cc.py for why that is mandatory).
+  built once, cached hash(src)-partitioned and sorted, so every superstep
+  is a single equi-join that exchanges only the V-row ranks side, and one
+  map-side-combinable sum. This is the one Spark route: a packed rank
+  broadcast was dropped after losing to it in a one-JVM A/B (BENCH.md,
+  "PageRank: one Spark route"). The next round's dangling mass comes out
+  of the same aggregate as the convergence delta (one job per superstep),
+  and lineage is truncated every round (see cc.py for why that is
+  mandatory).
 """
 
 from __future__ import annotations
@@ -40,62 +42,10 @@ from pyspark.sql import functions as F
 from imtag_spark.operators import cc
 from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
-#: broadcast_join runs at or below this vertex count (per-superstep rank
-#: broadcast ≈ 16B × V per executor — 320 MB at the threshold)
-BROADCAST_VERTEX_LIMIT = 20_000_000
-
-#: cluster-size cap on the broadcast_join route: the per-superstep
-#: broadcast ships O(V) bytes to EVERY executor, so its total network cost
-#: is V × executors while the join route's ranks exchange moves O(V) rows
-#: once. Locally (fan-out 1) broadcast_join wins by ~1.2x (BENCH.md r3
-#: A/B); that margin cannot survive a fan-out hundreds of times larger, so
-#: past this executor count the join route runs. The sandbox cannot price
-#: a real network — the constant is deliberately conservative (a
-#: 16-executor fan-out of a gate-sized V is ~5 GB/round).
-AUTO_BROADCAST_EXECUTOR_LIMIT = 16
-
-
-def _cluster_executor_count(spark) -> int:
-    """Executor-JVM count = the broadcast fan-out multiplier the route
-    gate must price. ``spark.executor.instances`` when set (static
-    allocation); otherwise the scheduler's live executor list (dynamic
-    allocation — a point-in-time floor, which is the conservative
-    direction here); local mode has no separate executors and reports 1."""
-    try:
-        inst = spark.sparkContext.getConf().get("spark.executor.instances", None)
-        if inst:
-            return max(1, int(inst))
-    except Exception:
-        pass
-    try:
-        # driver appears in the memory-status map — exclude it
-        n = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1
-        return max(1, n)
-    except Exception:
-        return 1
-
-
-def _auto_prefers_broadcast_join(n_vertices: int, executors: int) -> bool:
-    """The route gate, pure so tests can exercise cluster shapes this
-    sandbox cannot launch: broadcast_join only while BOTH the per-executor
-    broadcast (V) and the cluster fan-out (executors) stay inside the
-    measured-win regime."""
-    return (
-        n_vertices <= BROADCAST_VERTEX_LIMIT
-        and executors <= AUTO_BROADCAST_EXECUTOR_LIMIT
-    )
 
 def _dangling_mass():
     """Total rank held by vertices with no out-edge (0 when there are none)."""
     return F.coalesce(F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0))
-
-
-#: log2 of the rank-packing block size for the broadcast_join superstep:
-#: 2^4 = 16 ranks per packed map row (see the packing comment in
-#: ``pagerank``). Chosen so the O(block) map probe per edge stays a few
-#: cache-resident int64 comparisons while the driver-side broadcast build
-#: shrinks 16x.
-_PACK_BITS = 4
 
 
 def _driver_pagerank(
@@ -173,38 +123,33 @@ def pagerank(
     dropped; duplicate edges are counted once (set semantics, matching the
     oracle).
 
-    The route comes from the edge count, then from V and the executor
-    count:
+    The route comes from the edge count:
     - ``driver`` when the table has at most ``cc.FUNNEL_EDGE_LIMIT`` rows
       (``cc.small_edge_arrays``: one count job and one Arrow collect of at
       most ~16 MB, or no job when the same checkpointed table was
       collected already). The whole power iteration runs in NumPy, one
       ``np.bincount`` per superstep, and the ranks come back as a
       DataFrame. On a fresh 10^5-edge corpus table it runs 3 Spark jobs
-      where the loops below run 25 (BENCH.md, "Driver route").
-    - ``broadcast_join`` when V ≤ BROADCAST_VERTEX_LIMIT and the executor
-      count is ≤ AUTO_BROADCAST_EXECUTOR_LIMIT. Transitions are cached
-      hash(dst)-partitioned; each superstep broadcasts the ranks, packed
-      16 per row, into them. Neither join side nor the ``groupBy(dst)``
-      aggregate exchanges, so the E-row side never moves and the superstep
-      stays in whole-stage codegen. The V gate rests on the 64M-edge A/B:
-      broadcast_join 21.4M vs join 17.7M edges/s per steady superstep
-      (BENCH.md, round 3). The executor gate prices a broadcast fan-out
-      that grows with the cluster.
-    - ``join`` otherwise, the only route above the V gate. Transitions are
-      cached hash(src)-partitioned; each superstep exchanges the V-row
-      ranks to meet them and the map-side-combined contributions to the
-      dst aggregate.
+      where the Spark loop runs 25 (BENCH.md, "Driver route").
+    - ``join`` otherwise. Transitions are cached hash(src)-partitioned;
+      each superstep exchanges the V-row ranks to meet them and the
+      map-side-combined contributions to the dst aggregate. It beat a
+      route that cached transitions by dst and broadcast the ranks packed
+      16 per row: in one JVM at ``local[4]``, set-up plus 3 supersteps
+      took 12.85 s against 15.05 s at 2M edges (faster in 9/10 pairs) and
+      48.22 s against 59.09 s at 8M (10/10), with the same vertices and
+      ranks within 1.1e-15 relative (BENCH.md, "PageRank: one Spark
+      route"; ``bench/pagerank_route_ab.py``).
 
-    Every route keeps rank state ``(vertex, has_out, rank)`` in the same
-    schema, so a ``checkpointer`` works with any of them, and a state
-    saved by one route resumes on another: every ``checkpoint_every``
+    Both routes keep rank state ``(vertex, has_out, rank)`` in the same
+    schema, so a ``checkpointer`` works with either, and a state saved by
+    one route resumes on the other: every ``checkpoint_every``
     supersteps the state is saved, and a call whose checkpointer holds a
     saved step resumes from it, numbering supersteps on from that step (up
     to ``max_iter`` in all). ``metrics_out`` gets ``supersteps``,
     ``superstep_times`` (one per superstep run by this call), ``mode``,
-    the route that ran, and on the Spark routes ``contribs_plan`` (the
-    first such superstep's physical plan).
+    the route that ran, and on ``join`` ``contribs_plan`` (the first
+    superstep's physical plan).
     """
     small = cc.small_edge_arrays(edges)
     if small is not None:
@@ -249,10 +194,6 @@ def pagerank(
         ranks = ranks.withColumn("rank", F.lit(1.0 / n))
         dangling /= n
 
-    use_bjoin = _auto_prefers_broadcast_join(
-        n, _cluster_executor_count(edges.sparkSession)
-    )
-
     # Transition table: one row per edge with its 1/out_deg weight — built
     # once, reused every superstep. CRITICAL for scale: persist it
     # hash-partitioned AND sorted on the superstep join key. A cached
@@ -261,41 +202,14 @@ def pagerank(
     # re-exchanged and re-sorted all E rows every superstep); with the
     # cache, each superstep exchanges only the V-row ranks side while the
     # E-row side never moves again.
-    #
-    # broadcast_join flips the cached partitioning to ``dst`` (the agg
-    # key): the superstep's gather join is then a broadcast hash join (no
-    # exchange on either side) whose output still carries the cached dst
-    # partitioning, so the groupBy(dst) needs no exchange either — the
-    # E-row side never moves AND never re-aggregates across the wire. No
-    # sortWithinPartitions: hash join + hash agg don't consume ordering.
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    transitions = e.join(
-        deg.where(F.col("out_deg") > 0).withColumnRenamed("vertex", "src"), "src"
-    ).select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-    if use_bjoin:
-        # Hash-block packing for the per-superstep rank broadcast. A naive
-        # broadcast of the V-row ranks serializes the superstep on the
-        # driver: BroadcastExchange collects V rows and builds the hashed
-        # relation single-threaded — measured 1.7-2.1 s per superstep at
-        # V=4M (stage-gap decomposition, BENCH.md r4), an Amdahl term that
-        # alone capped N→4N scaling at ~0.55. Packing 2^PACK_BITS ranks
-        # per row (block = hash(vertex) mod nblocks, so density is
-        # guaranteed for ANY id distribution — dense ranges and sparse
-        # 64-bit hash ids alike) shrinks the driver-side build to V/16
-        # rows; the per-edge cost moves into the already-parallel join as
-        # an O(block) map probe in codegen. The blk column is computed
-        # once here, cached with the transitions.
-        nblocks = max(1, (n + (1 << _PACK_BITS) - 1) >> _PACK_BITS)
-        transitions = transitions.withColumn(
-            "blk", F.pmod(F.xxhash64("src"), F.lit(nblocks))
-        )
-        transitions = transitions.repartition(n_part, "dst").persist()
-    else:
-        transitions = (
-            transitions.repartition(n_part, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
+    transitions = (
+        e.join(deg.where(F.col("out_deg") > 0).withColumnRenamed("vertex", "src"), "src")
+        .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
+        .repartition(n_part, "src")
+        .sortWithinPartitions("src")
+        .persist()
+    )
     transitions.count()  # materialize the cache before timing supersteps
 
     base = (1.0 - alpha) / n
@@ -305,37 +219,12 @@ def pagerank(
     prev_ck = deg
     for it in range(start, max_iter):
         t0 = time.time()
-        if use_bjoin:
-            # parallel packing agg (V rows → V/16 map rows), broadcast of
-            # the small packed table, probe inside whole-stage codegen;
-            # groupBy(dst) still reuses the cached dst partitioning — the
-            # E-row side neither exchanges nor leaves the JVM
-            packed = (
-                ranks.select(
-                    F.pmod(F.xxhash64("vertex"), F.lit(nblocks)).alias("blk"),
-                    F.struct(
-                        F.col("vertex").alias("k"), F.col("rank").alias("v")
-                    ).alias("kv"),
-                )
-                .groupBy("blk")
-                .agg(F.map_from_entries(F.collect_list("kv")).alias("rmap"))
-            )
-            contribs = (
-                transitions.join(F.broadcast(packed), "blk")
-                .groupBy("dst")
-                .agg(
-                    F.sum(
-                        F.col("rmap")[F.col("src")] * F.col("w")
-                    ).alias("contrib")
-                )
-            )
-        else:
-            ranks_side = ranks.select(F.col("vertex").alias("src"), "rank")
-            contribs = (
-                transitions.join(ranks_side, "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-            )
+        ranks_side = ranks.select(F.col("vertex").alias("src"), "rank")
+        contribs = (
+            transitions.join(ranks_side, "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+        )
         if metrics_out is not None and it == start:
             # first-superstep physical plan, for the plan-quality tests
             # (asserts the cached E-row side never re-exchanges)
@@ -382,7 +271,7 @@ def pagerank(
         if metrics_out is not None:
             metrics_out.setdefault("superstep_times", []).append(time.time() - t0)
             metrics_out["supersteps"] = it + 1
-            metrics_out["mode"] = "broadcast_join" if use_bjoin else "join"
+            metrics_out["mode"] = "join"
         ranks = new_ranks
         if delta < tol:
             break

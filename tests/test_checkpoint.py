@@ -119,8 +119,7 @@ def test_manifest_records_true_witnesses_when_patch_fires(
     )
 
 
-@pytest.mark.parametrize("route", ["broadcast_join", "join"])
-def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route):
+def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch):
     # kill a 6-superstep PageRank after superstep 3 and resume it from the
     # durable frontier: the resumed run continues the step numbering, runs
     # only the missing supersteps and lands on the uninterrupted ranks
@@ -128,8 +127,6 @@ def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route)
     import imtag_spark.operators.pagerank as pr_mod
 
     monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    if route == "join":
-        monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(5)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(70, 2))}
     pairs |= {(3, 100), (4, 101)}  # sinks: the dangling mass must resume too
@@ -143,7 +140,7 @@ def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route)
         r.vertex: r.rank
         for r in pr_mod.pagerank(edges, checkpointer=full, metrics_out=m, **kw).collect()
     }
-    assert m["mode"] == route and m["supersteps"] == 6
+    assert m["mode"] == "join" and m["supersteps"] == 6
 
     kill_at = 3
     manifest = json.loads(full.manifest_path.read_text())
@@ -159,7 +156,7 @@ def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch, route)
             edges, checkpointer=resumed_ckpt, metrics_out=m, **kw
         ).collect()
     }
-    assert m["mode"] == route
+    assert m["mode"] == "join"
     assert m["supersteps"] == 6 and len(m["superstep_times"]) == 6 - kill_at
     manifest = json.loads(resumed_ckpt.manifest_path.read_text())
     assert manifest["last_step"] == 6
@@ -179,7 +176,7 @@ def _kill_after(ckpt: SuperstepCheckpointer, step: int) -> None:
 
 @pytest.mark.parametrize(
     "first, then",
-    [("driver", "broadcast_join"), ("broadcast_join", "driver"), ("driver", "driver")],
+    [("driver", "join"), ("join", "driver"), ("driver", "driver")],
 )
 def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, then):
     # every route saves the same (vertex, has_out, rank) state, so a run
@@ -188,7 +185,7 @@ def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, the
     import imtag_spark.operators.cc as cc
     import imtag_spark.operators.pagerank as pr_mod
 
-    gate = {"driver": 1_000_000, "broadcast_join": 0}
+    gate = {"driver": 1_000_000, "join": 0}
     rng = np.random.default_rng(5)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(70, 2))}
     pairs |= {(3, 100), (4, 101)}  # sinks: the dangling mass must resume too

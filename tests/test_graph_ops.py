@@ -469,34 +469,12 @@ def test_pagerank_vs_numpy(spark, directed):
 
 
 @pytest.mark.parametrize("directed", [True, False])
-def test_pagerank_broadcast_join_mode_vs_numpy(spark, monkeypatch, directed):
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    rng = np.random.default_rng(37)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    metrics = {}
-    got = {r.vertex: r.rank for r in pagerank(
-        e, directed=directed, tol=1e-8, max_iter=200,
-        metrics_out=metrics).collect()}
-    assert metrics["mode"] == "broadcast_join"
-    want = numpy_pagerank(pairs, [], directed=directed)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-@pytest.mark.parametrize("directed", [True, False])
 def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
-    # BROADCAST_VERTEX_LIMIT=0 forces the join route; vertices 40-47 only
-    # receive edges, so the directed graph has dangling vertices
+    # vertices 40-47 only receive edges, so the directed graph has
+    # dangling vertices
     import imtag_spark.operators.cc as cc_mod
-    import imtag_spark.operators.pagerank as pr_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(53)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 40, size=(120, 2)) if a != b}
     pairs |= {(int(a), 40 + i) for i, a in enumerate(rng.integers(0, 40, size=8))}
@@ -513,104 +491,53 @@ def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_auto_mode_routes_and_matches(spark, monkeypatch):
-    # the route is chosen from the measured vertex count: broadcast_join
-    # within the V gate, join above it, and both give the same ranks
-    import imtag_spark.operators.cc as cc_mod
-    import imtag_spark.operators.pagerank as pr_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    rng = np.random.default_rng(43)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 50, size=(240, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    m: dict = {}
-    a = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=8, metrics_out=m).collect()}
-    assert m["mode"] == "broadcast_join"
-    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
-    m2: dict = {}
-    j = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=8, metrics_out=m2).collect()}
-    assert m2["mode"] == "join"
-    assert set(a) == set(j)
-    for v in j:
-        assert abs(j[v] - a[v]) <= 1e-12 * max(1.0, abs(j[v]))
-
-
-def test_pagerank_broadcast_join_matches_join_mode(spark, monkeypatch):
-    # identical DataFrame arithmetic, different physical strategy. NOT bit-equal by
-    # design: the partial aggregates sum each dst's contributions in a
-    # different grouping (src-partitioned vs dst-partitioned input), so
-    # float rounding can differ in the last ulp — demand agreement far
-    # below the 1e-6 oracle tolerance instead
-    import imtag_spark.operators.cc as cc_mod
-    import imtag_spark.operators.pagerank as pr_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    rng = np.random.default_rng(41)
-    pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 60, size=(300, 2)) if a != b})
-    e = edges_df(spark, pairs)
-    m: dict = {}
-    bj = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=12, metrics_out=m).collect()}
-    assert m["mode"] == "broadcast_join"
-    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
-    m2: dict = {}
-    j = {r.vertex: r.rank for r in pagerank(
-        e, tol=0.0, max_iter=12, metrics_out=m2).collect()}
-    assert m2["mode"] == "join"
-    assert set(j) == set(bj)
-    for v in j:
-        assert abs(j[v] - bj[v]) <= 1e-12 * max(1.0, abs(j[v]))
-
-
-def test_pagerank_broadcast_join_superstep_never_exchanges_edges(spark, monkeypatch):
-    # the whole point of the mode: the E-row transitions side is cached
-    # hash(dst)-partitioned, the ranks side arrives via BroadcastExchange,
-    # and the groupBy(dst) reuses the cached partitioning — so the
-    # superstep plan must contain NO shuffle Exchange at all
+def test_pagerank_join_superstep_never_reexchanges_transitions(spark, monkeypatch):
+    # the E-row transitions are cached hash(src)-partitioned and sorted, so
+    # a superstep may exchange the V-row ranks side to meet them (and the
+    # contributions to the dst aggregate) but never the cache again.
+    # Broadcast joins are off while planning so this small graph plans the
+    # shuffled join a large one gets.
     import imtag_spark.operators.cc as cc_mod
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
     e = edges_df(spark, [(a, b) for a in range(30) for b in range(a + 1, 30, 3)])
-    metrics = {}
-    pagerank(e, tol=0.0, max_iter=2, metrics_out=metrics)
-    assert metrics["mode"] == "broadcast_join"
-    plan = metrics["contribs_plan"]
-    assert "BroadcastHashJoin" in plan
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        metrics = {}
+        pagerank(e, tol=0.0, max_iter=2, metrics_out=metrics)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert metrics["mode"] == "join"
+    plan = metrics["contribs_plan"].splitlines()
     # the cached InMemoryRelation prints its one-time BUILD plan (which
-    # legitimately shuffles) as a subtree; the superstep proper is
-    # everything above it: final agg <- partial agg <- project <-
-    # broadcast join <- cache scan, and none of that may exchange
-    superstep = plan.splitlines()
-    cache_at = next(
-        (i for i, ln in enumerate(superstep) if "InMemoryRelation" in ln), None
-    )
+    # legitimately shuffles) as a subtree, between the join's cache side
+    # and its ranks side
+    cache_at = next((i for i, ln in enumerate(plan) if "InMemoryRelation" in ln), None)
     assert cache_at is not None, (
         "plan no longer prints the cached transitions as an InMemoryRelation "
-        "subtree — update the superstep/build split:\n" + plan
+        "subtree — update the superstep/build split:\n" + "\n".join(plan)
     )
-    superstep = superstep[:cache_at]
-    shuffle_exchanges = [
-        ln for ln in superstep
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-    ]
-    assert shuffle_exchanges == [], shuffle_exchanges
+    join_at = next(i for i, ln in enumerate(plan) if "SortMergeJoin" in ln)
+    cache_side = plan[join_at + 1 : cache_at]
+    assert not any("Exchange" in ln or "Sort [" in ln for ln in cache_side), cache_side
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    ranks_side = [ln for ln in plan[cache_at + 1 :] if depth(ln) < depth(plan[cache_at])]
+    induced = [ln for ln in ranks_side if "Exchange" in ln]
+    assert len(induced) <= 1, ranks_side
+    assert all("hashpartitioning(src" in ln for ln in induced), induced
 
 
-@pytest.mark.parametrize("route", ["broadcast_join", "join"])
-def test_pagerank_broadcast_join_supports_checkpointer(
-    spark, tmp_path, monkeypatch, route
-):
-    # rank state stays a DataFrame on both routes, so durable
+def test_pagerank_supports_checkpointer(spark, tmp_path, monkeypatch):
+    # rank state stays a DataFrame on the Spark route, so durable
     # checkpoint/resume must keep working
     import imtag_spark.operators.cc as cc_mod
-    import imtag_spark.operators.pagerank as pr_mod
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
     monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-    if route == "join":
-        monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     rng = np.random.default_rng(43)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 20, size=(60, 2)) if a != b})
     e = edges_df(spark, pairs)
@@ -619,7 +546,7 @@ def test_pagerank_broadcast_join_supports_checkpointer(
     got = {r.vertex: r.rank for r in pagerank(
         e, tol=1e-8, max_iter=100, checkpointer=ckpt, checkpoint_every=2,
         metrics_out=m).collect()}
-    assert m["mode"] == route
+    assert m["mode"] == "join"
     assert ckpt.manifest_path.exists()
     want = numpy_pagerank(pairs, [], directed=True)
     for v in want:
@@ -692,10 +619,32 @@ def _hostile_inputs() -> dict[str, list[tuple[int, int]]]:
         "sinks": sinks,
         # a null endpoint beside an id that float64 cannot hold exactly
         "null_endpoint": [(1, 2), (2, None), (3, 4), (2**62 + 1, 1)],
+        # both ends of BIGINT: no id may be negated or offset
+        "bigint_limits": [(-(2**63), 5), (5, 7), (7, 9), (9, 11), (11, 2**63 - 1)],
     }
 
 
 HOSTILE = _hostile_inputs()
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("route", ROUTES)
+def test_lpa_bigint_limits_with_and_without_ansi(spark, route, ansi):
+    # after one round vertex 5 holds a tie between -2^63 and 7; the smaller
+    # wins whether or not ANSI mode checks the loop's arithmetic
+    pairs = HOSTILE["bigint_limits"]
+    e = edges_df(spark, pairs)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        for max_iter in (1, 4):
+            with _on_route(route) as taken:
+                rows = label_propagation(e, max_iter=max_iter).collect()
+            assert taken == [route]
+            got = {r.vertex: r.label for r in rows}
+            assert got == oracle_lpa(pairs, max_iter), max_iter
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 @pytest.mark.parametrize("case", sorted(HOSTILE))
@@ -953,42 +902,6 @@ def test_cc_patch_round_path_graph(spark, monkeypatch):
     assert len(labels) == n
     comps = {r["component"] for r in labels}
     assert comps == {0}, f"single path component must label 0, got {sorted(comps)[:5]}"
-
-
-def test_pagerank_auto_gate_prices_cluster():
-    # r4 VERDICT "what's wrong" #4: the per-superstep broadcast costs
-    # O(V × executors) — auto must see the cluster, not just V. Pure
-    # function so the many-executor shapes this sandbox cannot launch are
-    # still exercised.
-    from imtag_spark.operators.pagerank import (
-        AUTO_BROADCAST_EXECUTOR_LIMIT,
-        BROADCAST_VERTEX_LIMIT,
-        _auto_prefers_broadcast_join,
-    )
-
-    assert _auto_prefers_broadcast_join(1_000_000, 1)
-    assert _auto_prefers_broadcast_join(1_000_000, AUTO_BROADCAST_EXECUTOR_LIMIT)
-    # a high-executor conf routes to join even for gate-sized V
-    assert not _auto_prefers_broadcast_join(1_000_000, 200)
-    assert not _auto_prefers_broadcast_join(BROADCAST_VERTEX_LIMIT + 1, 1)
-
-
-def test_pagerank_auto_local_mode_unchanged(spark, monkeypatch):
-    # local mode has no separate executors → fan-out 1 → auto keeps the
-    # measured-best broadcast_join path (era continuity for the scaling
-    # samples: recorded pagerank_mode must stay broadcast_join)
-    import imtag_spark.operators.cc as cc_mod
-    from imtag_spark.operators.pagerank import _cluster_executor_count
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
-
-    assert _cluster_executor_count(spark) == 1
-    edges = spark.range(200).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    m: dict = {}
-    pagerank(edges, directed=True, tol=0.0, max_iter=2, metrics_out=m).count()
-    assert m["mode"] == "broadcast_join"
 
 
 def test_materialized_scan_requires_deterministic_projection(spark):

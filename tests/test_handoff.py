@@ -5,7 +5,8 @@ returned: the same schema, field for field with nullability, and the same
 rows in the same order, while its plan holds no local relation of more
 than ``defaultParallelism`` rows and runs no Python worker, below Spark's
 Arrow local-relation threshold and above it. A lint keeps it the only
-hand-off of driver arrays under ``operators/`` and ``plans/``.
+hand-off of driver arrays under ``operators/`` and ``plans/``, and keeps
+``toPandas`` out of both: their collects read Arrow.
 """
 
 from __future__ import annotations
@@ -207,9 +208,10 @@ def _is_arrow_expr(node: ast.AST, names: set[str]) -> bool:
     return isinstance(f, ast.Name) and f.id == "pa"
 
 
-class _ArrowHandOffs(ast.NodeVisitor):
+class _HandOffs(ast.NodeVisitor):
     """Collects ``function:line`` of each ``createDataFrame`` call whose
-    first argument is an Arrow table, outside ``frame_from_arrays``."""
+    first argument is an Arrow table, outside ``frame_from_arrays``, and
+    of each ``toPandas`` call."""
 
     def __init__(self, names: set[str]) -> None:
         self.names, self.stack, self.found = names, [], []
@@ -220,9 +222,9 @@ class _ArrowHandOffs(ast.NodeVisitor):
         self.stack.pop()
 
     def visit_Call(self, node: ast.Call) -> None:
-        if (
-            isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
+        attr = node.func.attr if isinstance(node.func, ast.Attribute) else None
+        if attr == "toPandas" or (
+            attr == "createDataFrame"
             and node.args
             and _is_arrow_expr(node.args[0], self.names)
             and "frame_from_arrays" not in self.stack
@@ -231,11 +233,12 @@ class _ArrowHandOffs(ast.NodeVisitor):
         self.generic_visit(node)
 
 
-def arrow_create_data_frame_calls(source: str) -> list[str]:
+def handoff_calls(source: str) -> list[str]:
     """``function:line`` of every ``createDataFrame`` call on an Arrow
-    table in ``source``, outside ``frame_from_arrays``."""
+    table in ``source``, outside ``frame_from_arrays``, and of every
+    ``toPandas`` call."""
     tree = ast.parse(source)
-    finder = _ArrowHandOffs(_arrow_names(tree))
+    finder = _HandOffs(_arrow_names(tree))
     finder.visit(tree)
     return finder.found
 
@@ -249,17 +252,22 @@ def test_lint_flags_an_arrow_create_data_frame():
         "    return spark.createDataFrame(state)\n"
         "def frame_from_arrays(spark, a):\n"
         "    return spark.createDataFrame(pa.table({'a': a}))\n"
+        "def patch(df):\n"
+        "    return df.select('k').toPandas()\n"
     )
-    assert arrow_create_data_frame_calls(bad) == ["route:2", "save:5"]
-    ok = "def f(spark, rows):\n    return spark.createDataFrame(rows, 'a INT')\n"
-    assert arrow_create_data_frame_calls(ok) == []
+    assert handoff_calls(bad) == ["route:2", "save:5", "patch:9"]
+    ok = (
+        "def f(spark, rows):\n    return spark.createDataFrame(rows, 'a INT')\n"
+        "def g(df):\n    return df.select('k').toArrow()\n"
+    )
+    assert handoff_calls(ok) == []
 
 
 def test_driver_arrays_reach_spark_only_through_frame_from_arrays():
     found = {}
     for sub in ("operators", "plans"):
         for path in sorted((PACKAGE / sub).glob("*.py")):
-            calls = arrow_create_data_frame_calls(path.read_text())
+            calls = handoff_calls(path.read_text())
             if calls:
                 found[f"{sub}/{path.name}"] = calls
     assert found == {}
