@@ -8,7 +8,7 @@ graph callers do:
 - ``create``: ``spark.createDataFrame(pa.table(...))``, one JVM row per
   record in a ``LocalRelation`` that the checkpoint's tasks get through
   ``parallelize``;
-- ``helper``: ``cc.frame_from_arrays``. Below Spark's Arrow
+- ``helper``: ``driver.frame_from_arrays``. Below Spark's Arrow
   local-relation threshold (48 MB) that is at most
   ``defaultParallelism`` ``list<struct>`` rows expanded by ``inline``
   inside Catalyst; above it, the flat ``createDataFrame``, which then
@@ -16,7 +16,7 @@ graph callers do:
   run the same code, and the A/B shows that the hand-off completes.
 
 Sizes: 251,652 rows (the 1024² ``grid_ccl`` run table) and 4,000,000
-rows (``cc.SMALL_GRAPH_EDGE_LIMIT``), three BIGINT columns like
+rows (``driver.SMALL_GRAPH_EDGE_LIMIT``), three BIGINT columns like
 ``label_runs``' dense labels. The session is set up as
 ``perfbench/run.py`` sets up its own (``local[nproc]``, at most 8 cores,
 2 GB driver heap, files under ``.perfbench_work/``). Reps alternate which
@@ -87,7 +87,7 @@ def main() -> int:
     import pyarrow as pa
     from pyspark import SparkContext
 
-    from imtag_spark.operators.cc import frame_from_arrays
+    from imtag_spark.operators.driver import frame_from_arrays
     from imtag_spark.plans.checkpoint import free_local_checkpoint
     from imtag_spark.session import get_spark
 

@@ -35,7 +35,10 @@ from contextlib import contextmanager
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(ROOT))
+# appended, not prepended: a caller that put another checkout's imtag_spark
+# on sys.path first keeps it
+if str(ROOT) not in sys.path:
+    sys.path.append(str(ROOT))
 
 from perfbench.run import DRIVER_MEMORY, MAX_CORES, stop  # noqa: E402
 from perfbench.trace import Spans  # noqa: E402

@@ -73,7 +73,7 @@ def main() -> int:
     args = ap.parse_args()
     engine = args.engine.resolve()
     sys.path.insert(0, str(ROOT / "bench"))
-    from layer_cpu import cpu_split  # puts ROOT on sys.path
+    from layer_cpu import cpu_split
 
     from perfbench.run import stop
 

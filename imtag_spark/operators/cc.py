@@ -2,9 +2,10 @@
 
 Generalizes the reference's pass-2 union-find label merge
 (src/SegmentImageImpl.cpp:78-116 driving src/disjoint_set.hpp:125-137 in
-the reference). A graph whose init count is at most FUNNEL_EDGE_LIMIT
-rows is collected to the driver (``small_edge_arrays``, shared with
-PageRank, LPA and triangles) and solved by one NumPy union-find pass, the
+the reference). A graph whose init count is at most
+``driver.FUNNEL_EDGE_LIMIT`` rows is collected to the driver
+(``driver.small_edge_arrays``, shared with PageRank, LPA and triangles)
+and solved by one NumPy union-find pass (``driver._contract_arrays``), the
 direct analog of the reference's single-address-space merge; a graph a
 caller hints small (``single_partition``) gets the same pass inside one
 coalesced task. Larger graphs run star rounds (Kiveris et al.,
@@ -13,7 +14,7 @@ large star over the oriented edge set followed by two partition-local
 union-find contractions inside Arrow UDFs, and a convergence certificate
 decides whether another round is needed. A near-terminal tail of chains
 is resolved driver-side instead of by one more round, and a frontier back
-under FUNNEL_EDGE_LIMIT rows is collected and finished on the driver. The
+under the same gate is collected and finished on the driver. The
 labels are one min-aggregate over the final forest's endpoints and the
 input's self-loops, which lists every vertex once (the reference's one
 canonicalize-and-group sweep, src/SegmentImageImpl.cpp:9-24).
@@ -39,14 +40,19 @@ Scale design:
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imtag_spark.operators import driver
+
+# perfbench/workloads.py imports SMALL_GRAPH_EDGE_LIMIT from this module until
+# ROADMAP item 2 deletes the constant. Nothing sets it, so this copy cannot go
+# stale; the row gate, FUNNEL_EDGE_LIMIT, is read as driver.FUNNEL_EDGE_LIMIT.
+from imtag_spark.operators.driver import SMALL_GRAPH_EDGE_LIMIT  # noqa: F401
 from imtag_spark.plans.checkpoint import (
     free_local_checkpoint,
     frontier_checkpoint,
@@ -70,155 +76,6 @@ EDGE_SCHEMA = "src BIGINT, dst BIGINT"
 #: output stays a valid spanning relabeling). The one-task pass never
 #: chunks: its gates bound its input instead.
 LOCAL_CONTRACT_CHUNK = 8_000_000
-
-#: cell-count bound under which ``label_runs`` labels a grid on the driver
-#: without counting its runs (a grid has fewer runs than cells). A grid's
-#: runs plus their adjacency edges stay below ~1.5 × cells, so one NumPy
-#: union-find reads at most ~6M rows: a few serial seconds (a 4.0M-row
-#: one-task pass took ~6 s, BENCH.md "Frontier funnel").
-SMALL_GRAPH_EDGE_LIMIT = 4_000_000
-
-#: input-row bound for the driver solve. ``connected_components`` collects
-#: the input and returns one NumPy union-find pass over it as the labels
-#: when the init job counts at most this many rows; later rounds funnel
-#: their frontier onto the driver under the same bound. The solve is a
-#: SERIAL tail: at a 4.0M-row frontier one pass cost ~6 s at any
-#: parallelism (transit + one union-find), barely beating a distributed
-#: round at local[32] (7.5 s) and flattening the core-count response; at
-#: ≤1M rows (~16 MB) it runs well under a distributed round's ~2-3 s
-#: scheduling floor.
-FUNNEL_EDGE_LIMIT = 1_000_000
-
-
-#: the last small table collected from a DataFrame whose rows cannot change
-#: when re-read: ``(weak reference to it, columns, rows counted, arrays)``
-_last_small: tuple[weakref.ref, tuple[str, ...], int, tuple[np.ndarray, ...]] | None = None
-
-#: the edge table's columns, in the order the NumPy kernels read them
-EDGE_COLUMNS = ("src", "dst")
-
-
-def _fixed_rows_plan(df: DataFrame):
-    """``df``'s analyzed plan when it is a bare materialized checkpoint or
-    local relation (no projection or filter above it): re-reading it gives
-    the same rows. Otherwise ``None``: a file scan or a plain RDD may give
-    other rows on the next read. A driver route's output
-    (``frame_from_arrays``) is a ``Generate`` over a local relation, or
-    above Spark's Arrow local-relation threshold an uncheckpointed
-    ``LogicalRDD``; neither is counted without ``DataFrame.count()`` or
-    remembered, and every in-repo caller checkpoints it before reading it
-    again."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LocalRelation" or (
-            plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed()
-        ):
-            return plan
-    except Exception:
-        pass
-    return None
-
-
-def collect_columns(
-    df: DataFrame, cols: tuple[str, ...] = EDGE_COLUMNS
-) -> tuple[np.ndarray, ...]:
-    """The named columns as NumPy arrays in their own integer type, by one
-    Arrow collect. A row with a null in any of them is dropped: an edge
-    with a null endpoint names no vertex pair, and every Spark route drops
-    it too."""
-    t = df.select(*cols).toArrow()
-    if any(t.column(c).null_count for c in cols):
-        t = t.drop_null()
-    return tuple(t.column(c).to_numpy() for c in cols)
-
-
-def frame_from_arrays(
-    spark: SparkSession, columns: dict[str, np.ndarray], not_null: tuple[str, ...] = ()
-) -> DataFrame:
-    """Equal-length driver arrays → a DataFrame with one column each, rows
-    in array order: ``collect_columns``' inverse, and every driver route's
-    way back to Spark. A column takes its array's type and is nullable
-    unless ``not_null`` names it.
-
-    Below Spark's Arrow local-relation threshold (48 MB by default), where
-    ``createDataFrame`` on the flat table builds one JVM row per record on
-    the driver, the rows cross as at most ``defaultParallelism`` rows of
-    one ``list<struct>`` Arrow column, consecutive slices of the arrays,
-    and ``inline`` expands them inside Catalyst: one slice per task, in
-    whole-stage codegen, with no Python worker. A 251,652-row hand-off
-    plus an eager checkpoint took 0.56–2.94 CPU-s this way and 1.52–12.22
-    the flat way. Above the threshold ``createDataFrame`` already ships
-    the flat table's Arrow batches to the tasks, and that is used: at 4M
-    rows it took 2.53–3.37 CPU-s against 7.14–9.74 inlined (BENCH.md,
-    "Columnar hand-off")."""
-    arrays = {c: pa.array(a) for c, a in columns.items()}
-    fields = [pa.field(c, a.type, nullable=c not in not_null) for c, a in arrays.items()]
-    flat = pa.Table.from_arrays(list(arrays.values()), schema=pa.schema(fields))
-    if flat.nbytes > spark._jsparkSession.sessionState().conf().arrowLocalRelationThreshold():
-        return spark.createDataFrame(flat)
-    rows = pa.StructArray.from_arrays(list(arrays.values()), fields=fields)
-    k = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
-    offsets = pa.array(np.linspace(0, len(rows), k + 1).astype(np.int32))
-    item = pa.field("item", rows.type, nullable=False)
-    slices = pa.ListArray.from_arrays(offsets, rows, type=pa.list_(item))
-    return spark.createDataFrame(pa.table({"_rows": slices})).select(F.inline("_rows"))
-
-
-def count_small(
-    df: DataFrame, cols: tuple[str, ...] = EDGE_COLUMNS, remember: bool = False
-) -> tuple[int, tuple[np.ndarray, ...] | None]:
-    """``(rows, arrays or None)``: the named columns (``collect_columns``)
-    when ``df`` has at most FUNNEL_EDGE_LIMIT rows, read at call time. The
-    table remembered from an earlier call on the same object and columns
-    costs no job. Otherwise the rows are counted: a local relation by the
-    size of its data (no job), a bare materialized checkpoint by counting
-    its RDD (one job, no shuffle), anything else by ``DataFrame.count()``
-    (two jobs under AQE). Under the gate one Arrow collect follows, which
-    ``remember`` keeps when the table holds fixed rows, replacing any
-    earlier one."""
-    global _last_small
-    hit = _last_small
-    if hit is not None and hit[0]() is df and hit[1] == cols:
-        n = hit[2]
-        return n, hit[3] if n <= FUNNEL_EDGE_LIMIT else None
-    fixed = _fixed_rows_plan(df)
-    if fixed is None:
-        n = df.count()
-    elif fixed.nodeName() == "LocalRelation":
-        n = fixed.data().size()
-    else:
-        n = fixed.rdd().count()
-    if n > FUNNEL_EDGE_LIMIT:
-        return n, None
-    arrays = collect_columns(df, cols)
-    if remember and fixed is not None:
-        # callers share the arrays: none may write to them
-        for a in arrays:
-            a.flags.writeable = False
-
-        def _forget(ref):
-            global _last_small
-            if _last_small is not None and _last_small[0] is ref:
-                _last_small = None
-
-        _last_small = (weakref.ref(df, _forget), cols, n, arrays)
-    return n, arrays
-
-
-def small_edge_arrays(edges: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
-    """``(src, dst)`` on the driver as NumPy arrays when ``edges`` has at
-    most FUNNEL_EDGE_LIMIT rows (read at call time), else ``None``; edges
-    with a null endpoint are dropped. The gate CC, PageRank, LPA and
-    triangles share.
-
-    The first call on a table costs one count job and, under the gate, one
-    Arrow collect of at most ~16 MB. When the table is a bare materialized
-    checkpoint or local relation, its arrays (read-only) are kept until the
-    next such collect or until the DataFrame object is garbage-collected,
-    whichever comes first, and later calls on the same object run no job:
-    the four operators on one checkpointed 10^5-edge table run 4 Spark
-    jobs instead of 14 (BENCH.md, "One collect" and "Grid on the driver")."""
-    return count_small(edges, remember=True)[1]
 
 
 #: rows per emitted Arrow batch from the contraction (bounds JVM-side
@@ -253,7 +110,7 @@ def _local_contract_fn(chunk: int | None):
         buffered = 0
 
         def _emit():
-            verts, roots = _contract_arrays(srcs, dsts)
+            verts, roots = driver._contract_arrays(srcs, dsts)
             out = pa.record_batch(
                 [pa.array(verts), pa.array(roots)], names=["src", "dst"]
             )
@@ -277,59 +134,6 @@ def _local_contract_fn(chunk: int | None):
 
     return _batches
 
-
-def _contract_arrays(
-    srcs: list[np.ndarray], dsts: list[np.ndarray]
-) -> tuple[np.ndarray, np.ndarray]:
-    """Union-find over edge chunks → ``(vertex, component min)`` as int64,
-    one row per distinct vertex, vertices sorted ascending. Ids keep the
-    integer type they arrive in (BIGINT → int64, so any 64-bit id is
-    exact; an INT edge table stays int32) and leave as int64 to match
-    ``EDGE_SCHEMA``; only the internal index arrays are narrowed, see
-    below."""
-    src = np.concatenate(srcs)
-    dst = np.concatenate(dsts)
-    verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    # The hooking loop below is pure random-gather (p[a], p[p], minimum.at)
-    # over index arrays; its budget is the memory system, not FLOPs. Indices
-    # are bounded by len(verts) ≤ 2 × chunk ≪ 2^31, so they fit int32 —
-    # halving the gather traffic and the p-array cache footprint. Measured
-    # under 32-way task contention (this host's actual execution regime at
-    # local[32]): 23 s → 2.7 s per 2M-edge/4M-vertex task, 8.6×; single-task
-    # time unchanged (0.83 s → 0.81 s). int64 kept as the (untested-scale)
-    # fallback for a >2^31-vertex chunk.
-    ptr_dtype = np.int32 if len(verts) < 2**31 else np.int64
-    idx = idx.astype(ptr_dtype, copy=False)
-    a = idx[: len(src)]
-    b = idx[len(src):]
-    # Shiloach-Vishkin-style vectorized hooking — no per-edge Python.
-    # Each round: relabel edges to current roots, min-hook the roots, two
-    # pointer-doubling passes, drop intra-component edges. The edge
-    # relabeling contracts the graph, so rounds are O(log n) (measured: 3
-    # rounds / 1.6 s on a 4M-edge 1M-vertex partition vs ~diameter rounds /
-    # 11 s for naive neighbor-min propagation). p holds *indices* into
-    # verts; verts is sorted ascending, so index-min == vertex-min (the
-    # labeling contract's min-hooking).
-    p = np.arange(len(verts), dtype=ptr_dtype)
-    while len(a):
-        pa, pb = p[a], p[b]
-        live = pa != pb
-        a, b = pa[live], pb[live]
-        if not len(a):
-            break
-        np.minimum.at(p, a, b)
-        np.minimum.at(p, b, a)
-        p = p[p]
-        p = p[p]
-        a, b = p[a], p[b]
-        keep = a != b
-        a, b = a[keep], b[keep]
-    while True:  # final full path compression
-        nxt = p[p]
-        if np.array_equal(nxt, p):
-            break
-        p = nxt
-    return verts.astype(np.int64, copy=False), verts[p].astype(np.int64, copy=False)
 
 
 def local_contract(edges: DataFrame) -> DataFrame:
@@ -530,7 +334,7 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     distributed forest: the chains that survive partition-local contraction
     are collapsed in one driver pass over only the violating rows.
     """
-    (viol,) = collect_columns(
+    (viol,) = driver.collect_columns(
         _endpoint_tally(stepped)
         .where(((F.col("ns") > 0) & (F.col("nd") > 0)) | (F.col("ns") > 1)),
         ("k",),
@@ -538,8 +342,8 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     if not len(viol):
         return None
     spark = stepped.sparkSession
-    vdf = frame_from_arrays(spark, {"k": viol})
-    src, dst = collect_columns(
+    vdf = driver.frame_from_arrays(spark, {"k": viol})
+    src, dst = driver.collect_columns(
         stepped.join(
             F.broadcast(vdf.withColumnRenamed("k", "src")), "src", "leftsemi"
         ).unionByName(
@@ -550,11 +354,11 @@ def _chain_patch(stepped: DataFrame) -> DataFrame | None:
     )
     if not len(src):
         return None
-    verts, roots = _contract_arrays([src], [dst])
+    verts, roots = driver._contract_arrays([src], [dst])
     changed = roots != verts
     if not changed.any():
         return None
-    return frame_from_arrays(spark, {"_old": verts[changed], "_new": roots[changed]})
+    return driver.frame_from_arrays(spark, {"_old": verts[changed], "_new": roots[changed]})
 
 
 def connected_components(
@@ -577,21 +381,21 @@ def connected_components(
     ``edges`` appears exactly once in the result.
 
     Route: an init job counts the input. An input of at most
-    FUNNEL_EDGE_LIMIT rows is collected by the same call
-    (``small_edge_arrays``: no job at all when PageRank, LPA or triangles
-    already collected the same checkpointed table) and solved by one NumPy
-    union-find pass on the driver, self-loops included. Its output (every
-    vertex once, with its component minimum) comes back through
-    ``frame_from_arrays`` as the labels: no Python worker, no shuffle and
-    no certificate (the reference's union-find pass plus ``find`` sweep,
-    src/SegmentImageImpl.cpp:78-116 in the reference). On a checkpointed
-    input the count is one job (``count_small``); on the corpus job the
-    four graph operators then share that count and one collect. Larger
-    inputs run star rounds until a certificate finds a terminal star
-    forest; a round whose counted frontier is under the same bound is
-    collected and solved on the driver the same way. The star route's
-    labels are one ``groupBy(vertex).min`` over the forest's endpoints and
-    the input's self-loops. Labels are ``(vertex BIGINT, component
+    ``driver.FUNNEL_EDGE_LIMIT`` rows is collected by the same call
+    (``driver.small_edge_arrays``: no job at all when PageRank, LPA or
+    triangles already collected the same checkpointed table) and solved by
+    one NumPy union-find pass on the driver, self-loops included. Its
+    output (every vertex once, with its component minimum) comes back
+    through ``driver.frame_from_arrays`` as the labels: no Python worker,
+    no shuffle and no certificate (the reference's union-find pass plus
+    ``find`` sweep, src/SegmentImageImpl.cpp:78-116 in the reference). On
+    a checkpointed input the count is one job (``driver.count_small``); on
+    the corpus job the four graph operators then share that count and one
+    collect. Larger inputs run star rounds until a certificate finds a
+    terminal star forest; a round whose counted frontier is under the same
+    bound is collected and solved on the driver the same way. The star
+    route's labels are one ``groupBy(vertex).min`` over the forest's
+    endpoints and the input's self-loops. Labels are ``(vertex BIGINT, component
     BIGINT)``, both nullable, on every route.
 
     ``range_partition`` — range-partition the input by ``src`` and run the
@@ -668,7 +472,7 @@ def connected_components(
         if resumed is None:
             # under the gate the same call collects the edges, or finds
             # them kept from an earlier call on the caller's table
-            n_work, small = count_small(work, remember=not owns_frontier)
+            n_work, small = driver.count_small(work, remember=not owns_frontier)
         else:
             n_work = work.count()
         if verbose:
@@ -700,8 +504,8 @@ def connected_components(
             metrics_out["supersteps"] = it + 1
 
     if small is not None:
-        verts, roots = _contract_arrays([small[0]], [small[1]])
-        labels = frame_from_arrays(spark, {"vertex": verts, "component": roots})
+        verts, roots = driver._contract_arrays([small[0]], [small[1]])
+        labels = driver.frame_from_arrays(spark, {"vertex": verts, "component": roots})
         if checkpointer is not None and checkpoint_every == 1:
             checkpointer.save(
                 labels.select(F.col("vertex").alias("src"), F.col("component").alias("dst")), 1
@@ -728,16 +532,16 @@ def connected_components(
         _t = _time.time()
         patched_chained = 0  # true witness count a terminal-tail patch absorbed
         # Frontier funnel: a frontier the previous certificate counted
-        # under FUNNEL_EDGE_LIMIT would make a distributed round pure
+        # under the row gate would make a distributed round pure
         # scheduling floor, so it is collected and solved on the driver:
         # a terminal star forest by construction, which needs neither a
         # certificate nor a checkpoint (``frame_from_arrays`` is a flat plan).
-        funneled = n_work <= FUNNEL_EDGE_LIMIT
+        funneled = n_work <= driver.FUNNEL_EDGE_LIMIT
         if funneled:
-            src, dst = collect_columns(work)
-            verts, roots = _contract_arrays([src], [dst])
+            src, dst = driver.collect_columns(work)
+            verts, roots = driver._contract_arrays([src], [dst])
             moved = verts != roots
-            stepped = frame_from_arrays(spark, {"src": verts[moved], "dst": roots[moved]})
+            stepped = driver.frame_from_arrays(spark, {"src": verts[moved], "dst": roots[moved]})
             n_edges, chained = int(moved.sum()), 0
         else:
             stepped = _star_round(work, n_part)

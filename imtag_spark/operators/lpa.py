@@ -6,12 +6,12 @@ synchronous LPA: every superstep each vertex adopts the most frequent label
 among its neighbors, ties broken by the minimum label — fully deterministic,
 mirroring the reference's ``lt_cmp`` policy (disjoint_set.hpp:22-27).
 
-Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
-rows runs every round in NumPy on the driver: the 10^5-edge corpus job's
-2 rounds take 3 Spark jobs and 0.4 s there (none when CC already
-collected the same checkpointed table, ``cc.small_edge_arrays``), 19 jobs
-and 3.6 s as a DataFrame loop (BENCH.md, "Driver route"). Larger tables
-run the DataFrame loop: the frequency count is a map-side-combinable
+Routes, chosen by size: an edge table of at most
+``driver.FUNNEL_EDGE_LIMIT`` rows runs every round in NumPy on the driver:
+the 10^5-edge corpus job's 2 rounds take 3 Spark jobs and 0.4 s there
+(none when CC already collected the same checkpointed table,
+``driver.small_edge_arrays``), 19 jobs and 3.6 s as a DataFrame loop
+(BENCH.md, "Driver route"). Larger tables run the DataFrame loop: the frequency count is a map-side-combinable
 ``groupBy(vertex,label).count()``, and the argmax is a single
 ``min(struct(-cnt, label))`` aggregate rather than a per-vertex window
 (windows funnel a hot vertex's whole neighborhood through one task).
@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.operators import cc
+from imtag_spark.operators import driver
 from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
 
@@ -39,12 +39,10 @@ def _driver_lpa(src, dst, max_iter: int, verbose: bool) -> tuple[np.ndarray, np.
     ``(receiver, label)`` pairs with one ``np.unique`` over an int64 key
     and takes each receiver's most frequent label, the smallest on ties.
     """
-    verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    verts, a, b = driver.index_edges(src, dst)
     n = len(verts)
-    a, b = idx[: len(src)], idx[len(src):]
     keep = a != b
-    key = np.unique(a[keep] * n + b[keep])  # distinct directed pairs
-    a, b = key // n, key % n
+    a, b = driver.distinct_pairs(a[keep], b[keep], n)  # distinct directed pairs
     # both directions of every pair: a pair given both ways counts twice
     recv, send = np.concatenate([b, a]), np.concatenate([a, b])
     label = np.arange(n)
@@ -79,11 +77,12 @@ def label_propagation(
     Undirected semantics (edges symmetrized). Isolated/self-loop-only
     vertices keep their own id as label. Stops early when no label changes.
 
-    A table of at most ``cc.FUNNEL_EDGE_LIMIT`` rows is collected to the
-    driver (``cc.small_edge_arrays``: one count and one Arrow collect, or
-    no job when the same checkpointed table was collected already) and
-    solved by ``_driver_lpa``; the labels come back as a DataFrame of the
-    same schema. Edges with a null endpoint are dropped on both routes.
+    A table of at most ``driver.FUNNEL_EDGE_LIMIT`` rows is collected to
+    the driver (``driver.small_edge_arrays``: one count and one Arrow
+    collect, or no job when the same checkpointed table was collected
+    already) and solved by ``_driver_lpa``; the labels come back as a
+    DataFrame of the same schema. Edges with a null endpoint are dropped
+    on both routes.
 
     Loop hygiene on the DataFrame route (same contract as cc.py /
     pagerank.py): the symmetrized E-row side is persisted hash-partitioned
@@ -95,10 +94,10 @@ def label_propagation(
     materialized, keeping block-manager storage flat across high-iteration
     runs instead of hoarding one V-row copy per round.
     """
-    small = cc.small_edge_arrays(edges)
+    small = driver.small_edge_arrays(edges)
     if small is not None:
         vertex, label = _driver_lpa(*small, max_iter, verbose)
-        return cc.frame_from_arrays(edges.sparkSession, {"vertex": vertex, "label": label})
+        return driver.frame_from_arrays(edges.sparkSession, {"vertex": vertex, "label": label})
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

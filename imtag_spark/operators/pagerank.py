@@ -10,13 +10,13 @@ uniform redistribution of dangling-node mass; vertices = src ∪ dst of the
 edges left after dropping self-loops.
 
 Routes, chosen by size (see ``pagerank``):
-- an edge table of at most ``cc.FUNNEL_EDGE_LIMIT`` rows is collected to
-  the driver and iterated in NumPy (``np.bincount`` per superstep). Below
+- an edge table of at most ``driver.FUNNEL_EDGE_LIMIT`` rows is collected
+  to the driver and iterated in NumPy (``np.bincount`` per superstep). Below
   that bound a Spark superstep is all scheduling: the 10^5-edge corpus
   job's 3 supersteps plus setup take 3 Spark jobs and 0.6 s there, 25
   jobs and 7.3 s as a DataFrame loop (BENCH.md, "Driver route"); on a
   checkpointed table CC already collected, only the checkpoint's write
-  and read-back run as jobs (``cc.small_edge_arrays``);
+  and read-back run as jobs (``driver.small_edge_arrays``);
 - larger tables run the DataFrame loop. Setup builds ONE per-vertex table,
   ``deg(vertex, out_deg)`` with sinks at 0, from one aggregate over the
   edge endpoints; a second aggregate over it gives ``n`` and the dangling
@@ -39,7 +39,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.operators import cc
+from imtag_spark.operators import driver
 from imtag_spark.plans.checkpoint import free_local_checkpoint, frontier_checkpoint
 
 
@@ -59,13 +59,11 @@ def _driver_pagerank(
     src, dst = src[keep], dst[keep]
     if not directed:
         src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
-    verts, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    verts, a, b = driver.index_edges(src, dst)
     n = len(verts)
     # an empty graph runs its supersteps over no vertex: 1/n stays finite
     inv_n = 1.0 / max(n, 1)
-    # distinct pairs as one int64 key over vertex indices (n ≤ 2 × rows)
-    key = np.unique(idx[: len(src)] * n + idx[len(src):])
-    a, b = key // n, key % n
+    a, b = driver.distinct_pairs(a, b, n)
     out_deg = np.bincount(a, minlength=n)
     w = 1.0 / out_deg[a]
     has_out = out_deg > 0
@@ -91,7 +89,7 @@ def _driver_pagerank(
         dangling = rank[~has_out].sum()
         if checkpointer is not None and (it + 1) % checkpoint_every == 0:
             state = {"vertex": verts, "has_out": has_out, "rank": rank}
-            checkpointer.save(cc.frame_from_arrays(spark, state), it + 1)
+            checkpointer.save(driver.frame_from_arrays(spark, state), it + 1)
         if verbose:
             print(f"[pagerank] iter {it + 1} delta={delta:.3e} {time.time() - t0:.3f}s", flush=True)
         if checkpointer is not None:
@@ -102,7 +100,7 @@ def _driver_pagerank(
         if delta < tol:
             break
     # rank NOT NULL, as the Spark loop's arithmetic column is
-    return cc.frame_from_arrays(spark, {"vertex": verts, "rank": rank}, not_null=("rank",))
+    return driver.frame_from_arrays(spark, {"vertex": verts, "rank": rank}, not_null=("rank",))
 
 
 def pagerank(
@@ -124,12 +122,12 @@ def pagerank(
     oracle).
 
     The route comes from the edge count:
-    - ``driver`` when the table has at most ``cc.FUNNEL_EDGE_LIMIT`` rows
-      (``cc.small_edge_arrays``: one count job and one Arrow collect of at
-      most ~16 MB, or no job when the same checkpointed table was
-      collected already). The whole power iteration runs in NumPy, one
-      ``np.bincount`` per superstep, and the ranks come back as a
-      DataFrame. On a fresh 10^5-edge corpus table it runs 3 Spark jobs
+    - ``driver`` when the table has at most ``driver.FUNNEL_EDGE_LIMIT``
+      rows (``driver.small_edge_arrays``: one count job and one Arrow
+      collect of at most ~16 MB, or no job when the same checkpointed
+      table was collected already). The whole power iteration runs in
+      NumPy, one ``np.bincount`` per superstep, and the ranks come back as
+      a DataFrame. On a fresh 10^5-edge corpus table it runs 3 Spark jobs
       where the Spark loop runs 25 (BENCH.md, "Driver route").
     - ``join`` otherwise. Transitions are cached hash(src)-partitioned;
       each superstep exchanges the V-row ranks to meet them and the
@@ -151,7 +149,7 @@ def pagerank(
     the route that ran, and on ``join`` ``contribs_plan`` (the first
     superstep's physical plan).
     """
-    small = cc.small_edge_arrays(edges)
+    small = driver.small_edge_arrays(edges)
     if small is not None:
         if metrics_out is not None:
             metrics_out["mode"] = "driver"

@@ -8,12 +8,12 @@ SegmentImageImpl_Scanline.cpp:88-95).
 
 ``grid_to_runs`` has two routes, chosen by one count of the cells:
 
-- **Driver.** At most ``cc.FUNNEL_EDGE_LIMIT`` cells (the gate CC's small
-  inputs use) are collected by the same call (``cc.count_small``) and
-  run-length encoded in one NumPy pass, as the reference does in one
-  address space: sort the cells row-major, start a run wherever the row
+- **Driver.** At most ``driver.FUNNEL_EDGE_LIMIT`` cells (the gate CC's
+  small inputs use) are collected by the same call
+  (``driver.count_small``) and run-length encoded in one NumPy pass, as
+  the reference does in one address space: sort the cells row-major, start a run wherever the row
   changes or the column skips, number the runs in that order. The runs
-  come back through ``cc.frame_from_arrays`` in the relational route's
+  come back through ``driver.frame_from_arrays`` in the relational route's
   schema. From checkpointed cells to checkpointed runs that is 3 Spark
   jobs (the count of the checkpoint's RDD, the collect, the caller's
   checkpoint), and the cells are never shuffled (BENCH.md, "Grid on the
@@ -38,7 +38,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from imtag_spark.operators.cc import count_small, frame_from_arrays
+from imtag_spark.operators import driver
 from imtag_spark.operators.relabel import two_phase_index
 
 
@@ -73,7 +73,7 @@ def _driver_runs(spark: SparkSession, row: np.ndarray, col: np.ndarray) -> DataF
     first[1:] = breaks
     last = np.ones(len(row), dtype=bool)
     last[:-1] = breaks
-    return frame_from_arrays(
+    return driver.frame_from_arrays(
         spark,
         {
             "row": row[first],
@@ -89,7 +89,7 @@ def grid_to_runs(cells: DataFrame) -> DataFrame:
     with scan-order vertex ids. Under the gate the cells are run-length
     encoded on the driver (module docstring); a cell with a null
     coordinate names no cell, and that route drops it."""
-    small = count_small(cells, ("row", "col"))[1]
+    small = driver.count_small(cells, ("row", "col"))[1]
     if small is not None:
         return _driver_runs(cells.sparkSession, *small)
     return with_scan_order_ids(cells_to_runs(cells))

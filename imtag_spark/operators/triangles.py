@@ -13,14 +13,14 @@ out-degree is O(sqrt(m)), so wedge enumeration cannot explode on hubs — the
 same concern the north rule's "degree-bucketed" guidance targets, solved
 structurally instead of by bucketing.
 
-Routes, chosen by size: an edge table of at most ``cc.FUNNEL_EDGE_LIMIT``
-rows is counted in NumPy on the driver, wedges enumerated in chunks of at
-most ``cc.LOCAL_CONTRACT_CHUNK``: the 10^5-edge corpus job's count takes
-3 Spark jobs and 0.2 s there (none when CC already collected the same
-checkpointed table, ``cc.small_edge_arrays``), 10 jobs and 1.5 s as joins
-(BENCH.md, "Driver route"). Larger tables enumerate
-wedges with one self-join of the oriented edges and close them with a join
-back on the edge set.
+Routes, chosen by size: an edge table of at most
+``driver.FUNNEL_EDGE_LIMIT`` rows is counted in NumPy on the driver,
+wedges enumerated in chunks of at most ``WEDGE_CHUNK``: the 10^5-edge
+corpus job's count takes 3 Spark jobs and 0.2 s there (none when CC
+already collected the same checkpointed table,
+``driver.small_edge_arrays``), 10 jobs and 1.5 s as joins (BENCH.md,
+"Driver route"). Larger tables enumerate wedges with one self-join of the
+oriented edges and close them with a join back on the edge set.
 """
 
 from __future__ import annotations
@@ -31,7 +31,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.operators import cc
+from imtag_spark.operators import driver
+
+#: wedges per chunk on the driver route: bounds the chunk's working set
+#: (the decoded ``(u, x, y)`` triples, their keys and search positions, a
+#: few int64 arrays of this length) whatever the graph's wedge count
+WEDGE_CHUNK = 8_000_000
 
 
 def _wedge_chunks(
@@ -65,18 +70,18 @@ def _driver_triangles(src, dst) -> tuple[np.ndarray, np.ndarray, int]:
     keep = src != dst
     lo = np.minimum(src[keep], dst[keep])
     hi = np.maximum(src[keep], dst[keep])
-    verts, idx = np.unique(np.concatenate([lo, hi]), return_inverse=True)
+    verts, a, b = driver.index_edges(lo, hi)
     n = len(verts)
     # canonical pairs (a < b by index, which is id order) as sorted keys
-    keys = np.unique(idx[: len(lo)] * n + idx[len(lo):])
-    a, b = keys // n, keys % n
+    a, b = driver.distinct_pairs(a, b, n)
+    keys = a * n + b
     deg = np.bincount(np.concatenate([a, b]), minlength=n)
     fwd = deg[a] <= deg[b]  # (deg, id) order; a < b already
     u, v = np.where(fwd, a, b), np.where(fwd, b, a)
     order = np.lexsort((v, u))
     per = np.zeros(n, dtype=np.int64)
     total = 0
-    for wu, x, y in _wedge_chunks(u[order], v[order], cc.LOCAL_CONTRACT_CHUNK):
+    for wu, x, y in _wedge_chunks(u[order], v[order], WEDGE_CHUNK):
         k = x * n + y
         pos = np.minimum(np.searchsorted(keys, k), len(keys) - 1)
         closed = keys[pos] == k
@@ -138,16 +143,16 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
     Self-loops ignored, duplicate/bidirectional edges deduped. Vertices in
     no triangle report 0; the vertex set is the degree table's. A table of
-    at most ``cc.FUNNEL_EDGE_LIMIT`` rows is counted on the driver
-    (``_driver_triangles``) from ``cc.small_edge_arrays``: one count and
-    one Arrow collect, or no job when the same checkpointed table was
+    at most ``driver.FUNNEL_EDGE_LIMIT`` rows is counted on the driver
+    (``_driver_triangles``) from ``driver.small_edge_arrays``: one count
+    and one Arrow collect, or no job when the same checkpointed table was
     collected already.
     """
-    small = cc.small_edge_arrays(edges)
+    small = driver.small_edge_arrays(edges)
     if small is not None:
         vertex, tri, _ = _driver_triangles(*small)
         # triangles NOT NULL, as the Spark route's coalesced count is
-        return cc.frame_from_arrays(
+        return driver.frame_from_arrays(
             edges.sparkSession, {"vertex": vertex, "triangles": tri}, not_null=("triangles",)
         )
     deg, closed = _closed_wedges(edges)
@@ -168,7 +173,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
 def total_triangles(edges: DataFrame) -> int:
     """Total distinct triangles in the graph: the closed-wedge count."""
-    small = cc.small_edge_arrays(edges)
+    small = driver.small_edge_arrays(edges)
     if small is not None:
         return _driver_triangles(*small)[2]
     return _closed_wedges(edges)[1].count()

@@ -54,9 +54,9 @@ def is_materialized_scan(df: DataFrame) -> bool:
     same as any repeated Spark read.
 
     Caller: CC skips its init lineage-truncation copy on such input. A
-    driver route's output (``cc.frame_from_arrays``) below Spark's Arrow
-    local-relation threshold is a ``Generate`` over a local relation, not
-    a bare one, so CC would copy it first; above the threshold it is the
+    driver route's output (``driver.frame_from_arrays``) below Spark's
+    Arrow local-relation threshold is a ``Generate`` over a local
+    relation, not a bare one, so CC would copy it first; above the threshold it is the
     ``LogicalRDD`` Spark builds from Arrow batches and counts, as the flat
     ``createDataFrame`` output did. No in-repo flow hands one to CC: the
     star route's funneled frontier, the one driver output CC reads itself,

@@ -8,7 +8,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imtag_spark.operators import cc
+from imtag_spark.operators import cc, driver
 from imtag_spark.operators.interval_join import (
     adjacent_row_edges,
     adjacent_row_pairs,
@@ -26,7 +26,7 @@ def _label_on_driver(
 ) -> DataFrame | None:
     """The run table's arrays → dense labels in one NumPy pass: the
     adjacent-row sweep (``adjacent_row_pairs``), one union-find over those
-    edges and every run's self-loop (``cc._contract_arrays``), and the
+    edges and every run's self-loop (``driver._contract_arrays``), and the
     dense rank of each component minimum. ``None`` when the sweep cannot
     bound a row's matches (overlapping runs in a row)."""
     row, begin, end, ids = arrays
@@ -35,9 +35,9 @@ def _label_on_driver(
     if pairs is None:
         return None
     ids = ids[order]
-    verts, roots = cc._contract_arrays([ids[pairs[0]], ids], [ids[pairs[1]], ids])
+    verts, roots = driver._contract_arrays([ids[pairs[0]], ids], [ids[pairs[1]], ids])
     dense = np.unique(roots, return_inverse=True)[1].astype(np.int64) + base
-    return cc.frame_from_arrays(
+    return driver.frame_from_arrays(
         runs.sparkSession, {"component": roots, "vertex": verts, "dense_label": dense}
     )
 
@@ -58,13 +58,13 @@ def label_runs(
     col_end, id)`` is collected once, and one NumPy pass finds each run's
     overlapping runs in the row above (two binary searches), unions them
     with every run's self-loop, and ranks the component minima. It runs
-    when ``cells_hint`` is at most ``SMALL_GRAPH_EDGE_LIMIT`` (the runs
-    are fewer than the cells, so no count is needed), or, without a hint,
-    when the run table counts at most ``cc.FUNNEL_EDGE_LIMIT`` rows. The
-    labels come back through ``cc.frame_from_arrays``. The 1024²
-    ``grid_ccl`` grid (251K runs) takes 2 Spark jobs this way, the collect
-    and the caller's checkpoint; without the hint a checkpointed run
-    table's count adds one. A run with a null field is dropped on this
+    when ``cells_hint`` is at most ``driver.SMALL_GRAPH_EDGE_LIMIT`` (the
+    runs are fewer than the cells, so no count is needed), or, without a
+    hint, when the run table counts at most ``driver.FUNNEL_EDGE_LIMIT``
+    rows. The labels come back through ``driver.frame_from_arrays``. The
+    1024² ``grid_ccl`` grid (251K runs) takes 2 Spark jobs this way, the
+    collect and the caller's checkpoint; without the hint a checkpointed
+    run table's count adds one. A run with a null field is dropped on this
     route.
 
     **Spark route** for larger grids: the adjacency edges plus every run as
@@ -84,9 +84,9 @@ def label_runs(
     """
     t0 = time.time()
     if cells_hint is None:
-        arrays = cc.count_small(runs, RUN_COLUMNS)[1]
-    elif cells_hint <= cc.SMALL_GRAPH_EDGE_LIMIT:
-        arrays = cc.collect_columns(runs, RUN_COLUMNS)
+        arrays = driver.count_small(runs, RUN_COLUMNS)[1]
+    elif cells_hint <= driver.SMALL_GRAPH_EDGE_LIMIT:
+        arrays = driver.collect_columns(runs, RUN_COLUMNS)
     else:
         arrays = None
     dense = None if arrays is None else _label_on_driver(runs, arrays, connectivity, base)

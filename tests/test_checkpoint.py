@@ -25,7 +25,7 @@ def _chain_edges(spark, n=5000):
 
 
 @pytest.fixture(autouse=True)
-def _multi_round(monkeypatch):
+def _multi_round(monkeypatch, funnel_gate):
     # the one-task solve and the frontier funnel finish any sub-1M-row
     # graph in one round, and the terminal-tail patch resolves any
     # ≤65536-witness tail without a further superstep — correct, but these
@@ -34,7 +34,7 @@ def _multi_round(monkeypatch):
     # the patch here
     import imtag_spark.operators.cc as cc
 
-    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 512)
+    funnel_gate(512)
     monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 0)
 
 
@@ -119,14 +119,13 @@ def test_manifest_records_true_witnesses_when_patch_fires(
     )
 
 
-def test_pagerank_resume_after_kill_matches(spark, tmp_path, monkeypatch):
+def test_pagerank_resume_after_kill_matches(spark, tmp_path, funnel_gate):
     # kill a 6-superstep PageRank after superstep 3 and resume it from the
     # durable frontier: the resumed run continues the step numbering, runs
     # only the missing supersteps and lands on the uninterrupted ranks
-    import imtag_spark.operators.cc as cc
     import imtag_spark.operators.pagerank as pr_mod
 
-    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
+    funnel_gate(0)  # the Spark loop
     rng = np.random.default_rng(5)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(70, 2))}
     pairs |= {(3, 100), (4, 101)}  # sinks: the dangling mass must resume too
@@ -178,11 +177,10 @@ def _kill_after(ckpt: SuperstepCheckpointer, step: int) -> None:
     "first, then",
     [("driver", "join"), ("join", "driver"), ("driver", "driver")],
 )
-def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, then):
+def test_pagerank_resume_crosses_routes(spark, tmp_path, funnel_gate, first, then):
     # every route saves the same (vertex, has_out, rank) state, so a run
     # killed on one route resumes on the other: the step numbering goes
     # on and the ranks land on the uninterrupted run's
-    import imtag_spark.operators.cc as cc
     import imtag_spark.operators.pagerank as pr_mod
 
     gate = {"driver": 1_000_000, "join": 0}
@@ -193,7 +191,7 @@ def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, the
     kw = dict(tol=0.0, max_iter=6, checkpoint_every=1, directed=False)
 
     root = str(tmp_path / "pr")
-    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", gate[first])
+    funnel_gate(gate[first])
     full = SuperstepCheckpointer(spark, root, keep_last=100)
     m: dict = {}
     expected = {
@@ -204,7 +202,7 @@ def test_pagerank_resume_crosses_routes(spark, tmp_path, monkeypatch, first, the
 
     kill_at = 3
     _kill_after(full, kill_at)
-    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", gate[then])
+    funnel_gate(gate[then])
     resumed_ckpt = SuperstepCheckpointer(spark, root, keep_last=100)
     m = {}
     got = {

@@ -8,6 +8,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import imtag_spark.operators.cc as cc_mod
+from imtag_spark.operators import driver
 from imtag_spark.operators.cc import connected_components
 from imtag_spark.operators.lpa import label_propagation
 from imtag_spark.operators.pagerank import pagerank
@@ -42,19 +44,18 @@ def _oracle_labels(pairs) -> dict[int, int]:
 
 
 #: the two routes of PageRank, LPA and triangles: NumPy on the driver at
-#: most ``cc.FUNNEL_EDGE_LIMIT`` rows, the Spark loop above it
+#: most ``driver.FUNNEL_EDGE_LIMIT`` rows, the Spark loop above it
 ROUTES = ("driver", "distributed")
 
 
 @contextlib.contextmanager
-def _on_route(route):
+def _on_route(funnel_gate, route):
     """Force PageRank, LPA and triangles onto ``route`` inside the block
     (a gate of -1 rows sends even an empty table to the Spark loop);
     yields the routes the size gate chose, one per call."""
-    import imtag_spark.operators.cc as cc_mod
-
     taken: list[str] = []
-    real = cc_mod.small_edge_arrays
+    real = driver.small_edge_arrays
+    gate = driver.FUNNEL_EDGE_LIMIT
 
     def spy(edges):
         out = real(edges)
@@ -62,17 +63,18 @@ def _on_route(route):
         return out
 
     with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(driver, "small_edge_arrays", spy)
         if route == "distributed":
-            mp.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", -1)
-        mp.setattr(cc_mod, "small_edge_arrays", spy)
-        yield taken
+            funnel_gate(-1)
+        try:
+            yield taken
+        finally:
+            funnel_gate(gate)
 
 
 def _count_calls(monkeypatch, *names, module=None):
     """Spy on the named functions of ``module`` (default ``cc``); returns
     their call counts."""
-    import imtag_spark.operators.cc as cc_mod
-
     module = module or cc_mod
     calls = dict.fromkeys(names, 0)
     for name in names:
@@ -122,12 +124,10 @@ def test_cc_single_partition_matches_default(spark):
     assert m["supersteps"] == 1
 
 
-def test_cc_reuse_round_matches_default(spark, monkeypatch):
+def test_cc_reuse_round_matches_default(spark, funnel_gate):
     # FUNNEL_EDGE_LIMIT=0 sends the graph through the distributed star
     # round; random + long path tail so it needs several rounds
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     rng = np.random.default_rng(23)
     pairs = rng.integers(0, 500, size=(1200, 2)).tolist()
     pairs += [(1000 + i, 1000 + i + 1) for i in range(300)]
@@ -206,14 +206,12 @@ def test_cc_one_task_route_matches_oracle(spark, monkeypatch, seed):
 
 @pytest.mark.parametrize("patch", [True, False])
 @pytest.mark.parametrize("seed", [3, 17])
-def test_cc_star_round_matches_oracle(spark, monkeypatch, seed, patch):
+def test_cc_star_round_matches_oracle(spark, monkeypatch, funnel_gate, seed, patch):
     # the hostile graphs through the distributed star round; without the
     # driver-side chain patch (PATCH_WITNESS_LIMIT=0) the rounds must
     # reach a terminal forest themselves
-    import imtag_spark.operators.cc as cc_mod
-
     calls = _count_calls(monkeypatch, "_star_round", "_chain_patch")
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     if not patch:
         monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
     pairs = _hostile_graph(seed)
@@ -226,23 +224,21 @@ def test_cc_star_round_matches_oracle(spark, monkeypatch, seed, patch):
 
 
 @pytest.mark.parametrize("case", ["null_endpoint", "shifted_ids"])
-def test_cc_routes_agree_on_labels_and_schema(spark, monkeypatch, case):
+def test_cc_routes_agree_on_labels_and_schema(spark, monkeypatch, funnel_gate, case):
     # the counted driver solve, the hinted one task and the star rounds:
     # exact labels, one row per vertex, and one label schema
-    import imtag_spark.operators.cc as cc_mod
-
     calls = _count_calls(monkeypatch, "_one_task_solve", "_star_round")
     pairs = HOSTILE[case]
     expected = _oracle_labels(pairs)
     e = edges_df(spark, pairs)
     schemas = {}
     for route, hint, gate, ran in (
-        ("driver", False, cc_mod.FUNNEL_EDGE_LIMIT, (0, 0)),
-        ("hinted", True, cc_mod.FUNNEL_EDGE_LIMIT, (1, 0)),
+        ("driver", False, driver.FUNNEL_EDGE_LIMIT, (0, 0)),
+        ("hinted", True, driver.FUNNEL_EDGE_LIMIT, (1, 0)),
         ("star", False, 0, (0, 1)),
     ):
         before = dict(calls)
-        monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", gate)
+        funnel_gate(gate)
         m: dict = {}
         labels = connected_components(e, single_partition=hint, max_iter=20, metrics_out=m)
         rows = labels.collect()
@@ -310,13 +306,11 @@ def _shuffled_path(spark, n, copies=1):
     return out
 
 
-def test_cc_frontier_funnel_after_star_round(spark, monkeypatch):
+def test_cc_frontier_funnel_after_star_round(spark, monkeypatch, funnel_gate):
     # 4 × 999 input rows exceed a 2,000-row gate, so round 1 is a star
     # round; its frontier is collected and solved on the driver in round 2
-    import imtag_spark.operators.cc as cc_mod
-
     calls = _count_calls(monkeypatch, "_one_task_solve", "_star_round")
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 2_000)
+    funnel_gate(2_000)
     monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)  # no driver patch
     edges = _shuffled_path(spark, 1_000, copies=4)
     pairs = [tuple(r) for r in edges.collect()]
@@ -329,13 +323,11 @@ def test_cc_frontier_funnel_after_star_round(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("patch", [True, False])
-def test_cc_star_round_hub(spark, monkeypatch, patch):
+def test_cc_star_round_hub(spark, monkeypatch, funnel_gate, patch):
     # a 10^4-spoke hub plus a triangle through the distributed star round,
     # with and without the driver-side chain patch
-    import imtag_spark.operators.cc as cc_mod
-
     calls = _count_calls(monkeypatch, "_star_round")
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     if not patch:
         monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
     pairs = HOSTILE["hub"]
@@ -346,13 +338,11 @@ def test_cc_star_round_hub(spark, monkeypatch, patch):
     assert {r.vertex: r.component for r in rows} == expected
 
 
-def test_cc_star_rounds_path_graph_without_patch(spark, monkeypatch):
+def test_cc_star_rounds_path_graph_without_patch(spark, monkeypatch, funnel_gate):
     # the 5,000-vertex shuffled path with the chain patch off: the star
     # rounds alone must reach a terminal forest
-    import imtag_spark.operators.cc as cc_mod
-
     calls = _count_calls(monkeypatch, "_star_round", "_chain_patch")
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
     edges = _shuffled_path(spark, 5_000)
     pairs = [tuple(r) for r in edges.collect()]
@@ -401,18 +391,16 @@ def test_cc_one_task_labels_are_one_shuffle_free_job(spark):
     "call, before",
     [("pagerank_setup", 20), ("total_triangles", 16), ("cc_star_exit", 19)],
 )
-def test_one_vertex_table_job_counts(spark, monkeypatch, call, before):
+def test_one_vertex_table_job_counts(spark, funnel_gate, call, before):
     # each operator builds its vertex set once, from an aggregate it needs
     # anyway; ``before`` is the count with a second vertex pass (a
     # PageRank vertex checkpoint, a triangle vertex distinct, a persisted
     # CC vertex universe), measured in this same harness
-    import imtag_spark.operators.cc as cc_mod
-
     rng = np.random.default_rng(11)
     pairs = [(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b]
     e = edges_df(spark, pairs).localCheckpoint(eager=True)
     # CC takes the star route, PageRank and triangles their Spark loops
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     h = edges_df(spark, _hostile_graph(3))
     fn = {
         "pagerank_setup": lambda: pagerank(e, max_iter=0).count(),
@@ -430,14 +418,14 @@ def test_triangles_two_triangles_bridge(spark):
     assert per == {v: 1 for v in range(1, 7)}
 
 
-def test_triangles_random_vs_bruteforce(spark):
+def test_triangles_random_vs_bruteforce(spark, funnel_gate):
     # on both routes: NumPy on the driver and the Spark loop
     rng = np.random.default_rng(7)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 30, size=(120, 2))}
     e = edges_df(spark, pairs)
     expected_total, expected_per = brute_triangles(list(pairs))
     for route in ROUTES:
-        with _on_route(route) as taken:
+        with _on_route(funnel_gate, route) as taken:
             assert total_triangles(e) == expected_total, route
             got = {r.vertex: r.triangles for r in triangle_count(e).collect()}
         assert taken == [route, route]
@@ -451,14 +439,14 @@ def test_triangles_star_has_none(spark):
 
 
 @pytest.mark.parametrize("directed", [True, False])
-def test_pagerank_vs_numpy(spark, directed):
+def test_pagerank_vs_numpy(spark, funnel_gate, directed):
     # on both routes: NumPy on the driver and the Spark loop
     rng = np.random.default_rng(11)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 25, size=(80, 2)) if a != b})
     e = edges_df(spark, pairs)
     want = numpy_pagerank(pairs, [], directed=directed)
     for route in ROUTES:
-        with _on_route(route) as taken:
+        with _on_route(funnel_gate, route) as taken:
             got = {r.vertex: r.rank for r in pagerank(
                 e, directed=directed, tol=1e-8, max_iter=200).collect()}
         assert taken == [route]
@@ -469,12 +457,10 @@ def test_pagerank_vs_numpy(spark, directed):
 
 
 @pytest.mark.parametrize("directed", [True, False])
-def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
+def test_pagerank_join_route_vs_numpy(spark, funnel_gate, directed):
     # vertices 40-47 only receive edges, so the directed graph has
     # dangling vertices
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
+    funnel_gate(0)  # the Spark loop
     rng = np.random.default_rng(53)
     pairs = {(int(a), int(b)) for a, b in rng.integers(0, 40, size=(120, 2)) if a != b}
     pairs |= {(int(a), 40 + i) for i, a in enumerate(rng.integers(0, 40, size=8))}
@@ -491,15 +477,13 @@ def test_pagerank_join_route_vs_numpy(spark, monkeypatch, directed):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_join_superstep_never_reexchanges_transitions(spark, monkeypatch):
+def test_pagerank_join_superstep_never_reexchanges_transitions(spark, funnel_gate):
     # the E-row transitions are cached hash(src)-partitioned and sorted, so
     # a superstep may exchange the V-row ranks side to meet them (and the
     # contributions to the dst aggregate) but never the cache again.
     # Broadcast joins are off while planning so this small graph plans the
     # shuffled join a large one gets.
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
+    funnel_gate(0)  # the Spark loop
     e = edges_df(spark, [(a, b) for a in range(30) for b in range(a + 1, 30, 3)])
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -531,13 +515,12 @@ def test_pagerank_join_superstep_never_reexchanges_transitions(spark, monkeypatc
     assert all("hashpartitioning(src" in ln for ln in induced), induced
 
 
-def test_pagerank_supports_checkpointer(spark, tmp_path, monkeypatch):
+def test_pagerank_supports_checkpointer(spark, tmp_path, funnel_gate):
     # rank state stays a DataFrame on the Spark route, so durable
     # checkpoint/resume must keep working
-    import imtag_spark.operators.cc as cc_mod
     from imtag_spark.plans.checkpoint import SuperstepCheckpointer
 
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)  # the Spark loop
+    funnel_gate(0)  # the Spark loop
     rng = np.random.default_rng(43)
     pairs = list({(int(a), int(b)) for a, b in rng.integers(0, 20, size=(60, 2)) if a != b})
     e = edges_df(spark, pairs)
@@ -553,14 +536,14 @@ def test_pagerank_supports_checkpointer(spark, tmp_path, monkeypatch):
         assert abs(got[v] - want[v]) < 1e-6
 
 
-def test_pagerank_star_closed_form(spark):
+def test_pagerank_star_closed_form(spark, funnel_gate):
     # hub 0 with k spokes, undirected: symmetric closed form, on both
     # routes
     k = 50
     e = edges_df(spark, [(0, i) for i in range(1, k + 1)])
     want = numpy_pagerank([(0, i) for i in range(1, k + 1)], [], directed=False)
     for route in ROUTES:
-        with _on_route(route) as taken:
+        with _on_route(funnel_gate, route) as taken:
             got = {r.vertex: r.rank for r in pagerank(
                 e, directed=False, tol=1e-8, max_iter=200).collect()}
         assert taken == [route]
@@ -583,7 +566,7 @@ def test_lpa_two_cliques(spark):
 
 
 @pytest.mark.parametrize("route", ROUTES)
-def test_lpa_vs_oracle(spark, route):
+def test_lpa_vs_oracle(spark, funnel_gate, route):
     # duplicates, reversed pairs (counted twice) and self-loop-only
     # vertices, which keep their own id
     rng = np.random.default_rng(19)
@@ -592,7 +575,7 @@ def test_lpa_vs_oracle(spark, route):
     pairs += [(90, 90), (91, 91), (5, 5)]
     e = edges_df(spark, pairs)
     for max_iter in (1, 3, 10):
-        with _on_route(route) as taken:
+        with _on_route(funnel_gate, route) as taken:
             rows = label_propagation(e, max_iter=max_iter).collect()
         assert taken == [route]
         want = oracle_lpa(pairs, max_iter)
@@ -629,7 +612,7 @@ HOSTILE = _hostile_inputs()
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
 @pytest.mark.parametrize("route", ROUTES)
-def test_lpa_bigint_limits_with_and_without_ansi(spark, route, ansi):
+def test_lpa_bigint_limits_with_and_without_ansi(spark, funnel_gate, route, ansi):
     # after one round vertex 5 holds a tie between -2^63 and 7; the smaller
     # wins whether or not ANSI mode checks the loop's arithmetic
     pairs = HOSTILE["bigint_limits"]
@@ -638,7 +621,7 @@ def test_lpa_bigint_limits_with_and_without_ansi(spark, route, ansi):
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         for max_iter in (1, 4):
-            with _on_route(route) as taken:
+            with _on_route(funnel_gate, route) as taken:
                 rows = label_propagation(e, max_iter=max_iter).collect()
             assert taken == [route]
             got = {r.vertex: r.label for r in rows}
@@ -649,9 +632,9 @@ def test_lpa_bigint_limits_with_and_without_ansi(spark, route, ansi):
 
 @pytest.mark.parametrize("case", sorted(HOSTILE))
 @pytest.mark.parametrize("route", ROUTES)
-def test_hostile_inputs_match_oracles(spark, route, case):
+def test_hostile_inputs_match_oracles(spark, funnel_gate, route, case):
     e = edges_df(spark, HOSTILE[case])
-    with _on_route(route) as taken:
+    with _on_route(funnel_gate, route) as taken:
         frames = (
             pagerank(e, tol=0.0, max_iter=4),
             label_propagation(e, max_iter=4),
@@ -684,16 +667,15 @@ def test_hostile_inputs_match_oracles(spark, route, case):
     assert {r.vertex: r.triangles for r in per} == want_per
 
 
-def test_size_gate_boundary(spark, monkeypatch):
+def test_size_gate_boundary(spark, monkeypatch, funnel_gate):
     # a table of exactly FUNNEL_EDGE_LIMIT rows is solved on the driver,
     # one row more by the Spark loops. The extra row repeats an edge, so
     # both routes see the same graph and must agree.
-    import imtag_spark.operators.cc as cc_mod
     import imtag_spark.operators.lpa as lpa_mod
     import imtag_spark.operators.triangles as tri_mod
 
     pairs = [(a, b) for a in range(8) for b in range(a + 1, 8)] + [(8, 9)]
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", len(pairs))
+    funnel_gate(len(pairs))
     lpa_calls = _count_calls(monkeypatch, "_driver_lpa", module=lpa_mod)
     tri_calls = _count_calls(monkeypatch, "_driver_triangles", module=tri_mod)
     out = {}
@@ -728,12 +710,11 @@ def test_size_gate_boundary(spark, monkeypatch):
 
 
 def test_triangles_chunked_wedges_on_clique(spark, monkeypatch):
-    # the driver route enumerates wedges in chunks of LOCAL_CONTRACT_CHUNK;
-    # a clique's chunks split vertices' out-lists mid-way
-    import imtag_spark.operators.cc as cc_mod
+    # the driver route enumerates wedges in chunks of WEDGE_CHUNK; a
+    # clique's chunks split vertices' out-lists mid-way
     import imtag_spark.operators.triangles as tri_mod
 
-    monkeypatch.setattr(cc_mod, "LOCAL_CONTRACT_CHUNK", 300)
+    monkeypatch.setattr(tri_mod, "WEDGE_CHUNK", 300)
     sizes: list[int] = []
     real = tri_mod._wedge_chunks
 
@@ -794,32 +775,30 @@ def test_driver_route_job_counts(spark, tmp_path):
     assert ck.resume()[1] == 2
 
 
-def test_small_edge_arrays_keeps_one_fixed_table(spark, monkeypatch):
+def test_small_edge_arrays_keeps_one_fixed_table(spark, monkeypatch, funnel_gate):
     import gc
 
-    import imtag_spark.operators.cc as cc_mod
-
     def held():
-        return None if cc_mod._last_small is None else cc_mod._last_small[0]()
+        return None if driver._last_small is None else driver._last_small[0]()
 
     # a lazy plan, or a projection over a checkpoint, may give other rows
     # when read again: collected, never kept
     lazy = spark.range(50).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-    assert len(cc_mod.small_edge_arrays(lazy)[0]) == 50
+    assert len(driver.small_edge_arrays(lazy)[0]) == 50
     projected = lazy.localCheckpoint(eager=True).select("src", "dst")
-    assert len(cc_mod.small_edge_arrays(projected)[0]) == 50
+    assert len(driver.small_edge_arrays(projected)[0]) == 50
     assert held() is not lazy and held() is not projected
 
     first = _corpus_sized_table(spark)
-    src, dst = cc_mod.small_edge_arrays(first)
+    src, dst = driver.small_edge_arrays(first)
     assert held() is first and not src.flags.writeable
-    again, jobs = _jobs_in_group(spark, "small-cache-hit", lambda: cc_mod.small_edge_arrays(first))
+    again, jobs = _jobs_in_group(spark, "small-cache-hit", lambda: driver.small_edge_arrays(first))
     assert jobs == [] and again[0] is src and again[1] is dst
 
     # a gate lowered below the kept length sends the same object to the
     # Spark loops, with no new count
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", len(src) - 1)
-    miss, jobs = _jobs_in_group(spark, "small-cache-gate", lambda: cc_mod.small_edge_arrays(first))
+    funnel_gate(len(src) - 1)
+    miss, jobs = _jobs_in_group(spark, "small-cache-gate", lambda: driver.small_edge_arrays(first))
     assert miss is None and jobs == []
     m: dict = {}
     pagerank(first, max_iter=1, metrics_out=m)
@@ -828,16 +807,16 @@ def test_small_edge_arrays_keeps_one_fixed_table(spark, monkeypatch):
 
     # a second table replaces the first: one entry at most
     second = first.where(F.col("src") < 100).localCheckpoint(eager=True)
-    cc_mod.small_edge_arrays(second)
+    driver.small_edge_arrays(second)
     assert held() is second
-    _, jobs = _jobs_in_group(spark, "small-cache-replaced", lambda: cc_mod.small_edge_arrays(first))
+    _, jobs = _jobs_in_group(spark, "small-cache-replaced", lambda: driver.small_edge_arrays(first))
     assert jobs  # counted and collected again
     assert held() is first
 
     # the entry goes with its DataFrame
     del first, src, dst, again
     gc.collect()
-    assert cc_mod._last_small is None
+    assert driver._last_small is None
 
 
 def test_degrees(spark):
@@ -888,14 +867,14 @@ def test_chain_patch_unit(spark):
     assert patched == {(5, 1), (3, 1), (7, 1), (6, 1), (8, 1), (10, 9)}
 
 
-def test_cc_patch_round_path_graph(spark, monkeypatch):
+def test_cc_patch_round_path_graph(spark, funnel_gate):
     """Force the distributed rounds (funnel off) on a shuffled path graph:
     partition-local contraction leaves cross-partition chains whose tail
     round the terminal patch must replace, bit-identically to the
     min-label contract."""
     import imtag_spark.operators.cc as cc
 
-    monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     n = 5000
     edges = _shuffled_path(spark, n)
     labels = cc.connected_components(edges).collect()
@@ -924,12 +903,10 @@ def test_materialized_scan_requires_deterministic_projection(spark):
     assert not is_materialized_scan(base.repartition(2))
 
 
-def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
+def test_cc_wide_ids_stay_int64_exact(spark, funnel_gate):
     # ids above 2^31 cross the Arrow transit as int64 and labels stay
     # exact through the star round, forced on
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     big = 2**40
     pairs = [(big + a, big + b) for a, b in TWO_TRIANGLES_BRIDGE] + [(5, big + 1)]
     labels = connected_components(edges_df(spark, pairs), max_iter=20)
@@ -937,12 +914,10 @@ def test_cc_wide_ids_stay_int64_exact(spark, monkeypatch):
     assert rows == {v: 5 for v in [5] + [big + i for i in range(1, 7)]}
 
 
-def test_cc_negative_ids_exact(spark, monkeypatch):
+def test_cc_negative_ids_exact(spark, funnel_gate):
     # negative ids down to -2^31: min-labeling stays exact through the
     # star round, forced on
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     pairs = [(-3, -2), (-2, 7), (10, 11), (-(2**31), -3)]
     labels = connected_components(edges_df(spark, pairs), max_iter=20)
     rows = {r.vertex: r.component for r in labels.collect()}

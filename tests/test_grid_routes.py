@@ -1,8 +1,9 @@
 """Driver routes of pass 1 and ``label_runs`` against their Spark routes.
 
-A grid of at most ``cc.FUNNEL_EDGE_LIMIT`` cells is run-length encoded on
-the driver, and a run table under the same gate (or under a ``cells_hint``
-of at most ``cc.SMALL_GRAPH_EDGE_LIMIT``) is labeled on the driver; larger
+A grid of at most ``driver.FUNNEL_EDGE_LIMIT`` cells is run-length encoded
+on the driver, and a run table under the same gate (or under a
+``cells_hint`` of at most ``driver.SMALL_GRAPH_EDGE_LIMIT``) is labeled on
+the driver; larger
 inputs go through Spark. Both routes must return identical rows in
 identical schemas, nullability included, and match the NumPy oracles.
 """
@@ -32,26 +33,26 @@ def _rows(df):
     return df.schema, sorted(tuple(r) for r in df.collect())
 
 
-def _on_both_routes(monkeypatch, module, driver_fn, call):
+def _on_both_routes(monkeypatch, funnel_gate, module, driver_fn, call):
     """``call()`` collected at the default gate, then with the gate at -1
     rows (the Spark route even for an empty table); asserts ``driver_fn``
     of ``module`` ran on the first call only. Returns (schema, rows)."""
     calls = _count_calls(monkeypatch, driver_fn, module=module)
-    driver = _rows(call())
+    on_driver = _rows(call())
     assert calls[driver_fn] == 1
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", -1)
+    funnel_gate(-1)
     spark_route = _rows(call())
     assert calls[driver_fn] == 1
     monkeypatch.undo()
-    assert driver == spark_route
-    return driver
+    assert on_driver == spark_route
+    return on_driver
 
 
 ROUTE_GRIDS = dict(PASS1_GRIDS, empty=np.zeros((0, 5), dtype=np.uint8))
 
 
 @pytest.mark.parametrize("name", list(ROUTE_GRIDS))
-def test_grid_to_runs_routes_agree(spark, monkeypatch, name):
+def test_grid_to_runs_routes_agree(spark, monkeypatch, funnel_gate, name):
     # repartition(7) splits each image row across input partitions
     grid = ROUTE_GRIDS[name]
     if grid.size:
@@ -59,7 +60,7 @@ def test_grid_to_runs_routes_agree(spark, monkeypatch, name):
     else:
         cells = spark.createDataFrame([], "row INT, col INT")
     schema, rows = _on_both_routes(
-        monkeypatch, rle, "_driver_runs", lambda: grid_to_runs(cells)
+        monkeypatch, funnel_gate, rle, "_driver_runs", lambda: grid_to_runs(cells)
     )
     assert [f.dataType.simpleString() for f in schema] == ["int", "int", "int", "bigint"]
     assert all(f.nullable for f in schema)
@@ -83,11 +84,11 @@ def _label_oracle(runs, connectivity, base):
 
 @pytest.mark.parametrize("connectivity", [CROSS, EIGHT_WAY, HORIZONTAL])
 @pytest.mark.parametrize("grid_name", ["p0.5", "checkerboard", "empty"])
-def test_label_runs_routes_agree(spark, monkeypatch, connectivity, grid_name):
+def test_label_runs_routes_agree(spark, monkeypatch, funnel_gate, connectivity, grid_name):
     runs = grid_runs(ROUTE_GRIDS[grid_name])
     table = _run_table(spark, runs)
     schema, rows = _on_both_routes(
-        monkeypatch, pipelines, "_label_on_driver",
+        monkeypatch, funnel_gate, pipelines, "_label_on_driver",
         lambda: label_runs(table, connectivity, base=1),
     )
     assert [(f.name, f.dataType.simpleString(), f.nullable) for f in schema] == [
@@ -112,7 +113,7 @@ def test_label_runs_overlapping_runs_take_spark_route(spark, monkeypatch):
     assert got == _label_oracle(runs, EIGHT_WAY, 0)
 
 
-def test_grid_gate_boundary(spark, monkeypatch):
+def test_grid_gate_boundary(spark, monkeypatch, funnel_gate):
     # a grid of exactly FUNNEL_EDGE_LIMIT cells is run-length encoded on
     # the driver, one cell more by Spark; a run table of exactly the gate's
     # rows is labeled on the driver without a hint, one run more by Spark
@@ -120,7 +121,7 @@ def test_grid_gate_boundary(spark, monkeypatch):
     more = grid.copy()
     more[0, np.flatnonzero(more[0] == 0)[0]] = 255
     n_cells = int((grid != 0).sum())
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", n_cells)
+    funnel_gate(n_cells)
     rle_calls = _count_calls(monkeypatch, "_driver_runs", module=rle)
     for g in (grid, more):
         got = grid_to_runs(grid_to_cells(spark, g)).collect()
@@ -131,7 +132,7 @@ def test_grid_gate_boundary(spark, monkeypatch):
 
     runs = grid_runs(grid)
     extra = runs + [(runs[-1][0] + 2, 0, 1)]
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", len(runs))
+    funnel_gate(len(runs))
     label_calls = _count_calls(monkeypatch, "_label_on_driver", module=pipelines)
     for r in (runs, extra):
         got = _rows(label_runs(_run_table(spark, r), CROSS, base=1))[1]

@@ -1,4 +1,4 @@
-"""``cc.frame_from_arrays``, every driver route's way back to Spark.
+"""``driver.frame_from_arrays``, every driver route's way back to Spark.
 
 The helper must return what ``createDataFrame`` on the flat Arrow table
 returned: the same schema, field for field with nullability, and the same
@@ -19,7 +19,8 @@ import pyarrow as pa
 import pytest
 
 import imtag_spark.operators.cc as cc_mod
-from imtag_spark.operators.cc import connected_components, frame_from_arrays
+from imtag_spark.operators import driver
+from imtag_spark.operators.cc import connected_components
 from imtag_spark.operators.lpa import label_propagation
 from imtag_spark.operators.pagerank import pagerank
 from imtag_spark.operators.rle import grid_to_runs
@@ -97,7 +98,7 @@ def test_frame_from_arrays_matches_create_data_frame(spark, n):
     assert 3 < spark.sparkContext.defaultParallelism
     columns = _columns(n, seed=n)
     for not_null in ((), ("val", "flag")):
-        new = frame_from_arrays(spark, columns, not_null=not_null)
+        new = driver.frame_from_arrays(spark, columns, not_null=not_null)
         old = _old_frame(spark, columns, not_null=not_null)
         assert new.schema == old.schema
         assert [f.nullable for f in new.schema] == [c not in not_null for c in columns]
@@ -108,7 +109,7 @@ def test_frame_from_arrays_matches_create_data_frame(spark, n):
         _assert_columnar_plan(new, spark)
     # ids at the edge of 64 bits survive exactly
     ids = np.array([2**63 - 1, -(2**63), 2**62 + 1, -(2**62) - 1], dtype=np.int64)
-    back = frame_from_arrays(spark, {"id": ids}).toArrow().column("id").to_numpy()
+    back = driver.frame_from_arrays(spark, {"id": ids}).toArrow().column("id").to_numpy()
     assert np.array_equal(back, ids)
 
 
@@ -119,7 +120,7 @@ def test_frame_from_arrays_above_local_relation_threshold(spark):
     columns = _columns(5_000, seed=5)
     spark.conf.set(key, "1k")
     try:
-        new = frame_from_arrays(spark, columns, not_null=("val",))
+        new = driver.frame_from_arrays(spark, columns, not_null=("val",))
         assert new._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
         old = _old_frame(spark, columns, not_null=("val",))
         assert new.schema == old.schema
@@ -134,7 +135,7 @@ def test_frame_from_arrays_slices_into_parallelism_tasks(spark):
     # one slice of the arrays per task, in order, whatever the row count
     limit = spark.sparkContext.defaultParallelism
     for n in (1, limit - 1, limit, 10 * limit + 3):
-        df = frame_from_arrays(spark, {"i": np.arange(n)})
+        df = driver.frame_from_arrays(spark, {"i": np.arange(n)})
         parts = df.rdd.glom().map(lambda rows: [r.i for r in rows]).collect()
         assert len(parts) == min(n, limit)
         assert [i for p in parts for i in p] == list(range(n))
@@ -164,19 +165,19 @@ def test_driver_routes_hand_off_columnar(spark):
         assert "Generate inline" in df._jdf.queryExecution().optimizedPlan().toString(), name
 
 
-def test_cc_frontier_funnel_hands_off_columnar(spark, monkeypatch):
+def test_cc_frontier_funnel_hands_off_columnar(spark, monkeypatch, funnel_gate):
     # round 1 is a star round over 4 × 999 rows; its frontier is under the
     # 2,000-row gate, so round 2 collects it and hands it back through the
     # helper
     calls = []
-    real = cc_mod.frame_from_arrays
+    real = driver.frame_from_arrays
 
     def spy(spark_, columns, not_null=()):
         calls.append(tuple(columns))
         return real(spark_, columns, not_null)
 
-    monkeypatch.setattr(cc_mod, "frame_from_arrays", spy)
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 2_000)
+    monkeypatch.setattr(driver, "frame_from_arrays", spy)
+    funnel_gate(2_000)
     monkeypatch.setattr(cc_mod, "PATCH_WITNESS_LIMIT", 0)
     edges = _shuffled_path(spark, 1_000, copies=4)
     m: dict = {}
@@ -271,7 +272,7 @@ def test_driver_arrays_reach_spark_only_through_frame_from_arrays():
             if calls:
                 found[f"{sub}/{path.name}"] = calls
     assert found == {}
-    helper = ast.parse((PACKAGE / "operators" / "cc.py").read_text())
+    helper = ast.parse((PACKAGE / "operators" / "driver.py").read_text())
     assert any(
         isinstance(n, ast.FunctionDef) and n.name == "frame_from_arrays"
         for n in ast.walk(helper)

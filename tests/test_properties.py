@@ -30,7 +30,7 @@ def _edges_df(spark, pairs):
 ID_OFFSETS = [0, 2**40, -(2**31), 2**62]
 
 
-def _spy_cc(monkeypatch, route):
+def _spy_cc(monkeypatch, funnel_gate, route):
     """Force ``route`` and count the calls that prove it ran.
 
     ``calls["order"]`` lists the spied calls in order; a ``local_contract``
@@ -56,7 +56,7 @@ def _spy_cc(monkeypatch, route):
 
     monkeypatch.setattr(cc, "local_contract", contract_spy)
     if route in ("star", "star_no_patch", "range_star"):
-        monkeypatch.setattr(cc, "FUNNEL_EDGE_LIMIT", 0)
+        funnel_gate(0)
     if route == "star_no_patch":
         monkeypatch.setattr(cc, "PATCH_WITNESS_LIMIT", 0)
     return calls
@@ -84,14 +84,14 @@ CC_ROUTES = ["default", "star", "star_no_patch", "range", "range_star"]
         for seed in range(4)
     ],
 )
-def test_cc_is_partition_with_min_labels(spark, monkeypatch, seed, route):
+def test_cc_is_partition_with_min_labels(spark, monkeypatch, funnel_gate, seed, route):
     rng = np.random.default_rng(seed)
     n_v = int(rng.integers(5, 60))
     n_e = int(rng.integers(0, 120))
     offset = ID_OFFSETS[seed]
     base = [(int(a), int(b)) for a, b in rng.integers(0, n_v, size=(n_e, 2))]
     pairs = [(a + offset, b + offset) for a, b in base]
-    calls = _spy_cc(monkeypatch, route)
+    calls = _spy_cc(monkeypatch, funnel_gate, route)
     m: dict = {}
     rows = connected_components(
         _edges_df(spark, pairs),
@@ -154,7 +154,7 @@ def test_grid_cc_idempotent_and_coarsening(spark, seed, p):
 
 @pytest.mark.parametrize("route", ["range", "range_star"])
 @pytest.mark.parametrize("conn", [CROSS, EIGHT_WAY])
-def test_grid_cc_range_partition_matches_oracle(spark, monkeypatch, conn, route):
+def test_grid_cc_range_partition_matches_oracle(spark, monkeypatch, funnel_gate, conn, route):
     # scan-order run ids are the locality range_partition exists for: the
     # input pass runs first, then the one-task solve or the star round
     grid = make_grid(24, 24, 0.55, 11)
@@ -164,7 +164,7 @@ def test_grid_cc_range_partition_matches_oracle(spark, monkeypatch, conn, route)
     # every run as a self-loop too, as label_runs feeds CC
     loops = runs.select(F.col("id").alias("src"), F.col("id").alias("dst"))
     edges = adjacent_row_edges(runs, conn).unionByName(loops)
-    calls = _spy_cc(monkeypatch, route)
+    calls = _spy_cc(monkeypatch, funnel_gate, route)
     rows = connected_components(edges, range_partition=True).collect()
     _assert_range_pass_first(calls, route)
     assert sorted((r["vertex"], r["component"]) for r in rows) == list(enumerate(oracle))

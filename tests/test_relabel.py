@@ -56,7 +56,7 @@ def _random_pairs(seed: int) -> list[tuple[int, int]]:
 
 @pytest.mark.parametrize("base", [0, 1])
 @pytest.mark.parametrize("seed", range(4))
-def test_relabel_cc_labels_both_routes(spark, monkeypatch, seed, base):
+def test_relabel_cc_labels_both_routes(spark, funnel_gate, seed, base):
     # CC's labels from its hinted one-task solve (one checkpointed
     # partition) and from its star rounds give the oracle's rows, in one
     # partition or in four
@@ -72,9 +72,7 @@ def test_relabel_cc_labels_both_routes(spark, monkeypatch, seed, base):
     assert got[2] == want
     assert _relabel(labels.repartition(4), base) == got
 
-    import imtag_spark.operators.cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "FUNNEL_EDGE_LIMIT", 0)
+    funnel_gate(0)
     star = connected_components(edges)
     assert _relabel(star, base) == got
     assert _relabel(star.repartition(4), base) == got
